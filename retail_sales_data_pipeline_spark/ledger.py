@@ -24,12 +24,15 @@ idempotent run-scoped sinks (sinks.run_scoped_path) are the mitigation.
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .sources.files import hadoop_fs
 
 STATUS_ACTIVE = "A"
 STATUS_INACTIVE = "I"
@@ -52,25 +55,53 @@ class Ledger:
     path: str
 
     def _now(self) -> datetime:
+        """Naive UTC wall clock; :meth:`_append` says how it is stored."""
         return datetime.now(tz=timezone.utc).replace(tzinfo=None)
 
     def _append(
         self, spark: SparkSession, files: dict[str, str], status: str, seq: int
     ) -> None:
+        """Append one event per file as a local Arrow relation: the rows
+        reach the JVM as a ``LocalTableScan``, so the write is the only
+        Spark job (a Python-row ``createDataFrame`` adds a Python-worker
+        task).
+
+        Stored-instant convention, kept for compatibility with ledgers
+        already written: ``event_time`` holds the naive UTC wall clock
+        of :meth:`_now` read as the driver's LOCAL time (``time.mktime``,
+        exactly what ``TimestampType.toInternal`` does for the naive
+        datetimes the earlier row-list writer passed). Under a non-UTC
+        ``TZ`` that is not the true instant, but old and new events
+        order consistently, so the snapshot's latest-event rule holds
+        across the writer change.
+        """
+        import pyarrow as pa
+
         now = self._now()
-        rows = [(name, loc, status, now, seq) for name, loc in files.items()]
-        spark.createDataFrame(rows, LEDGER_SCHEMA).coalesce(1).write.mode(
+        micros = int(time.mktime(now.timetuple())) * 1_000_000 + now.microsecond
+        n = len(files)
+        table = pa.table(
+            {
+                "file_name": pa.array(list(files), pa.string()),
+                "file_location": pa.array(list(files.values()), pa.string()),
+                "status": pa.array([status] * n, pa.string()),
+                "event_time": pa.array([micros] * n, pa.timestamp("us", tz="UTC")),
+                "seq": pa.array([seq] * n, pa.int64()),
+            }
+        )
+        spark.createDataFrame(table, LEDGER_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.path)
 
     def _events(self, spark: SparkSession) -> DataFrame | None:
-        import os
-
         # missing-path means "ledger not created yet" — checked
         # explicitly so a REAL read failure (corrupt footer,
         # permissions, store throttle) raises instead of silently
-        # reading as an empty ledger and disabling crash detection
-        if not os.path.exists(self.path):
+        # reading as an empty ledger and disabling crash detection.
+        # Checked through the path's Hadoop FileSystem, as Spark reads
+        # it: os.path.exists is False for every file:// / s3a:// path
+        fs, jpath = hadoop_fs(spark, self.path)
+        if not fs.exists(jpath):
             return None
         return spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
 

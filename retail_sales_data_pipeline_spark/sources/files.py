@@ -12,7 +12,9 @@ for *per-file* validation/quarantine decisions; the data path itself is
 from __future__ import annotations
 
 import os
+import re
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -31,13 +33,281 @@ def discover_csv_files(directory: str, suffix: str = ".csv") -> list[str]:
     )
 
 
-def read_csv_header(spark: SparkSession, path: str) -> list[str]:
-    """Header-probe scan (S1): column names only, no data read.
-
-    Reference reads the file with header=true and takes ``.columns``
-    (main.py:139-141); limiting to 0 rows keeps it a metadata-only pass.
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the session's Hadoop
+    configuration: the same resolution ``spark.read`` uses, so plain
+    paths and every URI scheme the cluster mounts (``file://``,
+    ``hdfs://``, ``s3a://``) work. Driver-side; starts no Spark job.
     """
-    return spark.read.option("header", "true").csv(path).limit(0).columns
+    jpath = _jclass(spark, "org.apache.hadoop.fs.Path")(path)
+    return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath
+
+
+def _jclass(spark: SparkSession, name: str) -> JavaClass:
+    """A JVM class by full name in one gateway call (``sc._jvm.a.b.C``
+    spends a reflection round trip on every package segment)."""
+    return JavaClass(name, spark.sparkContext._gateway._gateway_client)
+
+
+_HEADER_CHUNK = 4096
+_MAX_COLUMNS = 20480  # Spark's CSV ``maxColumns`` default
+_LINE_END = re.compile(rb"[\r\n]")
+
+
+def _first_nonblank_line(stream) -> bytes | None:
+    """Bytes of the first line that is not all spaces, or None.
+
+    Lines end at ``\\r\\n``, ``\\r`` or ``\\n`` (Hadoop's line reader),
+    and the file's leading UTF-8 BOM is dropped. A line counts as blank
+    when only ``' '`` remains after trimming, as in Spark's CSV schema
+    inference (SQL ``trim``, not Java's whitespace trim: a tab line is a
+    header). Reads ``_HEADER_CHUNK`` bytes at a time and stops at the end
+    of that line.
+    """
+    buf = bytes(stream.readNBytes(_HEADER_CHUNK))
+    if buf.startswith(b"\xef\xbb\xbf"):
+        buf = buf[3:]
+    start = 0
+    while True:
+        end = _LINE_END.search(buf, start)
+        if end is None:
+            chunk = bytes(stream.readNBytes(_HEADER_CHUNK))
+            if chunk:  # short only at end of stream
+                buf += chunk
+                continue
+        line = buf[start : end.start() if end else len(buf)]
+        if line.strip(b" "):
+            return line
+        if end is None:
+            return None
+        start = end.end()
+
+
+def _decode_java(raw: bytes) -> str:
+    """UTF-8 decode with Java's replacement rule: like Python's
+    ``'replace'``, except that a UTF-8-encoded surrogate (``ED A0..BF``
+    plus a continuation byte) becomes ONE U+FFFD instead of three."""
+    out, i = [], 0
+    while True:
+        try:
+            out.append(raw[i:].decode("utf-8"))
+            return "".join(out)
+        except UnicodeDecodeError as e:
+            out.append(raw[i : i + e.start].decode("utf-8"))
+            j = i + e.start
+            if raw[j] == 0xED and j + 1 < len(raw) and 0xA0 <= raw[j + 1] <= 0xBF:
+                step = 3 if j + 2 < len(raw) and 0x80 <= raw[j + 2] <= 0xBF else 2
+            else:
+                step = e.end - e.start
+            out.append("\ufffd")
+            i = j + step
+
+
+class _EOL(Exception):
+    """End of the header line (the tokenizer's EOF)."""
+
+
+class _HeaderTokenizer:
+    """Spark 4.1's CSV header tokenizer for one line, in Python.
+
+    A port of univocity-parsers 2.9.1 ``CsvParser`` (single-char
+    delimiter path) under the settings Spark's ``CSVOptions`` give it
+    for ``header=true`` and no other option: delimiter ``,``, quote
+    ``"``, quote escape and escape-escape ``\\``, no whitespace trimming,
+    ``STOP_AT_DELIMITER`` for unescaped quotes. State names follow the
+    Java (``ch``, ``prev``, ``unescaped``, the value appender), because
+    the unescaped-quote rules are only defined by that code: ``"a""b"``
+    stays ``"a""b"`` while ``"a\\"b"`` becomes ``a"b``, which Python's
+    ``csv`` module does not reproduce. Empty values come back as ``""``;
+    Spark names them ``_c<i>`` whether univocity gave null or empty.
+    """
+
+    D, Q, E, NUL = ",", '"', "\\", "\0"
+
+    def __init__(self, line: str):
+        if line.startswith("\ufeff"):  # univocity drops one leading BOM
+            line = line[1:] or self.NUL
+        self.line, self.pos = line, 0
+        self.ch = self.prev = self.NUL
+        self.unescaped = False
+        self.value: list[str] = []
+        self.values: list[str] = []
+
+    def next_char(self) -> str:
+        if self.pos >= len(self.line):
+            raise _EOL
+        self.pos += 1
+        return self.line[self.pos - 1]
+
+    def append_until(self, ch: str, stops: str) -> str:
+        while ch not in stops:
+            self.value.append(ch)
+            ch = self.next_char()
+        return ch
+
+    def emit(self) -> None:
+        self.values.append("".join(self.value))
+        self.value = []
+
+    def tokens(self) -> list[str]:
+        try:
+            self.ch = self.next_char()
+            self._record()
+        except _EOL:
+            self._at_eol()
+        return self.values
+
+    def _record(self) -> None:
+        D, Q = self.D, self.Q
+        while True:  # the line holds no newline: only _EOL ends it
+            if self.ch == D:
+                self.emit()
+            else:
+                self.unescaped, self.prev = False, self.NUL
+                if self.ch == Q:
+                    self._quoted()
+                else:
+                    self.ch = self.append_until(self.ch, D)
+                self.emit()
+            self.ch = self.next_char()
+
+    def _quoted(self) -> None:
+        D, Q, E = self.D, self.Q, self.E
+        if self.prev != self.NUL:  # after an unescaped quote
+            self.value.insert(0, Q)
+            self.ch = self.next_char()
+            self.ch = self.append_until(self.ch, D)
+            return
+        self.ch = self.next_char()
+        while not (self.prev == Q and (self.ch <= " " or self.ch == D)):
+            if self.ch != Q and self.ch != E:
+                if self.prev == Q:
+                    self._unescaped_quote()
+                    return
+                if self.prev == E:
+                    self.value.append(E)
+                self.ch = self.append_until(self.ch, Q + E)
+                self.prev = self.ch
+                self.ch = self.next_char()
+            else:
+                self._quote_escape()
+                self.prev = self.ch
+                self.ch = self.next_char()
+                if self.unescaped and self.ch == D:
+                    return
+        if self.ch != D and self.ch <= " ":  # whitespace after the quote
+            ws = []
+            while True:
+                ws.append(self.ch)
+                self.ch = self.next_char()
+                if not (self.ch <= " " and self.ch != D):
+                    break
+            if self.ch != D:
+                self.value += [Q, *ws, self.ch]
+                self.prev = self.ch
+                self._quoted()
+
+    def _quote_escape(self) -> None:
+        Q, E = self.Q, self.E
+        if self.ch == E and self.prev == E:
+            self.value.append(E)
+            self.ch = self.NUL
+        elif self.prev == E:
+            if self.ch == Q:
+                self.value.append(Q)
+                self.ch = self.NUL
+            else:
+                self.value.append(E)
+        elif self.ch == Q and self.prev == Q:
+            self.value.append(Q)
+        elif self.prev == Q:  # '"' then '\\': unescaped, read on as unquoted
+            self.value.append(Q)
+            self.prev = self.ch
+            self._unquoted_with_escapes()
+
+    def _unquoted_with_escapes(self) -> None:
+        Q, E = self.Q, self.E
+        while self.ch != self.D:
+            if self.ch != Q and self.ch != E:
+                if self.prev == Q:
+                    self.value.append(Q)
+                    self.prev = self.ch
+                    self._unquoted_with_escapes()
+                    return
+                self.value.append(self.ch)
+            else:
+                self._quote_escape()
+            self.prev = self.ch
+            self.ch = self.next_char()
+
+    def _unescaped_quote(self) -> None:
+        self.unescaped = True
+        self.value += [self.Q, self.ch]
+        self.prev = self.ch
+        self._quoted()
+
+    def _at_eol(self) -> None:
+        """univocity's ``consumeValueOnEOF`` + ``handleEOF``: an open
+        quote is kept, and the line's last value is always emitted."""
+        if self.ch == self.Q and self.prev != self.Q and not self.unescaped:
+            self.value.append(self.Q)
+        self.emit()
+
+
+def _safe_header(row: list[str], case_sensitive: bool) -> list[str]:
+    """Spark's ``CSVUtils.makeSafeHeader``: an empty name becomes
+    ``_c<i>``; a name that repeats (case-insensitively unless
+    ``spark.sql.caseSensitive``) gets its position appended."""
+    fold = (lambda s: s) if case_sensitive else str.lower
+    seen: dict[str, int] = {}
+    for v in row:
+        if v:
+            seen[fold(v)] = seen.get(fold(v), 0) + 1
+    return [
+        f"_c{i}" if not v else f"{v}{i}" if seen[fold(v)] > 1 else v
+        for i, v in enumerate(row)
+    ]
+
+
+def read_csv_header(spark: SparkSession, path: str) -> list[str]:
+    """Header-probe scan (S1): the column names Spark would give
+    ``spark.read.option("header", "true").csv(path)``, without a Spark job.
+
+    The reference reads the file with header=true and takes ``.columns``
+    (main.py:139-141). Here the driver reads only the file's first bytes
+    through the path's Hadoop ``FileSystem`` (any scheme Spark reads;
+    compressed files through their Hadoop codec) and applies Spark 4.1's
+    header rules in Python: first non-blank line, univocity tokenizing,
+    ``makeSafeHeader``. ``path`` names one file. A name Spark's file
+    index hides (``.x``, ``_x``, ``*._COPYING_``) raises like Spark's
+    probe did; ``_metadata*`` files read as header-less, as in Spark.
+    """
+    name = path.rstrip("/").rsplit("/", 1)[-1]
+    hidden = name.startswith(".") or (name.startswith("_") and "=" not in name)
+    if (hidden or name.endswith("._COPYING_")) and not name.startswith(
+        ("_common_metadata", "_metadata")
+    ):
+        raise FileNotFoundError(f"hidden from Spark's file index: {path}")
+    if hidden:
+        return []
+    fs, jpath = hadoop_fs(spark, path)
+    codec = _jclass(spark, "org.apache.hadoop.io.compress.CompressionCodecFactory")(
+        spark.sparkContext._jsc.hadoopConfiguration()
+    ).getCodec(jpath)
+    stream = fs.open(jpath)
+    try:
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        raw = _first_nonblank_line(stream)
+    finally:
+        stream.close()
+    if raw is None:
+        return []
+    row = _HeaderTokenizer(_decode_java(raw)).tokens()
+    if len(row) > _MAX_COLUMNS:
+        raise ValueError(f"{path}: header has more than {_MAX_COLUMNS} columns")
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false") == "true"
+    return _safe_header(row, case_sensitive)
 
 
 def read_csv_permissive(

@@ -7,9 +7,12 @@ columns to an error folder before any data is read
 are fine — they are folded later by ``schema.conform``.
 
 This stays a *driver-side* decision on purpose: at 100 TB the fact data
-never moves through the driver — only file names and header lines do
-(one tiny metadata read per file), and the accepted set is then read by
-executors in one distributed ``spark.read.csv([paths])`` pass.
+never moves through the driver — only file names and header lines do,
+and the accepted set is then read by executors in one distributed
+``spark.read.csv([paths])`` pass. Each header probe
+(``sources.files.read_csv_header``) is a bounded read of the file's first
+line through its Hadoop ``FileSystem``, tokenized on the driver with
+Spark's header rules: no Spark job per file.
 """
 
 from __future__ import annotations
@@ -34,8 +37,9 @@ class ValidationReport:
     # path -> probed header columns, for every accepted file: downstream
     # steps that need the header (exact-vs-wide schema routing in the
     # pipeline) MUST reuse these instead of re-probing — each probe is a
-    # sequential driver-side JVM metadata read, and at 10^5 daily files
-    # a redundant second probe pass costs tens of minutes (docs/SCALE.md)
+    # sequential driver-side open + first-line read of the file (~4 ms
+    # locally, one object-store GET remotely), so a second pass at 10^5
+    # daily files adds minutes of driver time (docs/SCALE.md)
     columns: dict[str, list[str]] = field(default_factory=dict)
 
 
@@ -56,8 +60,8 @@ def validate_files(
         try:
             cols = read_csv_header(spark, path)
         except Exception as ex:
-            # the gate's own job: an unreadable file (zero-byte,
-            # whitespace-only, corrupt — Spark can't infer a header)
+            # the gate's own job: an unreadable file (gone, a name
+            # Spark's file index hides, a header Spark can't tokenize)
             # is quarantine material, not a batch-killer; one bad file
             # must not abort validation of the rest
             report.rejected[path] = {f"<unreadable: {type(ex).__name__}>"}

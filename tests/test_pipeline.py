@@ -6,6 +6,7 @@ ledger lifecycle).
 
 from __future__ import annotations
 
+import contextlib
 import csv
 import os
 
@@ -496,3 +497,102 @@ def test_cleanup_local_dir_missing_ok(tmp_path):
     with _pytest.raises(FileNotFoundError):
         cleanup_local_dir(absent)
     assert cleanup_local_dir(absent, missing_ok=True) == []
+
+
+@contextlib.contextmanager
+def _spark_jobs(spark, group):
+    """Collect the ids of the Spark jobs run inside the block."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    ids: list[int] = []
+    try:
+        yield ids
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_validate_and_ledger_job_counts(spark, tmp_path):
+    """The per-file driver path runs no Spark job per file: validating a
+    drop (accepted, wide, missing-column, zero-byte) runs none at all,
+    and one ledger append is exactly its write job."""
+    from retail_sales_data_pipeline_spark.validate import validate_files
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_csv(src / "a.csv", HAPPY_HEADER, _happy_rows())
+    _write_csv(src / "b.csv", HAPPY_HEADER, _happy_rows()[:3])
+    _write_csv(src / "wide.csv", HAPPY_HEADER + ["payment_mode"],
+               [r + ["UPI"] for r in _happy_rows()])
+    _write_csv(src / "miss1.csv", HAPPY_HEADER[1:], [])
+    _write_csv(src / "miss2.csv", HAPPY_HEADER[:-1], [])
+    (src / "zero.csv").write_bytes(b"")
+    paths = sorted(str(p) for p in src.iterdir())
+    with _spark_jobs(spark, "validate_files") as jobs:
+        report = validate_files(spark, paths)
+    assert jobs == []
+    assert sorted(os.path.basename(p) for p in report.accepted) == ["a.csv", "b.csv", "wide.csv"]
+    assert len(report.rejected) == 3
+
+    ledger = Ledger(str(tmp_path / "ledger"))
+    with _spark_jobs(spark, "mark_active") as jobs:
+        ledger.mark_active(spark, {"a.csv": paths[0], "b.csv": paths[1]}, seq=0)
+    assert len(jobs) == 1
+
+
+def test_ledger_at_uri_path_detects_crash(spark, tmp_path):
+    """A ledger addressed by URI (file://, and likewise s3a:// or
+    hdfs://) must see its own events: existence is checked through the
+    path's Hadoop FileSystem, not os.path."""
+    ledger = Ledger(f"file://{tmp_path}/ledger")
+    assert ledger.active_files(spark) == []
+    ledger.mark_active(spark, {"x.csv": "/src/x.csv"}, seq=0)
+    assert ledger.active_files(spark) == ["x.csv"]
+
+
+def test_ledger_event_time_matches_row_list_writer(spark, tmp_path, monkeypatch):
+    """The Arrow-built append stores the instant the earlier row-list
+    writer stored: the naive UTC wall clock read as driver-local time
+    (TimestampType.toInternal). Under TZ=America/New_York that is 5 h
+    after a naive-pandas Arrow path would store. A ledger mixing the
+    two writers therefore still snapshots a later 'I' over an 'A'."""
+    import time
+    from datetime import datetime, timedelta
+
+    from retail_sales_data_pipeline_spark.ledger import LEDGER_SCHEMA
+
+    def old_append(path, name, status, now, seq):
+        spark.createDataFrame(
+            [(name, f"/src/{name}", status, now, seq)], LEDGER_SCHEMA
+        ).coalesce(1).write.mode("append").parquet(path)
+
+    def micros(path):
+        return [r.m for r in spark.read.parquet(path)
+                .selectExpr("unix_micros(event_time) AS m").collect()]
+
+    t0 = datetime(2026, 1, 15, 12, 0, 0, 123456)  # naive UTC, winter (EST)
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        old_append(str(tmp_path / "old"), "x.csv", "A", t0, 0)
+        new = Ledger(str(tmp_path / "new"))
+        monkeypatch.setattr(Ledger, "_now", lambda self: t0)
+        new.mark_active(spark, {"x.csv": "/src/x.csv"}, seq=0)
+        utc = int((t0 - datetime(1970, 1, 1)).total_seconds()) * 1_000_000 + t0.microsecond
+        assert micros(str(tmp_path / "old")) == [utc + 5 * 3600 * 1_000_000]
+        assert micros(str(tmp_path / "new")) == micros(str(tmp_path / "old"))
+
+        mixed = Ledger(str(tmp_path / "mixed"))
+        old_append(mixed.path, "x.csv", "A", t0, 0)
+        monkeypatch.setattr(Ledger, "_now", lambda self: t0 + timedelta(minutes=1))
+        mixed.mark_done(spark, {"x.csv": "/src/x.csv"}, seq=0)
+        assert [r.status for r in mixed.snapshot(spark).collect()] == ["I"]
+    finally:
+        if saved is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()

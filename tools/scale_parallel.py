@@ -67,19 +67,24 @@ def build(spark, out: str, k: int) -> None:
         dst = os.path.join(out, f"{name}.parquet")
         if not os.path.exists(dst):
             shutil.copy(f"{SRC}/{name}.parquet", dst)
-    for name, key in AMPLIFY_KEYS.items():
-        df = spark.read.parquet(f"{SRC}/{name}.parquet")
-        hi = df.agg(F.max(key)).collect()[0][0] + 1
+    frames = {
+        name: spark.read.parquet(f"{SRC}/{name}.parquet") for name in AMPLIFY_KEYS
+    }
+    shift = {
+        name: df.agg(F.max(AMPLIFY_KEYS[name])).collect()[0][0] + 1
+        for name, df in frames.items()
+    }
+    # orders and lineitem share ONE shift (l_orderkey is the FK to
+    # o_orderkey), so each replica's lineitems join that replica's orders
+    shift["orders"] = shift["lineitem"] = max(shift["orders"], shift["lineitem"])
+    for name, df in frames.items():
+        key = AMPLIFY_KEYS[name]
         reps = spark.range(k).withColumnRenamed("id", "_rep")
         amp = (
             df.crossJoin(reps)
-            .withColumn(key, F.col(key) + F.col("_rep") * F.lit(hi))
+            .withColumn(key, F.col(key) + F.col("_rep") * F.lit(shift[name]))
             .drop("_rep")
         )
-        if name == "lineitem":
-            # keep the FK to the shifted orders in lockstep — the
-            # replicas join replica-local orders, dims stay shared
-            pass  # l_orderkey IS the fk; shifted identically above
         (
             amp.repartition(N_FILES)
             .write.mode("overwrite")
