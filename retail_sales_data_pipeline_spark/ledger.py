@@ -150,15 +150,17 @@ class Ledger:
         flips every active file that demonstrably made it to the
         processed prefix — presence there IS proof the run finished its
         data work. Returns the file names reconciled. Driver-side
-        metadata only; safe to run any time (idempotent)."""
+        metadata only; safe to run any time (idempotent). Presence is
+        checked through the prefix's Hadoop FileSystem, so URI prefixes
+        (``file://``, ``s3a://``, ``hdfs://``) reconcile too."""
         import os
 
-        stuck = self.active_files(spark)
-        done = {
-            name: os.path.join(processed_dir, name)
-            for name in stuck
-            if os.path.exists(os.path.join(processed_dir, name))
-        }
+        done = {}
+        for name in self.active_files(spark):
+            dst = os.path.join(processed_dir, name)
+            fs, jpath = hadoop_fs(spark, dst)
+            if fs.exists(jpath):
+                done[name] = dst
         if done:
             self.mark_done(spark, done, seq=2)  # seq 2: after the crash
         return sorted(done)

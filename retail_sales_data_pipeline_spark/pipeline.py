@@ -10,6 +10,24 @@ star-join dims → cache → derive customer + sales marts → fan-out sinks
 (parquet, partitioned parquet, mart append) → archive processed files →
 ledger mark-done.
 
+Steps that do not depend on each other run at the same time: several
+jobs submitted from separate driver threads share one SparkContext
+(Spark's "scheduling within an application"). Each run submits them to
+its own thread pool:
+
+- the crash probe starts as soon as discovery returns, beside
+  validation and planning (conform, union, the wide files'
+  schema-inference reads, the star join, the mart definitions);
+- mark-active runs in the background as soon as validation has produced
+  the accepted set (it waits for the probe first);
+- the five sink writes start together and share the executors; the
+  mart row counts ride the two K1 writes as ``Observation``s.
+
+Orderings kept despite the overlap: probe → quarantine and 'A' events
+(a failing probe moves no file and marks nothing) → any output byte →
+archive → 'I' events. A failing sink raises only after every write has
+returned, so no job of the run outlives it, and the files stay 'A'.
+
 Deliberate fixes over the reference, all flagged in SURVEY.md §4/§7.4:
 - the joined frame is cached once; the reference recomputes the
   conform+union+join subtree for every one of its ≥8 actions;
@@ -28,9 +46,11 @@ driver. Semantics are identical because conform+union is a projection.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.scalars import full_name, month_key
@@ -148,54 +168,21 @@ def enrich_with_dims(
     )
 
 
-def run_pipeline(
-    spark: SparkSession,
-    source_dir: str,
-    error_dir: str,
-    processed_dir: str,
-    output_dir: str,
-    dims: dict[str, DataFrame],
-    ledger: Ledger | None = None,
-    run_id: str | None = None,
-    mandatory: list[str] | None = None,
-) -> PipelineResult:
-    """One pipeline run over every CSV in ``source_dir``."""
-    run_id = run_id if run_id is not None else str(int(time.time() * 1000))
-    result = PipelineResult(run_id=run_id)
-    mandatory = mandatory if mandatory is not None else MANDATORY_COLUMNS
-
-    # 1. discover (reference main.py:66-97 S3 list+download → local dir)
-    paths = discover_csv_files(source_dir)
-    if not paths:
-        return result  # clean no-op, reference aborts (main.py:75-77)
-
-    # 2. crash detection (reference main.py:41-64)
-    if ledger is not None:
-        names = [p.rsplit("/", 1)[-1] for p in paths]
-        result.crashed_files = ledger.active_files(spark, among=names)
-
-    # 3. validate + quarantine (reference main.py:136-176)
-    report = validate_files(spark, paths, mandatory)
-    result.quarantined = quarantine_files(list(report.rejected), error_dir)
-    result.accepted = report.accepted
-    if not report.accepted:
-        return result
-
-    # 4. ledger mark-active (reference main.py:184-213)
-    accepted_named = {p.rsplit("/", 1)[-1]: p for p in report.accepted}
-    if ledger is not None:
-        ledger.mark_active(spark, accepted_named, seq=0)
-
-    # 5. conform + union. Files whose header IS the canonical 8 columns
-    # are read in one distributed pass with the explicit schema; files
-    # with extra columns are read per-file (their schemas differ) and
-    # conformed via the concat_ws fold (reference main.py:223-258).
-    # The routing reuses the headers probed during validation (step 3) —
-    # one driver-side metadata read per file end-to-end, not two.
+def _conformed_fact(
+    spark: SparkSession, accepted: list[str], columns: dict[str, list[str]]
+) -> DataFrame:
+    """Conform + union the accepted files (reference main.py:223-258).
+    Files whose header IS the canonical 8 columns are read in one
+    distributed pass with the explicit schema; files with extra columns
+    are read per-file (their schemas differ) and conformed via the
+    concat_ws fold. The routing reuses the headers probed during
+    validation (``columns``): one driver-side metadata read per file
+    end-to-end, not two.
+    """
     canonical_8 = [f.name for f in SALES_SCHEMA.fields if f.name != "additional_column"]
     exact, wide = [], []
-    for p in report.accepted:
-        (exact if report.columns[p] == canonical_8 else wide).append(p)
+    for p in accepted:
+        (exact if columns[p] == canonical_8 else wide).append(p)
     frames = []
     if exact:
         base_schema = type(SALES_SCHEMA)(
@@ -216,24 +203,99 @@ def run_pipeline(
             if c not in df.columns:
                 df = df.withColumn(c, F.lit(None).cast(types_8[c]))
         frames.append(conform(df, canonical_8))
-    fact = union_conformed(frames)
+    return union_conformed(frames)
 
-    # 6-7. star join + cache (fixes recomputation, SURVEY.md §3.1)
-    enriched = enrich_with_dims(
-        fact, dims["customer"], dims["store"], dims["sales_team"]
-    ).cache()
-    try:
-        # 8. marts — cached too: each is fanned out to 2-3 sinks plus a
-        # count, and the window+distinct (+rank) must not recompute per
-        # action (the exact recomputation disease the reference has)
-        customer_mart = derive_customer_mart(enriched).cache()
-        sales_mart = derive_sales_mart(enriched).cache()
+
+def run_pipeline(
+    spark: SparkSession,
+    source_dir: str,
+    error_dir: str,
+    processed_dir: str,
+    output_dir: str,
+    dims: dict[str, DataFrame],
+    ledger: Ledger | None = None,
+    run_id: str | None = None,
+    mandatory: list[str] | None = None,
+) -> PipelineResult:
+    """One pipeline run over every CSV in ``source_dir``. Independent
+    Spark work is submitted at the same time; the module docstring says
+    what overlaps and which orderings hold."""
+    run_id = run_id if run_id is not None else str(int(time.time() * 1000))
+    result = PipelineResult(run_id=run_id)
+    mandatory = mandatory if mandatory is not None else MANDATORY_COLUMNS
+
+    # 1. discover (reference main.py:66-97 S3 list+download → local dir)
+    paths = discover_csv_files(source_dir)
+    if not paths:
+        return result  # clean no-op, reference aborts (main.py:75-77)
+
+    # One pool per run, joined on every exit path. Its width is the
+    # number of independent tasks: the five sinks (the probe and the
+    # mark never run beside them).
+    with ThreadPoolExecutor(
+        max_workers=5, thread_name_prefix=f"run_pipeline-{run_id}"
+    ) as pool:
+
+        def submit(fn, *args):
+            # the caller's job group, description, scheduler pool and
+            # tags reach the task's jobs; captured once per task, so no
+            # two threads share one local-properties object
+            return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+        # 2. crash detection (reference main.py:41-64), beside 3 and 5-8
+        probe = None
+        if ledger is not None:
+            names = [p.rsplit("/", 1)[-1] for p in paths]
+            probe = submit(ledger.active_files, spark, names)
+
+        # 3. validate (reference main.py:136-153)
+        report = validate_files(spark, paths, mandatory)
+        result.accepted = report.accepted
+
+        # 4. ledger mark-active (reference main.py:184-213), in the
+        # background: it waits for the probe, which must not read this
+        # run's own 'A' events
+        accepted_named = {p.rsplit("/", 1)[-1]: p for p in report.accepted}
+        marked = None
+        if ledger is not None and report.accepted:
+
+            def mark_active_after_probe():
+                probe.result()
+                ledger.mark_active(spark, accepted_named, seq=0)
+
+            marked = submit(mark_active_after_probe)
+
+        enriched = customer_mart = sales_mart = None
         try:
-            # 9. fan-out sinks (reference main.py:313-380, K1/K2/K3).
-            # The table sinks are run-scoped appends: a retried run
-            # OVERWRITES its own run=<id> partition instead of
-            # double-appending (module docstring's idempotency claim
-            # now holds for the tables too, not just the run dir).
+            # 5-8. conform + union, star join, marts: side-effect free,
+            # so they run while the ledger works. The joined frame is
+            # cached once (fixes recomputation, SURVEY.md §3.1); the
+            # marts are cached too — each feeds 2-3 sinks, and the
+            # window+distinct (+rank) must not recompute per write.
+            if report.accepted:
+                fact = _conformed_fact(spark, report.accepted, report.columns)
+                enriched = enrich_with_dims(
+                    fact, dims["customer"], dims["store"], dims["sales_team"]
+                ).cache()
+                customer_mart = derive_customer_mart(enriched).cache()
+                sales_mart = derive_sales_mart(enriched).cache()
+
+            # 3b. quarantine (reference main.py:159-176), only once the
+            # probe has returned: a failing probe moves no file
+            if probe is not None:
+                result.crashed_files = probe.result()
+            result.quarantined = quarantine_files(list(report.rejected), error_dir)
+            if not report.accepted:
+                return result
+
+            # 9. fan-out sinks (reference main.py:313-380, K1/K2/K3):
+            # all five at once, and only once the 'A' events are
+            # durable. The table sinks are run-scoped appends: a
+            # retried run OVERWRITES its own run=<id> partition instead
+            # of double-appending. The mart row counts ride the K1
+            # writes as Observations, so no extra count() job runs.
+            if marked is not None:
+                marked.result()
             out = run_scoped_path(output_dir, run_id)
             result.outputs = {
                 "customer_mart": f"{out}/customer_data_mart",
@@ -242,31 +304,53 @@ def run_pipeline(
                 "customer_mart_table": f"{output_dir}/tables/customers_data_mart",
                 "sales_mart_table": f"{output_dir}/tables/sales_team_data_mart",
             }
-            write_parquet(customer_mart, result.outputs["customer_mart"])
-            write_parquet(sales_mart, result.outputs["sales_mart"])
-            write_partitioned_parquet(
-                sales_mart,
-                result.outputs["sales_mart_partitioned"],
-                ["sales_month", "store_id"],
-            )
-            append_table_run_scoped(
-                customer_mart, result.outputs["customer_mart_table"], run_id
-            )
-            append_table_run_scoped(
-                sales_mart, result.outputs["sales_mart_table"], run_id
-            )
-            result.customer_mart_rows = customer_mart.count()
-            result.sales_mart_rows = sales_mart.count()
+            customer_rows, sales_rows = Observation(), Observation()
+            n = F.count(F.lit(1)).alias("n")
+            writes = [
+                submit(
+                    write_parquet,
+                    customer_mart.observe(customer_rows, n),
+                    result.outputs["customer_mart"],
+                ),
+                submit(
+                    write_parquet,
+                    sales_mart.observe(sales_rows, n),
+                    result.outputs["sales_mart"],
+                ),
+                submit(
+                    write_partitioned_parquet,
+                    sales_mart,
+                    result.outputs["sales_mart_partitioned"],
+                    ["sales_month", "store_id"],
+                ),
+                submit(
+                    append_table_run_scoped,
+                    customer_mart,
+                    result.outputs["customer_mart_table"],
+                    run_id,
+                ),
+                submit(
+                    append_table_run_scoped,
+                    sales_mart,
+                    result.outputs["sales_mart_table"],
+                    run_id,
+                ),
+            ]
+            wait(writes)
+            for w in writes:
+                w.result()  # sink failures raise (the first, in K order)
+            # only now: Observation.get blocks forever if its write failed
+            result.customer_mart_rows = customer_rows.get["n"]
+            result.sales_mart_rows = sales_rows.get["n"]
 
-            # 10. finalize (reference main.py:394-447)
+            # 10. finalize (reference main.py:394-447), after every write
             archive_files(report.accepted, processed_dir)
             if ledger is not None:
                 ledger.mark_done(spark, accepted_named, seq=1)
         finally:
-            customer_mart.unpersist()
-            sales_mart.unpersist()
-    finally:
-        # sink failures raise by design — the fact-scale cache must not
-        # outlive the run when they do
-        enriched.unpersist()
+            # sink failures raise by design — the caches must not
+            # outlive the run when they do
+            for df in (sales_mart, customer_mart, enriched):
+                if df is not None:
+                    df.unpersist()
     return result

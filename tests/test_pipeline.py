@@ -9,6 +9,8 @@ from __future__ import annotations
 import contextlib
 import csv
 import os
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -484,6 +486,19 @@ def test_ledger_reconcile_flips_archived_actives(spark, workdir):
     assert ledger.reconcile(spark, workdir["processed"]) == []  # idempotent
 
 
+def test_ledger_reconcile_uri_processed_prefix(spark, workdir):
+    """The same recovery when the processed prefix is a URI (file://,
+    and likewise s3a:// or hdfs://): presence is checked through the
+    prefix's Hadoop FileSystem, not os.path."""
+    ledger = Ledger(f"{workdir['out']}/ledger")
+    ledger.mark_active(spark, {"x.csv": "/src/x.csv", "y.csv": "/src/y.csv"}, seq=0)
+    os.makedirs(workdir["processed"], exist_ok=True)
+    open(f"{workdir['processed']}/x.csv", "w").write("data")
+    fixed = ledger.reconcile(spark, f"file://{workdir['processed']}")
+    assert fixed == ["x.csv"]
+    assert ledger.active_files(spark) == ["y.csv"]
+
+
 def test_cleanup_local_dir_missing_ok(tmp_path):
     """A missing location raises by default (typo guard); rerunnable
     emptying flows on object stores — where an emptied prefix is
@@ -596,3 +611,190 @@ def test_ledger_event_time_matches_row_list_writer(spark, tmp_path, monkeypatch)
         else:
             os.environ["TZ"] = saved
         time.tzset()
+
+
+class _CallLog:
+    """Thread-safe record of wrapped calls' starts and ends, in order."""
+
+    def __init__(self):
+        self._lock = threading.Lock()
+        self.events: list[tuple[str, str]] = []
+
+    def wrap(self, name, fn, delay=0.0):
+        def wrapper(*args, **kwargs):
+            self._add("start", name)
+            try:
+                time.sleep(delay)  # widens any race the ordering forbids
+                return fn(*args, **kwargs)
+            finally:
+                self._add("end", name)
+
+        return wrapper
+
+    def _add(self, event, name):
+        with self._lock:
+            self.events.append((event, name))
+
+    def at(self, event, name) -> list[int]:
+        return [i for i, e in enumerate(self.events) if e == (event, name)]
+
+
+def _drop_with_reject(workdir):
+    _write_csv(f"{workdir['source']}/good.csv", HAPPY_HEADER, _happy_rows())
+    _write_csv(f"{workdir['source']}/bad.csv", HAPPY_HEADER[1:], [])
+
+
+def _drain_listener_bus(spark):
+    """Let the status tracker catch up with every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+def test_pipeline_overlap_keeps_side_effect_order(spark, dims, workdir, monkeypatch):
+    """The ledger runs beside planning and the five sinks run together,
+    but the side effects keep their order: the probe returns before
+    mark-active starts and before any quarantine; the 'A' events are
+    written before any sink starts; archive and mark-done start only
+    after every write has returned. Each wrapped step is slowed so an
+    unwaited step would start early."""
+    import retail_sales_data_pipeline_spark.pipeline as pl
+
+    log = _CallLog()
+    monkeypatch.setattr(Ledger, "active_files", log.wrap("probe", Ledger.active_files, 0.3))
+    monkeypatch.setattr(Ledger, "mark_active", log.wrap("mark_active", Ledger.mark_active, 0.3))
+    monkeypatch.setattr(Ledger, "mark_done", log.wrap("mark_done", Ledger.mark_done))
+    monkeypatch.setattr(pl, "quarantine_files", log.wrap("quarantine", pl.quarantine_files))
+    monkeypatch.setattr(pl, "archive_files", log.wrap("archive", pl.archive_files))
+    monkeypatch.setattr(pl, "write_parquet", log.wrap("sink", pl.write_parquet))
+    monkeypatch.setattr(
+        pl, "write_partitioned_parquet", log.wrap("sink", pl.write_partitioned_parquet)
+    )
+    monkeypatch.setattr(
+        pl, "append_table_run_scoped", log.wrap("sink", pl.append_table_run_scoped, 0.3)
+    )
+
+    _drop_with_reject(workdir)
+    res = run_pipeline(
+        spark, workdir["source"], workdir["error"], workdir["processed"],
+        workdir["out"], dims, ledger=Ledger(workdir["ledger"]), run_id="rO",
+    )
+    assert [os.path.basename(q) for q in res.quarantined] == ["bad.csv"]
+    assert res.customer_mart_rows == 10
+
+    (probe_end,) = log.at("end", "probe")
+    (mark_start,) = log.at("start", "mark_active")
+    (mark_end,) = log.at("end", "mark_active")
+    (quarantine_start,) = log.at("start", "quarantine")
+    assert probe_end < mark_start and probe_end < quarantine_start
+    sink_starts, sink_ends = log.at("start", "sink"), log.at("end", "sink")
+    assert len(sink_starts) == len(sink_ends) == 5
+    assert mark_end < min(sink_starts)
+    assert max(sink_ends) < log.at("start", "archive")[0]
+    assert max(sink_ends) < log.at("start", "mark_done")[0]
+
+
+def test_pipeline_sink_failure_waits_and_leaves_files_active(
+    spark, dims, workdir, monkeypatch
+):
+    """One failing sink: run_pipeline raises its error only after the
+    other writes have returned. No job of the caller's group is left
+    running, no worker thread survives, the caches are released, and
+    the accepted file is neither archived nor flipped to 'I' — the next
+    run's probe reports it."""
+    import retail_sales_data_pipeline_spark.pipeline as pl
+
+    def failing_append(df, path, run_id):
+        raise RuntimeError("table sink down")
+
+    monkeypatch.setattr(pl, "append_table_run_scoped", failing_append)
+    _drop_with_reject(workdir)
+    ledger = Ledger(workdir["ledger"])
+    sc = spark.sparkContext
+    cached_before = len(sc._jsc.getPersistentRDDs())
+    with _spark_jobs(spark, "caller-sink-failure") as jobs:
+        with pytest.raises(RuntimeError, match="table sink down"):
+            run_pipeline(
+                spark, workdir["source"], workdir["error"], workdir["processed"],
+                workdir["out"], dims, ledger=ledger, run_id="rF",
+            )
+        _drain_listener_bus(spark)
+    tracker = sc.statusTracker()
+    assert jobs  # the ledger and the K1/K2 writes ran in the caller's group
+    assert [j for j in jobs if tracker.getJobInfo(j).status == "RUNNING"] == []
+    assert [t for t in threading.enumerate() if t.name.startswith("run_pipeline-rF")] == []
+    assert len(sc._jsc.getPersistentRDDs()) == cached_before
+    assert os.path.exists(f"{workdir['source']}/good.csv")
+    assert not os.path.exists(workdir["processed"])
+    assert ledger.active_files(spark) == ["good.csv"]
+
+    monkeypatch.undo()
+    res = run_pipeline(
+        spark, workdir["source"], workdir["error"], workdir["processed"],
+        workdir["out"], dims, ledger=ledger, run_id="rF2",
+    )
+    assert res.crashed_files == ["good.csv"]
+    assert ledger.active_files(spark) == []
+
+
+def test_pipeline_jobs_carry_caller_job_group(spark, dims, workdir):
+    """Every job of the run, including those its worker threads submit,
+    runs in the caller's job group: the set of ungrouped jobs does not
+    grow, and the caller's group holds the five sink writes and the two
+    ledger appends."""
+    tracker = spark.sparkContext.statusTracker()
+    _drain_listener_bus(spark)
+    ungrouped = set(tracker.getJobIdsForGroup())
+    _drop_with_reject(workdir)
+    with _spark_jobs(spark, "caller-group") as jobs:
+        run_pipeline(
+            spark, workdir["source"], workdir["error"], workdir["processed"],
+            workdir["out"], dims, ledger=Ledger(workdir["ledger"]), run_id="rG",
+        )
+        _drain_listener_bus(spark)
+    assert set(tracker.getJobIdsForGroup()) <= ungrouped
+    assert len(jobs) >= 5 + 2
+
+
+def test_pipeline_row_counts_come_from_the_writes(spark, dims, workdir, monkeypatch):
+    """No count() action runs: the mart row counts ride the K1 writes,
+    and equal the rows written."""
+    monkeypatch.setattr(type(dims["customer"]), "count", _no_count)
+    _write_csv(f"{workdir['source']}/a.csv", HAPPY_HEADER, _happy_rows())
+    res = run_pipeline(
+        spark, workdir["source"], workdir["error"], workdir["processed"],
+        workdir["out"], dims, run_id="rC",
+    )
+    monkeypatch.undo()
+    assert res.customer_mart_rows == len(spark.read.parquet(res.outputs["customer_mart"]).collect())
+    assert res.sales_mart_rows == len(spark.read.parquet(res.outputs["sales_mart"]).collect())
+    assert (res.customer_mart_rows, res.sales_mart_rows) == (10, 4)
+
+
+def test_pipeline_header_only_file_counts_zero(spark, dims, workdir, monkeypatch):
+    """An accepted file with a header and no rows: both marts are empty,
+    the counts are 0 / 0, and reading them does not hang."""
+    monkeypatch.setattr(type(dims["customer"]), "count", _no_count)
+    _write_csv(f"{workdir['source']}/empty_day.csv", HAPPY_HEADER, [])
+    out = {}
+
+    def run():
+        try:
+            out["res"] = run_pipeline(
+                spark, workdir["source"], workdir["error"], workdir["processed"],
+                workdir["out"], dims, ledger=Ledger(workdir["ledger"]), run_id="rE",
+            )
+        except BaseException as ex:
+            out["err"] = ex
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=300)
+    assert not t.is_alive(), "run_pipeline hung"
+    if "err" in out:
+        raise out["err"]
+    res = out["res"]
+    assert len(res.accepted) == 1
+    assert (res.customer_mart_rows, res.sales_mart_rows) == (0, 0)
+
+
+def _no_count(self):
+    raise AssertionError("run_pipeline must not run a count() action")
