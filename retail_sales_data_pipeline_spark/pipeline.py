@@ -220,6 +220,15 @@ def run_pipeline(
     """One pipeline run over every CSV in ``source_dir``. Independent
     Spark work is submitted at the same time; the module docstring says
     what overlaps and which orderings hold."""
+    if inheritable_thread_target(spark) is spark:
+        # PySpark's non-pinned mode hands the session back instead of a
+        # decorator; the overlapped steps would then fail mid-run
+        raise RuntimeError(
+            "run_pipeline needs PySpark's pinned-thread mode: its worker "
+            "threads inherit the caller's job group and local properties "
+            "through inheritable_thread_target, which is a no-op when "
+            "PYSPARK_PIN_THREAD=false — unset it or set it to true"
+        )
     run_id = run_id if run_id is not None else str(int(time.time() * 1000))
     result = PipelineResult(run_id=run_id)
     mandatory = mandatory if mandatory is not None else MANDATORY_COLUMNS

@@ -56,7 +56,9 @@ sidecar files — adjacent-version ``table_changes`` and the multi-hop
 
 from __future__ import annotations
 
+import dataclasses
 import os
+from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -815,7 +817,12 @@ def _version_names_skip(
     carried verbatim into the commit being built: its members are then
     referenced by BOTH the old and the new version, so excluding them
     from both sides of every live/dead set difference cancels exactly
-    — they can never be retired, dropped, or reported top-level."""
+    — they can never be retired, dropped, or reported top-level. An
+    inline ``files`` list wins: it is the resolved member list (the
+    commit tail passes the version it is building that way, sharded or
+    not, so its own fresh shards are never re-read)."""
+    if "files" in version:
+        return {e["name"] for e in version["files"]}
     ext = version.get("files_ext")
     if ext is None or not skip:
         return {e["name"] for e in _version_files(version, table_path)}
@@ -1498,10 +1505,8 @@ def _verify_table_sweep(path: str, deep: bool) -> dict:
                             f"{tag}: {name} entry cols != physical "
                             "schema (absence pruning would be unsound)"
                         )
-        for rel in sorted(_cdc_names(v) | _dv_names(v)):
-            base = os.path.basename(rel)
-            if not (base.startswith("cdc-") or base.startswith("dv-")):
-                continue  # by-reference data names checked above
+        # by-reference CDC names are data files, checked above
+        for rel in sorted(_cdc_sidecars(v) | _dv_names(v)):
             if rel in seen_sidecars:
                 continue
             seen_sidecars.add(rel)
@@ -1746,6 +1751,23 @@ def _retire(paths: list[str]) -> None:
         _io(p).delete_quiet(p)
 
 
+def _retire_dead(
+    path: str, dead: set[str], live: set[str], extra=(), bloom=False
+) -> None:
+    """THE post-commit retire every commit path shares: delete the
+    ``dead`` manifest-relative names plus ``extra`` (superseded loose
+    files) — with their per-file bloom companions on a bloomed table:
+    sidecar liveness is derived from its data file, vacuum sweeps any
+    stragglers — then the generation directories they drained."""
+    dead_paths = [os.path.join(path, n) for n in set(dead) | set(extra)]
+    if bloom:
+        dead_paths += [p + _BLOOM_SUFFIX for p in list(dead_paths)]
+    _retire(dead_paths)
+    _cleanup_empty_gen_dirs(
+        path, live, {n.split("/", 1)[0] for n in dead if "/" in n}
+    )
+
+
 def _cdc_names(version: dict) -> set[str]:
     """Relative paths of a version's CDC sidecar files/dirs."""
     cdc = version.get("cdc") or {}
@@ -1783,6 +1805,32 @@ def _dv_map(version: dict | None) -> dict[str, int]:
 def _dv_names(version: dict) -> set[str]:
     """Relative paths of a version's deletion-vector sidecar dirs."""
     return set((version.get("dv") or {}).get("data", []))
+
+
+def _live_names(
+    versions: list[dict],
+    path: str,
+    skip: set[str] = frozenset(),
+    members: set[str] | None = None,
+) -> set[str]:
+    """Every object name the given versions keep alive — the ONE
+    liveness rule the commit tail, rollback, vacuum and the lost-staging
+    check share: data-file members (not enumerating shards named in
+    ``skip`` — see :func:`_version_names_skip`), real CDC sidecars, DV
+    sidecars, entry-list shards, and each shard's consolidated bloom
+    object (``bloomside``). A data file's per-file bloom sidecar lives
+    and dies with the file and is not listed. ``members``, when given,
+    also collects the member names alone."""
+    out: set[str] = set()
+    for v in versions:
+        names = _version_names_skip(v, path, skip)
+        if members is not None:
+            members |= names
+        shards = (v.get("files_ext") or {}).get("shards", [])
+        out |= names | _cdc_sidecars(v) | _dv_names(v)
+        out |= {s["name"] for s in shards}
+        out |= {s["bloomside"] for s in shards if s.get("bloomside")}
+    return out
 
 
 # the deletion-vector sidecar schema: data-file BASENAME + physical
@@ -2029,12 +2077,11 @@ def _drop_lost_staging(io, path: str, gen: str) -> None:
     try:
         man = _load_manifest(path)
         if man is not None:
-            for ver in [man] + list(man.get("history", [])):
-                if ver.get("generation") == gen or any(
-                    e["name"].startswith(gen + "/")
-                    for e in _version_files(ver, path)
-                ):
-                    return  # the commit landed: staging IS live data
+            versions = [man] + list(man.get("history", []))
+            if any(v.get("generation") == gen for v in versions) or any(
+                n.startswith(gen + "/") for n in _live_names(versions, path)
+            ):
+                return  # the commit landed: staging IS live data
     except Exception:
         return
     io.rmtree_quiet(os.path.join(path, gen))
@@ -2117,393 +2164,416 @@ def _rebase_ok(
     return True
 
 
-def _commit_generation(
-    spark: SparkSession,
-    path: str,
-    *,
-    man: dict | None,
-    loose: list[str],
-    stale: list[str],
-    keep_entries: list[dict],
-    new_df: DataFrame | None,
-    suffix: str,
-    expected_new_rows,
-    retain_versions: int = 0,
-    skip_empty: bool = False,
-    adopt: list[tuple[str, dict]] | None = None,
-    cdc: dict | None = None,
-    mixed_schema: bool | None = None,
-    table_schema: str | None = None,
-    dv_df: DataFrame | None = None,
-    dv_n: dict[str, int] | None = None,
-    dv_carry: list[str] | None = None,
-    txn: tuple[str, int] | None = None,
-    cdc_insert_staged: bool = False,
-    rebase: str | None = None,
-    carried_shards: list[dict] | None = None,
-) -> tuple[int, dict, int]:
-    """Shared commit core of the manifest protocol. Writes ``new_df``
-    into a fresh generation directory, byte-copies the ``adopt`` loose
-    append files in beside it (adoption: an untouched append becomes a
-    tracked file for the cost of its own bytes, never a Spark job), and
-    atomically commits a manifest whose file list is ``keep_entries``
-    — carried BY REFERENCE, zero bytes rewritten — plus the new files.
-
-    Steps (a crash between any two leaves a readable table):
-
-    1. write ``new_df`` to ``<path>/gen-<n><suffix>/`` — live table
-       untouched;
-    2. validate the staged row count against ``expected_new_rows``
-       (parquet FOOTER metadata only — no job, cheap at any scale);
-    3. copy adopted appends in; write CDC sidecar files (the
-       insert/delete row sets of a DML pass) under the new generation;
-    4. commit: atomically replace ``_manifest.json`` (writer-fenced,
-       see :func:`_commit_manifest`);
-    5. retire files referenced by neither the new manifest nor a
-       retained history version.
-
-    ``cdc`` maps {"insert": df|None, "delete": df|None}; passing a dict
-    (even of Nones) RECORDS the commit's change-data-feed so
-    adjacent-version :func:`table_changes` skips the exceptAll scan;
-    None means "changes unknown" (e.g. rollback) and forces the
-    fallback. ``cdc_insert_staged`` records THIS commit's staged data
-    files as the insert feed by reference (the pure-insert shape —
-    zero extra bytes). Loose appends are reconciled automatically: adopted files
-    join the recorded insert list by reference, and a commit that FOLDS
-    loose rows into rewrites downgrades its feed to unknown (their row
-    set was never captured — reporting "no change" would silently lose
-    the appended rows for incremental consumers). ``mixed_schema``: True marks the table as holding files
-    of differing physical schemas (reads merge footers), False clears
-    the mark (a full rewrite unified them), None inherits.
-    ``table_schema`` (round 11): the JSON StructType of the table's
-    UNIFIED logical schema, recorded in the root on schema-widening
-    commits (the Delta model — schema lives in the log, not in
-    footers). Its presence lets mixed-schema reads supply the schema
-    explicitly (no all-footers merge job, no schema loss when stats
-    pruning drops every file carrying an evolved column), which is
-    what re-enables data skipping on evolved tables. Carried by
-    non-widening commits; dropped when ``mixed_schema`` clears.
-    Returns ``(gen_no, manifest, n_new_files)``.
-
-    DELETION VECTORS: ``dv_n`` (per-file deleted-row counts, keyed by
-    manifest-relative name) records the NEW version's merge-on-read
-    state; ``dv_df`` is its combined ``(_file, _pos)`` position set,
+class _Dv(NamedTuple):
+    """A commit's deletion-vector delta: ``n`` (per-file deleted-row
+    counts, keyed by manifest-relative name) records the NEW version's
+    merge-on-read state; ``df`` is the ``(_file, _pos)`` position set
     written as a sidecar under the new generation — or None with
-    ``dv_carry`` naming the previous version's sidecars to share BY
-    REFERENCE when the position set is unchanged. ``new_df=None``
-    skips the data write entirely (a pure DV commit rewrites zero data
-    bytes). Omitting all three (the default) clears DVs — any full
-    rewrite materializes them.
+    ``carry`` naming the previous version's sidecars to share BY
+    REFERENCE when the position set is unchanged (with both, ``df`` is
+    a DELTA appended beside the shared sidecars). All None (the
+    default) clears DVs — any full rewrite materializes them."""
 
-    ``rebase`` opts the commit into COMMIT-LEVEL CONFLICT
-    RECONCILIATION (see the commit-tail comment and :func:`_rebase_ok`):
-    on a lost CAS, reload the winner's manifest and, when the two
-    commits touched disjoint files, re-point the already-staged files
-    at the new generation instead of raising. ``"append"`` is the pure-
-    insert shape (empty read-set — always rebases unless the winner
-    already applied this commit's ``txn`` version, which raises
-    :class:`_TxnAlreadyApplied`); ``"auto"`` is the MATCHED-ONLY
-    predicate-DML / layout shape (rebases only when :func:`_rebase_ok`
-    proves disjointness); ``"merge"`` is the read-dependent inserter
-    shape — like ``"auto"`` but additionally refusing any winner that
-    ADDED files, because a not-matched insert decided against the
-    snapshot is invalidated by concurrent new rows (duplicate-key
-    hazard); ``None`` (default) keeps the strict behavior — the
-    loser raises and :func:`retry_on_conflict` re-runs the whole pass.
-    A non-rebaseable lost race now also cleans its staged generation
-    eagerly instead of leaving it for vacuum's TTL.
+    df: DataFrame | None = None
+    n: dict[str, int] | None = None
+    carry: list[str] | None = None
 
-    ``carried_shards`` (round 10, SELECTIVE DML): root shard records
-    the caller's resolve proved untouched (see ``_live_state``'s
-    ``carry_out``) — their members were never loaded and never will
-    be: the commit carries the records verbatim, adds their ``rows``
-    aggregate to the row accounting, and excludes their members from
-    BOTH sides of every live/dead set difference (sound because the
-    shard object is referenced by both the old and the new version —
-    the difference cancels member-by-member). A lost CAS resets to
-    the full resolve (the winner may have rewritten a carried shard).
-    The "merge" isolation check compares the winner's live set against
-    the FULL snapshot name set; a lost "merge" CAS with carried shards
-    completes ``snapshot_names`` lazily from the carried records
-    (their members ARE the missing names) before consulting
-    :func:`_rebase_ok` — the rare-path cost of the common-path skip.
-    """
+
+class _Insert(NamedTuple):
+    """The pure-append shape, :func:`insert_into`'s alone: the staged
+    data files ARE the commit's insert feed (recorded by reference —
+    zero extra bytes), ``txn`` is the ``(app_id, version)`` streaming
+    watermark the commit advances, and ``observed`` — set on the
+    single-pass path — reads the expected row count off the staging
+    write's own Observation; an observed-empty batch commits nothing."""
+
+    txn: tuple[str, int] | None = None
+    observed: Callable[[], int] | None = None
+
+
+@dataclasses.dataclass(frozen=True)
+class Commit:
+    """One manifest commit, planned against the base manifest ``man``
+    and applied by :func:`_commit_generation`.
+
+    ``keep`` are the entries carried BY REFERENCE, ``new_df`` the rows
+    staged into the new generation (None: no data write — a pure DV
+    commit rewrites zero data bytes), ``expected`` the row count the
+    staged files must hold. ``loose`` are the snapshot's loose appends
+    this commit consumes — folded into ``new_df`` or, when listed in
+    ``adopt`` with their entries, byte-copied in beside it (an
+    untouched append becomes a tracked file for the cost of its own
+    bytes) — and ``stale`` the superseded names still on disk; both
+    are retired after the commit. ``retain`` keeps that many previous
+    versions readable.
+
+    ``cdc`` maps {"insert": df|None, "delete": df|None}; a dict (even
+    of Nones) RECORDS the commit's change-data-feed, so adjacent-
+    version :func:`table_changes` skips the exceptAll scan; None means
+    "changes unknown". Adopted appends join the recorded insert list
+    by reference, and a commit that FOLDS loose rows into rewrites
+    downgrades its feed to unknown (their row set was never captured).
+    ``mixed_schema``: True marks the table as holding files of
+    differing physical schemas and records ``table_schema``, the JSON
+    StructType of the UNIFIED logical schema (the Delta model — schema
+    lives in the log, not in footers: explicit-schema reads, no
+    all-footers merge, data skipping on evolved tables); False clears
+    the mark (a full rewrite unified them); None inherits. ``dv`` is the
+    :class:`_Dv` delta; ``insert`` the :class:`_Insert` shape.
+
+    ``carried`` (SELECTIVE DML): root shard records the caller's
+    resolve proved untouched (see ``_live_state``'s ``carry_out``) —
+    their members were never loaded and never will be: the commit
+    carries the records verbatim, adds their ``rows`` aggregate to the
+    row accounting, and excludes their members from BOTH sides of
+    every live/dead set difference (sound because the shard object is
+    referenced by both the old and the new version — the difference
+    cancels member-by-member). A lost CAS resets to the full resolve
+    (the winner may have rewritten a carried shard)."""
+
+    man: dict | None
+    op: str
+    loose: list[str] = ()
+    stale: list[str] = ()
+    keep: list[dict] = ()
+    new_df: DataFrame | None = None
+    expected: int = 0
+    retain: int = 0
+    adopt: list[tuple[str, dict]] = ()
+    cdc: dict | None = None
+    mixed_schema: bool | None = None
+    table_schema: str | None = None
+    dv: _Dv = _Dv()
+    carried: list[dict] = ()
+    insert: _Insert | None = None
+
+    @property
+    def rebase(self) -> str:
+        """The commit's COMMIT-LEVEL CONFLICT RECONCILIATION shape (see
+        the commit-tail comment and :func:`_rebase_ok`): on a lost CAS,
+        reload the winner's manifest and, when the two commits touched
+        disjoint files, re-point the already-staged files at the new
+        generation instead of raising. ``"append"`` (insert) is the
+        pure-insert shape — empty read-set, always rebases unless the
+        winner already applied this commit's txn version, which raises
+        :class:`_TxnAlreadyApplied`; ``"merge"`` is the read-dependent
+        inserter — it additionally refuses any winner that ADDED files,
+        because a not-matched insert decided against the snapshot is
+        invalidated by concurrent new rows (duplicate-key hazard);
+        ``"auto"`` (every other op) is the MATCHED-ONLY predicate-DML /
+        layout shape. A non-rebaseable lost race cleans its staged
+        generation and raises for :func:`retry_on_conflict`."""
+        return {"insert": "append", "merge": "merge"}.get(self.op, "auto")
+
+
+# the feed of a commit that changes no logical row (layout passes,
+# DV materialization): recorded EMPTY, so adjacent-version
+# table_changes stays metadata-priced
+_NO_ROW_CHANGE = {"insert": None, "delete": None}
+
+
+def _version_state(version: dict) -> dict:
+    """A version's own read state, as a root or a history entry carries
+    it: its deletion vectors and, on a mixed-schema version, the mark
+    with its schema epoch and unified schema — per VERSION, not
+    table-global: a later full rewrite clears the live flag while an
+    older snapshot still needs merged reads."""
+    out = {}
+    if version.get("dv") is not None:
+        out["dv"] = version["dv"]
+    if version.get("mixed_schema"):
+        out["mixed_schema"] = True
+        for k in ("schema_epoch", "table_schema"):
+            if version.get(k) is not None:
+                out[k] = version[k]
+    return out
+
+
+def _policy(
+    man: dict | None, version: dict | None = None, txn=None, **change
+) -> dict:
+    """The non-file keys of a new root — the ONE place every commit
+    path (the commit core, rollback, the metadata commits) takes them
+    from. TABLE policy is carried from the live manifest ``man``:
+    CHECK constraints, the bloom index policy and the streaming-txn
+    idempotency map (Delta's txn action: ``{app_id:
+    last_applied_version}``, advanced by ``txn`` atomically with the
+    data). A restore of old data must not silently disarm any of
+    them. VERSION state is :func:`_version_state` of ``version``
+    (default ``man``). ``change`` replaces keys; None drops one."""
+    man = man or {}
+    out = {k: man[k] for k in ("constraints", "bloom") if man.get(k)}
+    txns = dict(man.get("txn", {}))
+    if txn is not None:
+        txns[txn[0]] = txn[1]
+    if txns:
+        out["txn"] = txns
+    out.update(_version_state(man if version is None else version))
+    out.update(change)
+    return {k: v for k, v in out.items() if v is not None}
+
+
+def _staging_mismatch(
+    io, path: str, man: dict | None, n_staged: int, expected: int
+) -> None:
+    """Raise for a staged row count that misses ``expected``. A winner
+    that committed while this pass was STAGING may have retired (with
+    retain_versions=0) the very files this rewrite was reading, and
+    Spark's parallel file listing treats a vanished input as EMPTY (one
+    WARN, zero rows) rather than raising FAILED_READ_FILE — so the race
+    surfaces HERE, through the row-count validation, instead of through
+    _is_stale_snapshot_error's exception shapes. Gen advance ALONE is
+    not evidence (a concurrent pure append retires nothing, and a
+    genuine row-loss bug coinciding with one must stay loud) — the race
+    verdict additionally requires an input file of the staged-against
+    snapshot to have VANISHED from disk. Then it is the lost writer race
+    (:class:`ConcurrentWriteError`; retry_on_conflict re-runs against
+    the winner's table); otherwise the loud RuntimeError. A systematic
+    row-count bug re-raised on retry fails again on the fresh snapshot
+    with nothing vanished — loudly."""
+    cur = _load_manifest(path)
+    if (
+        man is not None
+        and cur is not None
+        and cur.get("gen_no", 0) != man.get("gen_no", 0)
+    ):
+        try:
+            snap_files = _version_files(man, path)
+        except Exception:
+            # the snapshot's entry shards themselves are no longer
+            # resolvable — the winner's retire beat us to them; that
+            # IS the vanished-input evidence
+            vanished = "<snapshot entry shards unresolvable>"
+        else:
+            # only files the winner RETIRED can have vanished: a
+            # snapshot file still live in the current manifest exists
+            # by the manifest invariant, so the existence probes run
+            # only over the live-set difference — O(shards) metadata
+            # reads instead of O(live files) object HEADs on a
+            # 1M-file table's failure path
+            try:
+                cur_live = {e["name"] for e in _version_files(cur, path)}
+            except Exception:
+                cur_live = None  # unreadable: probe everything
+            vanished = None
+            for e in snap_files:
+                if cur_live is not None and e["name"] in cur_live:
+                    continue
+                try:
+                    if not io.exists(os.path.join(path, e["name"])):
+                        vanished = e["name"]
+                        break
+                except Exception:
+                    # a transient store error is NOT vanished-input
+                    # evidence (folding it in would let throttling
+                    # convert a genuine row-loss bug into a silent
+                    # retry) — skip the file; err toward the loud error
+                    continue
+        if vanished is not None:
+            raise ConcurrentWriteError(
+                f"staged rewrite raced a concurrent commit at "
+                f"{path!r}: snapshot gen {man.get('gen_no')} "
+                f"superseded by {cur.get('gen_no')} and input "
+                f"{vanished!r} vanished (staged {n_staged} != "
+                f"expected {expected})"
+            )
+    raise RuntimeError(
+        f"rewrite row-count mismatch: staged {n_staged} != expected "
+        f"{expected}"
+    )
+
+
+def _enforce_checks(
+    spark: SparkSession, path: str, man: dict | None, keep: list[dict],
+    new_entries: list[dict],
+) -> None:
+    """CHECK enforcement is commit-time and staged-sized: carried files
+    hold by induction (validated when their constraint was added or
+    when they were last written), so only this commit's new files —
+    including adopted appends, which bypassed every earlier gate — need
+    the scan. SQL CHECK semantics: only a row where the expression is
+    FALSE violates; NULL/UNKNOWN passes."""
+    constraints = (man or {}).get("constraints") or {}
+    if not constraints or not new_entries:
+        return
+    from pyspark.sql import functions as F
+
+    # mergeSchema: staged files and adopted appends may differ during
+    # schema evolution; the set is patch-sized either way
+    check_df = spark.read.option("mergeSchema", "true").parquet(
+        *[_spark_path(os.path.join(path, e["name"])) for e in new_entries]
+    )
+    if keep:
+        # an evolving commit may OMIT a constrained column from every
+        # new file — NULL-extend to the carried schema so the CHECK
+        # evaluates to its documented NULL-passes semantics instead of
+        # an unresolved-column error
+        carried = _table_columns(
+            spark, man, [os.path.join(path, keep[0]["name"])]
+        )
+        for c in carried:
+            if c not in check_df.columns:
+                check_df = check_df.withColumn(c, F.lit(None))
+    check = check_df.agg(
+        *[
+            F.count_if(~F.coalesce(F.expr(expr), F.lit(True))).alias(cname)
+            for cname, expr in constraints.items()
+        ]
+    ).first()
+    bad = {c: check[c] for c in constraints if check[c]}
+    if bad:
+        raise ValueError(
+            f"CHECK constraint violated by this commit: "
+            + ", ".join(
+                f"{c} ({constraints[c]!r}): {n} rows"
+                for c, n in bad.items()
+            )
+        )
+
+
+def _commit_generation(
+    spark: SparkSession, path: str, c: Commit
+) -> tuple[int, dict, int]:
+    """Apply one :class:`Commit` — the shared commit core of the
+    manifest protocol. Steps (a crash between any two leaves a
+    readable table):
+
+    1. write ``c.new_df`` to ``<path>/gen-<n>._<op>/`` — live table
+       untouched;
+    2. validate the staged row count against ``c.expected`` (parquet
+       FOOTER metadata only — no job, cheap at any scale);
+    3. copy adopted appends in; enforce CHECK constraints and build
+       bloom sidecars for the new files; write CDC and DV sidecars
+       under the new generation;
+    4. commit: atomically replace ``_manifest.json`` (writer-fenced,
+       see :func:`_commit_manifest`), rebasing a lost CAS in the shape
+       ``c.rebase`` names;
+    5. retire what neither the new manifest nor a retained history
+       version keeps alive (:func:`_live_names`).
+
+    Returns ``(gen_no, manifest, n_new_files)``."""
+    import random as _random
+    import time as _time
     import uuid
 
-    carried_shards = list(carried_shards or [])
-
-    if cdc_insert_staged and adopt:
-        # cdc_insert_staged already records EVERY new entry — including
-        # gen/adopted-* files — in the insert feed via new_entries; the
-        # adopted-append reconciliation below would then append the
-        # adopted names a second time and double-count their rows for
-        # incremental consumers. No caller combines them (insert_into
-        # never adopts); fail loudly if one ever does.
-        raise ValueError(
-            "cdc_insert_staged and adopt are mutually exclusive: adopted "
-            "appends already join the staged insert feed by reference"
-        )
     io = _io(path)
-    prev_no = man["gen_no"] if man else 0
-    gen_no = prev_no + 1
+    prev_no = c.man["gen_no"] if c.man else 0
     # per-writer uniquifier: two racing writers must never share a
     # staging directory — the fence rejects the loser's COMMIT, but only
     # if its staged bytes didn't overwrite the winner's first
-    gen = f"gen-{gen_no:06d}{suffix}-{uuid.uuid4().hex[:8]}"
+    gen = f"gen-{prev_no + 1:06d}._{c.op}-{uuid.uuid4().hex[:8]}"
     staging = os.path.join(path, gen)
     staged: list[str] = []
-    if new_df is not None:
-        new_df.write.mode("overwrite").parquet(_spark_path(staging))
+    if c.new_df is not None:
+        c.new_df.write.mode("overwrite").parquet(_spark_path(staging))
         staged = io.list_basenames(staging, "part-")
     new_entries = [_file_entry(path, f"{gen}/{b}") for b in staged]
     n_staged = sum(e["rows"] for e in new_entries)
-    if callable(expected_new_rows):
-        # single-pass writers (insert_into's micro-batch fast path, r13
-        # optimization): the expected count rides an Observation ON the
-        # staging write job itself, so it resolves only after the write
-        # above completed — still an independent check of the footers
-        # (the observation counts rows the job SAW; the footers count
-        # rows the files RETAINED)
-        expected_new_rows = int(expected_new_rows())
-    if skip_empty and n_staged == 0 and n_staged == expected_new_rows:
-        # observed-empty batch (the single-pass twin of insert_into's
-        # pre-count empty skip): drop the staged empty file and leave
-        # the table untouched — no generation burned
+    expected = c.expected
+    if c.insert is not None and c.insert.observed is not None:
+        # single-pass writers (insert_into's micro-batch fast path): the
+        # expected count rides an Observation ON the staging write job
+        # itself, so it resolves only after the write above completed —
+        # still an independent check of the footers (the observation
+        # counts rows the job SAW; the footers count rows the files
+        # RETAINED)
+        expected = int(c.insert.observed())
+        if n_staged == 0 == expected:
+            # observed-empty batch: drop the staged empty file and leave
+            # the table untouched — no generation burned
+            io.rmtree_quiet(staging)
+            return prev_no, c.man, 0
+    if n_staged != expected:
         io.rmtree_quiet(staging)
-        return (man.get("gen_no", 0) if man else 0), man, 0
-    if n_staged != expected_new_rows:
-        io.rmtree_quiet(staging)
-        cur = _load_manifest(path)
-        if (
-            man is not None
-            and cur is not None
-            and cur.get("gen_no", 0) != man.get("gen_no", 0)
-        ):
-            # a winner committed while this pass was STAGING: with
-            # retain_versions=0 its post-commit retire deletes the very
-            # files this rewrite was reading, and Spark's parallel file
-            # listing treats a vanished input as EMPTY (one WARN, zero
-            # rows) rather than raising FAILED_READ_FILE — so the race
-            # surfaces HERE, through the row-count validation, instead
-            # of through _is_stale_snapshot_error's exception shapes.
-            # Gen advance ALONE is not evidence (r13 review finding: a
-            # concurrent pure append retires nothing, and a genuine
-            # row-loss bug coinciding with one must stay loud) — the
-            # race verdict additionally requires an input file of the
-            # staged-against snapshot to have VANISHED from disk. Then
-            # classify as the lost writer race it is; retry_on_conflict
-            # re-runs against the winner's table. A systematic
-            # row-count bug re-raised on retry fails again on the
-            # fresh snapshot with nothing vanished — loudly. Caught
-            # live by the sharded concurrent-pair fuzz (seed 31337,
-            # round 7).
-            try:
-                snap_files = _version_files(man, path)
-            except Exception:
-                # the snapshot's entry shards themselves are no longer
-                # resolvable — the winner's retire beat us to them;
-                # that IS the vanished-input evidence
-                vanished = "<snapshot entry shards unresolvable>"
-            else:
-                # only files the winner RETIRED can have vanished: a
-                # snapshot file still live in the current manifest
-                # exists by the manifest invariant, so the existence
-                # probes run only over the live-set difference —
-                # O(shards) metadata reads instead of O(live files)
-                # object HEADs on a 1M-file table's failure path
-                try:
-                    cur_live = {
-                        e["name"] for e in _version_files(cur, path)
-                    }
-                except Exception:
-                    cur_live = None  # unreadable: probe everything
-                vanished = None
-                for e in snap_files:
-                    if cur_live is not None and e["name"] in cur_live:
-                        continue
-                    try:
-                        if not io.exists(
-                            os.path.join(path, e["name"])
-                        ):
-                            vanished = e["name"]
-                            break
-                    except Exception:
-                        # a transient store error is NOT vanished-
-                        # input evidence (review finding: folding it
-                        # in would let throttling convert a genuine
-                        # row-loss bug into a silent retry) — skip
-                        # the file; err toward the loud RuntimeError
-                        continue
-            if vanished is not None:
-                raise ConcurrentWriteError(
-                    f"staged rewrite raced a concurrent commit at "
-                    f"{path!r}: snapshot gen {man.get('gen_no')} "
-                    f"superseded by {cur.get('gen_no')} and input "
-                    f"{vanished!r} vanished (staged {n_staged} != "
-                    f"expected {expected_new_rows})"
-                )
-        raise RuntimeError(
-            f"rewrite row-count mismatch: staged {n_staged} != expected "
-            f"{expected_new_rows}"
-        )
-    if adopt:
+        _staging_mismatch(io, path, c.man, n_staged, expected)
+    if c.adopt:
         # a pure-DV commit writes no data files, so the staging dir may
         # not exist yet — adoption still needs it
         io.makedirs(staging)
     adopted_rels: list[str] = []
-    for name, entry in adopt or []:
+    for name, entry in c.adopt:
         # uuid-salted: adopting the SAME loose name twice across a
         # table's life must not mint two live files with one basename —
         # deletion-vector position sets key on basenames, and the
-        # selective-DML resolve (carried_shards) relies on every NEW
-        # basename being collision-free by construction
-        dst = f"adopted-{uuid.uuid4().hex[:8]}-{name}"
-        io.copy_file(os.path.join(path, name), os.path.join(staging, dst))
-        new_entries.append({**entry, "name": f"{gen}/{dst}"})
-        adopted_rels.append(f"{gen}/{dst}")
-    constraints = dict(man.get("constraints", {})) if man else {}
-    if constraints and new_entries:
-        # CHECK enforcement is commit-time and staged-sized: carried
-        # files hold by induction (validated when their constraint was
-        # added or when they were last written), so only this commit's
-        # new files — including adopted appends, which bypassed every
-        # earlier gate — need the scan. SQL CHECK semantics: only a row
-        # where the expression is FALSE violates; NULL/UNKNOWN passes.
-        from pyspark.sql import functions as F
-
-        try:
-            # mergeSchema: staged files and adopted appends may differ
-            # during schema evolution; the set is patch-sized either way
-            check_df = spark.read.option("mergeSchema", "true").parquet(
-                *[
-                    _spark_path(os.path.join(path, e["name"]))
-                    for e in new_entries
-                ]
-            )
-            if keep_entries:
-                # an evolving commit may OMIT a constrained column from
-                # every new file — NULL-extend to the carried schema so
-                # the CHECK evaluates to its documented NULL-passes
-                # semantics instead of an unresolved-column error
-                carried = _table_columns(
-                    spark, man,
-                    [os.path.join(path, keep_entries[0]["name"])],
-                )
-                for c in carried:
-                    if c not in check_df.columns:
-                        check_df = check_df.withColumn(c, F.lit(None))
-            check = check_df.agg(
-                *[
-                    F.count_if(
-                        ~F.coalesce(F.expr(expr), F.lit(True))
-                    ).alias(cname)
-                    for cname, expr in constraints.items()
-                ]
-            ).first()
-        except Exception:
-            # any pre-commit failure (analysis error, lost executor)
-            # must not leak the staged generation until vacuum's TTL
-            io.rmtree_quiet(staging)
-            raise
-        bad = {c: check[c] for c in constraints if check[c]}
-        if bad:
-            io.rmtree_quiet(staging)
-            raise ValueError(
-                f"CHECK constraint violated by this commit: "
-                + ", ".join(
-                    f"{c} ({constraints[c]!r}): {n} rows"
-                    for c, n in bad.items()
-                )
-            )
-    bloom_policy = dict(man.get("bloom", {})) if man else {}
-    if bloom_policy and new_entries:
-        # bloom sidecar build is commit-time and staged-sized, the
-        # same induction as CHECK enforcement: carried files keep
-        # their immutable sidecars by adjacency, only this commit's
-        # new files (including adopted appends) index now
-        try:
+        # selective-DML resolve (carried) relies on every NEW basename
+        # being collision-free by construction
+        rel = f"{gen}/adopted-{uuid.uuid4().hex[:8]}-{name}"
+        io.copy_file(os.path.join(path, name), os.path.join(path, rel))
+        new_entries.append({**entry, "name": rel})
+        adopted_rels.append(rel)
+    bloom_policy = (c.man or {}).get("bloom")
+    try:
+        _enforce_checks(spark, path, c.man, c.keep, new_entries)
+        if bloom_policy and new_entries:
+            # bloom sidecar build is commit-time and staged-sized, the
+            # same induction as CHECK enforcement: carried files keep
+            # their immutable sidecars by adjacency
             _write_bloom_sidecars(spark, path, bloom_policy, new_entries)
-        except Exception:
-            io.rmtree_quiet(staging)
-            raise
+    except Exception:
+        # any pre-commit failure (violation, analysis error, lost
+        # executor) must not leak the staged generation until TTL
+        io.rmtree_quiet(staging)
+        raise
     cdc_rec = None
-    if cdc is not None:
-        cdc_rec = {}
-        for kind, frame in cdc.items():
-            if frame is None:
-                cdc_rec[kind] = []
-                continue
-            # no leading underscore: Spark treats _-prefixed paths as
-            # hidden metadata and refuses to read them back
-            sub = f"{gen}/cdc-{kind}"
-            frame.write.mode("overwrite").parquet(
-                _spark_path(os.path.join(path, sub))
-            )
-            cdc_rec[kind] = [sub]
-    if cdc_insert_staged:
+    if c.insert is not None:
         # a pure-insert commit's staged data files ARE its insert feed:
-        # record them by reference (zero extra bytes), same mechanism
-        # as adopted appends below
-        cdc_rec = {"insert": [e["name"] for e in new_entries], "delete": []}
+        # recorded BY REFERENCE (zero extra bytes)
+        cdc_rec = {"insert": [f"{gen}/{b}" for b in staged], "delete": []}
+    elif c.cdc is not None:
+        cdc_rec = {}
+        for kind, frame in c.cdc.items():
+            cdc_rec[kind] = []
+            if frame is not None:
+                # no leading underscore: Spark treats _-prefixed paths
+                # as hidden metadata and refuses to read them back
+                sub = f"{gen}/cdc-{kind}"
+                frame.write.mode("overwrite").parquet(
+                    _spark_path(os.path.join(path, sub))
+                )
+                cdc_rec[kind] = [sub]
     if cdc_rec is not None:
         # loose appends were never part of ANY version, so the rows of a
         # loose file this commit brings in are INSERTS of the v->v+1 hop:
-        # adopted files join the insert list BY REFERENCE (they are plain
-        # parquet — zero extra bytes written), while a commit that FOLDS
-        # loose rows into rewritten files has no recorded row set for
-        # them — its feed is marked unknown (cdc=None) so table_changes /
+        # adopted files join the insert list BY REFERENCE, while a commit
+        # that FOLDS loose rows into rewritten files has no recorded row
+        # set for them — its feed is marked unknown so table_changes /
         # the feed fall back to the snapshot diff instead of silently
         # reporting "no change" and losing the appended rows downstream.
-        folded_loose = set(loose) - {name for name, _ in (adopt or [])}
-        if folded_loose:
+        if set(c.loose) - {name for name, _ in c.adopt}:
             cdc_rec = None
-        else:
-            if adopted_rels:
-                cdc_rec = {
-                    **cdc_rec,
-                    "insert": list(cdc_rec.get("insert", []))
-                    + adopted_rels,
-                }
-
-    dv_data: list[str] | None = None
-    if dv_n:
-        data = list(dv_carry or [])
-        if dv_df is not None:
-            # with dv_carry this is a DELTA append: previous sidecars
-            # are shared by reference, only the new positions are
-            # written — DV add cost is O(new positions), never
-            # O(total accumulated positions)
-            sub = f"{gen}/dv-deletes"
-            dv_df.write.mode("overwrite").parquet(
-                _spark_path(os.path.join(path, sub))
-            )
-            data.append(sub)
-        if not data:
-            raise RuntimeError("dv_n without dv_df or dv_carry")
-        dv_data = data
-    import random as _random
-    import time as _time
+        elif adopted_rels:
+            cdc_rec["insert"] = cdc_rec.get("insert", []) + adopted_rels
+    dv_written: list[str] = []
+    if c.dv.n and c.dv.df is not None:
+        # with carry this is a DELTA append: previous sidecars are
+        # shared by reference, only the new positions are written — DV
+        # add cost is O(new positions), never O(total accumulated)
+        dv_written = [f"{gen}/dv-deletes"]
+        c.dv.df.write.mode("overwrite").parquet(
+            _spark_path(os.path.join(path, dv_written[0]))
+        )
+    if c.dv.n and not (c.dv.carry or dv_written):
+        raise RuntimeError("DV counts without a position set or carry")
 
     # COMMIT TAIL: build the manifest against the current snapshot and
-    # CAS it in. On a lost race, a ``rebase``-enabled commit reloads the
-    # winner's state and — when the two commits are provably DISJOINT
-    # (see _rebase_ok) — re-derives its carried file list and re-CASes
-    # the ALREADY-STAGED files onto the new generation: no
-    # re-identification scan, no re-staging, no batch-byte rewrite.
-    # This is the Delta/Iceberg commit-level conflict reconciliation;
-    # without it, retry_on_conflict re-runs the whole DML pass even
-    # when concurrent writers touched disjoint files (the common case:
-    # parallel insert_into streams, or a delete racing a compaction of
-    # other files). The staging directory name keeps the ORIGINAL
-    # attempt's generation number (cosmetic only — every consumer works
-    # off manifest-relative names, never parses numbers out of
-    # directory names).
-    carry_skip = {s["name"] for s in carried_shards}
+    # CAS it in. On a lost race the commit reloads the winner's state
+    # and — when the two commits are provably DISJOINT (see _rebase_ok)
+    # — re-derives its carried file list and re-CASes the ALREADY-STAGED
+    # files onto the new generation: no re-identification scan, no
+    # re-staging, no batch-byte rewrite. This is the Delta/Iceberg
+    # commit-level conflict reconciliation; without it,
+    # retry_on_conflict re-runs the whole DML pass even when concurrent
+    # writers touched disjoint files (parallel insert_into streams, or
+    # a delete racing a compaction of other files). The staging
+    # directory name keeps the ORIGINAL attempt's generation number
+    # (cosmetic only — every consumer works off manifest-relative
+    # names).
+    skip = {s["name"] for s in c.carried}
     snapshot_names = (
-        _version_names_skip(man, path, carry_skip) if man else set()
+        _version_names_skip(c.man, path, skip) if c.man else set()
     )
-    dropped = snapshot_names - {e["name"] for e in keep_entries}
-    loose_consumed = set(loose) | {name for name, _ in (adopt or [])}
+    dropped = snapshot_names - {e["name"] for e in c.keep}
+    loose_consumed = set(c.loose) | {name for name, _ in c.adopt}
     # IN-PROCESS COMMIT SERIALIZER (round 10): threads of ONE driver
     # never CAS-race each other — they queue here and each commits
     # against a fresh winner state, so rebase attempts are spent only
@@ -2511,136 +2581,75 @@ def _commit_generation(
     # posture: raw conditional-PUT racing degrades under sustained
     # many-writer fire (measured: 7.5% attempt exhaustion at 8
     # in-process threads on the ETag-CAS fake before this lock, zero
-    # after), and the common heavy fan-in — many streams in one Spark
-    # driver — needs no external coordinator at all. REENTRANT by
-    # design: the forced-race tests commit a winner inline from the
-    # loser's thread. Cross-process fairness defaults to the fence's
-    # optimistic racing (docs/SCALE.md operating guidance, ~4
-    # continuous processes per raw-object-store table); deployments
-    # past that plug an advisory coordinator into _commit_guard
-    # (round 11, see coordinator.py).
+    # after). REENTRANT by design: the forced-race tests commit a
+    # winner inline from the loser's thread. Cross-process fairness
+    # defaults to the fence's optimistic racing (docs/SCALE.md
+    # operating guidance); deployments past that plug an advisory
+    # coordinator into _commit_guard (see coordinator.py).
     with _commit_guard(path):
         for attempt in range(_COMMIT_ATTEMPTS):
-            files = keep_entries + new_entries
-            # entry-list placement: inline below _SHARD_THRESHOLD; external
-            # immutable shards past it (or while the previous version is
-            # already sharded and hasn't shrunk back under half the
-            # threshold — hysteresis so a table at the boundary doesn't
-            # flip layouts every commit)
+            man = c.man
+            base_no = man["gen_no"] if man else 0
+            skip = {s["name"] for s in c.carried}
+            files = list(c.keep) + new_entries
+            # entry-list placement: inline below _SHARD_THRESHOLD;
+            # external immutable shards past it (or while the previous
+            # version is already sharded and hasn't shrunk back under
+            # half the threshold — hysteresis so a table at the boundary
+            # doesn't flip layouts every commit). A FIRST-EVER commit
+            # this large shards too (man or {}); carried shards force
+            # the external layout regardless of the LOADED count.
             ext_rec = None
-            if carried_shards or len(files) >= _SHARD_THRESHOLD or (
+            if c.carried or len(files) >= _SHARD_THRESHOLD or (
                 man is not None
                 and _shard_names(man)
                 and len(files) >= _SHARD_THRESHOLD // 2
             ):
-                # man or {}: a FIRST-EVER commit this large must shard too
-                # (a multi-MB inline root would stand until the next
-                # commit re-sharded it); with no previous manifest there
-                # are simply no shards to carry. carried_shards forces
-                # the external layout regardless of the LOADED count —
-                # the table is sharded by construction, and the inline
-                # collapse decision needs the full entry list anyway
-                # (it happens on full-resolve commits only).
                 ext_rec = _externalize_entries(
-                    io, path, gen, man or {}, keep_entries, new_entries,
-                    attempt, carried_verbatim=carried_shards,
+                    io, path, gen, man or {}, c.keep, new_entries,
+                    attempt, carried_verbatim=c.carried,
                 )
             dv_rec = None
-            if dv_n:
+            if c.dv.n:
                 # loaded files only under a selective resolve — sound
                 # inductively: carried shards' members (and their DV
                 # entries) are untouched, every NEW basename is
-                # collision-free by construction (Spark job-uuid part
-                # names; uuid-salted adopted names). KNOWN CARVE-OUT: a
+                # collision-free by construction. KNOWN CARVE-OUT: a
                 # table holding duplicate basenames minted by PRE-salt
                 # code passes this partial check where the full one
-                # raised — run verify_table() once after upgrading
-                # (it re-proves global uniqueness).
+                # raised — run verify_table() once after upgrading.
                 _assert_unique_basenames(files)
-                missing_dv = set(dv_n) - {e["name"] for e in files}
-                if missing_dv and carried_shards:
-                    # names valid under the base version whose files this
-                    # commit didn't drop live inside carried shards
-                    missing_dv -= (
-                        set((man.get("dv") or {}).get("n", {})) - dropped
-                    )
+                missing_dv = set(c.dv.n) - {e["name"] for e in files}
+                if missing_dv and c.carried:
+                    # names valid under the base version whose files
+                    # this commit didn't drop live inside carried shards
+                    missing_dv -= set(_dv_map(man)) - dropped
                 if missing_dv:
                     io.rmtree_quiet(staging)
                     raise RuntimeError(
                         f"DV entries for files not in the version: {missing_dv}"
                     )
-                dv_rec = {"data": dv_data, "n": dict(dv_n)}
-            rows = (
-                sum(_entry_rows(path, e) for e in files)
-                + sum(s["rows"] for s in carried_shards)
-                - sum((dv_n or {}).values())
-            )
+                dv_rec = {
+                    "data": list(c.dv.carry or []) + dv_written,
+                    "n": dict(c.dv.n),
+                }
             history = list(man.get("history", [])) if man else []
             if man:
                 history.append(_prev_version_snapshot(man, path))
             kept = (
-                history[max(0, len(history) - retain_versions):]
-                if retain_versions
-                else []
+                history[max(0, len(history) - c.retain):] if c.retain else []
             )
-            # liveness/dead sets BEFORE the manifest: top-level files adopted
-            # by convert_to_manifest that THIS commit drops must enter
-            # superseded, or a crashed retire would resurrect them as loose
-            # appends
-            # members of carried-verbatim shards are excluded from BOTH
-            # live and old_names (carry_skip): the shard is referenced
-            # by the old version AND ext_rec, so every member would land
-            # on both sides of old_names - live and cancel — skipping
-            # the enumeration is the whole point of the carry, and
-            # _cleanup_empty_gen_dirs is disk-guarded (a dir still
-            # holding part files is never removed), so a partial live
-            # set cannot over-delete there either
-            live = {e["name"] for e in files}
-            if ext_rec is not None:
-                live |= {s["name"] for s in ext_rec["shards"]}
-            for h in kept:
-                live |= _version_names_skip(h, path, carry_skip)
-                live |= _cdc_sidecars(h)
-                live |= _dv_names(h)
-                live |= _shard_names(h)
-            if cdc_rec is not None:
-                live |= {n for lst in cdc_rec.values() for n in lst}
-            if dv_rec is not None:
-                live |= set(dv_rec["data"])
-            old_names: set[str] = set()
-            hist_members: set[str] = set()
-            man_members: set[str] = set()
-            if man:
-                man_members = _version_names_skip(man, path, carry_skip)
-                old_names |= man_members
-                old_names |= _cdc_sidecars(man)
-                old_names |= _dv_names(man)
-                old_names |= _shard_names(man)
-            for h in history:
-                # HISTORY-sourced data-file names are tracked apart:
-                # a history version indexes files under ITS OWN
-                # partition (inline lists, or shard objects from before
-                # a re-pool), so a file that still lives inside a
-                # carried shard can surface here by a name the
-                # carry_skip cancellation cannot match — the dead-set
-                # computation below must prove such names dead against
-                # the carried members before retiring them
-                hn = _version_names_skip(h, path, carry_skip)
-                old_names |= hn
-                hist_members |= hn
-                old_names |= _cdc_sidecars(h)
-                old_names |= _dv_names(h)
-                old_names |= _shard_names(h)
-            dropped_top = {n for n in old_names - live if "/" not in n}
-
             manifest = {
                 "format": 2,
                 "generation": gen,
-                "gen_no": gen_no,
-                "rows": rows,
-                "op": suffix.strip("._"),
+                "gen_no": base_no + 1,
+                "rows": (
+                    sum(_entry_rows(path, e) for e in files)
+                    + sum(s["rows"] for s in c.carried)
+                    - sum((c.dv.n or {}).values())
+                ),
+                "op": c.op,
                 "committed_at": round(_time.time(), 3),
-                "superseded": sorted(set(stale) | set(loose) | dropped_top),
                 "history": kept,
             }
             if ext_rec is not None:
@@ -2649,88 +2658,56 @@ def _commit_generation(
                 manifest["files"] = files
             if cdc_rec is not None:
                 manifest["cdc"] = cdc_rec
-            if dv_rec is not None:
-                manifest["dv"] = dv_rec
-            if constraints:
-                manifest["constraints"] = constraints
-            if bloom_policy:
-                manifest["bloom"] = bloom_policy
-            # streaming-txn idempotency map (Delta's txn action): {app_id:
-            # last_applied_version}. CARRIED by every commit (it is table
-            # policy, like constraints); a commit made on behalf of a stream
-            # batch updates its app's entry atomically with the data
-            txn_map = dict(man.get("txn", {})) if man else {}
-            if txn is not None:
-                txn_map[txn[0]] = txn[1]
-            if txn_map:
-                manifest["txn"] = txn_map
-            mixed = (
-                bool(man and man.get("mixed_schema"))
-                if mixed_schema is None
-                else mixed_schema
+            # the schema-epoch cache key is the uuid-salted generation
+            # NAME, not the bare gen_no: gen numbers restart at 1 when a
+            # table is dropped and recreated at the same path
+            state = (man or {}) if c.mixed_schema is None else {
+                "mixed_schema": c.mixed_schema,
+                "schema_epoch": gen,
+                "table_schema": c.table_schema,
+            }
+            manifest.update(_policy(
+                man, {**state, "dv": dv_rec},
+                c.insert.txn if c.insert is not None else None,
+            ))
+            # liveness BEFORE the CAS: top-level files adopted by
+            # convert_to_manifest that THIS commit drops must enter
+            # superseded, or a crashed retire would resurrect them as
+            # loose appends. Member names seen only through HISTORY are
+            # tracked apart: a history version indexes files under ITS
+            # OWN partition, so a file still inside a carried shard can
+            # surface there by a name the skip cancellation cannot
+            # match — the retire below proves such names dead first
+            live = _live_names(
+                [{**manifest, "files": files}] + kept, path, skip
             )
-            if mixed:
-                manifest["mixed_schema"] = True
-                # SCHEMA EPOCH: the generation whose commit last widened
-                # the unified schema (an explicit mixed_schema=True, i.e.
-                # an evolving merge). Carried untouched by every other
-                # commit, it keys the per-process unified-schema cache —
-                # without it, every insert into a mixed table would re-run
-                # the all-footers schema merge per micro-batch. The value
-                # is the uuid-salted generation NAME, not the bare gen_no:
-                # gen numbers restart at 1 when a table is dropped and
-                # recreated at the same path, and a recolliding (path,
-                # epoch) key would hand the new incarnation the OLD
-                # incarnation's unified schema.
-                manifest["schema_epoch"] = (
-                    gen
-                    if mixed_schema
-                    else (man or {}).get("schema_epoch", 0)
-                )
-                # unified logical schema: set by the widening commit,
-                # carried by every other commit on a mixed table (and
-                # dropped with the flag when a rewrite unifies). A
-                # widening commit that could NOT compute the unified
-                # schema (table_schema None — e.g. a type-conflicting
-                # second evolution) must DROP the recorded schema, not
-                # carry the stale one: carrying it would make every
-                # later explicit-schema read silently hide the newly
-                # evolved column (review finding, regression-pinned) —
-                # dropping degrades those reads to footer merging,
-                # which sees everything.
-                ts = (
-                    table_schema
-                    if mixed_schema
-                    else (man or {}).get("table_schema")
-                )
-                if ts is not None:
-                    manifest["table_schema"] = ts
+            man_members: set[str] = set()
+            hist_members: set[str] = set()
+            old = _live_names(
+                [man] if man else [], path, skip, man_members
+            ) | _live_names(history, path, skip, hist_members)
+            manifest["superseded"] = sorted(
+                set(c.stale) | set(c.loose)
+                | {n for n in old - live if "/" not in n}
+            )
             try:
-                _commit_manifest(path, manifest, expect_gen=prev_no)
+                _commit_manifest(path, manifest, expect_gen=base_no)
                 break
             except ConcurrentWriteError:
-                if (
-                    rebase is None
-                    or man is None
-                    or attempt == _COMMIT_ATTEMPTS - 1
-                ):
-                    # a lost race the caller must re-run: clean the staged
-                    # generation eagerly — but liveness-checked, because a
-                    # "lost" CAS can be a LANDED commit whose ack was
-                    # misrecognized (see _drop_lost_staging)
+                if man is None or attempt == _COMMIT_ATTEMPTS - 1:
+                    # a lost race the caller must re-run: clean the
+                    # staged generation eagerly — liveness-checked,
+                    # because a "lost" CAS can be a LANDED commit whose
+                    # ack was misrecognized (see _drop_lost_staging)
                     _drop_lost_staging(io, path, gen)
                     raise
                 # FULL-JITTER exponential backoff BEFORE re-reading the
-                # winner's state. Position is load-bearing: the snapshot
-                # read below opens this attempt's read-to-CAS window, so a
-                # sleep placed after it (the r9 shape — a deterministic
-                # 0.02*attempt at the loop tail) widens the very window a
-                # competing commit kills, GUARANTEEING staleness under
-                # sustained throughput. Sleeping first desynchronizes the
-                # losers and then races the shortest possible window.
-                # Sized by tools/dml_headroom.py --contention: 8 writers x
-                # 25 continuous batches exhausted ~1-1.5% of commits under
-                # the r9 shape; zero after this change (docs/SCALE.md).
+                # winner's state: the snapshot read below opens this
+                # attempt's read-to-CAS window, so a sleep placed after
+                # it widens the very window a competing commit kills.
+                # Sleeping first desynchronizes the losers and then
+                # races the shortest possible window (sized by
+                # tools/dml_headroom.py --contention, docs/SCALE.md).
                 _time.sleep(
                     _random.uniform(
                         0.0, min(_BACKOFF_CAP, _BACKOFF_BASE * 2 ** attempt)
@@ -2743,6 +2720,7 @@ def _commit_generation(
                     # retry_on_conflict's stale-snapshot path re-run
                     _drop_lost_staging(io, path, gen)
                     raise
+                txn = c.insert.txn if c.insert is not None else None
                 if txn is not None and man2 is not None:
                     last = man2.get("txn", {}).get(txn[0])
                     if last is not None and txn[1] <= last:
@@ -2751,19 +2729,17 @@ def _commit_generation(
                         # exactly-once contract says drop ours
                         _drop_lost_staging(io, path, gen)
                         raise _TxnAlreadyApplied() from None
-                if carried_shards and rebase == "merge":
+                if c.carried and c.rebase == "merge":
                     # the not-matched isolation check below compares
-                    # live2 against the FULL base name set — complete
-                    # it from the carried records (loads only here, on
-                    # the lost-CAS rare path). The winner may have
-                    # re-pooled a carried shard and eagerly retired its
-                    # object — any load failure means the snapshot
-                    # can't be reconstructed, so treat the race as
-                    # non-rebaseable: clean the staging and re-raise
-                    # the ConcurrentWriteError for retry_on_conflict.
+                    # live2 against the FULL base name set — complete it
+                    # from the carried records (loads only here, on the
+                    # lost-CAS rare path). A load failure means the
+                    # winner re-pooled and retired a carried shard: the
+                    # snapshot can't be reconstructed, so the race is
+                    # non-rebaseable.
                     try:
                         snapshot_names |= _carried_member_names(
-                            path, carried_shards
+                            path, c.carried
                         )
                     except Exception:
                         _drop_lost_staging(io, path, gen)
@@ -2772,106 +2748,75 @@ def _commit_generation(
                             "carried index shard before the snapshot "
                             "could be completed; re-run the operation"
                         ) from None
-                pure_append = rebase == "append" and dv_df is None
+                pure_append = c.rebase == "append" and c.dv.df is None
                 if not _rebase_ok(
                     man, man2, entries2, loose2,
                     dropped=dropped, loose_consumed=loose_consumed,
                     snapshot_names=snapshot_names,
                     dv_targets=(
-                        set(dv_n) if dv_n and not pure_append else set()
+                        set(c.dv.n) if c.dv.n and not pure_append else set()
                     ),
                     dv_immaterial=pure_append,
                     # merge takes its NOT-MATCHED branch against the
                     # snapshot — a winner that ADDED rows invalidates it
-                    allow_added=rebase != "merge",
+                    allow_added=c.rebase != "merge",
                 ):
                     _drop_lost_staging(io, path, gen)
                     raise
                 # disjoint: rebase the staged commit onto the winner's
-                # generation — carried files re-derived from the WINNER's
-                # live set (it may have compacted or appended files this
-                # commit never touched), everything staged reused as-is
-                man, stale = man2, stale2
-                if rebase in ("auto", "merge"):
-                    # predicate ops consumed the snapshot's loose files
-                    # (folded or adopted); anything that landed since stays
-                    # loose and visible — never superseded by this commit
-                    loose = [f for f in loose2 if f in loose_consumed]
-                if pure_append:
-                    # the append only mirrors the table's merge-on-read
-                    # state: re-read it from the winner (it may have added
-                    # or retired DVs — immaterial to the staged batch)
-                    dv2 = man2.get("dv")
-                    dv_n = dict(dv2["n"]) if dv2 else None
-                    dv_data = list(dv2["data"]) if dv2 else None
-                keep_entries = [
-                    e for e in entries2 if e["name"] not in dropped
-                ]
-                # the winner may have rewritten/folded a shard this
-                # commit was carrying verbatim; entries2 is the FULL
-                # resolve, so the rebased attempt re-derives the index
-                # from it and the carry (with its skip set) resets
-                carried_shards = []
-                carry_skip = set()
-                prev_no = man2["gen_no"]
-                gen_no = prev_no + 1
+                # generation — carried files re-derived from the
+                # WINNER's full resolve (it may have compacted or
+                # appended files this commit never touched, or rewritten
+                # a carried shard: the carry resets), everything staged
+                # reused as-is. Predicate ops consumed the snapshot's
+                # loose files; anything landed since stays loose and
+                # visible. The pure append only mirrors the table's
+                # merge-on-read state: it re-reads it from the winner.
+                dv2 = man2.get("dv")
+                c = dataclasses.replace(
+                    c,
+                    man=man2,
+                    stale=stale2,
+                    keep=[e for e in entries2 if e["name"] not in dropped],
+                    carried=[],
+                    loose=c.loose if c.rebase == "append" else [
+                        f for f in loose2 if f in loose_consumed
+                    ],
+                    dv=(
+                        c.dv if not pure_append
+                        else _Dv(None, dict(dv2["n"]), list(dv2["data"]))
+                        if dv2 else _Dv()
+                    ),
+                )
 
-    # retire: previously-referenced files and superseded loose files not
-    # referenced by the new manifest or a retained history version
-    dead_names = old_names - live
+    # retire: previously-referenced names and superseded loose files
+    # kept alive by neither the new manifest nor a retained version
+    dead = old - live
     # suspects: names seen ONLY through history versions. Names the
     # base version itself enumerated are partition-proven (a version's
     # index partitions its files, so a name from an ADMITTED shard is
     # never also a carried member) — and the base snapshot always sits
     # in `history`, so without this subtraction every commit's own
     # drops would trigger the carried-member load and void the skip.
-    suspects = (
-        dead_names & (hist_members - man_members)
-        if carried_shards
-        else set()
-    )
+    suspects = dead & (hist_members - man_members) if c.carried else set()
     if suspects:
-        # an EXPIRING history version enumerated names the carry_skip
-        # cancellation can't represent (inline/format-1 lists, or shard
-        # objects from before a re-pool moved the file into a shard
-        # this commit carries verbatim) — a name seen only that way may
-        # still be LIVE inside a carried shard. Prove death by loading
-        # the carried members once (process-cache-warm; object-store
-        # cost only on commits that actually expire a version). This
-        # commit's own drops are unaffected: they came from ADMITTED
-        # shards, and a version's index partitions its files, so no
-        # dropped name can also be a carried member.
-        #
-        # POST-COMMIT POSTURE: the CAS already landed — nothing here
-        # may raise, or a COMMITTED write would surface as a retryable
-        # failure and retry_on_conflict would re-apply it (double
-        # insert). If a racing process retired a carried shard object
-        # before this load, skip retiring the unprovable names instead
-        # — dead bytes are TTL vacuum's job, double-applied rows are
-        # forever.
+        # prove death by loading the carried members once (process-
+        # cache-warm; object-store cost only on commits that actually
+        # expire a version). POST-COMMIT POSTURE: the CAS already landed
+        # — nothing here may raise, or a COMMITTED write would surface
+        # as a retryable failure and retry_on_conflict would re-apply it
+        # (double insert). If a racing process retired a carried shard
+        # object first, skip retiring the unprovable names — dead bytes
+        # are TTL vacuum's job, double-applied rows are forever.
         try:
-            dead_names -= _carried_member_names(path, carried_shards)
+            dead -= _carried_member_names(path, c.carried)
         except Exception:
-            dead_names -= suspects
-    dead = [os.path.join(path, n) for n in dead_names]
-    dead += [os.path.join(path, f) for f in set(stale) | set(loose)]
-    if bloom_policy:
-        # sidecar liveness is derived from its data file: retire the
-        # companion with the file (vacuum sweeps any stragglers).
-        # Shard objects in the dead set take their consolidated
-        # companion (round 13) the same way — for data files the
-        # extra name never exists and the retire no-ops.
-        from . import bloom as B
-
-        base_dead = list(dead)
-        dead += [p + _BLOOM_SUFFIX for p in base_dead]
-        dead += [p + B.CONSOLIDATED_SUFFIX for p in base_dead]
-    _retire(dead)
-    _cleanup_empty_gen_dirs(
-        path, live,
-        {n.split("/", 1)[0] for n in old_names - live if "/" in n},
+            dead -= suspects
+    _retire_dead(
+        path, dead, live, set(c.stale) | set(c.loose),
+        bool(manifest.get("bloom")),
     )
-    return gen_no, manifest, len(staged)
+    return manifest["gen_no"], manifest, len(staged)
 
 
 def _meta_row_count(
@@ -2907,16 +2852,7 @@ def _prev_version_snapshot(man: dict, path: str) -> dict:
         prev["files"] = _version_files(man, path)
     if man.get("cdc") is not None:
         prev["cdc"] = man["cdc"]
-    if man.get("dv") is not None:
-        prev["dv"] = man["dv"]
-    if man.get("mixed_schema"):
-        # per VERSION, not table-global: a later full rewrite clears
-        # the live flag while this snapshot still needs merged reads
-        prev["mixed_schema"] = True
-        if man.get("schema_epoch") is not None:
-            prev["schema_epoch"] = man["schema_epoch"]
-        if man.get("table_schema") is not None:
-            prev["table_schema"] = man["table_schema"]
+    prev.update(_version_state(man))
     return prev
 
 
@@ -2959,11 +2895,11 @@ def _dv_add(
     rewrite_rel: set[str],
     new_pos: DataFrame,
     add_n: dict[str, int],
-) -> tuple[DataFrame, dict[str, int], list[str] | None]:
+) -> _Dv:
     """DV bookkeeping for a commit ADDING deleted positions (``new_pos``
     = the new ``(_file, _pos)`` rows, ``add_n`` = per-file added
-    counts) while rewriting ``rewrite_rel``: ``(dv_df, dv_n,
-    dv_carry)`` for :func:`_commit_generation`. A pure add appends a
+    counts) while rewriting ``rewrite_rel``, as a :class:`_Dv`. A pure
+    add appends a
     DELTA sidecar and shares every previous one by reference — the
     per-commit DV cost is O(new positions), NOT O(total accumulated
     positions), which is what keeps a high-frequency CDC stream from
@@ -2982,7 +2918,7 @@ def _dv_add(
         dv_n[rel] = dv_n.get(rel, 0) + n
     prev = sorted(_dv_names(man)) if man else []
     if set(surv) == set(old) and len(prev) < _DV_MAX_SIDECARS:
-        return new_pos.coalesce(1), dv_n, prev
+        return _Dv(new_pos.coalesce(1), dv_n, prev)
     frames = [new_pos]
     if surv:
         frames.append(
@@ -2993,24 +2929,24 @@ def _dv_add(
     out = frames[0]
     for f in frames[1:]:
         out = out.unionByName(f)
-    return out.coalesce(1), dv_n, None
+    return _Dv(out.coalesce(1), dv_n, None)
 
 
 def _dv_after_drop(
     spark: SparkSession, path: str, man: dict | None, dropped_rel: set[str]
-) -> tuple[DataFrame | None, dict[str, int] | None, list[str] | None]:
+) -> _Dv:
     """DV bookkeeping for a commit that rewrites ``dropped_rel`` (their
     deletions materialize into the rewrite) and carries every other
-    file: ``(dv_df, dv_n, dv_carry)`` for :func:`_commit_generation`.
+    file, as a :class:`_Dv`.
     Unchanged position sets are shared BY REFERENCE (zero bytes); a
     shrunken set is rewritten filtered (DV sidecars are patch-sized by
     protocol, so this is metadata-priced)."""
     old = _dv_map(man)
     new_n = {f: n for f, n in old.items() if f not in dropped_rel}
     if not new_n:
-        return None, None, None
+        return _Dv()
     if set(new_n) == set(old):
-        return None, new_n, sorted(_dv_names(man))
+        return _Dv(None, new_n, sorted(_dv_names(man)))
     from pyspark.sql import functions as F
 
     keep = [os.path.basename(f) for f in new_n]
@@ -3019,7 +2955,139 @@ def _dv_after_drop(
         .where(F.col("_file").isin(keep))
         .coalesce(1)
     )
-    return dv_df, new_n, None
+    return _Dv(dv_df, new_n, None)
+
+
+class _Snap(NamedTuple):
+    """One live-state resolve for a file-granular commit: the manifest,
+    the loaded entries, loose and stale names (see :func:`_live_state`)
+    and the shard records carried verbatim."""
+
+    man: dict | None
+    entries: list[dict]
+    loose: list[str]
+    stale: list[str]
+    carried: list[dict]
+
+
+def _resolve(path: str, shard_admits=None) -> _Snap:
+    """:func:`_live_state` under the DML contract: shards
+    ``shard_admits`` rejects are carried verbatim when eligible."""
+    carried: list[dict] = []
+    man, entries, loose, stale = _live_state(
+        path, shard_admits=shard_admits, carry_out=carried
+    )
+    return _Snap(man, entries, loose, stale, carried)
+
+
+class _Rewrite(NamedTuple):
+    """A planned file-granular rewrite (:func:`_plan_rewrite`): the
+    partial ``commit`` (all but ``new_df``, ``expected`` and ``cdc``),
+    ``rows`` — every live row of the rewritten files (None: none
+    rewritten) — ``marked``, the matched preimages in DV-marked files,
+    ``pre``, the preimages of every matched row, ``n_keep``, the
+    rewritten files' unmatched live rows, and ``n_files``, how many
+    files are rewritten."""
+
+    commit: Commit
+    rows: DataFrame | None
+    marked: DataFrame | None
+    pre: DataFrame | None
+    n_keep: int
+    n_files: int
+
+
+@_contextlib.contextmanager
+def _plan_rewrite(
+    spark: SparkSession,
+    path: str,
+    snap: _Snap,
+    loose_entries: list[tuple[str, dict]],
+    per_file: dict[str, int],
+    op: str,
+    match=None,
+    deletion_vectors: bool = False,
+    threshold: float = 0.5,
+    retain: int = 0,
+):
+    """THE file-granular rewrite planner: "rewrite the files named in
+    ``per_file`` (with their matched-row counts), carry the rest".
+    Makes every decision the DML ops and the file-granular maintenance
+    passes share: the hybrid DV/rewrite split (``deletion_vectors``,
+    see :func:`_dv_mark_split`), the carried/adopted/rewritten file
+    sets — touched loose appends fold into the rewrite, untouched ones
+    in ``loose_entries`` are adopted — the expected-row accounting, the
+    DV bookkeeping, and the keyed read of the DV-marked files'
+    ``match``-ed rows, persisted for the commit (sidecar positions and
+    CDC preimages read it twice) and unpersisted on exit. Yields a
+    :class:`_Rewrite`; the caller supplies the row transform and the
+    CDC frames and applies the commit inside the ``with``."""
+    man = snap.man
+    dv = (man or {}).get("dv")
+    old_dv_n = _dv_map(man)
+    touched = set(per_file)
+    dv_mark: set[str] = set()
+    if deletion_vectors and touched:
+        dv_mark = _dv_mark_split(
+            path, snap.entries, touched, per_file, old_dv_n, threshold
+        )
+    rewrite = touched - dv_mark
+    rw = [
+        e for e in snap.entries + [e for _, e in loose_entries]
+        if e["name"] in rewrite
+    ]
+    rows = (
+        _read_version(spark, man, path, [e["name"] for e in rw], dv)
+        if rw else None
+    )
+    n_keep = sum(
+        _entry_rows(path, e) - old_dv_n.get(e["name"], 0)
+        - per_file[e["name"]]
+        for e in rw
+    )
+    keyed = marked = None
+    try:
+        if dv_mark:
+            # matched rows in DV-marked files: positions go to the
+            # sidecar, preimages to the CDC feed — file bytes untouched
+            keyed = match(
+                _read_version_keyed(spark, man, path, sorted(dv_mark), dv)
+            ).persist()
+            marked = keyed.drop("_file", "_pos")
+            dvd = _dv_add(
+                spark, path, man, rewrite, keyed.select("_file", "_pos"),
+                {rel: per_file[rel] for rel in dv_mark},
+            )
+        else:
+            # rewritten files' deletions materialize; carried keep DVs
+            dvd = _dv_after_drop(spark, path, man, rewrite)
+        frames = [match(rows)] if rows is not None and match else []
+        if marked is not None:
+            frames.append(marked)
+        pre = frames[0] if frames else None
+        for f in frames[1:]:
+            pre = pre.unionByName(f, allowMissingColumns=True)
+        yield _Rewrite(
+            commit=Commit(
+                man=man,
+                op=op,
+                loose=snap.loose,
+                stale=snap.stale,
+                keep=[e for e in snap.entries if e["name"] not in rewrite],
+                retain=retain,
+                adopt=[(f, e) for f, e in loose_entries if f not in rewrite],
+                dv=dvd,
+                carried=snap.carried,
+            ),
+            rows=rows,
+            marked=marked,
+            pre=pre,
+            n_keep=n_keep,
+            n_files=len(rw),
+        )
+    finally:
+        if keyed is not None:
+            keyed.unpersist()
 
 
 def staged_rewrite(
@@ -3065,24 +3133,18 @@ def staged_rewrite(
         # count would be 0 and spuriously abort the rewrite — count the
         # DataFrame instead (one columnless scan, this cold path only)
         n_want = df.count()
-    _, _, n_files = _commit_generation(
-        spark,
-        path,
+    _, _, n_files = _commit_generation(spark, path, Commit(
         man=man,
+        op=suffix.strip("._"),
         loose=loose,
         stale=stale,
-        keep_entries=[],
         new_df=layout_fn(df),
-        suffix=suffix,
-        expected_new_rows=n_want,
-        retain_versions=retain_versions,
-        # a layout pass changes no rows: record an EMPTY change-data-feed
-        # so adjacent-version table_changes is metadata-priced
-        cdc={"insert": None, "delete": None},
+        expected=n_want,
+        retain=retain_versions,
+        cdc=_NO_ROW_CHANGE,
         # a full rewrite lands every row in one schema again
         mixed_schema=False,
-        rebase="auto",
-    )
+    ))
     return n_files
 
 
@@ -3165,18 +3227,15 @@ def compact_small_files(
     # per-member deleted fractions and a DV'd name's shard membership
     # is unknown without loading, so merge-on-read tables fall back to
     # the full resolve below.
-    carried: list[dict] = []
-    man, entries, loose, stale = _live_state(
+    snap = _resolve(
         path,
-        shard_admits=lambda s: not (
-            isinstance(s.get("bmin"), int)
-            and s["bmin"] >= min_file_bytes
+        lambda s: not (
+            isinstance(s.get("bmin"), int) and s["bmin"] >= min_file_bytes
         ),
-        carry_out=carried,
     )
-    if carried and dv_rot_threshold is not None and _dv_map(man):
-        carried = []
-        man, entries, loose, stale = _live_state(path)
+    if snap.carried and dv_rot_threshold is not None and _dv_map(snap.man):
+        snap = _resolve(path)
+    man, entries, loose = snap.man, snap.entries, snap.loose
 
     def _size(name: str) -> int:
         return _io(path).getsize(os.path.join(path, name))
@@ -3213,7 +3272,7 @@ def compact_small_files(
         ]
         big_ref = [e for e in big_ref if e not in rotten]
         fold = fold + rotten
-    n_carried_shard = sum(s["count"] for s in carried)
+    n_carried_shard = sum(s["count"] for s in snap.carried)
     if len(fold) < 2 and not rotten:
         return {
             "rewritten": 0,
@@ -3223,32 +3282,20 @@ def compact_small_files(
         }
     total_bytes = sum(_entry_bytes(path, e) for e in fold)
     n_out = max(1, -(-total_bytes // target_bytes))
-    fold_rel = [e["name"] for e in fold]
-    dv = (man or {}).get("dv")
-    new_df = _read_version(spark, man, path, fold_rel, dv).coalesce(n_out)
-    expected = sum(
-        _entry_rows(path, e) - old_dv_n.get(e["name"], 0) for e in fold
-    )
-    # folded files' deletions materialize; carried files keep their DVs
-    dv_df, dv_n, dv_carry = _dv_after_drop(spark, path, man, set(fold_rel))
-    _, _, n_written = _commit_generation(
-        spark,
-        path,
-        man=man,
-        loose=[f for f, _ in small_loose],  # big loose files stay loose
-        stale=stale,
-        keep_entries=big_ref,
-        new_df=new_df,
-        suffix="._compact",
-        expected_new_rows=expected,
-        retain_versions=retain_versions,
-        cdc={"insert": None, "delete": None},  # layout pass: empty feed
-        dv_df=dv_df,
-        dv_n=dv_n,
-        dv_carry=dv_carry,
-        rebase="auto",
-        carried_shards=carried,
-    )
+    # big loose files stay loose: neither folded nor adopted
+    with _plan_rewrite(
+        spark, path,
+        snap._replace(
+            entries=small_ref + rotten + big_ref,
+            loose=[f for f, _ in small_loose],
+        ),
+        small_loose, {e["name"]: 0 for e in fold}, "compact",
+        retain=retain_versions,
+    ) as p:
+        _, _, n_written = _commit_generation(spark, path, dataclasses.replace(
+            p.commit, new_df=p.rows.coalesce(n_out), expected=p.n_keep,
+            cdc=_NO_ROW_CHANGE,
+        ))
     return {
         "rewritten": len(fold),
         "carried": len(big_ref) + n_big_loose + n_carried_shard,
@@ -3304,23 +3351,37 @@ def convert_to_manifest(spark: SparkSession, path: str) -> int:
     return 1
 
 
-def _roll_metadata_commit(man: dict, path: str, op: str) -> dict:
-    """Base for a metadata-only commit (constraints etc.): bump the
-    generation, record the op, RETAIN the previous version in history —
-    its file list is identical to the new one, so retention is free,
-    and dropping it would punch holes in version addressability and the
-    CDC feed chain — and record an EMPTY feed (no rows changed; the
-    dict copy must not inherit the previous commit's sidecars)."""
+def _roll_metadata_commit(
+    path: str, man: dict, op: str, shards: list[dict] | None = None,
+    **change,
+) -> None:
+    """Commit a metadata-only version (constraints, bloom policy): the
+    same file list (``shards`` replaces the root shard records), the
+    table policy of :func:`_policy` with ``change`` applied, the
+    previous version RETAINED in history — its file list is identical,
+    so retention is free, and dropping it would punch holes in version
+    addressability and the CDC feed chain — and an EMPTY feed (no rows
+    changed)."""
     import time as _time
 
-    prev = _prev_version_snapshot(man, path)
-    new_man = dict(man)
-    new_man["history"] = list(man.get("history", [])) + [prev]
-    new_man["gen_no"] = man["gen_no"] + 1
-    new_man["op"] = op
-    new_man["committed_at"] = round(_time.time(), 3)
-    new_man["cdc"] = {"insert": [], "delete": []}
-    return new_man
+    new_man = {
+        k: man[k]
+        for k in ("format", "generation", "rows", "superseded", "files",
+                  "files_ext")
+        if k in man
+    }
+    if shards is not None:
+        new_man["files_ext"] = {**man["files_ext"], "shards": shards}
+    new_man.update(
+        gen_no=man["gen_no"] + 1,
+        op=op,
+        committed_at=round(_time.time(), 3),
+        history=list(man.get("history", []))
+        + [_prev_version_snapshot(man, path)],
+        cdc={"insert": [], "delete": []},
+        **_policy(man, **change),
+    )
+    _commit_manifest(path, new_man, expect_gen=man["gen_no"])
 
 
 def _write_bloom_sidecars(
@@ -3535,11 +3596,8 @@ def set_bloom_columns(
     n = _write_bloom_sidecars(
         spark, path, policy, entries, skip_existing=True
     )
-    new_man = _roll_metadata_commit(
-        man, path, f"set_bloom_columns({','.join(sorted(cols))})"
-    )
-    new_man["bloom"] = policy
     ext = (man.get("files_ext") or {}).get("shards")
+    new_shards = None
     if ext:
         # shard-grain aggregates land NOW, in the same commit that set
         # the policy (round 12): a 1M-file table gets O(touched shards)
@@ -3564,11 +3622,10 @@ def set_bloom_columns(
                     io, path, s["name"], members, policy
                 ),
             })
-        new_man["files_ext"] = {
-            **man["files_ext"],
-            "shards": new_shards,
-        }
-    _commit_manifest(path, new_man, expect_gen=man["gen_no"])
+    _roll_metadata_commit(
+        path, man, f"set_bloom_columns({','.join(sorted(cols))})",
+        new_shards, bloom=policy,
+    )
     return n
 
 
@@ -3582,21 +3639,15 @@ def drop_bloom_columns(path: str) -> None:
     man = _load_manifest(path)
     if man is None or not man.get("bloom"):
         raise ValueError(f"no bloom policy on {path!r}")
-    new_man = _roll_metadata_commit(man, path, "drop_bloom_columns")
-    del new_man["bloom"]
-    ext = (new_man.get("files_ext") or {}).get("shards")
-    if ext:
-        new_man["files_ext"] = {
-            **new_man["files_ext"],
-            "shards": [
-                {
-                    k: v for k, v in s.items()
-                    if k not in ("bloom", "bloomside")
-                }
-                for s in ext
-            ],
-        }
-    _commit_manifest(path, new_man, expect_gen=man["gen_no"])
+    ext = (man.get("files_ext") or {}).get("shards")
+    _roll_metadata_commit(
+        path, man, "drop_bloom_columns",
+        [
+            {k: v for k, v in s.items() if k not in ("bloom", "bloomside")}
+            for s in ext
+        ] if ext else None,
+        bloom=None,
+    )
 
 
 def set_check_constraint(
@@ -3631,9 +3682,10 @@ def set_check_constraint(
             f"cannot add CHECK {name!r} ({expr!r}): {n_bad} existing "
             "rows violate it"
         )
-    new_man = _roll_metadata_commit(man, path, f"add_constraint({name})")
-    new_man["constraints"] = {**man.get("constraints", {}), name: expr}
-    _commit_manifest(path, new_man, expect_gen=man["gen_no"])
+    _roll_metadata_commit(
+        path, man, f"add_constraint({name})",
+        constraints={**man.get("constraints", {}), name: expr},
+    )
 
 
 def drop_check_constraint(spark: SparkSession, path: str, name: str) -> None:
@@ -3641,13 +3693,12 @@ def drop_check_constraint(spark: SparkSession, path: str, name: str) -> None:
     man = _load_manifest(path)
     if man is None or name not in man.get("constraints", {}):
         raise ValueError(f"no CHECK constraint {name!r} on {path!r}")
-    new_man = _roll_metadata_commit(man, path, f"drop_constraint({name})")
-    new_man["constraints"] = {
-        k: v for k, v in man["constraints"].items() if k != name
-    }
-    if not new_man["constraints"]:
-        del new_man["constraints"]
-    _commit_manifest(path, new_man, expect_gen=man["gen_no"])
+    _roll_metadata_commit(
+        path, man, f"drop_constraint({name})",
+        constraints={
+            k: v for k, v in man["constraints"].items() if k != name
+        } or None,
+    )
 
 
 def _table_columns(
@@ -3710,13 +3761,56 @@ def _rel_file(uri: str, table_path: str) -> str:
     return _io(table_path).rel_file(uri, table_path)
 
 
+# the identification read's provenance column: no table column can
+# clash with it (unlike ``_file``, which only DV tables reserve)
+_PROV = "__prov_file__"
+
+
+def _tagged_read(
+    spark: SparkSession, man: dict | None, path: str, scan: list[dict]
+):
+    """The DML identification read — DV-aware, shared by
+    :func:`_matched_files` and :func:`merge_into`: the ``scan`` files'
+    live rows with a :data:`_PROV` provenance column, plus the map from
+    a provenance value back to the manifest-relative file name. Rows
+    already deletion-vector-deleted never appear, so they can't count
+    as matches."""
+    from pyspark.sql import functions as F
+
+    dv = (man or {}).get("dv")
+    if any(e["name"] in (dv or {}).get("n", {}) for e in scan):
+        base_to_rel = {os.path.basename(e["name"]): e["name"] for e in scan}
+        if len(base_to_rel) != len(scan):
+            raise RuntimeError(
+                "basename collision in DV identification scan — "
+                "compact the table to restore unique data-file names"
+            )
+        keyed = _read_version_keyed(
+            spark, man, path, [e["name"] for e in scan], dv
+        )
+        return (
+            keyed.drop("_pos").withColumnRenamed("_file", _PROV),
+            base_to_rel.__getitem__,
+        )
+    # provenance FIRST, filter second: input_file_name() is only
+    # defined inside the scan stage — a predicate that Catalyst rewrites
+    # into a join (delete_keys' bulk IN-subquery becomes a semi join)
+    # would otherwise evaluate it past an exchange and return ''
+    src = _read_files(
+        spark, man, [os.path.join(path, e["name"]) for e in scan]
+    )
+    return (
+        src.select(F.input_file_name().alias(_PROV), "*"),
+        lambda uri: _rel_file(uri, path),
+    )
+
+
 def _matched_files(
     spark: SparkSession,
     man: dict | None,
     path: str,
     cand: list[dict],
     predicate: str,
-    dv: dict | None = None,
     bloom_probes=None,
 ) -> tuple[dict[str, int], int]:
     """The shared DML identification scan: per-file matched-row counts
@@ -3725,8 +3819,7 @@ def _matched_files(
     whose [min, max] disproves the predicate can't contain a match —
     possibly to an empty scan, i.e. ZERO Spark jobs); the scan itself
     reads predicate columns only, with parquet row-group pushdown
-    inside each file. DV-aware: rows already deletion-vector-deleted
-    never count as matches."""
+    inside each file (:func:`_tagged_read`)."""
     from pyspark.sql import functions as F
 
     from .data_skipping import prune_entries  # lazy: avoids module cycle
@@ -3736,45 +3829,14 @@ def _matched_files(
     )
     if not scan:
         return {}, 0
-    pred = F.coalesce(F.expr(predicate), F.lit(False))
-    dv_n = (dv or {}).get("n", {})
-    if any(e["name"] in dv_n for e in scan):
-        base_to_rel = {os.path.basename(e["name"]): e["name"] for e in scan}
-        if len(base_to_rel) != len(scan):
-            raise RuntimeError(
-                "basename collision in DV identification scan — "
-                "compact the table to restore unique data-file names"
-            )
-        hits = (
-            _read_version_keyed(
-                spark, man, path, [e["name"] for e in scan], dv
-            )
-            .where(pred)
-            .groupBy("_file")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        per = {base_to_rel[r["_file"]]: r["n"] for r in hits}
-    else:
-        src = _read_files(
-            spark, man, [os.path.join(path, e["name"]) for e in scan]
-        )
-        hits = (
-            # provenance FIRST, filter second: input_file_name() is
-            # only defined inside the scan stage — a predicate that
-            # Catalyst rewrites into a join (delete_keys' bulk
-            # IN-subquery becomes a semi join) would otherwise
-            # evaluate it past an exchange and return '' (caught by
-            # the bulk-list regression test as misattributed counts)
-            src.select(
-                F.input_file_name().alias("__prov_file__"), "*"
-            )
-            .where(pred)
-            .groupBy("__prov_file__")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        )
-        per = {_rel_file(r["__prov_file__"], path): r["n"] for r in hits}
+    src, rel_of = _tagged_read(spark, man, path, scan)
+    hits = (
+        src.where(F.coalesce(F.expr(predicate), F.lit(False)))
+        .groupBy(_PROV)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    per = {rel_of(r[_PROV]): r["n"] for r in hits}
     return per, sum(per.values())
 
 
@@ -3836,94 +3898,31 @@ def delete_where(
     # loaded — their root records ride through to the commit verbatim,
     # so a targeted takedown on a 1M-file table is O(touched shards)
     # end to end, identification AND commit
-    carried: list[dict] = []
-    man, entries, loose, stale = _live_state(
-        path,
-        shard_admits=_scan_admits(predicate, _bloom_probes),
-        carry_out=carried,
-    )
-    loose_entries = [(f, _file_entry(path, f)) for f in loose]
-    cand = entries + [e for _, e in loose_entries]
+    snap = _resolve(path, _scan_admits(predicate, _bloom_probes))
+    loose_entries = [(f, _file_entry(path, f)) for f in snap.loose]
+    cand = snap.entries + [e for _, e in loose_entries]
     if not cand:
         return 0
-    pred = F.coalesce(F.expr(predicate), F.lit(False))
-    dv = (man or {}).get("dv")
-    old_dv_n = _dv_map(man)
     per_file, n_del = _matched_files(
-        spark, man, path, cand, predicate, dv, bloom_probes=_bloom_probes
+        spark, snap.man, path, cand, predicate, bloom_probes=_bloom_probes
     )
     if not per_file:
         return 0  # no-op: don't burn a generation rewriting anything
-    touched_rel = set(per_file)
-    dv_mark: set[str] = set()
-    if deletion_vectors:
-        dv_mark = _dv_mark_split(
-            path, entries, touched_rel, per_file, old_dv_n,
-            dv_rewrite_threshold,
-        )
-    rewrite_rel = touched_rel - dv_mark
-    keep_entries = [e for e in entries if e["name"] not in rewrite_rel]
-    adopt = [(f, e) for f, e in loose_entries if f not in rewrite_rel]
-    rw = [e for e in cand if e["name"] in rewrite_rel]
-
-    del_frames = []
-    new_df = None
-    expected = 0
-    if rw:
-        tdf = _read_version(
-            spark, man, path, [e["name"] for e in rw], dv
-        )
-        new_df = tdf.where(~pred)
-        n_rw_live = sum(
-            _entry_rows(path, e) - old_dv_n.get(e["name"], 0) for e in rw
-        )
-        expected = n_rw_live - sum(per_file[e["name"]] for e in rw)
-        del_frames.append(tdf.where(pred))
-    hits = None
-    try:
-        if dv_mark:
-            keyed = _read_version_keyed(
-                spark, man, path, sorted(dv_mark), dv
-            )
-            hits = keyed.where(pred).persist()
-            del_frames.append(hits.drop("_file", "_pos"))
-            dv_df, dv_n, dv_carry = _dv_add(
-                spark, path, man, rewrite_rel,
-                hits.select("_file", "_pos"),
-                {rel: per_file[rel] for rel in dv_mark},
-            )
-        else:
-            dv_df, dv_n, dv_carry = _dv_after_drop(
-                spark, path, man, rewrite_rel
-            )
-        cdc_del = del_frames[0]
-        for f in del_frames[1:]:
-            cdc_del = cdc_del.unionByName(f, allowMissingColumns=True)
-        _commit_generation(
-            spark,
-            path,
-            man=man,
-            loose=loose,
-            stale=stale,
-            keep_entries=keep_entries,
-            new_df=new_df,
-            suffix="._delete",
-            expected_new_rows=expected,
-            retain_versions=retain_versions,
-            adopt=adopt,
+    pred = F.coalesce(F.expr(predicate), F.lit(False))
+    with _plan_rewrite(
+        spark, path, snap, loose_entries, per_file, "delete",
+        lambda df: df.where(pred), deletion_vectors, dv_rewrite_threshold,
+        retain_versions,
+    ) as p:
+        _commit_generation(spark, path, dataclasses.replace(
+            p.commit,
+            new_df=None if p.rows is None else p.rows.where(~pred),
+            expected=p.n_keep,
             cdc={
                 "insert": None,
-                "delete": cdc_del.coalesce(_rewrite_partitions(n_del, 0)),
+                "delete": p.pre.coalesce(_rewrite_partitions(n_del, 0)),
             },
-            dv_df=dv_df,
-            dv_n=dv_n,
-            dv_carry=dv_carry,
-            rebase="auto",
-            carried_shards=carried,
-        )
-    finally:
-        if hits is not None:
-            hits.unpersist()
+        ))
     return n_del
 
 
@@ -4179,18 +4178,13 @@ def update_where(
 
     # selective resolve, same contract as delete_where: predicate-
     # rejected index shards carry verbatim, never loaded
-    carried: list[dict] = []
-    man, entries, loose, stale = _live_state(
-        path,
-        shard_admits=_scan_admits(predicate, _bloom_probes),
-        carry_out=carried,
-    )
-    loose_entries = [(f, _file_entry(path, f)) for f in loose]
-    cand = entries + [e for _, e in loose_entries]
+    snap = _resolve(path, _scan_admits(predicate, _bloom_probes))
+    loose_entries = [(f, _file_entry(path, f)) for f in snap.loose]
+    cand = snap.entries + [e for _, e in loose_entries]
     if not cand:
         return 0
     cols = _table_columns(
-        spark, man, [os.path.join(path, e["name"]) for e in cand]
+        spark, snap.man, [os.path.join(path, e["name"]) for e in cand]
     )
     missing = [c for c in assignments if c not in cols]
     if missing:
@@ -4198,117 +4192,47 @@ def update_where(
             f"UPDATE assigns to unknown columns {missing}; table has "
             f"{sorted(cols)}"
         )
-    pred = F.coalesce(F.expr(predicate), F.lit(False))
-    dv = (man or {}).get("dv")
-    old_dv_n = _dv_map(man)
     per_file, n_upd = _matched_files(
-        spark, man, path, cand, predicate, dv, bloom_probes=_bloom_probes
+        spark, snap.man, path, cand, predicate, bloom_probes=_bloom_probes
     )
-    touched_rel = set(per_file)
-    if not touched_rel:
+    if not per_file:
         return 0
-    dv_mark: set[str] = set()
-    if deletion_vectors:
-        dv_mark = _dv_mark_split(
-            path, entries, touched_rel, per_file, old_dv_n,
-            dv_rewrite_threshold,
-        )
-    rewrite_rel = touched_rel - dv_mark
-    keep_entries = [e for e in entries if e["name"] not in rewrite_rel]
-    adopt = [(f, e) for f, e in loose_entries if f not in rewrite_rel]
-    rw = [e for e in cand if e["name"] in rewrite_rel]
+    pred = F.coalesce(F.expr(predicate), F.lit(False))
 
-    def post_cols(df):
+    def post(df, cond=None):
         # all assignments evaluate against the PRE-update row: build
         # every new value in ONE projection so `SET a = b, b = a`
-        # swaps correctly
-        return [
-            F.expr(assignments[c]).alias(c) if c in assignments
-            else F.col(c)
+        # swaps correctly (``cond`` limits them to the matched rows)
+        return df.select(*[
+            (F.expr(assignments[c]) if cond is None
+             else F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)))
+            .alias(c) if c in assignments else F.col(c)
             for c in df.columns
-        ]
+        ])
 
-    new_frames = []
-    pre_frames = []
-    post_cdc_frames = []
-    expected = 0
-    if rw:
-        tdf = _read_version(
-            spark, man, path, [e["name"] for e in rw], dv
-        )
-        updated_cols = [
-            F.when(pred, F.expr(assignments[c])).otherwise(F.col(c))
-            .alias(c)
-            if c in assignments
-            else F.col(c)
-            for c in tdf.columns
-        ]
-        new_frames.append(tdf.select(*updated_cols))
-        pre_frames.append(tdf.where(pred))
-        post_cdc_frames.append(tdf.where(pred).select(*post_cols(tdf)))
-        expected += sum(
-            _entry_rows(path, e) - old_dv_n.get(e["name"], 0) for e in rw
-        )
-    marked = None
-    try:
-        if dv_mark:
-            keyed = _read_version_keyed(
-                spark, man, path, sorted(dv_mark), dv
-            )
-            marked = keyed.where(pred).persist()
-            pre = marked.drop("_file", "_pos")
-            pre_frames.append(pre)
-            post = pre.select(*post_cols(pre))
-            new_frames.append(post)  # postimages are the new data files
-            post_cdc_frames.append(post)
-            n_marked = sum(per_file[rel] for rel in dv_mark)
-            expected += n_marked
-            dv_df, dv_n, dv_carry = _dv_add(
-                spark, path, man, rewrite_rel,
-                marked.select("_file", "_pos"),
-                {rel: per_file[rel] for rel in dv_mark},
-            )
-        else:
-            # rewritten files' deletions materialize; carried keep DVs
-            dv_df, dv_n, dv_carry = _dv_after_drop(
-                spark, path, man, rewrite_rel
-            )
-        new_df = new_frames[0]
-        for f in new_frames[1:]:
+    with _plan_rewrite(
+        spark, path, snap, loose_entries, per_file, "update",
+        lambda df: df.where(pred), deletion_vectors, dv_rewrite_threshold,
+        retain_versions,
+    ) as p:
+        # rewritten files keep every row, matched ones updated in place;
+        # DV-marked files' postimages are the new data files
+        frames = [post(p.rows, pred)] if p.rows is not None else []
+        if p.marked is not None:
+            frames.append(post(p.marked))
+        new_df = frames[0]
+        for f in frames[1:]:
             new_df = new_df.unionByName(f)
-        pre_cdc = pre_frames[0]
-        for f in pre_frames[1:]:
-            pre_cdc = pre_cdc.unionByName(f)
-        post_cdc = post_cdc_frames[0]
-        for f in post_cdc_frames[1:]:
-            post_cdc = post_cdc.unionByName(f)
-        _commit_generation(
-            spark,
-            path,
-            man=man,
-            loose=loose,
-            stale=stale,
-            keep_entries=keep_entries,
-            new_df=new_df.coalesce(
-                _rewrite_partitions(expected, len(rw))
-            ),
-            suffix="._update",
-            expected_new_rows=expected,
-            retain_versions=retain_versions,
-            adopt=adopt,
+        expected = p.n_keep + n_upd
+        _commit_generation(spark, path, dataclasses.replace(
+            p.commit,
+            new_df=new_df.coalesce(_rewrite_partitions(expected, p.n_files)),
+            expected=expected,
             cdc={
-                "insert": post_cdc.coalesce(_rewrite_partitions(n_upd, 0)),
-                "delete": pre_cdc.coalesce(_rewrite_partitions(n_upd, 0)),
+                "insert": post(p.pre).coalesce(_rewrite_partitions(n_upd, 0)),
+                "delete": p.pre.coalesce(_rewrite_partitions(n_upd, 0)),
             },
-            dv_df=dv_df,
-            dv_n=dv_n,
-            dv_carry=dv_carry,
-            rebase="auto",
-            carried_shards=carried,
-        )
-    finally:
-        if marked is not None:
-            marked.unpersist()
+        ))
     return n_upd
 
 
@@ -4326,35 +4250,26 @@ def materialize_deletion_vectors(
     compaction by exactly the clean fraction of the table. No-op
     (returns 0, no commit burned) when the table has no DVs. Returns
     the number of files rewritten."""
-    man, entries, loose, stale = _live_state(path)
-    old_dv_n = _dv_map(man)
+    snap = _resolve(path)
+    old_dv_n = _dv_map(snap.man)
     if not old_dv_n:
         return 0
-    touched = [e for e in entries if e["name"] in old_dv_n]
-    keep_entries = [e for e in entries if e["name"] not in old_dv_n]
-    loose_entries = [(f, _file_entry(path, f)) for f in loose]
-    tdf = _read_version(
-        spark, man, path, [e["name"] for e in touched], man["dv"]
-    )
-    expected = sum(
-        _entry_rows(path, e) - old_dv_n[e["name"]] for e in touched
-    )
-    _commit_generation(
-        spark,
-        path,
-        man=man,
-        loose=loose,
-        stale=stale,
-        keep_entries=keep_entries,
-        new_df=tdf.coalesce(_rewrite_partitions(expected, len(touched))),
-        suffix="._materialize",
-        expected_new_rows=expected,
-        retain_versions=retain_versions,
-        adopt=loose_entries,  # loose appends never carry DVs
-        cdc={"insert": None, "delete": None},  # no logical row change
-        rebase="auto",
-    )
-    return len(touched)
+    # loose appends never carry DVs: adopted as they are
+    with _plan_rewrite(
+        spark, path, snap,
+        [(f, _file_entry(path, f)) for f in snap.loose],
+        {e["name"]: 0 for e in snap.entries if e["name"] in old_dv_n},
+        "materialize", retain=retain_versions,
+    ) as p:
+        _commit_generation(spark, path, dataclasses.replace(
+            p.commit,
+            new_df=p.rows.coalesce(
+                _rewrite_partitions(p.n_keep, p.n_files)
+            ),
+            expected=p.n_keep,
+            cdc=_NO_ROW_CHANGE,
+        ))
+    return p.n_files
 
 
 def insert_into(
@@ -4389,10 +4304,8 @@ def insert_into(
     # micro-batch insert into a sharded 1M-file table resolves by
     # reading the root plus the undersized tail, not the whole index
     # (the resolve keeps one shard loaded as the schema-gate witness)
-    carried: list[dict] = []
-    man, entries, loose, stale = _live_state(
-        path, shard_admits=lambda s: False, carry_out=carried
-    )
+    snap = _resolve(path, lambda s: False)
+    man, entries = snap.man, snap.entries
     if man is None:
         raise ValueError(
             f"no manifest at {path!r} — convert_to_manifest first (or "
@@ -4446,6 +4359,7 @@ def insert_into(
             )
     we_persisted = False
     obs = None
+    n = 0
     if not df.is_cached and df.rdd.getNumPartitions() == 1:
         # SINGLE-PASS fast path (r13 optimization; guide §1.2 "fewer
         # passes", §5 "don't cache what you don't reuse"): a
@@ -4480,38 +4394,26 @@ def insert_into(
                 # (and an empty data file) on a quiet microbatch
                 return 0
             new_df = df.coalesce(_rewrite_partitions(n, 0))
-        # carried files keep their DVs by reference (nothing rewritten)
-        dv_df, dv_n, dv_carry = _dv_after_drop(spark, path, man, set())
         try:
-            _commit_generation(
-                spark,
-                path,
+            # loose appends stay loose and visible; carried files keep
+            # their DVs by reference (nothing rewritten). A lost race
+            # against ANY disjoint winner rebases the staged batch —
+            # concurrent insert streams each write their bytes once
+            _commit_generation(spark, path, Commit(
                 man=man,
-                loose=[],  # loose appends stay loose and visible
-                stale=stale,
-                keep_entries=entries,
+                op="insert",
+                stale=snap.stale,
+                keep=entries,
                 new_df=new_df,
-                suffix="._insert",
-                expected_new_rows=(
-                    (lambda: int(obs.get["n"])) if obs is not None else n
+                expected=n,
+                retain=retain_versions,
+                dv=_dv_after_drop(spark, path, man, set()),
+                carried=snap.carried,
+                insert=_Insert(
+                    txn,
+                    (lambda: int(obs.get["n"])) if obs is not None else None,
                 ),
-                skip_empty=obs is not None,
-                retain_versions=retain_versions,
-                # the staged data files ARE the insert feed — recorded BY
-                # REFERENCE, so the batch bytes are written once, not twice
-                cdc={"insert": None, "delete": None},
-                cdc_insert_staged=True,
-                dv_df=dv_df,
-                dv_n=dv_n,
-                dv_carry=dv_carry,
-                txn=txn,
-                # pure append, empty read-set: a lost race against ANY
-                # disjoint winner rebases the staged batch instead of
-                # re-staging it — concurrent insert streams each write
-                # their bytes exactly once
-                rebase="append",
-                carried_shards=carried,
-            )
+            ))
         except _TxnAlreadyApplied:
             # a duplicate delivery of this very (app_id, version) won
             # the race mid-commit — exactly-once says this copy drops
@@ -4570,8 +4472,6 @@ def rollback(
             f"{sorted(targets) + [man['gen_no']]}"
         )
     target = targets[version]
-    target_files = _version_files(target, path)
-    gen_no = man["gen_no"] + 1
     # the one directory snapshot, with _live_state's referenced-name
     # exclusion: top-level files REFERENCED by any version (tables
     # adopted in place by convert_to_manifest) are LIVE DATA, not loose
@@ -4593,7 +4493,7 @@ def rollback(
     manifest = {
         "format": 2,
         "generation": target.get("generation"),
-        "gen_no": gen_no,
+        "gen_no": man["gen_no"] + 1,
         "rows": target["rows"],
         "op": f"restore({version})",
         "committed_at": round(_time.time(), 3),
@@ -4607,61 +4507,20 @@ def rollback(
         # reference, same as history retention does
         manifest["files_ext"] = target["files_ext"]
     else:
-        manifest["files"] = target_files
-    if target.get("mixed_schema"):
-        # the TARGET's flag, not the live one: restore means the
-        # snapshot's physical-schema state (a later rewrite may have
-        # cleared the live flag; the snapshot's files still differ)
-        manifest["mixed_schema"] = True
-        # keep the schema-epoch cache key consistent with the restored
-        # file set (the live epoch may postdate this snapshot)
-        if target.get("schema_epoch") is not None:
-            manifest["schema_epoch"] = target["schema_epoch"]
-        if target.get("table_schema") is not None:
-            manifest["table_schema"] = target["table_schema"]
-    if target.get("dv") is not None:
-        # restore means the snapshot's merge-on-read state too
-        manifest["dv"] = target["dv"]
-    if man.get("constraints"):
-        # CHECK constraints are table policy, not version state: a
-        # restore of old DATA must not silently disarm them
-        manifest["constraints"] = man["constraints"]
-    if man.get("txn"):
-        # streaming-txn watermarks are table policy too: dropping them
-        # on restore would let a replayed microbatch re-apply
-        manifest["txn"] = man["txn"]
-    if man.get("bloom"):
-        # the bloom index policy is table policy like constraints: a
-        # restore must not silently disarm point-lookup skipping (and
-        # the sidecar-retire branch below keys off this record)
-        manifest["bloom"] = man["bloom"]
+        manifest["files"] = _version_files(target, path)
+    # restore means the snapshot's read state (a later rewrite may have
+    # cleared the live mixed-schema flag; the snapshot's files still
+    # differ) — but CHECK constraints, txn watermarks and the bloom
+    # policy are table policy and survive it
+    manifest.update(_policy(man, target))
     _commit_manifest(path, manifest, expect_gen=man["gen_no"])
     if dropped:
-        live = (
-            {e["name"] for e in target_files}
-            | _dv_names(manifest)
-            | _shard_names(manifest)
+        live = _live_names([manifest] + history, path)
+        _retire_dead(
+            path, _live_names(dropped, path) - live, live,
+            bloom=bool(manifest.get("bloom")),
         )
-        for h in history:
-            live |= {e["name"] for e in _version_files(h, path)}
-            live |= _cdc_names(h)
-            live |= _dv_names(h)
-            live |= _shard_names(h)
-        dead: set[str] = set()
-        for h in dropped:
-            dead |= {e["name"] for e in _version_files(h, path)}
-            dead |= _cdc_names(h)
-            dead |= _dv_names(h)
-            dead |= _shard_names(h)
-        dead_paths = [os.path.join(path, n) for n in dead - live]
-        if manifest.get("bloom"):
-            dead_paths += [p + _BLOOM_SUFFIX for p in list(dead_paths)]
-        _retire(dead_paths)
-        _cleanup_empty_gen_dirs(
-            path, live,
-            {n.split("/", 1)[0] for n in dead - live if "/" in n},
-        )
-    return gen_no
+    return manifest["gen_no"]
 
 
 def table_changes(
@@ -4978,7 +4837,6 @@ def merge_into(
         # so schema/key validation against the table runs after this
         # one aggregation job — fail-fast on the SOURCE side happened
         # before any job, above.)
-        carried: list[dict] = []
         admits = None
         if pre["n_matchable"] > 0 and pre["k_lo"] is not None:
             from .data_skipping import (  # lazy: avoids module cycle
@@ -4991,11 +4849,10 @@ def merge_into(
                 else [("between", k0, pre["k_lo"], pre["k_hi"])]
             )
             admits = _mk_shard_admits(atoms)
-        man, entries, loose, stale = _live_state(
-            path, shard_admits=admits, carry_out=carried
-        )
-        src = [os.path.join(path, e["name"]) for e in entries] + [
-            os.path.join(path, f) for f in loose
+        snap = _resolve(path, admits)
+        man = snap.man
+        src = [os.path.join(path, e["name"]) for e in snap.entries] + [
+            os.path.join(path, f) for f in snap.loose
         ]
         old_cols = (
             _table_columns(spark, man, src)
@@ -5025,12 +4882,10 @@ def merge_into(
             if evolving
             else None
         )
-        loose_entries = [(f, _file_entry(path, f)) for f in loose]
-        cand = entries + [e for _, e in loose_entries]
-        dv = (man or {}).get("dv")
-        old_dv_n = _dv_map(man)
+        loose_entries = [(f, _file_entry(path, f)) for f in snap.loose]
+        cand = snap.entries + [e for _, e in loose_entries]
         clash = {"_file", "_pos"} & set(updates.columns)
-        if clash and (old_dv_n or deletion_vectors):
+        if clash and (_dv_map(man) or deletion_vectors):
             # commit-time guard: evolving these names INTO a DV table
             # would make every later (keyed) read raise — brick the
             # table. The read-time guard can't catch it; this can.
@@ -5076,40 +4931,19 @@ def merge_into(
                 # broadcasts it; a bulk patch shuffles instead of
                 # betting the driver on a broadcast
                 ukeys = F.broadcast(ukeys)
-            dv_overlap = any(e["name"] in old_dv_n for e in scan)
-            if dv_overlap:
-                # DV'd candidates: the keyed read filters out rows
-                # already deleted, so they can't count as matches
-                base_to_rel = {
-                    os.path.basename(e["name"]): e["name"] for e in scan
-                }
-                if len(base_to_rel) != len(scan):
-                    raise RuntimeError(
-                        "basename collision in DV identification scan — "
-                        "compact the table to restore unique names"
-                    )
-                src_df = _read_version_keyed(
-                    spark, man, path, [e["name"] for e in scan], dv
-                ).select("_file", *keys)
-            else:
-                src_df = _read_files(
-                    spark, man,
-                    [os.path.join(path, e["name"]) for e in scan],
-                ).select(F.input_file_name().alias("_file"), *keys)
-            m = src_df.join(ukeys, keys, "left_semi")
+            src_df, rel_of = _tagged_read(spark, man, path, scan)
+            m = src_df.select(_PROV, *keys).join(ukeys, keys, "left_semi")
             # pre-write action 2 of 2: ROLLUP gives per-file matched
             # counts AND the global matched-rows/keys totals in one job
-            roll = m.rollup("_file").agg(
+            roll = m.rollup(_PROV).agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.count_distinct(F.struct(*keys)).alias("n_keys"),
             ).collect()
             for r in roll:
-                if r["_file"] is None:
+                if r[_PROV] is None:
                     matched_rows, matched_keys = r["n_rows"], r["n_keys"]
-                elif dv_overlap:
-                    per_file[base_to_rel[r["_file"]]] = r["n_rows"]
                 else:
-                    per_file[_rel_file(r["_file"], path)] = r["n_rows"]
+                    per_file[rel_of(r[_PROV])] = r["n_rows"]
         if matched_rows > matched_keys:
             warnings.warn(
                 f"merge_into: target holds duplicate keys — "
@@ -5118,104 +4952,43 @@ def merge_into(
                 "update row",
                 stacklevel=2,
             )
-        touched_rel = set(per_file)
-        dv_mark: set[str] = set()
-        if deletion_vectors and touched_rel:
-            dv_mark = _dv_mark_split(
-                path, entries, touched_rel, per_file, old_dv_n,
-                dv_rewrite_threshold,
-            )
-        rewrite_rel = touched_rel - dv_mark
-        keep_entries = [e for e in entries if e["name"] not in rewrite_rel]
-        adopt = [(f, e) for f, e in loose_entries if f not in rewrite_rel]
-        rw = [e for e in cand if e["name"] in rewrite_rel]
         ukeys_b = updates.select(*keys)
         if broadcast_updates:
             ukeys_b = F.broadcast(ukeys_b)
-        del_frames = []
-        n_rw = 0
-        if rw:
-            tdf = _read_version(
-                spark, man, path, [e["name"] for e in rw], dv
-            )
-            new_df = _merge_frames(
-                tdf, updates, keys, broadcast_updates,
+        with _plan_rewrite(
+            spark, path, snap, loose_entries, per_file, "merge",
+            lambda df: df.join(ukeys_b, keys, "left_semi"),
+            deletion_vectors, dv_rewrite_threshold, retain_versions,
+        ) as p:
+            # a pure insert / pure DV-mark rewrites NOTHING: the batch
+            # is the new generation
+            new_df = updates if p.rows is None else _merge_frames(
+                p.rows, updates, keys, broadcast_updates,
                 allow_missing=evolve_schema,
             )
-            del_frames.append(tdf.join(ukeys_b, keys, "left_semi"))
-            n_rw_live = sum(
-                _entry_rows(path, e) - old_dv_n.get(e["name"], 0)
-                for e in rw
-            )
-            n_rw = n_rw_live - sum(per_file[e["name"]] for e in rw)
-        else:
-            new_df = updates  # pure insert / pure DV-mark: rewrite NOTHING
-        marked = None
-        try:
-            if dv_mark:
-                # matched rows in DV-marked files: positions go to the
-                # sidecar, preimages to the CDC feed — file bytes untouched
-                keyed = _read_version_keyed(
-                    spark, man, path, sorted(dv_mark), dv
-                )
-                marked = keyed.join(ukeys_b, keys, "left_semi").persist()
-                del_frames.append(marked.drop("_file", "_pos"))
-                dv_df, dv_n, dv_carry = _dv_add(
-                    spark, path, man, rewrite_rel,
-                    marked.select("_file", "_pos"),
-                    {rel: per_file[rel] for rel in dv_mark},
-                )
-            else:
-                dv_df, dv_n, dv_carry = _dv_after_drop(
-                    spark, path, man, rewrite_rel
-                )
-            deleted = None
-            if del_frames:
-                deleted = del_frames[0]
-                for f in del_frames[1:]:
-                    deleted = deleted.unionByName(
-                        f, allowMissingColumns=True
-                    )
-                deleted = deleted.coalesce(
-                    _rewrite_partitions(matched_rows, 0)
-                )
+            expected = p.n_keep + n_upd
             # size the rewrite output to the touched-file count, not the
             # patch's upstream partitioning (a 1k-row patch union would
             # otherwise emit one near-empty file per shuffle partition);
             # coalesce, not repartition — no exchange, the table side
             # stays unshuffled and per-touched-file parallelism is kept
-            new_df = new_df.coalesce(
-                _rewrite_partitions(n_rw + n_upd, len(rw))
-            )
-            _commit_generation(
-                spark,
-                path,
-                man=man,
-                loose=loose,
-                stale=stale,
-                keep_entries=keep_entries,
-                new_df=new_df,
-                suffix="._merge",
-                expected_new_rows=n_rw + n_upd,
-                retain_versions=retain_versions,
-                adopt=adopt,
+            _commit_generation(spark, path, dataclasses.replace(
+                p.commit,
+                new_df=new_df.coalesce(
+                    _rewrite_partitions(expected, p.n_files)
+                ),
+                expected=expected,
                 cdc={
                     "insert": updates.coalesce(
                         _rewrite_partitions(n_upd, 0)
                     ),
-                    "delete": deleted,
+                    "delete": None if p.pre is None else p.pre.coalesce(
+                        _rewrite_partitions(matched_rows, 0)
+                    ),
                 },
                 mixed_schema=True if evolving else None,
                 table_schema=uni_schema,
-                dv_df=dv_df,
-                dv_n=dv_n,
-                dv_carry=dv_carry,
-                rebase="merge",
-                carried_shards=carried,
-            )
-        finally:
-            if marked is not None:
-                marked.unpersist()
+            ))
         return {
             "updated": matched_keys,
             "inserted": n_upd - matched_keys,
@@ -5274,7 +5047,7 @@ def retry_on_conflict(fn, attempts: int = 3):
 
     This is the OUTER, whole-pass loop — since round 9 it is the
     fallback, not the common path: commits first try COMMIT-LEVEL
-    reconciliation inside :func:`_commit_generation` (``rebase=``),
+    reconciliation inside :func:`_commit_generation` (:attr:`Commit.rebase`),
     which re-CASes the already-staged files when the racing commits
     touched disjoint files. Only an overlapping conflict (the winner
     rewrote/DV'd a file this pass read, consumed the same loose
@@ -5351,12 +5124,7 @@ def vacuum_staging(
             continue
         man = _load_manifest(p)
         if man is not None:
-            live: set[str] = set()
-            for ver in [man] + list(man.get("history", [])):
-                live |= {e["name"] for e in _version_files(ver, p)}
-                live |= _cdc_names(ver)
-                live |= _dv_names(ver)
-                live |= _shard_names(ver)
+            live = _live_names([man] + list(man.get("history", [])), p)
             live_dirs = {n.split("/", 1)[0] for n in live if "/" in n}
             superseded = set(man.get("superseded", []))
             for child in io.listdir(p):
@@ -5383,10 +5151,14 @@ def vacuum_staging(
                         ):
                             sub = os.path.join(cp, base)
                             rel = f"{child}/{base}"
-                            if rel.endswith(_BLOOM_SUFFIX):
-                                # a bloom sidecar's liveness is its
-                                # DATA FILE's: never collect one whose
-                                # file is live, always one whose isn't
+                            if rel not in live and rel.endswith(
+                                _BLOOM_SUFFIX
+                            ):
+                                # a per-file bloom sidecar's liveness is
+                                # its DATA FILE's: never collect one
+                                # whose file is live, always one whose
+                                # isn't (a shard's live consolidated
+                                # object is live by name)
                                 rel = rel[: -len(_BLOOM_SUFFIX)]
                             if rel not in live and expired(sub):
                                 if not dry_run:

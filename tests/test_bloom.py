@@ -1487,3 +1487,59 @@ def test_distributed_admits_refuses_stray_self(spark, tmp_path):
         spark, root, [("key", ["absent"])], [rel_live]
     )
     assert admitted2 == set()
+
+
+@pytest.mark.parametrize("mode", ["plain", "sharded", "bloomed_sharded", "dv"])
+def test_vacuum_ttl0_keeps_live_objects(spark, tmp_path, monkeypatch, mode):
+    """A TTL-0 vacuum collects only what no version keeps alive: after a
+    retained-history delete, every live object — index shards and their
+    consolidated bloom objects included — survives, so deep FSCK stays
+    clean and the table reads the same."""
+    if mode == "bloomed_sharded":
+        path = _consolidated_table(spark, tmp_path, monkeypatch, name=mode)
+    else:
+        if mode == "sharded":
+            monkeypatch.setattr(S, "_SHARD_THRESHOLD", 4)
+            monkeypatch.setattr(S, "_SHARD_SIZE", 2)
+        path = _fp_table(spark, tmp_path, n=8000, files=8, name=mode)
+    assert S.delete_where(
+        spark, path, "id < 100", retain_versions=1,
+        deletion_vectors=mode == "dv",
+    ) == 100
+    if mode == "dv":
+        assert S._dv_map(S._load_manifest(path))
+    S.vacuum_staging(str(tmp_path), ttl_seconds=0)
+    fsck = S.verify_table(path, deep=True)
+    assert fsck["ok"], fsck["errors"]
+    assert S.read_table(spark, path).count() == 7900
+
+
+def test_rollback_retires_dropped_consolidated_objects(
+    spark, tmp_path, monkeypatch
+):
+    """A rollback that trims history retires the dropped versions'
+    consolidated bloom objects with their shards: no
+    ``.agg.bloom.json`` is left whose shard no version references."""
+    path = _consolidated_table(spark, tmp_path, monkeypatch, name="rbk")
+    pre = S._load_manifest(path)["gen_no"]
+    S.delete_where(spark, path, "id < 50", retain_versions=3)
+    S.rollback(spark, path, version=pre, retain_versions=0)
+    man = S._load_manifest(path)
+    shards = {
+        s["name"]
+        for v in [man] + man.get("history", [])
+        for s in (v.get("files_ext") or {}).get("shards", [])
+    }
+    orphans = [
+        os.path.relpath(os.path.join(d, f), path)
+        for d, _, files in os.walk(path)
+        for f in files
+        if f.endswith(B.CONSOLIDATED_SUFFIX)
+        and os.path.relpath(os.path.join(d, f), path)[
+            : -len(B.CONSOLIDATED_SUFFIX)
+        ] not in shards
+    ]
+    assert not orphans
+    assert S.read_table(spark, path).count() == 8000
+    fsck = S.verify_table(path, deep=True)
+    assert fsck["ok"], fsck["errors"]

@@ -2869,15 +2869,13 @@ def test_staging_mismatch_classifies_superseded_snapshot(spark, tmp_path):
     stale_man = S._load_manifest(path)
 
     def commit_with(man, expected):
-        return S._commit_generation(
-            spark, path, man=man,
-            loose=[], stale=[],
-            keep_entries=[],
+        return S._commit_generation(spark, path, S.Commit(
+            man=man, op="test",
             new_df=spark.createDataFrame(
                 [(1, 1.0)], "id long, v double"
             ).coalesce(1),
-            suffix="._test", expected_new_rows=expected,
-        )
+            expected=expected,
+        ))
 
     # no race, wrong count: the loud invariant stays loud
     with _pt.raises(RuntimeError) as exc:

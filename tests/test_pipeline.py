@@ -798,3 +798,22 @@ def test_pipeline_header_only_file_counts_zero(spark, dims, workdir, monkeypatch
 
 def _no_count(self):
     raise AssertionError("run_pipeline must not run a count() action")
+
+
+def test_pipeline_refuses_non_pinned_thread_mode(spark, dims, workdir, monkeypatch):
+    """With PySpark's pinned-thread mode off, inheritable_thread_target
+    returns the session instead of a decorator. run_pipeline fails up
+    front, naming the requirement, before any file moves or output
+    byte is written."""
+    import retail_sales_data_pipeline_spark.pipeline as pl
+
+    monkeypatch.setattr(pl, "inheritable_thread_target", lambda f=None: f)
+    _drop_with_reject(workdir)
+    with pytest.raises(RuntimeError, match="PYSPARK_PIN_THREAD"):
+        run_pipeline(
+            spark, workdir["source"], workdir["error"], workdir["processed"],
+            workdir["out"], dims, ledger=Ledger(workdir["ledger"]), run_id="rP",
+        )
+    assert sorted(os.listdir(workdir["source"])) == ["bad.csv", "good.csv"]
+    for d in ("error", "processed", "out"):
+        assert not os.path.exists(workdir[d]), d

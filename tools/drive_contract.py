@@ -1,14 +1,15 @@
 """Driver-contract harness: mimics what the grading driver does.
 
-Runs from /root/repo so `__spark_entry__` imports the package as the
-driver would. Smoke: entry(spark) at sf0.001. Correctness: each
+Puts its own checkout first on sys.path, so `__spark_entry__` imports
+the package as the driver would. Smoke: entry(spark) at sf0.001. Correctness: each
 queries()[name] at sf0.01 vs oracle_sql()[name] in DuckDB —
 row count, sorted-column schema, order-insensitive value hash.
 """
 import hashlib
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb
 from pyspark.sql import SparkSession

@@ -27,9 +27,11 @@ import sys
 import tempfile
 import time
 import traceback
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+_REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(_REPO))
+sys.path.insert(0, str(_REPO / "tests"))
 
 from retail_sales_data_pipeline_spark.session import get_spark  # noqa: E402
 import retail_sales_data_pipeline_spark.sinks as S  # noqa: E402
