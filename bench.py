@@ -226,11 +226,13 @@ def main() -> None:
     spark = get_spark(app_name="bench")
 
     queries = dict(all_queries())
-    # retired oracle-twin variants left the driver registry in r6; the
-    # bench_* two stay TIMED (the name filter below picks them up) —
-    # dropping them would shrink the suite total and read as a phantom
-    # perf win round-over-round. The other retired twins were never in
-    # HEADLINE and are merely resolvable here, not timed.
+    # retired oracle-twin variants left the driver registry in r6;
+    # bench_ann_cosine_arrow stays TIMED (the name filter below picks
+    # it up) — dropping it would shrink the suite total and read as a
+    # phantom perf win round-over-round. The other retired twins were
+    # never in HEADLINE and are merely resolvable here, not timed. (The
+    # banded-LSH twin was deleted outright: its query is
+    # ann_lsh_banded_topk, which HEADLINE times.)
     queries.update({k: fn for k, (fn, _twin) in retired_twins().items()})
     names = [n for n in HEADLINE if n in queries]
     # include any extension headliners registered later

@@ -281,8 +281,8 @@ def lsh_band_keys(signatures: DataFrame, rows_per_band: int = 2) -> DataFrame:
     )
     if len(mh_cols) % rows_per_band:
         # a narrower trailing band would be much looser (P ~ s^rows),
-        # silently skewing the LSH S-curve — reject like the arrow twin
-        # (lsh_band_buckets_arrow) instead of diverging from it
+        # silently skewing the LSH S-curve — reject like the embedding
+        # bucket stage (similarity.lsh_bucket_keys) instead of diverging
         raise ValueError(
             f"{len(mh_cols)} minhashes do not divide into bands of "
             f"{rows_per_band}; choose num_hashes divisible by "

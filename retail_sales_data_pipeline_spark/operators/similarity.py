@@ -12,29 +12,34 @@ Two search paths (SURVEY.md §7.2 M5 / training-data extensions):
   corpus size, embarrassingly parallel, zero shuffle on the corpus side
   (only the final per-query top-k exchange, which is tiny). At 100 TB
   this is the "scan path": it works at any scale, bounded by scan
-  throughput.
-- **Random-hyperplane LSH buckets** — the sublinear scale path: P
-  sign-bits of projections onto deterministic pseudo-random hyperplanes
-  form a bucket key; candidates share a bucket; cosine is verified only
-  for candidates. The shuffle key is the bucket — bounded cardinality
-  2^P, hash-uniform by construction.
+  throughput. It is also the recall ground truth for the LSH path.
+- **Random-hyperplane LSH buckets** — the sublinear scale path: sign
+  bits of projections onto deterministic pseudo-random hyperplanes
+  form bucket keys; candidates share a bucket; cosine is verified only
+  for candidates. ONE kernel serves every LSH query:
+  :func:`lsh_bucket_keys` (an Arrow batch × planes matmul, zero
+  shuffles) feeds :func:`lsh_ann_topk` (top-k) and
+  :func:`cosine_neardup_pairs_lsh` (near-dup pairs). A single-table
+  LSH is one band of all planes; banding is ``planes_per_band``.
 
 Determinism contract: hyperplane weights derive from md5 (identical in
-Spark/DuckDB): ``w(p, d) = hex(md5('p:d')[:8]) / 2^32 - 0.5``. All dot
-products fold element-wise in index order; cosines are rounded at the
-edge (6 dp) and rankings order by the *rounded* value with an id
+Python/DuckDB): ``w(p, d) = hex(md5('p:d')[:8]) / 2^32 - 0.5``, computed
+once per call on the driver (:func:`plane_weights`). Cosines are rounded
+at the edge (6 dp) and rankings order by the *rounded* value with an id
 tiebreak, so both engines produce identical rows.
 
-Everything below is built-in expression algebra (zip_with / aggregate /
-transform) — JVM-side, no Python UDFs. For maximum single-node
-throughput a vectorized Arrow/pandas matmul variant would beat the
-expression tree; the expression form is kept because it is
-oracle-checkable and shuffle-free. (A pandas_udf batch variant is the
-documented follow-up for the bench path.)
+The cosine tails are built-in expression algebra (zip_with / aggregate
+/ transform) — JVM-side, dot products folded element-wise in index
+order. The bucket stage and :func:`cosine_topk_arrow` are numpy
+matmuls over Arrow batches (``mapInPandas``).
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -76,7 +81,7 @@ def _topk_by_cosine(
     (rounded cosine DESC, neighbor_id ASC — the cross-engine
     determinism tie-break every oracle twin mirrors), keep ``rk <= k``.
     ONE implementation so a tie-break or rounding change can never
-    drift between the expression, banded, arrow, and quantized twins
+    drift between the brute-force, LSH, IVF, arrow and quantized paths
     (they share one oracle contract)."""
     from pyspark.sql import Window
 
@@ -125,156 +130,119 @@ def cosine_topk(
     return _topk_by_cosine(pairs, k)
 
 
-def hyperplanes(spark, num_planes: int, dim: int) -> DataFrame:
-    """Deterministic pseudo-random hyperplanes ``(p, d, w)``,
-    w ∈ [-0.5, 0.5), derived from md5 so any engine can regenerate them.
-    Tiny (num_planes × dim rows) — always broadcast.
-    """
-    return (
-        spark.range(num_planes * dim)
-        .select(
-            (F.col("id") / dim).cast("int").alias("p"),
-            (F.col("id") % dim).cast("int").alias("d"),
-        )
-        .select(
-            "p",
-            "d",
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat_ws(":", F.col("p").cast("string"), F.col("d").cast("string"))),
-                        1,
-                        8,
-                    ),
-                    16,
-                    10,
-                ).cast("double")
-                / F.lit(4294967296.0)
-                - 0.5
-            ).alias("w"),
-        )
+def plane_weights(num_planes: int, dim: int) -> np.ndarray:
+    """The ``(num_planes, dim)`` hyperplane weight matrix, computed on
+    the driver with no Spark job: ``w(p, d) = int(md5('p:d')[:8], 16) /
+    2^32 - 0.5`` ∈ [-0.5, 0.5) — the rule every oracle SQL's ``planes``
+    CTE spells. Each weight is an exact dyadic rational, so the matrix
+    equals DuckDB's bit for bit."""
+    return np.array(
+        [
+            [int(hashlib.md5(f"{p}:{d}".encode()).hexdigest()[:8], 16) / 2**32 - 0.5
+             for d in range(dim)]
+            for p in range(num_planes)
+        ],
+        dtype=np.float64,
     )
 
 
-def lsh_buckets(
+def lsh_bucket_keys(
     df: DataFrame,
-    planes: DataFrame,
+    weights: np.ndarray,
+    planes_per_band: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Sign-bit bucket key per vector: ``(id, bucket)``.
+    """Banded sign-bit bucket keys ``(id, band, bucket)``: one batch ×
+    planes matmul per Arrow batch, sign bits packed per band (band =
+    p div P, bit = p mod P). Zero shuffles.
 
-    Explodes the embedding to (id, d, value), broadcast-joins the plane
-    weights, aggregates projections per (id, p), then packs sign bits in
-    plane order into an integer bucket. Two corpus passes of narrow
-    rows; shuffle keys are (id, p) then id — uniform.
+    ``planes_per_band=None`` is one band of all planes — single-table
+    LSH. With P planes per band, two vectors are candidates if they
+    agree on *any* band: the AND-within-band / OR-across-bands S-curve
+    MinHash banding uses — more planes per band sharpen precision, more
+    bands recover recall.
+
+    Sign agreement with the oracle's index-ordered SQL sum rests on the
+    float64 argument the arrow cosine path also pins: md5-derived
+    weights put no projection within float noise of zero.
+
+    NULL vectors are skipped: they get no bucket rows, so they are
+    never a candidate (nor a query with candidates). The oracle SQL
+    would put a NULL vector in bucket 0 with a NULL cosine, ranked
+    last, so results can differ only for a query with fewer than k
+    non-NULL candidates.
     """
-    elems = df.select(
-        F.col(id_col).alias("id"), F.posexplode(as_double(vec_col)).alias("d", "v")
-    )
-    proj = (
-        elems.join(F.broadcast(planes), "d")
-        .groupBy("id", "p")
-        .agg(F.sum(F.col("v") * F.col("w")).alias("proj"))
-    )
-    return proj.groupBy("id").agg(
-        F.sum(
-            F.when(F.col("proj") > 0, F.expr("shiftleft(CAST(1 AS BIGINT), p)")).otherwise(0)
-        ).alias("bucket")
+    per_band = planes_per_band or len(weights)
+    if len(weights) % per_band:
+        raise ValueError(
+            f"{len(weights)} planes not divisible by planes_per_band="
+            f"{per_band}; pass a multiple"
+        )
+    n_bands = len(weights) // per_band
+    shifts = np.arange(per_band, dtype=np.int64)
+
+    def batches(it):
+        for pdf in it:
+            if pdf.empty:
+                continue
+            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            em = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            bits = (em @ weights.T > 0).reshape(len(ids), n_bands, per_band)
+            yield pd.DataFrame(
+                {
+                    "id": np.repeat(ids, n_bands),
+                    "band": np.tile(np.arange(n_bands, dtype=np.int32), len(ids)),
+                    "bucket": (bits << shifts).sum(axis=2).ravel(),
+                }
+            )
+
+    return (
+        df.select(id_col, vec_col)
+        .where(F.col(vec_col).isNotNull())
+        .mapInPandas(batches, schema="id long, band int, bucket long")
     )
 
 
 def lsh_ann_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    planes: DataFrame,
+    weights: np.ndarray,
     k: int = 5,
+    planes_per_band: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k: candidates = corpus vectors sharing the query's
-    LSH bucket; exact cosine verified on candidates only.
+    """Approximate top-k: candidates = corpus vectors sharing any band's
+    bucket with the query (:func:`lsh_bucket_keys`, one band unless
+    ``planes_per_band`` is set); exact cosine reranks candidates only.
 
-    Output schema matches :func:`cosine_topk`; recall < 1 by design —
-    the tradeoff that makes 100 TB ANN feasible (candidates per query
-    ≈ corpus / 2^P instead of corpus).
+    Output schema matches :func:`cosine_topk`; recall < 1 by design.
+    One flat table of P planes gives 2^P buckets, and the 1M-vector
+    sweep (docs/SCALE.md) measured its recall@5 stuck at the
+    bucket-collision geometry (~0.68 at 4 planes). Banding is the fix:
+    L tables of P planes each, recall ≈ 1-(1-s^P)^L, candidates
+    ~L·|corpus|/2^P per query.
 
-    Size contract: ``queries`` must fit in a broadcast relation (the
-    rerank leg already broadcasts the query *vectors*; the candidate
-    probe broadcasts the query *buckets* — a few dozen bytes per query,
-    so up to ~10M queries is comfortable under Spark's 8 GB broadcast
-    cap). An oversized query set fails the broadcast instead of
-    degrading to a sort-merge join; split it into slices and union the
-    top-k results if you have one.
+    Size contract: ``queries`` (×L band rows each) must fit in a
+    broadcast relation — a few dozen bytes per query, so up to ~10M
+    queries is comfortable under Spark's 8 GB broadcast cap. An
+    oversized query set fails the broadcast instead of degrading to a
+    sort-merge join; slice it and union the top-k results.
     """
-
-    qb = lsh_buckets(queries, planes, id_col, vec_col).withColumnRenamed("id", "query_id")
-    cb = lsh_buckets(corpus, planes, id_col, vec_col).withColumnRenamed("id", "neighbor_id")
-    # broadcast the QUERY bucket side (r13 optimization, guide §3.1):
-    # queries are small by this operator's contract (the `q` rerank
-    # below already broadcasts them), but the planner only sees
-    # post-aggregate estimates and picks a sort-merge join — shuffling
-    # and sorting the WHOLE corpus bucket relation. The hint turns the
-    # candidate probe into a map-side hash join: zero corpus-side
-    # exchange at any corpus size.
-    cand = F.broadcast(qb).join(cb, "bucket").select("query_id", "neighbor_id")
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("_q"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("_c"))
-    pairs = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("_q"), F.col("_c")), 6).alias("cosine"),
-        )
-    )
-    return _topk_by_cosine(pairs, k)
-
-
-def lsh_ann_topk_banded(
-    corpus: DataFrame,
-    queries: DataFrame,
-    planes: DataFrame,
-    planes_per_band: int,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Multi-table (band-OR) approximate top-k: candidates = corpus
-    vectors sharing ANY band's bucket with the query; exact cosine
-    reranks candidates.
-
-    The single-table variant (:func:`lsh_ann_topk`) trades recall for
-    bucket size with ONE knob — P planes give 2^P buckets, and the
-    1M-vector sweep (docs/SCALE.md) measured its recall@5 stuck at the
-    bucket-collision geometry (~0.68 at 4 planes) regardless of corpus
-    size. Banding is the standard fix (same AND/OR S-curve as MinHash
-    banding): L tables of P planes each — a sharp per-table bucket
-    (AND over P sign bits) for precision, an OR over L tables for
-    recall ≈ 1-(1-s^P)^L. Candidates stay bounded:
-    ~L·|corpus|/2^P per query. The bucket join shuffles on
-    (band, bucket) — bounded and uniform, the same scale shape as the
-    near-dup variant.
-
-    Size contract: same as :func:`lsh_ann_topk` — ``queries`` (×L band
-    rows each) must fit in a broadcast relation; an oversized query set
-    fails fast rather than degrading, so slice and union if needed.
-    """
-
-    qb = lsh_band_buckets(queries, planes, planes_per_band, id_col, vec_col)
-    cb = lsh_band_buckets(corpus, planes, planes_per_band, id_col, vec_col)
+    qb = lsh_bucket_keys(queries, weights, planes_per_band, id_col, vec_col)
+    cb = lsh_bucket_keys(corpus, weights, planes_per_band, id_col, vec_col)
+    # broadcast the QUERY bucket side: the planner only
+    # sees post-stage estimates and would pick a sort-merge join —
+    # shuffling and sorting the WHOLE corpus bucket relation. The hint
+    # makes the probe a map-side hash join: zero corpus-side exchange.
     cand = (
-        # query side broadcast: same §3.1 rationale as lsh_ann_topk —
-        # the corpus bucket relation is never shuffled for the probe
-        F.broadcast(qb.select(F.col("id").alias("query_id"), "band", "bucket"))
-        .join(
-            cb.select(F.col("id").alias("neighbor_id"), "band", "bucket"),
-            ["band", "bucket"],
-        )
+        F.broadcast(qb.withColumnRenamed("id", "query_id"))
+        .join(cb.withColumnRenamed("id", "neighbor_id"), ["band", "bucket"])
         .select("query_id", "neighbor_id")
-        .distinct()
     )
+    if planes_per_band:
+        cand = cand.distinct()  # a pair may share several bands
     q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("_q"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("_c"))
     pairs = (
@@ -307,26 +275,12 @@ def cosine_topk_arrow(
     scale scans. Per-batch top-k keeps the Python→JVM traffic at
     |batches|·|queries|·k rows regardless of corpus size.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     q_rows = queries.select(id_col, vec_col).collect()
     if not q_rows:
         # empty query set: the expression twin returns an empty frame;
         # np.linalg.norm on a 0-d matrix would AxisError at plan build
-        from pyspark.sql import types as T
-
         return corpus.sparkSession.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("neighbor_id", T.LongType()),
-                    T.StructField("cosine", T.DoubleType()),
-                    T.StructField("rk", T.LongType()),
-                ]
-            ),
+            [], "query_id long, neighbor_id long, cosine double, rk long"
         )
     qids = np.array([r[0] for r in q_rows], dtype=np.int64)
     qm = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
@@ -334,14 +288,6 @@ def cosine_topk_arrow(
         # zero-norm queries yield NaN cosines, filtered to NULL below —
         # matching the expression twin's NULL (null-divide) semantics
         qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("neighbor_id", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
 
     def batches(it):
         for pdf in it:
@@ -381,151 +327,18 @@ def cosine_topk_arrow(
                 }
             )
 
-    partial = corpus.select(id_col, vec_col).mapInPandas(batches, schema=out_schema)
+    partial = corpus.select(id_col, vec_col).mapInPandas(
+        batches, schema="query_id long, neighbor_id long, cosine double"
+    )
     rounded = partial.select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine")
     )
     return _topk_by_cosine(rounded, k)
 
 
-def lsh_band_buckets_arrow(
-    df: DataFrame,
-    planes: DataFrame,
-    planes_per_band: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow/numpy twin of :func:`lsh_band_buckets`: one batch×planes
-    matmul per Arrow batch, sign bits packed per band — same
-    ``(id, band, bucket)`` output, ~BLAS throughput, ZERO shuffles.
-
-    The expression form materializes |vectors|·dim·planes intermediate
-    rows through a broadcast join + two hash aggregations (codegen'd,
-    but volume-bound); a literal zip_with fold removes the volume but
-    Catalyst interprets higher-order functions per row (measured 2×
-    slower — docs/SCALE.md). The matmul does the same arithmetic in C.
-    Sign agreement with the oracle rests on the same float64 ≈
-    index-ordered-sum argument the arrow cosine path already pins
-    (``bench_ann_cosine_arrow`` hash-matches its oracle): md5-derived
-    weights put no projection within float-noise of zero.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    by_p: dict[int, dict[int, float]] = {}
-    for r in planes.collect():  # metadata-sized: planes × dims rows
-        by_p.setdefault(r.p, {})[r.d] = r.w
-    # Validate the collected grid before the comprehension: a filtered /
-    # sparse planes frame would otherwise KeyError deep inside it, and a
-    # non-multiple plane count would silently drop the remainder planes
-    # while the expression twin forms a partial band (ADVICE r4).
-    if sorted(by_p) != list(range(len(by_p))):
-        raise ValueError(
-            f"planes frame must carry contiguous plane ids 0..N-1; got {sorted(by_p)}"
-        )
-    dims = {len(ds) for ds in by_p.values()}
-    if len(dims) != 1:
-        raise ValueError(f"planes frame has non-uniform dim coverage: {dims}")
-    # dim ids must be the contiguous 0..D-1 the matmul columns align to
-    # — a uniformly shifted/holey grid would pass the count check but
-    # silently bucket against misaligned vector indices
-    d = dims.pop()
-    for p, ds in by_p.items():
-        if sorted(ds) != list(range(d)):
-            raise ValueError(
-                f"plane {p} dim ids are not contiguous 0..{d - 1}; the "
-                "matmul would misalign weights to vector indices"
-            )
-    if len(by_p) % planes_per_band != 0:
-        raise ValueError(
-            f"{len(by_p)} planes not divisible by planes_per_band="
-            f"{planes_per_band} — the expression twin would form a partial "
-            "extra band; pass a multiple"
-        )
-    wm = np.array(
-        [[by_p[p][d] for d in sorted(by_p[p])] for p in sorted(by_p)],
-        dtype=np.float64,
-    )  # (L·P, dim)
-    n_bands = wm.shape[0] // planes_per_band
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("band", T.IntegerType()),
-            T.StructField("bucket", T.LongType()),
-        ]
-    )
-
-    def batches(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            em = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            bits = (em @ wm.T) > 0  # |batch| × L·P
-            buckets = np.zeros((len(ids), n_bands), dtype=np.int64)
-            for band in range(n_bands):
-                for bp in range(planes_per_band):
-                    buckets[:, band] |= (
-                        bits[:, band * planes_per_band + bp].astype(np.int64) << bp
-                    )
-            yield pd.DataFrame(
-                {
-                    "id": np.repeat(ids, n_bands),
-                    "band": np.tile(np.arange(n_bands, dtype=np.int32), len(ids)),
-                    "bucket": buckets.ravel(),
-                }
-            )
-
-    return df.select(F.col(id_col).alias(id_col), vec_col).mapInPandas(
-        batches, schema=out_schema
-    )
-
-
-def lsh_ann_topk_banded_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    planes: DataFrame,
-    planes_per_band: int,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """:func:`lsh_ann_topk_banded` with the bucket stage on the Arrow
-    matmul path — the production-throughput variant; the candidate join
-    and exact-cosine rerank are identical, so the output contract (and
-    oracle) is the same."""
-
-    qb = lsh_band_buckets_arrow(queries, planes, planes_per_band, id_col, vec_col)
-    cb = lsh_band_buckets_arrow(corpus, planes, planes_per_band, id_col, vec_col)
-    cand = (
-        # query side broadcast: same §3.1 rationale as lsh_ann_topk
-        F.broadcast(qb.select(F.col("id").alias("query_id"), "band", "bucket"))
-        .join(
-            cb.select(F.col("id").alias("neighbor_id"), "band", "bucket"),
-            ["band", "bucket"],
-        )
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(vec_col).alias("_q"))
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("_c"))
-    pairs = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("_q"), F.col("_c")), 6).alias("cosine"),
-        )
-    )
-    return _topk_by_cosine(pairs, k)
-
-
 def recommended_banding(n_corpus: int) -> tuple[int, int]:
     """Measured-default ``(n_bands, planes_per_band)`` for the banded
-    ANN paths, encoding the docs/SCALE.md sweep rule as code instead of
+    ANN path, encoding the docs/SCALE.md sweep rule as code instead of
     prose (round-4 verdict item 3).
 
     The 1M-vector sweep measured: 4 bands × 4 planes 22.4 s @ recall
@@ -560,29 +373,27 @@ def ann_topk(
     n_corpus: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """Production ANN entry point: auto-selected banding + the Arrow
-    matmul bucket stage (the measured-fastest variant at every swept
-    scale — docs/SCALE.md ANN table).
+    """Production ANN entry point: :func:`lsh_ann_topk` with the banding
+    :func:`recommended_banding` picks for the corpus size.
 
     ``n_corpus``/``dim`` are taken from the data when not given: one
     columnar count (cheap — no row materialization) and one ``first()``
-    row for the vector width. Pass them explicitly in a hot loop or
-    when the corpus is an expensive subquery.
+    non-NULL vector for the width. Pass them explicitly in a hot loop
+    or when the corpus is an expensive subquery.
     """
     if n_corpus is None:
         n_corpus = corpus.count()
     if n_corpus == 0:
         raise ValueError("ann_topk: empty corpus — nothing to index")
     if dim is None:
-        head = corpus.select(vec_col).first()
-        if head is None or head[0] is None:
+        head = corpus.select(vec_col).where(F.col(vec_col).isNotNull()).first()
+        if head is None:
             raise ValueError("ann_topk: empty corpus — nothing to index")
         dim = len(head[0])
     bands, per_band = recommended_banding(n_corpus)
-    planes = hyperplanes(corpus.sparkSession, bands * per_band, dim)
-    return lsh_ann_topk_banded_arrow(
-        corpus, queries, planes, planes_per_band=per_band,
-        k=k, id_col=id_col, vec_col=vec_col,
+    return lsh_ann_topk(
+        corpus, queries, plane_weights(bands * per_band, dim), k, per_band,
+        id_col, vec_col,
     )
 
 
@@ -595,8 +406,8 @@ def cosine_neardup_pairs(
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine ≥ t).
 
     Brute-force all-pairs — correct at validation scale; at corpus scale
-    swap the pair generator for :func:`lsh_buckets` co-bucket candidates
-    (same verification tail).
+    use :func:`cosine_neardup_pairs_lsh` (co-bucket candidates, same
+    verification tail).
     """
     a = df.select(F.col(id_col).alias("id_a"), as_double(vec_col).alias("_a"))
     b = df.select(F.col(id_col).alias("id_b"), as_double(vec_col).alias("_b"))
@@ -612,51 +423,9 @@ def cosine_neardup_pairs(
     )
 
 
-def lsh_band_buckets(
-    df: DataFrame,
-    planes: DataFrame,
-    planes_per_band: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Banded sign-bit bucket keys: ``(id, band, bucket)``.
-
-    Splits the plane set into independent bands of ``planes_per_band``
-    consecutive planes (band = p div P, bit = p mod P) and packs one
-    bucket per band. Two vectors are LSH candidates if they agree on
-    *any* band — the AND-within-band / OR-across-bands S-curve that
-    MinHash banding uses: more planes per band sharpens precision,
-    more bands recovers recall.
-    """
-    elems = df.select(
-        F.col(id_col).alias("id"), F.posexplode(as_double(vec_col)).alias("d", "v")
-    )
-    proj = (
-        elems.join(F.broadcast(planes), "d")
-        .groupBy("id", "p")
-        .agg(F.sum(F.col("v") * F.col("w")).alias("proj"))
-    )
-    return (
-        proj.select(
-            "id",
-            (F.col("p") / planes_per_band).cast("int").alias("band"),
-            (F.col("p") % planes_per_band).alias("bp"),
-            "proj",
-        )
-        .groupBy("id", "band")
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("proj") > 0, F.expr("shiftleft(CAST(1 AS BIGINT), bp)")
-                ).otherwise(0)
-            ).alias("bucket")
-        )
-    )
-
-
 def cosine_neardup_pairs_lsh(
     df: DataFrame,
-    planes: DataFrame,
+    weights: np.ndarray,
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -664,59 +433,38 @@ def cosine_neardup_pairs_lsh(
 ) -> DataFrame:
     """LSH-bucketed embedding near-dup pairs — the corpus-scale path.
 
-    Candidates are co-bucketed vector pairs (equi-join on the
-    hyperplane bucket key, ``id_a < id_b``); exact cosine is verified
-    on candidates only. Replaces :func:`cosine_neardup_pairs`'s O(n²)
-    crossJoin with a bounded bucket-key shuffle — per-bucket candidate
-    counts are ~(n/2^P)², the same candidate-then-verify shape as
-    ``minhash_lsh_pairs`` for text.
+    Candidates are co-bucketed vector pairs (equi-join on
+    :func:`lsh_bucket_keys`' ``(band, bucket)``, ``id_a < id_b``);
+    exact cosine is verified on candidates only. Replaces
+    :func:`cosine_neardup_pairs`'s O(n²) crossJoin with a bounded
+    bucket-key shuffle — per-bucket candidate counts are ~(n/2^P)², the
+    same candidate-then-verify shape as ``minhash_lsh_pairs`` for text.
 
-    With ``planes_per_band`` set, the planes split into independent
-    bands (AND within a band, OR across bands): a pair is a candidate
-    if any band's buckets agree. 8 planes per band × 4 bands gives
-    ~((n/256)² × 4) candidates with near-1 recall at cosine ≥ 0.99 and
-    the sharp S-curve dedup wants; a single flat bucket (default) is
-    the plain one-band special case.
+    With ``planes_per_band`` set, a pair is a candidate if any band's
+    buckets agree: 8 planes per band × 4 bands gives ~((n/256)² × 4)
+    candidates with near-1 recall at cosine ≥ 0.99 and the sharp
+    S-curve dedup wants; the default is one flat band.
     """
     # the bucket relation feeds BOTH sides of the candidate self-join.
-    # Locally Spark's ReuseExchange dedupes the identical groupBy
-    # subtree (persisting A/B-measured neutral at sf0.1), but exchange
-    # reuse is a planner artifact, not a contract — the same shape in
-    # minhash_lsh_pairs measurably recomputed 9×. Persist pins the
-    # single-compute guarantee; b is |vectors|·|bands| rows of three
-    # longs, MEMORY_AND_DISK.
-    if planes_per_band is not None:
-        # Arrow matmul bucket stage (r14, guide §4.2): the expression
-        # form materializes |vectors|·dim·planes intermediate rows
-        # through a broadcast join + two hash-aggregate exchanges; the
-        # matmul twin does the same float64 arithmetic in one numpy
-        # batch per partition with ZERO shuffles. Same production path
-        # ann_auto_topk uses; sign agreement with the expression form /
-        # oracle is the pinned property (bench_ann_* hash-match their
-        # shared oracle SQL), re-verified here by this query's own
-        # oracle row. Balanced A/B at sf0.1: med 2.35 s → 1.86 s
-        # end-to-end on dedup_embedding_cosine, identical output.
-        b = persist_tracked(
-            lsh_band_buckets_arrow(df, planes, planes_per_band, id_col, vec_col)
+    # Locally Spark's ReuseExchange dedupes the identical subtree, but
+    # exchange reuse is a planner artifact, not a contract — the same
+    # shape in minhash_lsh_pairs measurably recomputed 9×. Persist pins
+    # the single-compute guarantee; b is |vectors|·|bands| rows of
+    # three numbers, MEMORY_AND_DISK.
+    b = persist_tracked(
+        lsh_bucket_keys(df, weights, planes_per_band, id_col, vec_col)
+    )
+    cand = (
+        b.select(F.col("id").alias("id_a"), "band", "bucket")
+        .join(
+            b.select(F.col("id").alias("id_b"), "band", "bucket"),
+            ["band", "bucket"],
         )
-        cand = (
-            b.select(F.col("id").alias("id_a"), "band", "bucket")
-            .join(
-                b.select(F.col("id").alias("id_b"), "band", "bucket"),
-                ["band", "bucket"],
-            )
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-    else:
-        b = persist_tracked(lsh_buckets(df, planes, id_col, vec_col))
-        cand = (
-            b.select(F.col("id").alias("id_a"), "bucket")
-            .join(b.select(F.col("id").alias("id_b"), "bucket"), "bucket")
-            .where(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-        )
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+    )
+    if planes_per_band:
+        cand = cand.distinct()  # a pair may share several bands
     va = df.select(F.col(id_col).alias("id_a"), as_double(vec_col).alias("_a"))
     vb = df.select(F.col(id_col).alias("id_b"), as_double(vec_col).alias("_b"))
     return (

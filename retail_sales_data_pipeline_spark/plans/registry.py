@@ -80,7 +80,10 @@ _MODULES = [
 # set_bloom_columns + BOTH delete_keys regimes (literal lang key;
 # keys-FRAME scattered purge — literal at sf0.01's 500 docs, bulk
 # band + key-batch bloom probe at sf0.1's 5000) under the unchanged
-# oracle algebra.
+# oracle algebra. The one-LSH-kernel change deleted the retired
+# banded-LSH Arrow twin outright: every LSH query now runs the same
+# Arrow bucket stage, so that twin's query was ``ann_lsh_banded_topk``
+# verbatim. Registered count stays 100; six retired twins remain.
 # When adding a query, re-run ``python tools/rotate_registry.py`` and
 # keep the registered count <= 2x the window minus the slack you want.
 # Round 14 rotates onto 47 r12-stale queries plus the force-seated

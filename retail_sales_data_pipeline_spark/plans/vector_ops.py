@@ -64,11 +64,10 @@ SELECT query_id, neighbor_id, cosine, rk FROM ranked WHERE rk <= 5
 # ---------------------------------------------------------------------------
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    planes = S.hyperplanes(spark, NUM_PLANES, DIM)
     return S.lsh_ann_topk(
         corpus=emb.where(F.col("vec_id") >= 10),
         queries=emb.where(F.col("vec_id") < 10),
-        planes=planes,
+        weights=S.plane_weights(NUM_PLANES, DIM),
         k=5,
     )
 
@@ -127,11 +126,10 @@ ANN_PLANES_PER_BAND = 4
 
 def ann_lsh_banded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
-    planes = S.hyperplanes(spark, ANN_BANDS * ANN_PLANES_PER_BAND, DIM)
-    return S.lsh_ann_topk_banded(
+    return S.lsh_ann_topk(
         corpus=emb.where(F.col("vec_id") >= 10),
         queries=emb.where(F.col("vec_id") < 10),
-        planes=planes,
+        weights=S.plane_weights(ANN_BANDS * ANN_PLANES_PER_BAND, DIM),
         planes_per_band=ANN_PLANES_PER_BAND,
         k=5,
     )
@@ -183,29 +181,10 @@ SELECT query_id, neighbor_id, cosine, rk FROM ranked WHERE rk <= 5
 
 
 # ---------------------------------------------------------------------------
-# Q: bench_ann_banded_arrow — the banded ANN with its bucket stage on
-# the Arrow matmul path (production throughput; bench_ prefix auto-
-# enrolls it in bench.py). Shares _LSH_BANDED_SQL: the candidate join
-# and rerank are identical, so matching the oracle hash VERIFIES the
-# matmul bucket signs agree with the expression form end-to-end.
-# ---------------------------------------------------------------------------
-def bench_ann_banded_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    planes = S.hyperplanes(spark, ANN_BANDS * ANN_PLANES_PER_BAND, DIM)
-    return S.lsh_ann_topk_banded_arrow(
-        corpus=emb.where(F.col("vec_id") >= 10),
-        queries=emb.where(F.col("vec_id") < 10),
-        planes=planes,
-        planes_per_band=ANN_PLANES_PER_BAND,
-        k=5,
-    )
-
-
-# ---------------------------------------------------------------------------
 # Q: ann_auto_topk — the production entry point: S.ann_topk auto-selects
 # banding from |corpus| via S.recommended_banding (the r4-verdict rule
-# "sharpen P with log n", encoded as code) and runs the Arrow bucket
-# stage. At fixture scale (≤ 2k vectors) the rule lands on 4×4, so the
+# "sharpen P with log n", encoded as code) and runs S.lsh_ann_topk
+# with it. At fixture scale (≤ 2k vectors) the rule lands on 4×4, so the
 # oracle is the SAME _LSH_BANDED_SQL — the hash match verifies the
 # whole auto path (size estimate → banding pick → matmul buckets →
 # rerank) end-to-end; at 1M vectors the same call selects the
@@ -273,9 +252,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-1 recall for true near-dups (cosine ≈ 1 rarely straddles all
     # bands) — the AND/OR S-curve MinHash banding uses.
     corpus = _neardup_corpus(spark, sf_dir)
-    planes = S.hyperplanes(spark, NEARDUP_BANDS * NEARDUP_PLANES_PER_BAND, DIM)
+    weights = S.plane_weights(NEARDUP_BANDS * NEARDUP_PLANES_PER_BAND, DIM)
     return S.cosine_neardup_pairs_lsh(
-        corpus, planes, threshold=0.9, planes_per_band=NEARDUP_PLANES_PER_BAND
+        corpus, weights, threshold=0.9, planes_per_band=NEARDUP_PLANES_PER_BAND
     )
 
 
@@ -331,8 +310,6 @@ WHERE round(list_dot_product(a.e, b.e)
 # the cell id, bounded and uniform, which is the IVF scale story.
 # ---------------------------------------------------------------------------
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = load_table(spark, sf_dir, "embeddings", ["vec_id", "embedding", "label"])
     q = emb.where(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
@@ -349,14 +326,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         F.round(S.cosine(F.col("_q"), F.col("_c")), 6).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 5)
-        .select("query_id", "neighbor_id", "cosine", F.col("rk").cast("long"))
-    )
+    return S._topk_by_cosine(pairs, 5)
 
 
 _IVF_SQL = """
@@ -879,15 +849,15 @@ WHERE rk = 1 AND cosine >= {DECONTAM_COS}
 
 
 # Retired from the driver registry (round 6, registry-slack buyback):
-# the Arrow-kernel twins compute the SAME answer as their expression
-# twins (they shared one oracle SQL verbatim), so a registry slot each
-# was redundant hard signal. Their result equivalence to the registered
+# each twin computes the SAME answer as its registered twin (they
+# shared one oracle SQL verbatim), so a registry slot each was
+# redundant hard signal. Their result equivalence to the registered
 # twin is pinned by tests/test_twin_equivalence.py and their plan
-# shapes stay pinned in tests/test_plans.py; they remain first-class
-# operators (bench_ann_* are the measured production-throughput
-# variants — tools/ann_headroom.py).
+# shapes stay pinned in tests/test_plans.py. bench_ann_cosine_arrow is
+# the Arrow matmul variant of the brute-force scan (the exact-recall
+# baseline in tools/ann_headroom.py); the LSH family has one kernel
+# and no twin.
 TWIN_QUERIES = {
-    "bench_ann_banded_arrow": (bench_ann_banded_arrow, "ann_lsh_banded_topk"),
     "bench_ann_cosine_arrow": (bench_ann_cosine_arrow, "ann_cosine_topk"),
     # retired round 9 (slack for the r10 rotation): at the oracle's
     # corpus size the auto-selector always picks the banded config, so

@@ -41,7 +41,6 @@ NO_CARTESIAN = [
     "dedup_fuzzy_keys",
     "ann_lsh_topk",
     "ann_lsh_banded_topk",
-    "bench_ann_banded_arrow",
     "ann_ivf_topk",
     "corpus_decontaminate",
     "corpus_boilerplate_ngrams",

@@ -3,11 +3,18 @@
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from retail_sales_data_pipeline_spark.operators import similarity as S
+
+
+@pytest.fixture(scope="module")
+def sf_oracle(sf_dir):
+    """The sf0.01 fixture (beside the default one) the oracle checks use."""
+    return os.path.join(os.path.dirname(sf_dir), "sf0.01")
 
 
 @pytest.fixture(scope="module")
@@ -47,24 +54,45 @@ def test_topk_limits_rows(spark, vecs):
 
 
 def test_lsh_subset_of_exact(spark, vecs):
-    planes = S.hyperplanes(spark, 2, 4)
+    weights = S.plane_weights(2, 4)
     queries = vecs.where(F.col("vec_id") == 0)
     corpus = vecs.where(F.col("vec_id") > 0)
     exact = {(r.query_id, r.neighbor_id) for r in
              S.cosine_topk(corpus, queries, k=4).collect()}
     approx = {(r.query_id, r.neighbor_id) for r in
-              S.lsh_ann_topk(corpus, queries, planes, k=4).collect()}
+              S.lsh_ann_topk(corpus, queries, weights, k=4).collect()}
     assert approx <= exact
     # the same-direction vector projects identically -> always co-bucketed
     assert (0, 4) in approx
 
 
-def test_hyperplanes_deterministic(spark):
-    a = {(r.p, r.d): r.w for r in S.hyperplanes(spark, 2, 3).collect()}
-    b = {(r.p, r.d): r.w for r in S.hyperplanes(spark, 2, 3).collect()}
-    assert a == b
-    assert all(-0.5 <= w < 0.5 for w in a.values())
-    assert len(set(a.values())) == 6  # md5 spread: no accidental repeats
+def _oracle_prefix(sql: str, next_cte: str) -> str:
+    """The oracle SQL's CTEs up to (not including) ``next_cte``."""
+    return sql[: sql.index(f"), {next_cte} AS (")]
+
+
+def test_plane_weights_match_oracle_planes():
+    """The driver-side weights are the DuckDB oracle's ``planes`` CTE
+    bit for bit (16 planes x 64 dims), lie in [-0.5, 0.5) and are
+    deterministic."""
+    import duckdb
+    import numpy as np
+
+    from retail_sales_data_pipeline_spark.plans.vector_ops import (
+        _LSH_BANDED_SQL,
+    )
+
+    sql = _oracle_prefix(_LSH_BANDED_SQL, "vecs") + ") SELECT p, d, w FROM planes"
+    want = np.zeros((16, 64))
+    for p, d, w in duckdb.sql(sql).fetchall():
+        want[p, d] = w
+    got = S.plane_weights(16, 64)
+    assert got.shape == (16, 64)
+    assert got.tobytes() == want.tobytes()
+    assert ((got >= -0.5) & (got < 0.5)).all()
+    assert S.plane_weights(16, 64).tobytes() == got.tobytes()
+    small = S.plane_weights(2, 3)
+    assert len(set(small.ravel())) == 6  # md5 spread: no accidental repeats
 
 
 def test_arrow_topk_equals_expression(spark, vecs):
@@ -86,27 +114,27 @@ def test_neardup_pairs(spark, vecs):
 def test_neardup_lsh_subset_and_recall(spark, vecs):
     """LSH co-bucket near-dup pairs are a subset of brute force, and the
     always-co-bucketed pair (identical direction) is never missed."""
-    planes = S.hyperplanes(spark, 2, 4)
+    weights = S.plane_weights(2, 4)
     brute = {(r.id_a, r.id_b) for r in
              S.cosine_neardup_pairs(vecs, threshold=0.95).collect()}
     lsh = {(r.id_a, r.id_b) for r in
-           S.cosine_neardup_pairs_lsh(vecs, planes, threshold=0.95).collect()}
+           S.cosine_neardup_pairs_lsh(vecs, weights, threshold=0.95).collect()}
     assert lsh <= brute
     assert (0, 4) in lsh  # same direction -> identical projections
 
 
 def test_neardup_lsh_values_match_brute(spark, vecs):
     """Where a pair survives bucketing, its cosine equals brute force."""
-    planes = S.hyperplanes(spark, 2, 4)
+    weights = S.plane_weights(2, 4)
     brute = {(r.id_a, r.id_b): r.cosine for r in
              S.cosine_neardup_pairs(vecs, threshold=0.95).collect()}
-    for r in S.cosine_neardup_pairs_lsh(vecs, planes, threshold=0.95).collect():
+    for r in S.cosine_neardup_pairs_lsh(vecs, weights, threshold=0.95).collect():
         assert brute[(r.id_a, r.id_b)] == r.cosine
 
 
 def test_neardup_lsh_plan_has_no_cartesian(spark, vecs):
-    planes = S.hyperplanes(spark, 2, 4)
-    plan = S.cosine_neardup_pairs_lsh(vecs, planes, threshold=0.9)._jdf.queryExecution().executedPlan().toString()
+    weights = S.plane_weights(2, 4)
+    plan = S.cosine_neardup_pairs_lsh(vecs, weights, threshold=0.9)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -122,13 +150,13 @@ def test_neardup_banded_recall_beats_flat(spark):
     # planted near-dups: tiny perturbation of each 3rd vector
     rows += [(100 + i, [x + 0.01 for x in base[i]]) for i in range(0, 30, 3)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    planes = S.hyperplanes(spark, 16, 16)
+    weights = S.plane_weights(16, 16)
     brute = {(r.id_a, r.id_b) for r in
              S.cosine_neardup_pairs(df, threshold=0.99).collect()}
     flat = {(r.id_a, r.id_b) for r in
-            S.cosine_neardup_pairs_lsh(df, planes, threshold=0.99).collect()}
+            S.cosine_neardup_pairs_lsh(df, weights, threshold=0.99).collect()}
     banded = {(r.id_a, r.id_b) for r in
-              S.cosine_neardup_pairs_lsh(df, planes, threshold=0.99,
+              S.cosine_neardup_pairs_lsh(df, weights, threshold=0.99,
                                          planes_per_band=4).collect()}
     assert banded <= brute and flat <= brute
     assert len(banded) >= len(flat)  # OR-across-bands only adds recall
@@ -209,10 +237,10 @@ def test_banded_ann_recall_beats_single_table(spark, sf_dir):
         ) / len(exact)
 
     flat = S.lsh_ann_topk(
-        corpus, queries, S.hyperplanes(spark, 4, 64), k=5
+        corpus, queries, S.plane_weights(4, 64), k=5
     )
-    banded = S.lsh_ann_topk_banded(
-        corpus, queries, S.hyperplanes(spark, 16, 64), planes_per_band=4, k=5
+    banded = S.lsh_ann_topk(
+        corpus, queries, S.plane_weights(16, 64), planes_per_band=4, k=5
     )
     r_flat, r_banded = recall(flat), recall(banded)
     assert r_banded >= r_flat
@@ -223,37 +251,73 @@ def test_banded_ann_recall_beats_single_table(spark, sf_dir):
 
 
 def test_arrow_band_buckets_validate_grid(spark, vecs):
-    """The Arrow bucket stage validates the collected planes grid up
-    front (ADVICE r4): non-multiple plane counts and sparse/filtered
-    grids raise clear errors instead of silently dropping planes or
-    KeyError-ing inside the matmul comprehension."""
-    planes = S.hyperplanes(spark, 6, 4)
+    """A plane count that does not divide into bands of
+    ``planes_per_band`` raises up front instead of silently dropping
+    the remainder planes."""
     with pytest.raises(ValueError, match="not divisible"):
-        S.lsh_band_buckets_arrow(vecs, planes, planes_per_band=4).collect()
-    holey = planes.where(F.col("p") != 1)  # non-contiguous plane ids
-    with pytest.raises(ValueError, match="contiguous"):
-        S.lsh_band_buckets_arrow(vecs, holey, planes_per_band=2).collect()
-    sparse = planes.where((F.col("p") != 1) | (F.col("d") == 0))
-    with pytest.raises(ValueError, match="dim coverage"):
-        S.lsh_band_buckets_arrow(vecs, sparse, planes_per_band=2).collect()
-    # uniformly shifted dims (same count per plane, ids 1..D) would
-    # misalign matmul columns against vector indices — must also raise
-    shifted = S.hyperplanes(spark, 6, 5).where(F.col("d") != 0)
-    with pytest.raises(ValueError, match="misalign|contiguous 0"):
-        S.lsh_band_buckets_arrow(vecs, shifted, planes_per_band=2).collect()
+        S.lsh_bucket_keys(vecs, S.plane_weights(6, 4), planes_per_band=4)
 
 
-def test_arrow_band_buckets_match_expression_twin(spark, vecs):
-    """Arrow matmul bucket stage produces exactly the expression twin's
-    (id, band, bucket) rows for a multiple-of-planes_per_band config."""
-    planes = S.hyperplanes(spark, 8, 4)
-    expr_rows = sorted(
-        map(tuple, S.lsh_band_buckets(vecs, planes, 4).collect())
+@pytest.mark.parametrize(
+    "sql_name,planes_per_band", [("_LSH_SQL", None), ("_LSH_BANDED_SQL", 4)]
+)
+def test_bucket_keys_match_oracle_buckets(spark, sf_oracle, sql_name, planes_per_band):
+    """The bucket stage's ``(id, band, bucket)`` rows equal the oracle
+    SQL's ``buckets`` CTE on the sf0.01 embeddings — one band of 4
+    planes (ann_lsh_topk) and 4 bands x 4 planes (ann_lsh_banded_topk)."""
+    import duckdb
+
+    from retail_sales_data_pipeline_spark.plans import vector_ops as V
+
+    sql = getattr(V, sql_name)
+    n_planes = V.NUM_PLANES if planes_per_band is None else 16
+    band = "0" if planes_per_band is None else "band"
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{sf_oracle}/embeddings.parquet')"
     )
-    arrow_rows = sorted(
-        map(tuple, S.lsh_band_buckets_arrow(vecs, planes, 4).collect())
+    want = sorted(
+        con.sql(
+            _oracle_prefix(sql, "cand")
+            + f") SELECT vec_id, {band}, bucket FROM buckets"
+        ).fetchall()
     )
-    assert expr_rows == arrow_rows
+    con.close()
+    emb = spark.read.parquet(f"{sf_oracle}/embeddings.parquet")
+    got = sorted(
+        map(
+            tuple,
+            S.lsh_bucket_keys(
+                emb, S.plane_weights(n_planes, V.DIM), planes_per_band
+            ).collect(),
+        )
+    )
+    assert len(got) == len(want) > 0
+    assert got == want
+
+
+def test_null_embedding_is_never_a_candidate(spark, vecs):
+    """A NULL vector gets no bucket rows, so every LSH path skips it
+    instead of failing on a ragged numpy batch."""
+    null_row = spark.createDataFrame(
+        [(9, None)], "vec_id long, embedding array<float>"
+    )
+    corpus = vecs.where(F.col("vec_id") > 0).unionByName(null_row)
+    queries = vecs.where(F.col("vec_id") == 0)
+    keys = S.lsh_bucket_keys(corpus, S.plane_weights(4, 4), 2).collect()
+    assert {r.id for r in keys} == {1, 2, 3, 4}
+    banded = S.lsh_ann_topk(
+        corpus, queries, S.plane_weights(4, 4), k=5, planes_per_band=2
+    ).collect()
+    auto = S.ann_topk(corpus, queries, k=5).collect()
+    pairs = S.cosine_neardup_pairs_lsh(
+        corpus.unionByName(queries), S.plane_weights(4, 4), threshold=0.5,
+        planes_per_band=2,
+    ).collect()
+    assert (0, 4) in {(r.query_id, r.neighbor_id) for r in banded}
+    assert 9 not in {r.neighbor_id for r in banded + auto}
+    assert (0, 4) in {(r.id_a, r.id_b) for r in pairs}
+    assert all(9 not in (r.id_a, r.id_b) for r in pairs)
 
 
 def test_recommended_banding_rule():
@@ -280,8 +344,8 @@ def test_ann_topk_auto_matches_explicit_banded(spark, sf_dir):
     explicit = sorted(
         map(
             tuple,
-            S.lsh_ann_topk_banded_arrow(
-                corpus, queries, S.hyperplanes(spark, 16, 64),
+            S.lsh_ann_topk(
+                corpus, queries, S.plane_weights(16, 64),
                 planes_per_band=4, k=5,
             ).collect(),
         )
@@ -289,26 +353,32 @@ def test_ann_topk_auto_matches_explicit_banded(spark, sf_dir):
     assert auto == explicit
 
 
-def test_ann_auto_topk_builds_without_actions(spark, sf_dir, monkeypatch):
-    """r6 pin (r5 verdict wrong #2): constructing the ann_auto_topk
-    query must launch ZERO Spark actions — the corpus size comes from
-    parquet footer metadata, not a per-call count()/first(). Patching
-    the action methods to raise makes any regression loud."""
-    import pyspark.sql.dataframe as D
+@pytest.mark.parametrize(
+    "name",
+    ["ann_lsh_topk", "ann_lsh_banded_topk", "ann_auto_topk", "dedup_embedding_cosine"],
+)
+def test_query_build_launches_no_jobs(spark, sf_dir, name):
+    """Constructing an LSH query launches ZERO Spark jobs: the plane
+    weights are computed on the driver and ann_auto_topk's corpus size
+    comes from parquet footer metadata. Jobs are counted under a job
+    group through the status tracker, so every action path counts."""
+    from retail_sales_data_pipeline_spark.plans.vector_ops import QUERIES, TWIN_QUERIES
+    from retail_sales_data_pipeline_spark.sources.tables import dataset_schema
 
-    from retail_sales_data_pipeline_spark.plans.vector_ops import (
-        ann_auto_topk,
-    )
-
-    def boom(self, *a, **k):
-        raise AssertionError("Spark action during query construction")
-
-    monkeypatch.setattr(D.DataFrame, "count", boom)
-    monkeypatch.setattr(D.DataFrame, "first", boom)
-    monkeypatch.setattr(D.DataFrame, "collect", boom)
-    df = ann_auto_topk(spark, sf_dir)  # must not raise
-    monkeypatch.undo()
-    assert df.count() == 50  # 10 queries x top-5
+    fn = QUERIES[name] if name in QUERIES else TWIN_QUERIES[name][0]
+    # the table's schema is inferred (one job) on its first read in a
+    # process and cached after; warm it so test order cannot matter
+    dataset_schema(spark, f"{sf_dir}/embeddings.parquet")
+    sc = spark.sparkContext
+    group = f"build-{name}"
+    sc.setJobGroup(group, "query construction")
+    try:
+        df = fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    n = df.count()
+    assert n == 50 if name == "ann_auto_topk" else n > 0  # 10 queries x top-5
 
 
 def test_parquet_row_count_matches_spark(spark, sf_dir):

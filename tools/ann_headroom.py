@@ -8,7 +8,8 @@ are generated JVM-side, and at each corpus size we time
 - ``cosine_topk_arrow`` — the exact brute-force path (Arrow-batched
   matmul, per-batch top-k), which is also the recall ground truth;
 - ``lsh_ann_topk`` — hyperplane-bucketed candidates + exact rerank,
-  the sublinear scale path, at 4 and 8 planes;
+  the sublinear scale path, in four configurations of the one kernel:
+  flat 4 and 8 planes, and 4x4 and 8x8 bands;
 
 and report LSH recall@k against the exact result — speed bought with
 recall is not a win, so both numbers print together.
@@ -31,23 +32,23 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Window  # noqa: E402
-
 from retail_sales_data_pipeline_spark.operators.similarity import (  # noqa: E402
+    _topk_by_cosine,
     ann_topk,
     as_double,
     cosine,
     cosine_topk_arrow,
-    hyperplanes,
     lsh_ann_topk,
-    lsh_ann_topk_banded,
-    lsh_ann_topk_banded_arrow,
+    plane_weights,
     recommended_banding,
 )
 from retail_sales_data_pipeline_spark.session import get_spark  # noqa: E402
 
 DIM = 64
 
+# (label, planes, planes_per_band) — flat single-table LSH is one band
+# of all planes; the banded rows OR L tables of P planes for recall
+LSH_CONFIGS = (("4p", 4, None), ("8p", 8, None), ("4x4", 16, 4), ("8x8", 64, 8))
 
 N_CENTERS = 64
 NOISE = 0.25
@@ -96,14 +97,7 @@ def ivf_topk(corpus, queries, k: int):
         "neighbor_id",
         F.round(cosine(F.col("_q"), F.col("_c")), 6).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rk")
-    )
+    return _topk_by_cosine(pairs, k)
 
 
 def _recall(approx, exact, k: int) -> float:
@@ -146,20 +140,16 @@ def main() -> None:
     wq = synthetic_embeddings(spark, 8, salt=999_983)
     wc = synthetic_embeddings(spark, 5000)
     cosine_topk_arrow(wc, wq, k=args.k).count()
-    lsh_ann_topk(wc, wq, hyperplanes(spark, 4, DIM), k=args.k).count()
+    lsh_ann_topk(wc, wq, plane_weights(4, DIM), k=args.k).count()
     ivf_topk(wc, wq, args.k).count()
 
     results = []
     # keep the header in lockstep with the per-size cells: --assert-auto
     # adds an auto-banding column pair BEFORE the ivf columns
     auto_cols = "| auto | recall auto " if args.assert_auto else ""
-    print(
-        "| corpus | brute (arrow) | lsh 4p | recall 4p | lsh 8p | recall 8p "
-        "| lsh 4x4 bands | recall 4x4 | arrow 8x8 | recall 8x8 "
-        + auto_cols
-        + "| ivf | recall ivf |"
-    )
-    print("|---" * (12 + (2 if args.assert_auto else 0)) + "|")
+    lsh_cols = "".join(f"| lsh {c} | recall {c} " for c, _, _ in LSH_CONFIGS)
+    print("| corpus | brute (arrow) " + lsh_cols + auto_cols + "| ivf | recall ivf |")
+    print("|---" * (4 + 2 * len(LSH_CONFIGS) + (2 if args.assert_auto else 0)) + "|")
     for n in sizes:
         corpus = synthetic_embeddings(spark, n).cache()
         corpus.count()
@@ -188,38 +178,17 @@ def main() -> None:
 
         row = {"n": n, "brute_s": t_brute}
         cells = [f"| {n} | {t_brute} s"]
-        for planes_n in (4, 8):
-            planes = hyperplanes(spark, planes_n, DIM)
+        for label, n_planes, per_band in LSH_CONFIGS:
+            weights = plane_weights(n_planes, DIM)
             t_lsh, approx = timed(
-                lambda: lsh_ann_topk(corpus, queries, planes, k=args.k)
+                lambda: lsh_ann_topk(
+                    corpus, queries, weights, k=args.k, planes_per_band=per_band
+                )
             )
             rec = _recall(approx, exact, args.k)
             approx.unpersist()
-            row[f"lsh{planes_n}_s"], row[f"recall{planes_n}"] = t_lsh, rec
+            row[f"lsh{label}_s"], row[f"recall{label}"] = t_lsh, rec
             cells.append(f"{t_lsh} s | {rec}")
-        # multi-table LSH: 4 bands x 4 planes (band-OR recall recovery)
-        bplanes = hyperplanes(spark, 16, DIM)
-        t_band, band = timed(
-            lambda: lsh_ann_topk_banded(
-                corpus, queries, bplanes, planes_per_band=4, k=args.k
-            )
-        )
-        rec_band = _recall(band, exact, args.k)
-        band.unpersist()
-        row["lsh_banded_s"], row["recall_banded"] = t_band, rec_band
-        cells.append(f"{t_band} s | {rec_band}")
-        # sharp 8x8 config with the Arrow matmul bucket stage — the
-        # production-throughput variant (bench_ann_banded_arrow)
-        aplanes = hyperplanes(spark, 64, DIM)
-        t_arrow, arrow = timed(
-            lambda: lsh_ann_topk_banded_arrow(
-                corpus, queries, aplanes, planes_per_band=8, k=args.k
-            )
-        )
-        rec_arrow = _recall(arrow, exact, args.k)
-        arrow.unpersist()
-        row["arrow8x8_s"], row["recall_arrow8x8"] = t_arrow, rec_arrow
-        cells.append(f"{t_arrow} s | {rec_arrow}")
         if args.assert_auto:
             bands, per_band = recommended_banding(n)
             t_auto, auto = timed(

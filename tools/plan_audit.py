@@ -82,7 +82,6 @@ NO_CARTESIAN = [
     "dedup_clusters_star",
     "ann_lsh_topk",
     "ann_lsh_banded_topk",
-    "bench_ann_banded_arrow",
     "ann_ivf_topk",
     "corpus_decontaminate",
     "corpus_boilerplate_ngrams",
