@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from . import bloom as _bloom
 from .sinks import _io as _sinks_io
 from .sinks import _live_state, _read_files, _read_version
+from .storage import spark_path
 
 _TOKEN = re.compile(
     r"""\s*(?:
@@ -535,9 +536,7 @@ def scan_table(
         path, shard_admits=_scan_admits(predicate)
     )
     if man is None:
-        from .sinks import _spark_path
-
-        df = spark.read.parquet(_spark_path(path))
+        df = spark.read.parquet(spark_path(path))
     else:
         all_entries = entries  # pre-prune list: schema source below
         if predicate and _prunable(man):

@@ -16,6 +16,12 @@ appends are cheap and conflict-free from many writers, and the snapshot
 is one window query over a tiny metadata table — at 100 TB of fact data
 the ledger still holds one row per *file*, i.e. millions at most.
 
+The ledger is addressed like every other path of the job: its parquet
+is read and written at ``storage.spark_path(path)``, so a ledger under
+``s3://`` (mapped to ``s3a://``), ``file://``, ``hdfs://`` or a plain
+path works the same way, and ``reconcile`` checks the processed prefix
+through ``storage.for_path``.
+
 SURVEY.md §7.4 notes the reference's protocol is not transactional with
 the data writes (mart append can land while the status flip fails ⇒
 duplicate appends on rerun). The observable protocol is preserved;
@@ -28,11 +34,12 @@ import time
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .sources.files import hadoop_fs
+from .storage import for_path, spark_path
 
 STATUS_ACTIVE = "A"
 STATUS_INACTIVE = "I"
@@ -91,19 +98,19 @@ class Ledger:
         )
         spark.createDataFrame(table, LEDGER_SCHEMA).coalesce(1).write.mode(
             "append"
-        ).parquet(self.path)
+        ).parquet(spark_path(self.path))
 
     def _events(self, spark: SparkSession) -> DataFrame | None:
-        # missing-path means "ledger not created yet" — checked
-        # explicitly so a REAL read failure (corrupt footer,
-        # permissions, store throttle) raises instead of silently
-        # reading as an empty ledger and disabling crash detection.
-        # Checked through the path's Hadoop FileSystem, as Spark reads
-        # it: os.path.exists is False for every file:// / s3a:// path
-        fs, jpath = hadoop_fs(spark, self.path)
-        if not fs.exists(jpath):
-            return None
-        return spark.read.schema(LEDGER_SCHEMA).parquet(self.path)
+        # Spark's own PATH_NOT_FOUND means "ledger not created yet";
+        # every other failure (corrupt footer, permissions, store
+        # throttle) raises instead of reading as an empty ledger and
+        # disabling crash detection
+        try:
+            return spark.read.schema(LEDGER_SCHEMA).parquet(spark_path(self.path))
+        except AnalysisException as e:
+            if e.getCondition() == "PATH_NOT_FOUND":
+                return None
+            raise
 
     def mark_active(self, spark: SparkSession, files: dict[str, str], seq: int = 0) -> None:
         """K6: record accepted files as in-flight (reference main.py:184-213)."""
@@ -151,15 +158,14 @@ class Ledger:
         processed prefix — presence there IS proof the run finished its
         data work. Returns the file names reconciled. Driver-side
         metadata only; safe to run any time (idempotent). Presence is
-        checked through the prefix's Hadoop FileSystem, so URI prefixes
-        (``file://``, ``s3a://``, ``hdfs://``) reconcile too."""
+        checked through the prefix's :mod:`.storage` backend, the one
+        ``validate.archive_files`` moved the files with."""
         import os
 
         done = {}
         for name in self.active_files(spark):
             dst = os.path.join(processed_dir, name)
-            fs, jpath = hadoop_fs(spark, dst)
-            if fs.exists(jpath):
+            if for_path(dst).exists(dst):
                 done[name] = dst
         if done:
             self.mark_done(spark, done, seq=2)  # seq 2: after the crash

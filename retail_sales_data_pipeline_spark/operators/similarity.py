@@ -257,6 +257,17 @@ def lsh_ann_topk(
     return _topk_by_cosine(pairs, k)
 
 
+def _unit_rows(vectors: list) -> np.ndarray:
+    """Vectors as unit-norm matrix rows. A zero-norm row becomes NaN,
+    and ``np.lexsort`` on ``-cos`` puts NaN last, so it never displaces
+    a real candidate; surviving NaNs become NULL (ranked last by the
+    global window), the expression twin's null-divide behavior instead
+    of NaN-ranks-first."""
+    m = np.atleast_2d(np.array(vectors, dtype=np.float64))  # [] -> 1x0
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return m / np.linalg.norm(m, axis=1, keepdims=True)
+
+
 def cosine_topk_arrow(
     corpus: DataFrame,
     queries: DataFrame,
@@ -283,31 +294,27 @@ def cosine_topk_arrow(
             [], "query_id long, neighbor_id long, cosine double, rk long"
         )
     qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    with np.errstate(divide="ignore", invalid="ignore"):
-        # zero-norm queries yield NaN cosines, filtered to NULL below —
-        # matching the expression twin's NULL (null-divide) semantics
-        qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
+    # a NULL vector (query or corpus) gets NaN cosines, filtered to
+    # NULL below: the expression twin's NULL, ranked last
+    qv = np.array([r[1] is not None for r in q_rows])
+    qn = _unit_rows([r[1] for r in q_rows if r[1] is not None])
 
     def batches(it):
         for pdf in it:
             if pdf.empty:
                 continue
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cm = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                # zero-norm rows -> NaN cosine; np.lexsort on -cos puts
-                # NaN last, so they never displace a real candidate,
-                # and surviving NaNs become NULL (ranked last by the
-                # global window) — exactly the expression twin's
-                # null-divide behavior instead of NaN-ranks-first
-                cn = cm / np.linalg.norm(cm, axis=1, keepdims=True)
-            # round BEFORE the per-batch top-k so batch selection uses
-            # the same (rounded desc, id asc) order as the final global
-            # window — otherwise >k batch candidates rounding to the
-            # same value could discard the globally tie-winning
-            # (smaller-id) neighbor before the window sees it
-            cos = np.round(cn @ qn.T, 6)  # |batch| x |queries|
+            cv = pdf[vec_col].notna().to_numpy()
+            cos = np.full((len(ids), len(qids)), np.nan)
+            if cv.any() and qv.any():
+                # round BEFORE the per-batch top-k so batch selection
+                # uses the same (rounded desc, id asc) order as the
+                # final global window — otherwise >k batch candidates
+                # rounding to the same value could discard the globally
+                # tie-winning (smaller-id) neighbor before the window
+                # sees it
+                cn = _unit_rows(pdf[vec_col][cv].tolist())
+                cos[np.ix_(cv, qv)] = np.round(cn @ qn.T, 6)
             top = min(k, cos.shape[0])
             # per-query top-k within the batch bounds the emitted rows;
             # lexsort per query column applies the id tiebreak

@@ -28,6 +28,13 @@ Orderings kept despite the overlap: probe → quarantine and 'A' events
 archive → 'I' events. A failing sink raises only after every write has
 returned, so no job of the run outlives it, and the files stay 'A'.
 
+Paths: the five prefixes (source, error, processed, output, ledger)
+may be plain paths or URIs of any scheme with a registered backend.
+Lists, moves and existence checks go through ``storage.for_path``, and
+every Spark read or write through ``storage.spark_path``. A source,
+error or processed prefix whose scheme has no registered backend
+raises ``ValueError`` before any file is read, moved or marked.
+
 Deliberate fixes over the reference, all flagged in SURVEY.md §4/§7.4:
 - the joined frame is cached once; the reference recomputes the
   conform+union+join subtree for every one of its ≥8 actions;
@@ -65,6 +72,7 @@ from .sinks import (
     write_partitioned_parquet,
 )
 from .sources.files import discover_csv_files, read_csv_full
+from .storage import for_path, spark_path
 from .validate import archive_files, quarantine_files, validate_files
 
 
@@ -182,7 +190,7 @@ def _conformed_fact(
     canonical_8 = [f.name for f in SALES_SCHEMA.fields if f.name != "additional_column"]
     exact, wide = [], []
     for p in accepted:
-        (exact if columns[p] == canonical_8 else wide).append(p)
+        (exact if columns[p] == canonical_8 else wide).append(spark_path(p))
     frames = []
     if exact:
         base_schema = type(SALES_SCHEMA)(
@@ -232,6 +240,11 @@ def run_pipeline(
     run_id = run_id if run_id is not None else str(int(time.time() * 1000))
     result = PipelineResult(run_id=run_id)
     mandatory = mandatory if mandatory is not None else MANDATORY_COLUMNS
+
+    # the control-plane backends resolve first, so an unregistered
+    # scheme fails the run before any file moves or ledger event
+    for d in (error_dir, processed_dir):
+        for_path(d)
 
     # 1. discover (reference main.py:66-97 S3 list+download → local dir)
     paths = discover_csv_files(source_dir)

@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import table_io as _table_io
 from .bloom import BLOOM_SUFFIX as _BLOOM_SUFFIX
+from .storage import spark_path
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -71,7 +72,7 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     Object-store URIs are mapped to the cluster's data-plane scheme
     (``s3://`` -> ``s3a://`` by default; ``storage.register_spark_path``
     overrides)."""
-    df.write.mode(mode).parquet(_spark_path(path))
+    df.write.mode(mode).parquet(spark_path(path))
 
 
 def write_partitioned_parquet(
@@ -83,7 +84,7 @@ def write_partitioned_parquet(
     directory is skipped entirely unless the predicate selects it.
     """
     df.write.mode(mode).partitionBy(*partition_cols).parquet(
-        _spark_path(path)
+        spark_path(path)
     )
 
 
@@ -95,7 +96,7 @@ def append_table(df: DataFrame, path: str) -> None:
     NOT retry-idempotent — a replayed caller double-appends; batch/
     stream orchestration should use :func:`append_table_run_scoped`.
     """
-    df.write.mode("append").parquet(_spark_path(path))
+    df.write.mode("append").parquet(spark_path(path))
 
 
 def append_table_run_scoped(df: DataFrame, path: str, run_id) -> None:
@@ -107,7 +108,7 @@ def append_table_run_scoped(df: DataFrame, path: str, run_id) -> None:
     its ledger can only detect, not prevent. Readers scan the table
     root as before and gain a ``run`` provenance partition column."""
     df.write.mode("overwrite").parquet(
-        _spark_path(os.path.join(path, f"run={run_id}"))
+        spark_path(os.path.join(path, f"run={run_id}"))
     )
 
 
@@ -126,18 +127,6 @@ def _io(path: str):
     local paths, the registered :mod:`.storage` backend (ETag-CAS
     commits) for object-store URIs. See :mod:`.table_io`."""
     return _table_io.for_path(path)
-
-
-def _spark_path(path: str) -> str:
-    """The Spark-visible (data-plane) path for a URI — identity for
-    local paths and for any scheme without a mapping, ``s3://`` ->
-    ``s3a://`` by default (``storage.register_spark_path`` overrides).
-    Deliberately does NOT resolve a storage backend: pure data-plane
-    writes to ``hdfs://``/``s3a://``/... need no control-plane client
-    and must pass straight through to the cluster filesystem."""
-    from . import storage as _storage
-
-    return _storage.spark_path(path)
 
 
 def _load_manifest(path: str) -> dict | None:
@@ -1854,7 +1843,7 @@ def _read_dv(spark: SparkSession, path: str, version: dict) -> DataFrame:
     # frame or a classified PATH_NOT_FOUND/FAILED_READ_FILE, and the
     # commit fence still rejects the stale pass either way.
     return spark.read.schema(_DV_SCHEMA).parquet(
-        *[_spark_path(os.path.join(path, r)) for r in rels]
+        *[spark_path(os.path.join(path, r)) for r in rels]
     )
 
 
@@ -1912,7 +1901,7 @@ def _read_version_keyed(
     if dved:
         dvdf = spark.read.schema(_DV_SCHEMA).parquet(
             *[
-                _spark_path(os.path.join(path, r))
+                spark_path(os.path.join(path, r))
                 for r in sorted(_dv_names({"dv": dv}))
             ]
         ).select("_file", "_pos")
@@ -2401,7 +2390,7 @@ def _enforce_checks(
     # mergeSchema: staged files and adopted appends may differ during
     # schema evolution; the set is patch-sized either way
     check_df = spark.read.option("mergeSchema", "true").parquet(
-        *[_spark_path(os.path.join(path, e["name"])) for e in new_entries]
+        *[spark_path(os.path.join(path, e["name"])) for e in new_entries]
     )
     if keep:
         # an evolving commit may OMIT a constrained column from every
@@ -2465,7 +2454,7 @@ def _commit_generation(
     staging = os.path.join(path, gen)
     staged: list[str] = []
     if c.new_df is not None:
-        c.new_df.write.mode("overwrite").parquet(_spark_path(staging))
+        c.new_df.write.mode("overwrite").parquet(spark_path(staging))
         staged = io.list_basenames(staging, "part-")
     new_entries = [_file_entry(path, f"{gen}/{b}") for b in staged]
     n_staged = sum(e["rows"] for e in new_entries)
@@ -2528,7 +2517,7 @@ def _commit_generation(
                 # as hidden metadata and refuses to read them back
                 sub = f"{gen}/cdc-{kind}"
                 frame.write.mode("overwrite").parquet(
-                    _spark_path(os.path.join(path, sub))
+                    spark_path(os.path.join(path, sub))
                 )
                 cdc_rec[kind] = [sub]
     if cdc_rec is not None:
@@ -2550,7 +2539,7 @@ def _commit_generation(
         # add cost is O(new positions), never O(total accumulated)
         dv_written = [f"{gen}/dv-deletes"]
         c.dv.df.write.mode("overwrite").parquet(
-            _spark_path(os.path.join(path, dv_written[0]))
+            spark_path(os.path.join(path, dv_written[0]))
         )
     if c.dv.n and not (c.dv.carry or dv_written):
         raise RuntimeError("DV counts without a position set or carry")
@@ -3121,7 +3110,7 @@ def staged_rewrite(
     df = (
         _read_version(spark, man, path, rels, (man or {}).get("dv"))
         if rels
-        else spark.read.parquet(_spark_path(path))
+        else spark.read.parquet(spark_path(path))
     )
     if expected_rows is not None:
         n_want = expected_rows
@@ -3450,7 +3439,7 @@ def _write_bloom_sidecars(
     }
     src = [os.path.join(path, e["name"]) for e in targets]
     df = spark.read.option("mergeSchema", "true").parquet(
-        *[_spark_path(p) for p in src]
+        *[spark_path(p) for p in src]
     )
     have = [c for c in cols if c in df.columns]
     if not have:
@@ -4566,7 +4555,7 @@ def table_changes(
                     frames.append(
                         spark.read.parquet(
                             *[
-                                _spark_path(os.path.join(path, r))
+                                spark_path(os.path.join(path, r))
                                 for r in rel
                             ]
                         ).withColumn("_change_type", F.lit(kind))
@@ -4643,7 +4632,7 @@ def table_changes_feed(
             if rel:
                 frames.append(
                     spark.read.parquet(
-                        *[_spark_path(os.path.join(path, r)) for r in rel]
+                        *[spark_path(os.path.join(path, r)) for r in rel]
                     )
                     .withColumn("_change_type", F.lit(kind))
                     .withColumn("_commit_version", F.lit(v).cast("long"))
@@ -4857,7 +4846,7 @@ def merge_into(
         old_cols = (
             _table_columns(spark, man, src)
             if src
-            else spark.read.parquet(_spark_path(path)).columns
+            else spark.read.parquet(spark_path(path)).columns
         )
         if not evolve_schema and set(updates.columns) != set(old_cols):
             raise ValueError(

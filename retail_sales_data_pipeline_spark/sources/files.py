@@ -4,33 +4,35 @@ The reference lists an S3 prefix with boto3, downloads each object to a
 local staging dir, and reads files one by one
 (reference: src/main/read/aws_read.py:7-22,
 src/main/download/aws_file_download.py:12-25). Spark reads object
-stores natively, so discovery here is a driver-side listing used only
-for *per-file* validation/quarantine decisions; the data path itself is
-``spark.read.csv`` over whatever URI scheme the cluster has mounted.
+stores natively, so discovery here is a driver-side listing through
+:mod:`..storage` used only for *per-file* validation/quarantine
+decisions; the data path itself is ``spark.read.csv`` over
+``storage.spark_path`` of the same URIs.
 """
 
 from __future__ import annotations
 
-import os
 import re
 
 from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession
+
+from ..storage import for_path
 
 
 def discover_csv_files(directory: str, suffix: str = ".csv") -> list[str]:
     """List data files under ``directory`` (non-recursive), sorted.
 
     Driver-side analogue of the reference's S3 listing (aws_read.py:7-22,
-    including the skip-directories and suffix checks, main.py:41,110-114).
+    including the skip-directories and suffix checks, main.py:41,110-114),
+    through the directory's :mod:`..storage` backend. A missing or empty
+    directory lists nothing; an unregistered scheme raises.
     """
-    if not os.path.isdir(directory):
+    backend = for_path(directory)
+    if not backend.is_dir(directory):
         return []
-    return sorted(
-        os.path.join(directory, f)
-        for f in os.listdir(directory)
-        if f.endswith(suffix) and os.path.isfile(os.path.join(directory, f))
-    )
+    names = backend.list(directory)
+    return [p for p in names if p.endswith(suffix) and not backend.is_dir(p)]
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -38,6 +40,9 @@ def hadoop_fs(spark: SparkSession, path: str):
     configuration: the same resolution ``spark.read`` uses, so plain
     paths and every URI scheme the cluster mounts (``file://``,
     ``hdfs://``, ``s3a://``) work. Driver-side; starts no Spark job.
+    Only :func:`read_csv_header` uses it, because it must open a file
+    exactly as Spark does (Hadoop codecs); every other list, stat and
+    move of the job goes through :mod:`..storage`.
     """
     jpath = _jclass(spark, "org.apache.hadoop.fs.Path")(path)
     return jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), jpath

@@ -1,15 +1,23 @@
-"""Pluggable object-storage seam (fsspec-style, dependency-free).
+"""The one path seam: how the engine reaches a path, decided per URI scheme.
 
 The reference talks to S3 directly with boto3 (listing
 ``src/main/read/aws_read.py:7-22``, download
 ``src/main/download/aws_file_download.py:12-25``, upload
 ``src/main/upload/upload_to_s3.py:10-24``, move
-``src/main/move/move_files.py:26-62``). No cloud SDK ships in this
-container, so the engine's control-plane file operations (validate/
-quarantine/archive/cleanup/delete, media pointer fetch) run against the
-local filesystem — but through THIS seam, so a real deployment plugs in
-an object store as a dependency injection instead of a code change.
-A dependency-free S3 adapter ships in :mod:`.storage_s3` (stdlib
+``src/main/move/move_files.py:26-62``). Here every path the paper's job
+touches resolves through this module, in two halves:
+
+- the CONTROL plane (:func:`for_path`): every list, existence check,
+  move and delete that ``pipeline.run_pipeline``, :mod:`.validate` and
+  :class:`.ledger.Ledger` make, the manifest-table commits
+  (:mod:`.table_io`) and the media pointer fetch;
+- the DATA plane (:func:`spark_path`): every ``spark.read``/``write``
+  of those paths, so Spark addresses the same bytes through the
+  cluster's Hadoop filesystem (``s3://`` -> ``s3a://`` by default).
+
+:func:`register` and :func:`register_spark_path` are the only injection
+points; no pipeline function takes a backend argument. A
+dependency-free S3 adapter ships in :mod:`.storage_s3` (stdlib
 ``urllib`` + real SigV4 signing, pinned against AWS's published test
 vectors and an in-process S3-compatible server):
 
@@ -20,8 +28,9 @@ vectors and an in-process S3-compatible server):
 
 Paths carry their backend as a URI scheme (``s3://bucket/key``);
 scheme-less paths and ``file://`` resolve to :class:`LocalStorage`.
-Unknown schemes raise ``ValueError`` naming the missing client — the
-same honest env boundary ``fetch_media`` pinned in round 3.
+Unknown schemes raise ``ValueError`` naming ``storage.register``: a
+``gs://`` landing prefix with no backend fails the run instead of
+reading as an empty drop.
 
 Scale note: every method here is a METADATA-sized driver-side operation
 (list/move/delete of file names) or a single-object read used inside an
@@ -91,8 +100,10 @@ class LocalStorage:
             f.write(data)
 
     def list(self, dir_path: str) -> list[str]:
+        """Entries directly under ``dir_path``, named in the caller's
+        form (a ``file://`` listing yields ``file://`` entries)."""
         d = self._strip(dir_path)
-        return sorted(os.path.join(d, n) for n in os.listdir(d))
+        return sorted(os.path.join(dir_path, n) for n in os.listdir(d))
 
     def exists(self, path: str) -> bool:
         return os.path.exists(self._strip(path))
@@ -142,6 +153,31 @@ def for_path(path: str) -> Storage:
             "storage.register(scheme, backend)"
         )
     return backend
+
+
+def dataset_stat(path: str) -> tuple[int, tuple] | None:
+    """``(total bytes, fingerprint)`` of a local dataset: one file, or
+    every file at any depth under a directory (hive partitions
+    included). The fingerprint is the sorted ``(relative path,
+    mtime_ns, size)`` of each file, so an in-place rewrite anywhere in
+    the tree changes it. ``None`` when the path cannot be stated:
+    missing, vanishing mid-walk, or a non-local scheme."""
+    if scheme_of(path) not in ("", "file"):
+        return None
+    root = LocalStorage._strip(path)
+    if os.path.isdir(root):
+        paths = [os.path.join(d, n) for d, _, names in os.walk(root) for n in names]
+    else:
+        paths = [root]
+    try:
+        stats = [os.stat(p) for p in paths]
+    except OSError:
+        return None
+    files = tuple(sorted(
+        (os.path.relpath(p, root), st.st_mtime_ns, st.st_size)
+        for p, st in zip(paths, stats)
+    ))
+    return sum(st.st_size for st in stats), files
 
 
 # -- Spark data-plane path mapping -------------------------------------

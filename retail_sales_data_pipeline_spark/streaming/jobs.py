@@ -153,12 +153,11 @@ def _bounded_drain_partitions(spark: SparkSession, src_path: str) -> int:
     14.5 s (1) on the sessionize drain.
     """
     import math
-    import os
 
-    try:
-        nbytes = os.path.getsize(src_path)
-    except OSError:
-        nbytes = 0
+    from ..storage import dataset_stat
+
+    stat = dataset_stat(src_path)  # every file of a directory input
+    nbytes = stat[0] if stat is not None else 0
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(min(8, cap), min(cap, math.ceil(nbytes / (16 << 20))))
 

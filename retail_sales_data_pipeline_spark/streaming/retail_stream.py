@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 from ..pipeline import derive_customer_mart, derive_sales_mart, enrich_with_dims
 from ..schema import SALES_SCHEMA
 from ..sinks import append_table_run_scoped
+from ..storage import spark_path
 
 STREAM_INPUT_SCHEMA = T.StructType(
     [f for f in SALES_SCHEMA.fields if f.name != "additional_column"]
@@ -52,7 +53,7 @@ def stream_retail_pipeline(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.csv(source_dir).withColumn(
+    stream = reader.csv(spark_path(source_dir)).withColumn(
         "additional_column", F.lit(None).cast("string")
     )
 
@@ -88,7 +89,7 @@ def stream_retail_pipeline(
 
     q = (
         stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
+        .option("checkpointLocation", spark_path(checkpoint_dir))
         .trigger(availableNow=True)
         .start()
     )

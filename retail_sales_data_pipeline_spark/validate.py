@@ -13,6 +13,11 @@ and the accepted set is then read by executors in one distributed
 (``sources.files.read_csv_header``) is a bounded read of the file's first
 line through its Hadoop ``FileSystem``, tokenized on the driver with
 Spark's header rules: no Spark job per file.
+
+Every path resolves through :mod:`.storage`: the probe opens
+``storage.spark_path(path)``, the path Spark reads, and the moves,
+listings and deletes go through ``storage.for_path``. No function here
+takes a backend; a deployment registers one per URI scheme.
 """
 
 from __future__ import annotations
@@ -24,7 +29,7 @@ from pyspark.sql import SparkSession
 
 from .schema import MANDATORY_COLUMNS, missing_mandatory
 from .sources.files import read_csv_header
-from .storage import LOCAL, Storage
+from .storage import for_path, spark_path
 
 
 @dataclass
@@ -58,7 +63,7 @@ def validate_files(
     report = ValidationReport()
     for path in paths:
         try:
-            cols = read_csv_header(spark, path)
+            cols = read_csv_header(spark, spark_path(path))
         except Exception as ex:
             # the gate's own job: an unreadable file (gone, a name
             # Spark's file index hides, a header Spark can't tokenize)
@@ -75,43 +80,35 @@ def validate_files(
     return report
 
 
-def quarantine_files(
-    paths: list[str], error_dir: str, storage: Storage = LOCAL
-) -> list[str]:
-    """Move rejected files into ``error_dir`` (reference main.py:159-176,
-    local move; the S3 copy+delete analogue is the same operation against
-    an object store — inject it via ``storage``). Returns the new
-    locations.
-    """
-    storage.makedirs(error_dir)
+def _move_into(paths: list[str], dir_path: str) -> list[str]:
+    """Move each file into ``dir_path`` under its own name through the
+    directory's backend (an object store copies, then deletes)."""
+    backend = for_path(dir_path)
+    backend.makedirs(dir_path)
     moved = []
     for path in paths:
-        dst = os.path.join(error_dir, os.path.basename(path))
-        storage.move(path, dst)
+        dst = os.path.join(dir_path, os.path.basename(path))
+        backend.move(path, dst)
         moved.append(dst)
     return moved
 
 
-def archive_files(
-    paths: list[str], processed_dir: str, storage: Storage = LOCAL
-) -> list[str]:
+def quarantine_files(paths: list[str], error_dir: str) -> list[str]:
+    """Move rejected files into ``error_dir`` (reference main.py:159-176).
+    Returns the new locations.
+    """
+    return _move_into(paths, error_dir)
+
+
+def archive_files(paths: list[str], processed_dir: str) -> list[str]:
     """Move successfully processed files to the processed prefix
-    (reference main.py:394-399, S3→S3 move via copy+delete,
-    move_files.py:26-62 — an object-store backend makes this that exact
-    operation). Returns the new locations.
+    (reference main.py:394-399; on S3 a copy+delete, move_files.py:26-62).
+    Returns the new locations.
     """
-    storage.makedirs(processed_dir)
-    moved = []
-    for path in paths:
-        dst = os.path.join(processed_dir, os.path.basename(path))
-        storage.move(path, dst)
-        moved.append(dst)
-    return moved
+    return _move_into(paths, processed_dir)
 
 
-def cleanup_local_dir(
-    dir_path: str, storage: Storage = LOCAL, missing_ok: bool = False
-) -> list[str]:
+def cleanup_local_dir(dir_path: str, missing_ok: bool = False) -> list[str]:
     """F3: delete every file/subdirectory inside ``dir_path`` (the
     directory itself stays) — the post-upload staging cleanup step
     (reference src/main/delete/local_file_delete.py:5-19). Unlike the
@@ -125,18 +122,19 @@ def cleanup_local_dir(
     a crash, a quiet run that staged nothing — should pass
     ``missing_ok=True`` to get the no-op instead of the guard.
     """
-    if not storage.is_dir(dir_path) and not storage.exists(dir_path):
+    backend = for_path(dir_path)
+    if not backend.is_dir(dir_path) and not backend.exists(dir_path):
         if missing_ok:
             return []
         raise FileNotFoundError(dir_path)
     deleted = []
-    for item in storage.list(dir_path):
-        storage.delete(item)
+    for item in backend.list(dir_path):
+        backend.delete(item)
         deleted.append(item)
     return deleted
 
 
-def delete_objects(paths: list[str], storage: Storage = LOCAL) -> list[str]:
+def delete_objects(paths: list[str]) -> list[str]:
     """F4: delete individual data objects by full path — the
     object-store delete analogue (reference
     src/main/delete/aws_delete.py:11-23 ``S3Deleter.delete_file``;
@@ -146,8 +144,9 @@ def delete_objects(paths: list[str], storage: Storage = LOCAL) -> list[str]:
     """
     deleted = []
     for path in paths:
-        if storage.exists(path):
-            storage.delete(path)
+        backend = for_path(path)
+        if backend.exists(path):
+            backend.delete(path)
             deleted.append(path)
     return deleted
 

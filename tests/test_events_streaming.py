@@ -683,3 +683,24 @@ def test_bounded_drain_partitions_scale_adaptive(spark, tmp_path):
         f.write(b"\0")
     assert _bounded_drain_partitions(spark, str(mid)) == min(10, cap)
     assert os.path.getsize(big) == 1 << 40  # sparse, not materialized
+
+
+def test_bounded_drain_partitions_counts_every_file_of_a_directory(spark, tmp_path):
+    """A directory input is sized by all of its files, not by the
+    directory entry's own ~4 KB: 64 sparse 16 MB parts under a
+    200-partition cap drain on 64 state partitions, not the floor."""
+    from retail_sales_data_pipeline_spark.streaming.jobs import (
+        _bounded_drain_partitions,
+    )
+
+    d = tmp_path / "drain"
+    d.mkdir()
+    for i in range(64):
+        with open(d / f"part-{i:05d}.parquet", "wb") as f:
+            f.truncate(16 << 20)  # sparse: no blocks written
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
+    try:
+        assert _bounded_drain_partitions(spark, str(d)) == 64
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", saved)

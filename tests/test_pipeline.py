@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import csv
+import io
 import os
 import threading
 import time
@@ -15,6 +16,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from retail_sales_data_pipeline_spark import storage
 from retail_sales_data_pipeline_spark.ledger import Ledger
 from retail_sales_data_pipeline_spark.pipeline import run_pipeline
 
@@ -487,9 +489,8 @@ def test_ledger_reconcile_flips_archived_actives(spark, workdir):
 
 
 def test_ledger_reconcile_uri_processed_prefix(spark, workdir):
-    """The same recovery when the processed prefix is a URI (file://,
-    and likewise s3a:// or hdfs://): presence is checked through the
-    prefix's Hadoop FileSystem, not os.path."""
+    """The same recovery when the processed prefix is a URI: presence
+    is checked through the prefix's storage backend, not os.path."""
     ledger = Ledger(f"{workdir['out']}/ledger")
     ledger.mark_active(spark, {"x.csv": "/src/x.csv", "y.csv": "/src/y.csv"}, seq=0)
     os.makedirs(workdir["processed"], exist_ok=True)
@@ -559,12 +560,22 @@ def test_validate_and_ledger_job_counts(spark, tmp_path):
 
 def test_ledger_at_uri_path_detects_crash(spark, tmp_path):
     """A ledger addressed by URI (file://, and likewise s3a:// or
-    hdfs://) must see its own events: existence is checked through the
-    path's Hadoop FileSystem, not os.path."""
+    hdfs://) must see its own events: Spark reads it at the same path it
+    was written to, and a missing ledger is Spark's own PATH_NOT_FOUND,
+    not an os.path check."""
     ledger = Ledger(f"file://{tmp_path}/ledger")
     assert ledger.active_files(spark) == []
     ledger.mark_active(spark, {"x.csv": "/src/x.csv"}, seq=0)
     assert ledger.active_files(spark) == ["x.csv"]
+
+
+def test_unreadable_ledger_raises_not_empty(spark, tmp_path):
+    """Only a missing ledger reads as "no events yet": a ledger whose
+    file is not parquet fails the crash probe instead of disabling it."""
+    (tmp_path / "ledger").mkdir()
+    (tmp_path / "ledger" / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        Ledger(str(tmp_path / "ledger")).active_files(spark)
 
 
 def test_ledger_event_time_matches_row_list_writer(spark, tmp_path, monkeypatch):
@@ -817,3 +828,102 @@ def test_pipeline_refuses_non_pinned_thread_mode(spark, dims, workdir, monkeypat
     assert sorted(os.listdir(workdir["source"])) == ["bad.csv", "good.csv"]
     for d in ("error", "processed", "out"):
         assert not os.path.exists(workdir[d]), d
+
+
+PREFIXES = ["source", "error", "processed", "out", "ledger"]
+
+
+@pytest.fixture(params=["s3", "file"])
+def uri_dirs(request, tmp_path):
+    """The pipeline's five prefixes as URIs: on the disk-backed fake S3
+    (the Spark side mapped onto its backing directory), or ``file://``."""
+    if request.param == "s3":
+        request.getfixturevalue("s3env")
+        base = "s3://lake/job"
+    else:
+        base = f"file://{tmp_path}/job"
+        os.makedirs(f"{tmp_path}/job/source")
+    return {k: f"{base}/{k}" for k in PREFIXES}
+
+
+def _put_csv(path, header, rows):
+    """Write a CSV through the path's storage backend (any scheme)."""
+    buf = io.StringIO(newline="")
+    w = csv.writer(buf)
+    w.writerow(header)
+    w.writerows(rows)
+    storage.for_path(path).put_bytes(path, buf.getvalue().encode())
+
+
+def _listing(uri):
+    return [p.rsplit("/", 1)[-1] for p in storage.for_path(uri).list(uri)]
+
+
+def _output_rows(spark, res):
+    return {
+        k: sorted(map(tuple, spark.read.parquet(storage.spark_path(v)).collect()), key=repr)
+        for k, v in res.outputs.items()
+    }
+
+
+def test_pipeline_on_uri_prefixes_matches_plain_paths(spark, dims, workdir, uri_dirs):
+    """A drop with one good and one missing-column file, with all five
+    prefixes on s3:// or file://: discovery, header probes, CSV scans,
+    quarantine, archive and the ledger all resolve through the storage
+    seam, and every output holds the plain-path run's rows."""
+    missing = [c for c in HAPPY_HEADER if c != "store_id"]
+    for d in (workdir, uri_dirs):
+        _put_csv(f"{d['source']}/sales_2023.csv", HAPPY_HEADER, _happy_rows())
+        _put_csv(f"{d['source']}/bad.csv", missing, [r[:1] + r[2:] for r in _happy_rows()])
+    plain, res = [
+        run_pipeline(
+            spark, d["source"], d["error"], d["processed"], d["out"], dims,
+            ledger=Ledger(d["ledger"]), run_id="r1",
+        )
+        for d in (workdir, uri_dirs)
+    ]
+    assert res.accepted == [f"{uri_dirs['source']}/sales_2023.csv"]
+    assert res.quarantined == [f"{uri_dirs['error']}/bad.csv"]
+    assert plain.customer_mart_rows == 10
+    assert (res.customer_mart_rows, res.sales_mart_rows) == (
+        plain.customer_mart_rows, plain.sales_mart_rows,
+    )
+    assert _output_rows(spark, res) == _output_rows(spark, plain)
+    assert _listing(uri_dirs["source"]) == []
+    assert _listing(uri_dirs["error"]) == ["bad.csv"]
+    assert _listing(uri_dirs["processed"]) == ["sales_2023.csv"]
+    snap = Ledger(uri_dirs["ledger"]).snapshot(spark).collect()
+    assert [(r.file_name, r.status) for r in snap] == [("sales_2023.csv", "I")]
+
+
+def test_crash_detection_and_reconcile_on_uri_prefixes(spark, dims, uri_dirs):
+    """A ledger and processed prefix on s3:// or file:// see the dead
+    run's 'A' events, and reconcile finds the file the dead run had
+    already archived, through the backend archive_files moved it with."""
+    d = uri_dirs
+    ledger = Ledger(d["ledger"])
+    ledger.mark_active(spark, {"sales_2023.csv": "x", "lost.csv": "y"}, seq=0)
+    _put_csv(f"{d['source']}/sales_2023.csv", HAPPY_HEADER, _happy_rows())
+    res = run_pipeline(
+        spark, d["source"], d["error"], d["processed"], d["out"], dims,
+        ledger=ledger, run_id="r2",
+    )
+    assert res.crashed_files == ["sales_2023.csv"]
+    assert ledger.active_files(spark) == ["lost.csv"]
+    # lost.csv reached the processed prefix before its run died
+    _put_csv(f"{d['processed']}/lost.csv", HAPPY_HEADER, [])
+    assert ledger.reconcile(spark, d["processed"]) == ["lost.csv"]
+    assert ledger.reconcile(spark, d["processed"]) == []
+    assert _listing(d["processed"]) == ["lost.csv", "sales_2023.csv"]
+    assert {r.status for r in ledger.snapshot(spark).collect()} == {"I"}
+
+
+def test_unregistered_scheme_raises(spark, dims, workdir):
+    """A landing prefix whose scheme has no registered backend fails the
+    run, naming the registration call, instead of reading as an empty
+    drop."""
+    with pytest.raises(ValueError, match="storage.register"):
+        run_pipeline(
+            spark, "gs://bucket/land", workdir["error"], workdir["processed"],
+            workdir["out"], dims, run_id="rG",
+        )

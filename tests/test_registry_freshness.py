@@ -219,3 +219,41 @@ def test_bench_settledness_gate():
     assert not bench._raw_ratio_outside_band(1.0)
     assert not bench._raw_ratio_outside_band(0.75)
     assert not bench._raw_ratio_outside_band(1.39)
+
+
+def test_bench_reproduced_shift_label():
+    """A shift that REPRODUCES — both attempts trip the raw-ratio gate
+    on the same side, pass the probe gates, and their pooled probes
+    agree within the spread gate — is published as reproduced_shift,
+    not inflated_band: a genuine >1.4x speedup trips both attempts."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(os.path.dirname(__file__), os.pardir, "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    def tripped(ratio, probes, value=20.0):
+        return {
+            "calibration_spread": round(probes[-1] - probes[0], 3),
+            "calibration_probes": probes,
+            "value": value,
+            "raw_ratio_tripped": True,
+            "_vs_prior": {"raw_ratio": ratio},
+        }
+
+    fast = [0.7, 0.72, 0.75, 0.78, 0.8]
+    assert bench._reproduced_shift([tripped(0.6, fast), tripped(0.62, fast, 20.4)])
+    assert bench._reproduced_shift([tripped(1.6, fast), tripped(1.7, fast)])
+    assert not bench._reproduced_shift([tripped(0.6, fast)])  # one attempt
+    assert not bench._reproduced_shift([tripped(0.6, fast), tripped(1.6, fast)])
+    assert not bench._reproduced_shift(  # the re-run's probes drifted apart
+        [tripped(0.6, fast), tripped(0.6, [1.2, 1.22, 1.25, 1.28, 1.3])]
+    )
+    assert not bench._reproduced_shift(  # a probe gate tripped
+        [tripped(0.6, fast), tripped(0.6, [0.3, 0.31, 0.33, 0.6, 0.69])]
+    )
+    assert not bench._reproduced_shift(
+        [tripped(0.6, fast), dict(tripped(0.9, fast), raw_ratio_tripped=False)]
+    )

@@ -103,6 +103,25 @@ def test_arrow_topk_equals_expression(spark, vecs):
     assert expr == arrow
 
 
+def test_arrow_topk_null_embedding_matches_expression(spark):
+    """A NULL corpus vector is a NULL-cosine candidate ranked last, and
+    a NULL query vector gets NULL cosines: the Arrow path returns the
+    expression twin's rows instead of failing on a ragged batch."""
+    rows = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (9, None)],
+        "vec_id long, embedding array<double>",
+    )
+    null_query = spark.createDataFrame([(7, None)], rows.schema)
+    for corpus, queries, k in [
+        (rows.where(F.col("vec_id") > 0), rows.where(F.col("vec_id") == 0), 5),
+        (rows, rows.where(F.col("vec_id") == 0).unionByName(null_query), 3),
+    ]:
+        expr = sorted(map(tuple, S.cosine_topk(corpus, queries, k=k).collect()))
+        arrow = sorted(map(tuple, S.cosine_topk_arrow(corpus, queries, k=k).collect()))
+        assert arrow == expr
+    assert expr[:3] == [(0, 0, 1.0, 1), (0, 1, 0.993884, 2), (0, 9, None, 3)]
+
+
 def test_neardup_pairs(spark, vecs):
     pairs = {(r.id_a, r.id_b): r.cosine for r in
              S.cosine_neardup_pairs(vecs, threshold=0.95).collect()}

@@ -124,3 +124,38 @@ def test_schema_cache_reinfers_on_inplace_directory_rewrite(spark, tmp_path):
     assert [f.name for f in s2.fields] == ["b"], (
         "stale schema served after in-place rewrite"
     )
+
+
+def test_schema_cache_reinfers_on_rewrite_inside_hive_partition(spark, tmp_path):
+    """A part file rewritten in place two partition levels down
+    (``k=1/j=2/``) with an added column re-infers the schema: the cache
+    key covers every file of the dataset, not just the root's direct
+    children."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from retail_sales_data_pipeline_spark.sources.tables import dataset_schema
+
+    path = str(tmp_path / "hive")
+    spark.range(3).coalesce(1).selectExpr("id AS a", "1 AS k", "2 AS j").write.partitionBy(
+        "k", "j"
+    ).parquet(path)
+    assert [f.name for f in dataset_schema(spark, path).fields] == ["a", "k", "j"]
+
+    leaf = os.path.join(path, "k=1", "j=2")
+    part = next(f for f in os.listdir(leaf) if f.endswith(".parquet"))
+    stats = {d: os.stat(d) for d in (path, os.path.join(path, "k=1"), leaf)}
+    pq.write_table(
+        pa.table({"a": pa.array([0, 1, 2], pa.int64()), "b": pa.array(["x", "y", "z"])}),
+        os.path.join(leaf, part),
+    )
+    crc = os.path.join(leaf, f".{part}.crc")
+    if os.path.exists(crc):  # pyarrow doesn't update Hadoop's checksum sidecar
+        os.remove(crc)
+    for d, st in stats.items():  # only the part file's own stat changed
+        os.utime(d, ns=(st.st_atime_ns, st.st_mtime_ns))
+    spark.catalog.refreshByPath(path)
+
+    assert [f.name for f in dataset_schema(spark, path).fields] == ["a", "b", "k", "j"]

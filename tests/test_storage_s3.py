@@ -22,7 +22,7 @@ from urllib.parse import parse_qs, unquote, urlparse
 
 import pytest
 
-from retail_sales_data_pipeline_spark import validate
+from retail_sales_data_pipeline_spark import storage, validate
 from retail_sales_data_pipeline_spark.storage_s3 import (
     S3ResponseError,
     S3Storage,
@@ -354,25 +354,26 @@ def test_error_body_surfaces(s3, fake_s3):
         _FakeS3Handler.do_GET = orig
 
 
-def test_validate_quarantine_flow_on_s3(s3):
+def test_validate_quarantine_flow_on_s3(s3, monkeypatch):
     """F1/F2 parity (reference main.py:159-176, 394-399) against an
     object store: the SAME validate.py code paths that run on
-    LocalStorage drive quarantine/archive/cleanup over s3:// URIs."""
+    LocalStorage drive quarantine/archive/cleanup over s3:// URIs,
+    reaching the backend registered for the scheme."""
+    monkeypatch.setitem(storage._REGISTRY, "s3", s3)
     s3.put_bytes("s3://bkt/landing/good.csv", b"id,name\n1,a\n")
     s3.put_bytes("s3://bkt/landing/bad.csv", b"zzz\n")
     moved = validate.quarantine_files(
-        ["s3://bkt/landing/bad.csv"], "s3://bkt/errors", storage=s3
+        ["s3://bkt/landing/bad.csv"], "s3://bkt/errors"
     )
     assert moved == ["s3://bkt/errors/bad.csv"]
     assert s3.read_bytes("s3://bkt/errors/bad.csv") == b"zzz\n"
     archived = validate.archive_files(
-        ["s3://bkt/landing/good.csv"], "s3://bkt/processed", storage=s3
+        ["s3://bkt/landing/good.csv"], "s3://bkt/processed"
     )
     assert archived == ["s3://bkt/processed/good.csv"]
     assert s3.list("s3://bkt/landing") == []
     deleted = validate.delete_objects(
-        ["s3://bkt/errors/bad.csv", "s3://bkt/errors/absent.csv"],
-        storage=s3,
+        ["s3://bkt/errors/bad.csv", "s3://bkt/errors/absent.csv"]
     )
     assert deleted == ["s3://bkt/errors/bad.csv"]
 
