@@ -12,8 +12,8 @@ ledger mark-done.
 
 Steps that do not depend on each other run at the same time: several
 jobs submitted from separate driver threads share one SparkContext
-(Spark's "scheduling within an application"). Each run submits them to
-its own thread pool:
+(Spark's "scheduling within an application"). Each run submits them
+through ``session.spark_threads``:
 
 - the crash probe starts as soon as discovery returns, beside
   validation and planning (conform, union, the wide files'
@@ -53,10 +53,8 @@ driver. Semantics are identical because conform+union is a projection.
 from __future__ import annotations
 
 import time
-from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,6 +63,7 @@ from .ledger import Ledger
 from .operators.marts import rank_incentive, window_sum_distinct
 from .operators.star_join import Dim, star_join
 from .schema import MANDATORY_COLUMNS, SALES_SCHEMA, conform, union_conformed
+from .session import spark_threads
 from .sinks import (
     append_table_run_scoped,
     run_scoped_path,
@@ -228,15 +227,6 @@ def run_pipeline(
     """One pipeline run over every CSV in ``source_dir``. Independent
     Spark work is submitted at the same time; the module docstring says
     what overlaps and which orderings hold."""
-    if inheritable_thread_target(spark) is spark:
-        # PySpark's non-pinned mode hands the session back instead of a
-        # decorator; the overlapped steps would then fail mid-run
-        raise RuntimeError(
-            "run_pipeline needs PySpark's pinned-thread mode: its worker "
-            "threads inherit the caller's job group and local properties "
-            "through inheritable_thread_target, which is a no-op when "
-            "PYSPARK_PIN_THREAD=false — unset it or set it to true"
-        )
     run_id = run_id if run_id is not None else str(int(time.time() * 1000))
     result = PipelineResult(run_id=run_id)
     mandatory = mandatory if mandatory is not None else MANDATORY_COLUMNS
@@ -251,19 +241,10 @@ def run_pipeline(
     if not paths:
         return result  # clean no-op, reference aborts (main.py:75-77)
 
-    # One pool per run, joined on every exit path. Its width is the
-    # number of independent tasks: the five sinks (the probe and the
-    # mark never run beside them).
-    with ThreadPoolExecutor(
-        max_workers=5, thread_name_prefix=f"run_pipeline-{run_id}"
-    ) as pool:
-
-        def submit(fn, *args):
-            # the caller's job group, description, scheduler pool and
-            # tags reach the task's jobs; captured once per task, so no
-            # two threads share one local-properties object
-            return pool.submit(inheritable_thread_target(spark)(fn), *args)
-
+    # the background work of a run is joined on every exit path; the
+    # block refuses PySpark's non-pinned thread mode before any file
+    # moves or ledger event
+    with spark_threads(spark) as submit:
         # 2. crash detection (reference main.py:41-64), beside 3 and 5-8
         probe = None
         if ledger is not None:
@@ -328,39 +309,37 @@ def run_pipeline(
             }
             customer_rows, sales_rows = Observation(), Observation()
             n = F.count(F.lit(1)).alias("n")
-            writes = [
-                submit(
+            # sink failures raise (the first, in K order) once all five
+            # have returned
+            with spark_threads(spark) as sink:
+                sink(
                     write_parquet,
                     customer_mart.observe(customer_rows, n),
                     result.outputs["customer_mart"],
-                ),
-                submit(
+                )
+                sink(
                     write_parquet,
                     sales_mart.observe(sales_rows, n),
                     result.outputs["sales_mart"],
-                ),
-                submit(
+                )
+                sink(
                     write_partitioned_parquet,
                     sales_mart,
                     result.outputs["sales_mart_partitioned"],
                     ["sales_month", "store_id"],
-                ),
-                submit(
+                )
+                sink(
                     append_table_run_scoped,
                     customer_mart,
                     result.outputs["customer_mart_table"],
                     run_id,
-                ),
-                submit(
+                )
+                sink(
                     append_table_run_scoped,
                     sales_mart,
                     result.outputs["sales_mart_table"],
                     run_id,
-                ),
-            ]
-            wait(writes)
-            for w in writes:
-                w.result()  # sink failures raise (the first, in K order)
+                )
             # only now: Observation.get blocks forever if its write failed
             result.customer_mart_rows = customer_rows.get["n"]
             result.sales_mart_rows = sales_rows.get["n"]

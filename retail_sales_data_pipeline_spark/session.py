@@ -1,4 +1,6 @@
-"""SparkSession factory.
+"""SparkSession factory, and ``spark_threads``: the one way this package
+runs independent Spark jobs at the same time (the pipeline's sinks, a
+manifest commit's staging writes).
 
 The reference creates a session at import time as a side effect
 (reference: src/main/utility/spark_session.py:18) and then re-creates it
@@ -15,10 +17,47 @@ cluster; only ``master`` and the memory knobs change.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = "32"
+
+
+@contextmanager
+def spark_threads(spark: SparkSession):
+    """Yield ``submit(fn, *args) -> Future``: each call runs on a pool
+    thread with the caller's job group, description, scheduler pool,
+    local properties and tags, captured when it is submitted (so no two
+    threads share one local-properties object). Leaving the block waits
+    for every submitted call; if the block itself returned, the first
+    failed call's error is raised, in submission order.
+
+    Refuses up front when PySpark's pinned-thread mode is off: then
+    ``inheritable_thread_target`` is a no-op and the calls' jobs would
+    escape the caller's job group (and its cancellation)."""
+    if inheritable_thread_target(spark) is spark:
+        raise RuntimeError(
+            "concurrent Spark jobs need PySpark's pinned-thread mode: the "
+            "worker threads inherit the caller's job group and local "
+            "properties through inheritable_thread_target, which is a "
+            "no-op when PYSPARK_PIN_THREAD=false — unset it or set it to "
+            "true"
+        )
+    futures = []
+    with ThreadPoolExecutor(thread_name_prefix="spark_threads") as pool:
+
+        def submit(fn, *args):
+            futures.append(
+                pool.submit(inheritable_thread_target(spark)(fn), *args)
+            )
+            return futures[-1]
+
+        yield submit
+    for f in futures:
+        f.result()
 
 
 def get_spark(

@@ -64,6 +64,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from . import table_io as _table_io
 from .bloom import BLOOM_SUFFIX as _BLOOM_SUFFIX
+from .session import spark_threads
 from .storage import spark_path
 
 
@@ -2427,13 +2428,21 @@ def _commit_generation(
     manifest protocol. Steps (a crash between any two leaves a
     readable table):
 
-    1. write ``c.new_df`` to ``<path>/gen-<n>._<op>/`` — live table
-       untouched;
+    1. stage: write ``c.new_df``, the CDC frames and the DV position
+       set into ``<path>/gen-<n>._<op>/`` (the data files at the top,
+       the sidecars in subdirectories) — live table untouched. No write
+       reads another's output, so each is its own Spark job, submitted
+       together through :func:`session.spark_threads` and sharing the
+       executors under Spark's FIFO scheduler. All are awaited; any
+       failure removes the staging directory and raises the first
+       error in submission order (data, CDC, DV). Every write uses mode
+       ``append``: the directory is fresh, and an ``overwrite`` of the
+       data would delete the ``_temporary`` directories the sidecar
+       jobs create under it;
     2. validate the staged row count against ``c.expected`` (parquet
        FOOTER metadata only — no job, cheap at any scale);
     3. copy adopted appends in; enforce CHECK constraints and build
-       bloom sidecars for the new files; write CDC and DV sidecars
-       under the new generation;
+       bloom sidecars for the new files;
     4. commit: atomically replace ``_manifest.json`` (writer-fenced,
        see :func:`_commit_manifest`), rebasing a lost CAS in the shape
        ``c.rebase`` names;
@@ -2447,15 +2456,42 @@ def _commit_generation(
 
     io = _io(path)
     prev_no = c.man["gen_no"] if c.man else 0
+    if c.dv.n and not (c.dv.carry or c.dv.df is not None):
+        raise RuntimeError("DV counts without a position set or carry")
     # per-writer uniquifier: two racing writers must never share a
     # staging directory — the fence rejects the loser's COMMIT, but only
     # if its staged bytes didn't overwrite the winner's first
     gen = f"gen-{prev_no + 1:06d}._{c.op}-{uuid.uuid4().hex[:8]}"
     staging = os.path.join(path, gen)
-    staged: list[str] = []
-    if c.new_df is not None:
-        c.new_df.write.mode("overwrite").parquet(spark_path(staging))
-        staged = io.list_basenames(staging, "part-")
+    writes = [(c.new_df, gen)] if c.new_df is not None else []
+    # a pure insert records its feed by reference to the data files
+    cdc = c.cdc if c.insert is None else None
+    for kind, frame in (cdc or {}).items():
+        if frame is not None:
+            # no leading underscore: Spark treats _-prefixed paths as
+            # hidden metadata and refuses to read them back
+            writes.append((frame, f"{gen}/cdc-{kind}"))
+    dv_written: list[str] = []
+    if c.dv.n and c.dv.df is not None:
+        # with carry this is a DELTA append: previous sidecars are
+        # shared by reference, only the new positions are written — DV
+        # add cost is O(new positions), never O(total accumulated)
+        dv_written = [f"{gen}/dv-deletes"]
+        writes.append((c.dv.df, dv_written[0]))
+    try:
+        with spark_threads(spark) as submit:
+            for frame, rel in writes:
+                # append, never overwrite: see step 1 above
+                submit(
+                    frame.write.mode("append").parquet,
+                    spark_path(os.path.join(path, rel)),
+                )
+    except BaseException:
+        io.rmtree_quiet(staging)
+        raise
+    staged = (
+        io.list_basenames(staging, "part-") if c.new_df is not None else []
+    )
     new_entries = [_file_entry(path, f"{gen}/{b}") for b in staged]
     n_staged = sum(e["rows"] for e in new_entries)
     expected = c.expected
@@ -2508,18 +2544,11 @@ def _commit_generation(
         # a pure-insert commit's staged data files ARE its insert feed:
         # recorded BY REFERENCE (zero extra bytes)
         cdc_rec = {"insert": [f"{gen}/{b}" for b in staged], "delete": []}
-    elif c.cdc is not None:
-        cdc_rec = {}
-        for kind, frame in c.cdc.items():
-            cdc_rec[kind] = []
-            if frame is not None:
-                # no leading underscore: Spark treats _-prefixed paths
-                # as hidden metadata and refuses to read them back
-                sub = f"{gen}/cdc-{kind}"
-                frame.write.mode("overwrite").parquet(
-                    spark_path(os.path.join(path, sub))
-                )
-                cdc_rec[kind] = [sub]
+    elif cdc is not None:
+        cdc_rec = {
+            kind: [] if frame is None else [f"{gen}/cdc-{kind}"]
+            for kind, frame in cdc.items()
+        }
     if cdc_rec is not None:
         # loose appends were never part of ANY version, so the rows of a
         # loose file this commit brings in are INSERTS of the v->v+1 hop:
@@ -2532,17 +2561,6 @@ def _commit_generation(
             cdc_rec = None
         elif adopted_rels:
             cdc_rec["insert"] = cdc_rec.get("insert", []) + adopted_rels
-    dv_written: list[str] = []
-    if c.dv.n and c.dv.df is not None:
-        # with carry this is a DELTA append: previous sidecars are
-        # shared by reference, only the new positions are written — DV
-        # add cost is O(new positions), never O(total accumulated)
-        dv_written = [f"{gen}/dv-deletes"]
-        c.dv.df.write.mode("overwrite").parquet(
-            spark_path(os.path.join(path, dv_written[0]))
-        )
-    if c.dv.n and not (c.dv.carry or dv_written):
-        raise RuntimeError("DV counts without a position set or carry")
 
     # COMMIT TAIL: build the manifest against the current snapshot and
     # CAS it in. On a lost race the commit reloads the winner's state

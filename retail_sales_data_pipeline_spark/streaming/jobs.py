@@ -162,21 +162,17 @@ def _bounded_drain_partitions(spark: SparkSession, src_path: str) -> int:
     return max(min(8, cap), min(cap, math.ceil(nbytes / (16 << 20))))
 
 
-class _drain_partitions:
-    """Context manager: pin ``spark.sql.shuffle.partitions`` (the
-    state-partition count a streaming query latches at start) for the
-    duration of a bounded drain, restoring the session value after."""
-
-    def __init__(self, spark: SparkSession, n: int):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.old)
-        return False
+def _drain_session(spark: SparkSession, n: int) -> SparkSession:
+    """A clone of ``spark`` for one bounded drain: the same SparkContext
+    and a copy of the caller's runtime SQL conf (session time zone
+    included), with ``spark.sql.shuffle.partitions`` — the
+    state-partition count a streaming query latches at start — set to
+    ``n``. The caller's own conf is never written, so drains that
+    overlap on one session, and queries planned beside them, each keep
+    their own count. The drained table stays bound to the clone."""
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    clone.conf.set("spark.sql.shuffle.partitions", str(n))
+    return clone
 
 
 def _run_to_memory(result: DataFrame, output_mode: str) -> DataFrame:
@@ -210,7 +206,10 @@ def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked 1-hour tumbling-window rollup, drained via
     availableNow. Equals the batch hourly rollup on a finite input.
     """
-    events = _events_stream(spark, sf_dir)
+    # JVM-stateful drain: size state partitions from the input, not the
+    # core count (see _bounded_drain_partitions)
+    n_parts = _bounded_drain_partitions(spark, f"{sf_dir}/events.parquet")
+    events = _events_stream(_drain_session(spark, n_parts), sf_dir)
     agg = (
         events.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -221,11 +220,7 @@ def stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
     )
-    # JVM-stateful drain: size state partitions from the input, not the
-    # core count (see _bounded_drain_partitions)
-    n_parts = _bounded_drain_partitions(spark, f"{sf_dir}/events.parquet")
-    with _drain_partitions(spark, n_parts):
-        out = _run_to_memory(agg, "complete")
+    out = _run_to_memory(agg, "complete")
     from ..functions.scalars import ntz_from_ltz
 
     # epoch-anchored NTZ at the output edge: identical collected values
@@ -249,7 +244,11 @@ def stream_dedup_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolled up per event type. On finite input the result must equal the
     batch aggregate over the distinct events — the shared oracle.
     """
-    replayed = _events_stream(spark, sf_dir).unionByName(_events_stream(spark, sf_dir))
+    # JVM-stateful drain (dedup keys + agg state): input-sized state
+    # partitions, same rationale as stream_hourly_rollup
+    n_parts = _bounded_drain_partitions(spark, f"{sf_dir}/events.parquet")
+    drain = _drain_session(spark, n_parts)
+    replayed = _events_stream(drain, sf_dir).unionByName(_events_stream(drain, sf_dir))
     deduped = replayed.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
@@ -259,11 +258,7 @@ def stream_dedup_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     )
-    # JVM-stateful drain (dedup keys + agg state): input-sized state
-    # partitions, same rationale as stream_hourly_rollup
-    n_parts = _bounded_drain_partitions(spark, f"{sf_dir}/events.parquet")
-    with _drain_partitions(spark, n_parts):
-        return _run_to_memory(agg, "complete")
+    return _run_to_memory(agg, "complete")
 
 
 # NTZ outputs: the pandas worker emits naive UTC wall-clock values; an

@@ -704,3 +704,55 @@ def test_bounded_drain_partitions_counts_every_file_of_a_directory(spark, tmp_pa
         assert _bounded_drain_partitions(spark, str(d)) == 64
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
+
+
+def test_overlapping_drains_leave_session_conf_alone(spark, monkeypatch):
+    """Two bounded drains on one session, held inside their drain windows
+    at the same time: each drains on its own input-sized partition
+    count, the caller's session keeps its count throughout and after,
+    and both results match their oracles."""
+    import threading
+
+    import retail_sales_data_pipeline_spark.streaming.jobs as J
+    from tests.oracle import assert_query_matches_oracle
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "16")  # above the 8-partition drain floor
+    real = J._run_to_memory
+    gate = threading.Barrier(2, timeout=120)
+    seen = []
+
+    def gated(result, output_mode):
+        gate.wait()  # both drains are inside their windows
+        seen.append((spark.conf.get(key), result.sparkSession.conf.get(key)))
+        out = real(result, output_mode)
+        gate.wait()  # neither leaves before both have drained
+        return out
+
+    monkeypatch.setattr(J, "_run_to_memory", gated)
+    errors = []
+
+    def run(name):
+        try:
+            assert_query_matches_oracle(spark, SF, name)
+        except BaseException as e:  # re-raised on the test thread
+            errors.append(e)
+            gate.abort()
+
+    try:
+        threads = [
+            threading.Thread(target=run, args=(n,))
+            for n in ("streaming_hourly_rollup", "streaming_dedup_rollup")
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        after = spark.conf.get(key)
+    finally:
+        spark.conf.set(key, saved)
+    if errors:
+        raise errors[0]
+    assert seen == [("16", "8"), ("16", "8")]
+    assert after == "16"

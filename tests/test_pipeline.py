@@ -816,9 +816,9 @@ def test_pipeline_refuses_non_pinned_thread_mode(spark, dims, workdir, monkeypat
     returns the session instead of a decorator. run_pipeline fails up
     front, naming the requirement, before any file moves or output
     byte is written."""
-    import retail_sales_data_pipeline_spark.pipeline as pl
+    import retail_sales_data_pipeline_spark.session as session
 
-    monkeypatch.setattr(pl, "inheritable_thread_target", lambda f=None: f)
+    monkeypatch.setattr(session, "inheritable_thread_target", lambda f=None: f)
     _drop_with_reject(workdir)
     with pytest.raises(RuntimeError, match="PYSPARK_PIN_THREAD"):
         run_pipeline(
