@@ -48,6 +48,19 @@ def persist_tracked(
     return df
 
 
+def fill_cache(df: DataFrame) -> DataFrame:
+    """Fill the cache of a persisted ``df`` now, with one Spark job.
+
+    Under AQE, every query that reads a cache nothing has filled yet
+    plans its own cache-materialization job: two readers submitted
+    concurrently each fill it. An action such as ``count()`` fills it
+    once but adds a job of its own. Counting the cache's batch RDD is
+    exactly the filling job; later readers then see a loaded cache."""
+    df._jdf.queryExecution().withCachedData().cacheBuilder() \
+        .cachedColumnBuffers().count()
+    return df
+
+
 def persist_mark() -> int:
     """Snapshot the tracker depth. A composite job that persists on its
     own behalf (``corpus_pipeline.curate_corpus`` / ``export_shards``)

@@ -1,7 +1,7 @@
 """Pluggable cross-process commit coordinator (round 11).
 
-The manifest protocol's correctness fence is the durable CAS in
-:mod:`.table_io` (POSIX lock-file swap locally, ETag conditional PUT
+The manifest protocol's correctness fence is the durable ETag CAS in
+:mod:`.table_io` (lock-fenced ``os.replace`` locally, conditional PUT
 on object stores) — that never changes. What the fence does NOT give
 is cross-process FAIRNESS under sustained fire: raw conditional-PUT
 racing is optimistic, so N continuous writer processes against one
@@ -85,7 +85,7 @@ class AdvisoryFileLockCoordinator:
       RLock's job, not this lock's);
     * TTL BREAKING: a lock file older than ``ttl_seconds`` belongs to
       a crashed holder and is broken (best-effort unlink + re-race) —
-      the same posture as the POSIX commit lock in table_io;
+      the same posture as the POSIX commit lock in storage;
     * BOUNDED WAIT: after ``wait_seconds`` of polling, acquisition
       gives up and the commit proceeds UNCOORDINATED (token None) —
       a stuck lock service must not become a table outage.

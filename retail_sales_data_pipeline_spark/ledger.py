@@ -17,10 +17,11 @@ is one window query over a tiny metadata table — at 100 TB of fact data
 the ledger still holds one row per *file*, i.e. millions at most.
 
 The ledger is addressed like every other path of the job: its parquet
-is read and written at ``storage.spark_path(path)``, so a ledger under
-``s3://`` (mapped to ``s3a://``), ``file://``, ``hdfs://`` or a plain
-path works the same way, and ``reconcile`` checks the processed prefix
-through ``storage.for_path``.
+is read and written at ``storage.spark_path(path)``, and its existence
+and ``reconcile``'s processed prefix are checked through
+``storage.for_path``, so a ledger under ``s3://`` (mapped to
+``s3a://``), ``file://``, a plain path or any other registered scheme
+works the same way.
 
 SURVEY.md §7.4 notes the reference's protocol is not transactional with
 the data writes (mart append can land while the status flip fails ⇒
@@ -34,7 +35,6 @@ import time
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -101,16 +101,14 @@ class Ledger:
         ).parquet(spark_path(self.path))
 
     def _events(self, spark: SparkSession) -> DataFrame | None:
-        # Spark's own PATH_NOT_FOUND means "ledger not created yet";
-        # every other failure (corrupt footer, permissions, store
-        # throttle) raises instead of reading as an empty ledger and
-        # disabling crash detection
-        try:
-            return spark.read.schema(LEDGER_SCHEMA).parquet(spark_path(self.path))
-        except AnalysisException as e:
-            if e.getCondition() == "PATH_NOT_FOUND":
-                return None
-            raise
+        # a missing ledger is "not created yet", checked through the
+        # path's storage backend (a Spark read of a missing path logs a
+        # stack trace before its PATH_NOT_FOUND); every read failure
+        # (corrupt footer, permissions, store throttle) raises instead
+        # of reading as an empty ledger and disabling crash detection
+        if not for_path(self.path).exists(self.path):
+            return None
+        return spark.read.schema(LEDGER_SCHEMA).parquet(spark_path(self.path))
 
     def mark_active(self, spark: SparkSession, files: dict[str, str], seq: int = 0) -> None:
         """K6: record accepted files as in-flight (reference main.py:184-213)."""

@@ -33,13 +33,15 @@ index — bytes written drop from touched-FILE-size to deleted-ROW-size
 (merge-on-read), with a hybrid threshold that rewrites files whose
 deleted fraction rots past it and materialization on any later
 rewrite (:func:`compact_small_files` also retires DV rot during
-routine maintenance). Commits stay atomic and WRITER-FENCED per
-backend through the :mod:`.table_io` seam: local tables take one
-``os.replace`` under an ``O_CREAT|O_EXCL`` lock with a generation
-re-check; object-store tables (``s3://`` via :mod:`.storage_s3`) take
-an **ETag compare-and-swap** conditional PUT — either way a
-concurrent-rewrite race becomes a loud :class:`ConcurrentWriteError`
-(``retry_on_conflict`` is the optimistic retry). The Spark data plane
+routine maintenance). Commits stay atomic and WRITER-FENCED through
+the :mod:`.table_io` seam, one protocol for every backend: an **ETag
+compare-and-swap** — read the manifest and its ETag, re-check the
+generation, conditionally put the new one. Object stores (``s3://`` via
+:mod:`.storage_s3`) fence that put natively (``If-Match``, HTTP 412);
+``storage.LocalStorage`` fences it with an ``O_CREAT|O_EXCL`` lock file
+around an ``os.replace``. Either way a concurrent-rewrite race becomes
+a loud :class:`ConcurrentWriteError` (``retry_on_conflict`` is the
+optimistic retry). The Spark data plane
 addresses the same bytes through the cluster filesystem (``s3://`` ->
 ``s3a://`` by default; ``storage.register_spark_path`` overrides).
 DML commits record their insert/delete row sets as CDC
@@ -62,8 +64,10 @@ from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import storage as _storage
 from . import table_io as _table_io
 from .bloom import BLOOM_SUFFIX as _BLOOM_SUFFIX
+from .caching import fill_cache
 from .session import spark_threads
 from .storage import spark_path
 
@@ -114,19 +118,18 @@ def append_table_run_scoped(df: DataFrame, path: str, run_id) -> None:
 
 
 _MANIFEST = "_manifest.json"
-# lock timing re-exported from the IO seam (tests pin the TTL)
-_LOCK_TTL_SECONDS = _table_io._LOCK_TTL_SECONDS
-_LOCK_WAIT_SECONDS = _table_io._LOCK_WAIT_SECONDS
+# the POSIX commit lock's timing, re-exported from the local backend's
+# conditional put (tests pin the TTL)
+_LOCK_TTL_SECONDS = _storage._LOCK_TTL_SECONDS
+_LOCK_WAIT_SECONDS = _storage._LOCK_WAIT_SECONDS
 
 # re-export: the protocol's writer-race error lives with the IO seam
-# (both the POSIX lock fence and the object-store ETag CAS raise it)
 ConcurrentWriteError = _table_io.ConcurrentWriteError
 
 
 def _io(path: str):
-    """The table's control-plane IO, resolved by URI scheme — POSIX for
-    local paths, the registered :mod:`.storage` backend (ETag-CAS
-    commits) for object-store URIs. See :mod:`.table_io`."""
+    """The table's control-plane IO over the path's :mod:`.storage`
+    backend. See :mod:`.table_io`."""
     return _table_io.for_path(path)
 
 
@@ -136,22 +139,21 @@ def _load_manifest(path: str) -> dict | None:
 
 
 def _commit_manifest(path: str, manifest: dict, expect_gen: int | None = None) -> None:
-    """THE atomic commit point of the rewrite protocol, per backend:
+    """THE atomic commit point of the rewrite protocol
+    (:meth:`.table_io.StorageTableIO.commit_manifest`), an ETag
+    compare-and-swap on every backend: read the current manifest with
+    its ETag, verify ``expect_gen``, conditionally put the new one
+    (``if_match`` / ``if_none_match``). Object stores fence the put
+    natively (a lost race 412s); local paths fence it inside
+    ``storage.LocalStorage``, which compares the ETag under an
+    ``O_CREAT|O_EXCL`` lock file and ``os.replace``-s a temp file into
+    place.
 
-    * local paths — write the manifest to a temp file and ``os.replace``
-      it into place under an ``O_CREAT|O_EXCL`` lock file with a
-      generation re-check inside the lock
-      (:meth:`.table_io.LocalTableIO.commit_manifest`);
-    * object stores — ETag compare-and-swap: read the current manifest
-      object with its ETag, verify ``expect_gen``, conditional-PUT the
-      new one (``If-Match`` / ``If-None-Match: *``) — a lost race 412s
-      (:meth:`.table_io.StorageTableIO.commit_manifest`).
-
-    Both are one indivisible step, so readers see either the old
-    generation or the new one, never a mix; both turn a concurrent
-    writer into a loud :class:`ConcurrentWriteError` (the table stays
-    exactly as the winner left it — ``retry_on_conflict`` is the
-    optimistic retry loop)."""
+    The put is one indivisible step, so readers see either the old
+    generation or the new one, never a mix; a concurrent writer becomes
+    a loud :class:`ConcurrentWriteError` (the table stays exactly as
+    the winner left it — ``retry_on_conflict`` is the optimistic retry
+    loop)."""
     _io(path).commit_manifest(path, manifest, expect_gen=expect_gen)
 
 
@@ -1973,7 +1975,7 @@ def _cleanup_empty_gen_dirs(
             and not io.list_basenames(cp, "dv-")
             and not io.list_basenames(cp, "entries-")
         ):
-            io.rmtree_quiet(cp)
+            io.delete_quiet(cp)
 
 
 # bounded CAS attempts for a rebase-enabled commit: each retry is one
@@ -2004,7 +2006,7 @@ _BACKOFF_CAP = 1.0
 # interleave) commit a winner inline from the loser's own thread.
 # Bounded registry; eviction of an (unheld, long-idle) entry only
 # costs fairness for one race, never correctness — the durable fence
-# (lock file / ETag CAS) still serializes all writers.
+# (the ETag CAS) still serializes all writers.
 import contextlib as _contextlib  # noqa: E402  (stdlib, commit guard)
 import threading as _threading  # noqa: E402  (stdlib, lock registry)
 
@@ -2074,7 +2076,7 @@ def _drop_lost_staging(io, path: str, gen: str) -> None:
                 return  # the commit landed: staging IS live data
     except Exception:
         return
-    io.rmtree_quiet(os.path.join(path, gen))
+    io.delete_quiet(os.path.join(path, gen))
 
 
 class _TxnAlreadyApplied(Exception):
@@ -2487,7 +2489,7 @@ def _commit_generation(
                     spark_path(os.path.join(path, rel)),
                 )
     except BaseException:
-        io.rmtree_quiet(staging)
+        io.delete_quiet(staging)
         raise
     staged = (
         io.list_basenames(staging, "part-") if c.new_df is not None else []
@@ -2506,10 +2508,10 @@ def _commit_generation(
         if n_staged == 0 == expected:
             # observed-empty batch: drop the staged empty file and leave
             # the table untouched — no generation burned
-            io.rmtree_quiet(staging)
+            io.delete_quiet(staging)
             return prev_no, c.man, 0
     if n_staged != expected:
-        io.rmtree_quiet(staging)
+        io.delete_quiet(staging)
         _staging_mismatch(io, path, c.man, n_staged, expected)
     if c.adopt:
         # a pure-DV commit writes no data files, so the staging dir may
@@ -2537,7 +2539,7 @@ def _commit_generation(
     except Exception:
         # any pre-commit failure (violation, analysis error, lost
         # executor) must not leak the staged generation until TTL
-        io.rmtree_quiet(staging)
+        io.delete_quiet(staging)
         raise
     cdc_rec = None
     if c.insert is not None:
@@ -2632,7 +2634,7 @@ def _commit_generation(
                     # this commit didn't drop live inside carried shards
                     missing_dv -= set(_dv_map(man)) - dropped
                 if missing_dv:
-                    io.rmtree_quiet(staging)
+                    io.delete_quiet(staging)
                     raise RuntimeError(
                         f"DV entries for files not in the version: {missing_dv}"
                     )
@@ -3025,8 +3027,9 @@ def _plan_rewrite(
     sets — touched loose appends fold into the rewrite, untouched ones
     in ``loose_entries`` are adopted — the expected-row accounting, the
     DV bookkeeping, and the keyed read of the DV-marked files'
-    ``match``-ed rows, persisted for the commit (sidecar positions and
-    CDC preimages read it twice) and unpersisted on exit. Yields a
+    ``match``-ed rows, persisted and filled for the commit (sidecar
+    positions and CDC preimages, staged concurrently, both read it) and
+    unpersisted on exit. Yields a
     :class:`_Rewrite`; the caller supplies the row transform and the
     CDC frames and applies the commit inside the ``with``."""
     man = snap.man
@@ -3056,10 +3059,12 @@ def _plan_rewrite(
     try:
         if dv_mark:
             # matched rows in DV-marked files: positions go to the
-            # sidecar, preimages to the CDC feed — file bytes untouched
-            keyed = match(
+            # sidecar, preimages to the CDC feed — file bytes untouched.
+            # Filled here, so the two concurrent staging writes do not
+            # each fill the cache
+            keyed = fill_cache(match(
                 _read_version_keyed(spark, man, path, sorted(dv_mark), dv)
-            ).persist()
+            ).persist())
             marked = keyed.drop("_file", "_pos")
             dvd = _dv_add(
                 spark, path, man, rewrite, keyed.select("_file", "_pos"),
@@ -5147,7 +5152,7 @@ def vacuum_staging(
                         and not io.exists(os.path.join(cp, "_temporary"))
                     ):
                         if not dry_run:
-                            io.rmtree_quiet(cp)
+                            io.delete_quiet(cp)
                         removed.append(cp)
                     elif child in live_dirs:
                         # live dir: collect its per-file deads only
@@ -5179,7 +5184,7 @@ def vacuum_staging(
                             rel = f"{child}/{base}"
                             if rel not in live and expired(sub):
                                 if not dry_run:
-                                    io.rmtree_quiet(sub)
+                                    io.delete_quiet(sub)
                                 removed.append(sub)
                 elif (
                     child in superseded
@@ -5212,6 +5217,6 @@ def vacuum_staging(
             continue
         if expired(p):
             if not dry_run:
-                io.rmtree_quiet(p)
+                io.delete_quiet(p)
             removed.append(p)
     return removed

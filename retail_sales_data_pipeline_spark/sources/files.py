@@ -25,14 +25,16 @@ def discover_csv_files(directory: str, suffix: str = ".csv") -> list[str]:
 
     Driver-side analogue of the reference's S3 listing (aws_read.py:7-22,
     including the skip-directories and suffix checks, main.py:41,110-114),
-    through the directory's :mod:`..storage` backend. A missing or empty
-    directory lists nothing; an unregistered scheme raises.
+    through the directory's :mod:`..storage` backend in one listing that
+    reports each entry's kind (on an object store, one LIST for any
+    number of files). A missing or empty directory lists nothing; an
+    unregistered scheme raises.
     """
-    backend = for_path(directory)
-    if not backend.is_dir(directory):
+    try:
+        names = for_path(directory).list_files(directory)
+    except (FileNotFoundError, NotADirectoryError):
         return []
-    names = backend.list(directory)
-    return [p for p in names if p.endswith(suffix) and not backend.is_dir(p)]
+    return [p for p in names if p.endswith(suffix)]
 
 
 def hadoop_fs(spark: SparkSession, path: str):

@@ -46,17 +46,29 @@ backend holding live clients should create them lazily per process
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
+import time
+import uuid
 from typing import Protocol, runtime_checkable
+
+# how long a conditional-put lock may be held before a new writer breaks
+# it (a lock is held for one metadata write — an older one belongs to a
+# crashed writer); and how long a writer polls a young HELD lock before
+# giving up (near-simultaneous committers resolve in milliseconds —
+# raising instantly would force retry_on_conflict to re-run an entire
+# DML pass for a contention a 50 ms sleep absorbs)
+_LOCK_TTL_SECONDS = 60.0
+_LOCK_WAIT_SECONDS = 2.0
 
 
 class PreconditionFailed(Exception):
     """A conditional write (``If-Match`` / ``If-None-Match``) was
-    rejected by the store — the object changed under the writer. The
-    manifest commit protocol (:mod:`.table_io`) turns this into
-    ``ConcurrentWriteError``; it is the object-store-native writer
-    fence (HTTP 412)."""
+    rejected — the object changed under the writer (HTTP 412 from an
+    object store; the lock-fenced check of :class:`LocalStorage` on
+    POSIX). The manifest commit protocol (:mod:`.table_io`) turns this
+    into ``ConcurrentWriteError``."""
 
 
 @runtime_checkable
@@ -67,6 +79,8 @@ class Storage(Protocol):
 
     def list(self, dir_path: str) -> list[str]: ...
 
+    def list_files(self, dir_path: str) -> list[str]: ...
+
     def exists(self, path: str) -> bool: ...
 
     def is_dir(self, path: str) -> bool: ...
@@ -76,6 +90,18 @@ class Storage(Protocol):
     def move(self, src: str, dst: str) -> None: ...
 
     def delete(self, path: str) -> None: ...
+
+
+def _etag(data: bytes) -> str:
+    """A local object's ETag: the md5 of its bytes (S3's simple-PUT
+    definition). A content hash, not an inode or mtime, so neither
+    inode reuse nor a same-second rewrite can fake an unchanged file."""
+    return hashlib.md5(data).hexdigest()
+
+
+def _write(path: str, data: bytes) -> None:
+    with open(path, "wb") as f:
+        f.write(data)
 
 
 class LocalStorage:
@@ -90,20 +116,163 @@ class LocalStorage:
         with open(self._strip(path), "rb") as f:
             return f.read()
 
-    def put_bytes(self, path: str, data: bytes) -> None:
-        """Write one object (upload parity with ``storage_s3`` — kept
-        off the :class:`Storage` protocol: the engine's data path
-        writes through Spark, this is control-plane only)."""
+    def read_bytes_meta(self, path: str) -> tuple[bytes, str]:
+        """``(body, etag)`` — the read half of a compare-and-swap."""
+        data = self.read_bytes(path)
+        return data, _etag(data)
+
+    def read_range(self, path: str, start: int, length: int) -> bytes:
+        with open(self._strip(path), "rb") as f:
+            f.seek(start)
+            return f.read(length)
+
+    def input_file(self, path: str) -> str:
+        """What pyarrow opens for random-access reads (parquet footers):
+        the file's own path, so pyarrow's native reader serves it."""
+        return self._strip(path)
+
+    def stat(self, path: str) -> dict:
+        """``{"size", "mtime"}`` of a file or directory (no body read)."""
+        st = os.stat(self._strip(path))
+        return {"size": st.st_size, "mtime": st.st_mtime}
+
+    def head(self, path: str) -> dict:
+        """:meth:`stat` plus the ETag :meth:`put_bytes` returned."""
+        return {**self.stat(path), "etag": _etag(self.read_bytes(path))}
+
+    def put_bytes(
+        self,
+        path: str,
+        data: bytes,
+        *,
+        if_match: str | None = None,
+        if_none_match: bool = False,
+    ) -> str:
+        """Write one object and return its ETag, with ``storage_s3``'s
+        conditional-write contract: ``if_none_match`` succeeds only if
+        no file exists at ``path``, ``if_match`` only if the current
+        file's ETag still equals it; a rejected precondition raises
+        :class:`PreconditionFailed`. An unconditional put is a plain
+        write (control-plane sidecars whose visibility another commit
+        gates); a conditional one is :meth:`_fenced_replace`."""
         p = self._strip(path)
         os.makedirs(os.path.dirname(p) or ".", exist_ok=True)
-        with open(p, "wb") as f:
-            f.write(data)
+        if if_match is None and not if_none_match:
+            _write(p, data)
+        else:
+            self._fenced_replace(p, data, if_match, if_none_match)
+        return _etag(data)
+
+    @staticmethod
+    def _fenced_replace(
+        p: str, data: bytes, if_match: str | None, if_none_match: bool
+    ) -> None:
+        """POSIX compare-and-swap: write a temp file and ``os.replace``
+        it over ``p`` (rename-over is atomic, so readers see the old
+        bytes or the new, never a mix), with the precondition checked
+        inside an ``O_CREAT|O_EXCL`` lock file ``<p>.lock`` carrying
+        this writer's token — rename-over alone cannot express "replace
+        only if unchanged".
+
+        A lock older than ``_LOCK_TTL_SECONDS`` belongs to a crashed
+        writer and is broken (once); a younger one is polled for up to
+        ``_LOCK_WAIT_SECONDS``. Two breakers can race the break itself
+        (the second ``remove`` can delete the first breaker's FRESH
+        lock), so the token is re-read immediately before the replace:
+        a writer whose lock was stolen fails loudly instead of
+        double-writing, and never removes the thief's lock. The
+        residual window is the microseconds between that check and the
+        replace."""
+        lock = p + ".lock"
+        token = uuid.uuid4().hex
+        deadline = time.monotonic() + _LOCK_WAIT_SECONDS
+        broke = False
+        while True:
+            try:
+                fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+                try:
+                    os.write(fd, token.encode())
+                finally:
+                    os.close(fd)
+                break  # acquired
+            except FileExistsError:
+                try:
+                    age = time.time() - os.path.getmtime(lock)
+                except OSError:
+                    continue  # lock vanished between attempts — retry now
+                if age >= _LOCK_TTL_SECONDS and not broke:
+                    broke = True
+                    try:
+                        os.remove(lock)  # crashed holder — break the lock
+                    except OSError:
+                        pass
+                    continue
+                if time.monotonic() >= deadline:
+                    raise PreconditionFailed(
+                        f"another writer holds the commit lock for {p!r} "
+                        f"(lock age {age:.1f}s; waited "
+                        f"{_LOCK_WAIT_SECONDS:.0f}s)"
+                    ) from None
+                # young held lock: metadata writes clear in milliseconds
+                time.sleep(0.05)
+        stolen = False
+        # tmp is TOKEN-SUFFIXED: with a shared tmp name, a stalled writer
+        # that loses the stale-lock race could overwrite the winner's
+        # staged bytes between the winner's write and replace — the
+        # fence would then install the LOSER's bytes under the winner's
+        # write. Per-writer tmp names make that impossible.
+        tmp = f"{p}.tmp.{token}"
+        try:
+            if if_none_match and os.path.exists(p):
+                raise PreconditionFailed(f"{p!r} already exists")
+            if if_match is not None:
+                try:
+                    with open(p, "rb") as f:
+                        cur = _etag(f.read())
+                except FileNotFoundError:
+                    cur = None
+                if cur != if_match:
+                    raise PreconditionFailed(
+                        f"{p!r} changed under this writer (ETag "
+                        f"{if_match} is no longer current)"
+                    )
+            _write(tmp, data)
+            try:
+                with open(lock) as fh:
+                    holder = fh.read()
+            except OSError:
+                holder = ""
+            if holder != token:
+                stolen = True
+                raise PreconditionFailed(
+                    f"commit lock for {p!r} was broken by another writer "
+                    "mid-commit (stale-lock TTL race); aborting this write"
+                )
+            os.replace(tmp, p)
+        finally:
+            try:
+                os.remove(tmp)  # aborted write: don't leak staged bytes
+            except OSError:
+                pass
+            if not stolen:  # never remove a lock that is no longer ours
+                try:
+                    os.remove(lock)
+                except OSError:
+                    pass
 
     def list(self, dir_path: str) -> list[str]:
         """Entries directly under ``dir_path``, named in the caller's
         form (a ``file://`` listing yields ``file://`` entries)."""
         d = self._strip(dir_path)
         return sorted(os.path.join(dir_path, n) for n in os.listdir(d))
+
+    def list_files(self, dir_path: str) -> list[str]:
+        """The entries of :meth:`list` that are not directories, each
+        entry's kind read from the same directory scan."""
+        with os.scandir(self._strip(dir_path)) as it:
+            return sorted(
+                os.path.join(dir_path, e.name) for e in it if not e.is_dir()
+            )
 
     def exists(self, path: str) -> bool:
         return os.path.exists(self._strip(path))
@@ -113,6 +282,9 @@ class LocalStorage:
 
     def makedirs(self, dir_path: str) -> None:
         os.makedirs(self._strip(dir_path), exist_ok=True)
+
+    def copy(self, src: str, dst: str) -> None:
+        shutil.copy2(self._strip(src), self._strip(dst))
 
     def move(self, src: str, dst: str) -> None:
         shutil.move(self._strip(src), self._strip(dst))

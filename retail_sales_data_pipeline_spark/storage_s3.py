@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import hashlib
 import hmac
+import io
 import os
 import urllib.error
 import urllib.parse
@@ -427,10 +428,18 @@ class S3Storage:
             "etag": self._etag_of(headers),
         }
 
+    stat = head  # size and mtime; the ETag comes with them for free
+
+    def input_file(self, path: str) -> "_RangedFile":
+        """What pyarrow opens for random-access reads: a file whose
+        every read is one ranged GET, so a parquet footer read costs a
+        HEAD plus ~3 small GETs at any object size."""
+        return _RangedFile(self, path, self.head(path)["size"])
+
     def read_range(self, path: str, start: int, length: int) -> bytes:
         """Ranged GET of ``length`` bytes at ``start`` — what keeps a
         parquet FOOTER read footer-priced at any object size (used by
-        the table-IO seam's ``open_parquet``)."""
+        :class:`_RangedFile`)."""
         bucket, key = self._split(path)
         _, data, _ = self._request(
             "GET",
@@ -455,13 +464,21 @@ class S3Storage:
         flow (``validate.py``), which legitimately EMPTIES the landing
         prefix and then re-lists it — that must be a no-op, not a
         crash, on both backends."""
+        files, dirs = self._level(dir_path)
+        return sorted(files + dirs)
+
+    def list_files(self, dir_path: str) -> list[str]:
+        """The objects of :meth:`list`, without its common prefixes —
+        the same one paginated LIST, no per-entry probe."""
+        return sorted(self._level(dir_path)[0])
+
+    def _level(self, dir_path: str) -> tuple[list[str], list[str]]:
         bucket, key = self._split(dir_path)
         prefix = key if not key or key.endswith("/") else key + "/"
         keys, prefixes, = self._iter_keys(bucket, prefix, delimiter="/")
-        entries = [f"s3://{bucket}/{k}" for k in keys if k != prefix] + [
+        return [f"s3://{bucket}/{k}" for k in keys if k != prefix], [
             f"s3://{bucket}/{p.rstrip('/')}" for p in prefixes
         ]
-        return sorted(entries)
 
     def exists(self, path: str) -> bool:
         bucket, key = self._split(path)
@@ -550,3 +567,52 @@ class S3Storage:
                 self._request("DELETE", bucket, k)
             return
         raise FileNotFoundError(path)
+
+
+class _RangedFile(io.RawIOBase):
+    """Seekable read-only file over one object, each read served by
+    :meth:`S3Storage.read_range` — for pyarrow footer reads."""
+
+    def __init__(self, store: S3Storage, path: str, size: int):
+        self._store = store
+        self._path = path
+        self._size = size
+        self._pos = 0
+
+    def seekable(self) -> bool:
+        return True
+
+    def readable(self) -> bool:
+        return True
+
+    def seek(self, offset: int, whence: int = 0) -> int:
+        if whence == 0:
+            self._pos = offset
+        elif whence == 1:
+            self._pos += offset
+        elif whence == 2:
+            self._pos = self._size + offset
+        return self._pos
+
+    def tell(self) -> int:
+        return self._pos
+
+    def read(self, n: int = -1) -> bytes:
+        if n is None or n < 0:
+            n = self._size - self._pos
+        n = min(n, self._size - self._pos)
+        if n <= 0:
+            return b""
+        data = self._store.read_range(self._path, self._pos, n)
+        # clamp: a server/proxy that ignores the Range header answers
+        # 200 + the WHOLE object; returning more than n violates the
+        # file contract and would corrupt pyarrow's footer parse
+        if len(data) > n:
+            data = data[self._pos:self._pos + n] if len(
+                data
+            ) == self._size else data[:n]
+        self._pos += len(data)
+        return data
+
+    def size(self) -> int:  # pyarrow probes this when present
+        return self._size

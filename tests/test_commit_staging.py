@@ -148,6 +148,36 @@ def test_merge_jobs_run_in_callers_job_group(spark, tmp_path):
     assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
 
 
+def test_dv_merge_fills_keyed_cache_once(spark, tmp_path):
+    """A deletion-vector merge fills the cache of its keyed read once,
+    before its staging writes fan out: 14 Spark jobs. When the DV
+    positions and the CDC preimages each fill it while staged together,
+    the same merge runs 15."""
+    path = str(tmp_path / "tbl")
+    _sorted_table(spark, path, n=2000, files=4)
+    patch = spark.createDataFrame(
+        [(5, 0.0, "p"), (7, 0.0, "q"), (5000, 1.0, "new")],
+        "id long, v double, tag string",
+    )
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    sc.setJobGroup("dv-merge-jobs", "one DV merge_into")
+    try:
+        res = S.merge_into(spark, path, patch, keys=["id"], deletion_vectors=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert res == {"updated": 2, "inserted": 1, "matched_rows": 2}
+    # the status store hears of jobs on the listener bus: let it settle
+    jobs, deadline = None, time.monotonic() + 5
+    while time.monotonic() < deadline:
+        time.sleep(0.3)
+        now = tracker.getJobIdsForGroup("dv-merge-jobs")
+        if now == jobs:
+            break
+        jobs = now
+    assert len(jobs) == 14
+
+
 def test_dml_refuses_non_pinned_thread_mode(spark, tmp_path, monkeypatch):
     """With PySpark's pinned-thread mode off, a DML call raises the
     PYSPARK_PIN_THREAD error before any staging byte is written."""

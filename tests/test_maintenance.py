@@ -1856,26 +1856,26 @@ def test_commit_aborts_when_lock_stolen_mid_commit(spark, tmp_path,
     the first breaker's FRESH lock. The commit re-reads its owner token
     immediately before the manifest replace and aborts loudly instead
     of double-committing — and must NOT remove the thief's lock."""
-    import json as _json
     import os
 
     import pytest as _pytest
 
     import retail_sales_data_pipeline_spark.sinks as S
+    import retail_sales_data_pipeline_spark.storage as _storage
 
     path = str(tmp_path / "tbl")
     spark.range(10).write.parquet(path)
     S.convert_to_manifest(spark, path)
     man = S._load_manifest(path)
     lock = os.path.join(path, S._MANIFEST + ".lock")
-    real_dump = _json.dump
+    real_write = _storage._write
 
-    def steal_then_dump(obj, fh, *a, **kw):
+    def steal_then_write(tmp, data):  # the fenced put's tmp-file write
         with open(lock, "w") as lf:  # the racing breaker's fresh lock
             lf.write("intruder-token")
-        return real_dump(obj, fh, *a, **kw)
+        return real_write(tmp, data)
 
-    monkeypatch.setattr(_json, "dump", steal_then_dump)
+    monkeypatch.setattr(_storage, "_write", steal_then_write)
     new_man = dict(man)
     new_man["gen_no"] = man["gen_no"] + 1
     with _pytest.raises(S.ConcurrentWriteError, match="broken by another"):

@@ -25,7 +25,7 @@ import pytest
 
 from retail_sales_data_pipeline_spark import sinks as S
 from retail_sales_data_pipeline_spark import table_io
-from retail_sales_data_pipeline_spark.storage import PreconditionFailed
+from retail_sales_data_pipeline_spark.storage import LocalStorage, PreconditionFailed
 
 
 def _seed_table(spark, uri: str, n: int = 100, files: int = 4) -> None:
@@ -47,9 +47,18 @@ def _seed_table(spark, uri: str, n: int = 100, files: int = 4) -> None:
 # storage-level conditional-write primitives
 # ---------------------------------------------------------------------------
 
-def test_conditional_puts_and_ranged_reads(s3env):
-    s3 = s3env["s3"]
-    uri = "s3://lake/obj.bin"
+@pytest.fixture(params=["local", "s3"])
+def store_root(request, tmp_path):
+    """A storage backend and a location to write under: ``LocalStorage``
+    in ``tmp_path``, or the fake S3's bucket."""
+    if request.param == "local":
+        return LocalStorage(), str(tmp_path)
+    return request.getfixturevalue("s3env")["s3"], "s3://lake"
+
+
+def test_conditional_puts_and_ranged_reads(store_root):
+    s3, root = store_root
+    uri = f"{root}/obj.bin"
     etag = s3.put_bytes(uri, b"0123456789")
     assert etag  # ETag surfaces from the PUT
     # If-None-Match: * on an existing key -> 412
@@ -67,7 +76,16 @@ def test_conditional_puts_and_ranged_reads(s3env):
     assert meta["size"] == 10 and meta["etag"] == etag2
     # If-Match on a missing key -> precondition failure, not success
     with pytest.raises(PreconditionFailed):
-        s3.put_bytes("s3://lake/absent.bin", b"x", if_match=etag2)
+        s3.put_bytes(f"{root}/absent.bin", b"x", if_match=etag2)
+
+
+def test_one_table_io_class_for_every_scheme(s3env, tmp_path):
+    """Plain, ``file://`` and ``s3://`` tables share one commit protocol."""
+    kinds = {
+        type(table_io.for_path(p))
+        for p in (str(tmp_path), f"file://{tmp_path}", "s3://lake/t")
+    }
+    assert kinds == {table_io.StorageTableIO}
 
 
 def test_footer_reads_are_ranged(s3env, spark):

@@ -559,14 +559,32 @@ def test_validate_and_ledger_job_counts(spark, tmp_path):
 
 
 def test_ledger_at_uri_path_detects_crash(spark, tmp_path):
-    """A ledger addressed by URI (file://, and likewise s3a:// or
-    hdfs://) must see its own events: Spark reads it at the same path it
-    was written to, and a missing ledger is Spark's own PATH_NOT_FOUND,
+    """A ledger addressed by URI (file://, and likewise s3://) must see
+    its own events: Spark reads it at the same path it was written to,
+    and a missing ledger is checked through the URI's storage backend,
     not an os.path check."""
     ledger = Ledger(f"file://{tmp_path}/ledger")
     assert ledger.active_files(spark) == []
     ledger.mark_active(spark, {"x.csv": "/src/x.csv"}, seq=0)
     assert ledger.active_files(spark) == ["x.csv"]
+
+
+def test_fresh_ledger_probe_reads_no_parquet(spark, tmp_path, monkeypatch):
+    """A ledger that does not exist yet is found missing through storage:
+    the crash probe answers [] without a Spark read, which would log a
+    FileNotFoundException stack trace before its PATH_NOT_FOUND."""
+    from pyspark.sql import DataFrameReader
+
+    reads = []
+    real = DataFrameReader.parquet
+
+    def recording(self, *paths, **kw):
+        reads.append(paths)
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording)
+    assert Ledger(str(tmp_path / "ledger")).active_files(spark) == []
+    assert reads == []
 
 
 def test_unreadable_ledger_raises_not_empty(spark, tmp_path):
@@ -828,6 +846,27 @@ def test_pipeline_refuses_non_pinned_thread_mode(spark, dims, workdir, monkeypat
     assert sorted(os.listdir(workdir["source"])) == ["bad.csv", "good.csv"]
     for d in ("error", "processed", "out"):
         assert not os.path.exists(workdir[d]), d
+
+
+def test_discovery_is_one_list_on_s3(s3env, monkeypatch):
+    """Discovering landed files on an object store costs one LIST however
+    many files landed: the listing reports each entry's kind, so no
+    entry is probed. A prefix named like a CSV is not a file."""
+    from retail_sales_data_pipeline_spark.sources.files import discover_csv_files
+
+    s3, server = s3env["s3"], s3env["server"]
+    monkeypatch.setattr(s3, "page_size", 1000)  # one page: count LISTs, not pages
+    for i in range(6):
+        s3.put_bytes(f"s3://lake/landing/f{i}.csv", b"a,b\n1,2\n")
+    s3.put_bytes("s3://lake/landing/notes.txt", b"x")
+    s3.put_bytes("s3://lake/landing/dir.csv/part-0.csv", b"a\n1\n")
+    server.reset_counts()
+    assert discover_csv_files("s3://lake/landing") == [
+        f"s3://lake/landing/f{i}.csv" for i in range(6)
+    ]
+    assert server.reset_counts() == {"LIST": 1}
+    assert discover_csv_files("s3://lake/nothing") == []
+    assert server.reset_counts() == {"LIST": 1}
 
 
 PREFIXES = ["source", "error", "processed", "out", "ledger"]

@@ -3,6 +3,10 @@ dependency injection of an object-store backend into fetch_media."""
 
 from __future__ import annotations
 
+import os
+import sys
+import threading
+
 import pytest
 
 from retail_sales_data_pipeline_spark import storage as S
@@ -22,6 +26,43 @@ def test_local_storage_roundtrip(tmp_path):
     assert loc.exists(str(tmp_path / "sub" / "a.bin")) and not p.exists()
     loc.delete(str(tmp_path / "sub"))  # recursive dir delete
     assert not loc.is_dir(str(tmp_path / "sub"))
+
+
+def test_local_conditional_put_race_has_one_winner(tmp_path):
+    """Writers put with the same ``if_match`` ETag at once (more writers
+    than cores, a short switch interval): exactly one write lands, every
+    other fails its precondition, and no lock or temp file is left."""
+    loc = S.LocalStorage()
+    p = str(tmp_path / "obj.json")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for round_no in range(10):
+            etag = loc.put_bytes(p, f"v{round_no}".encode())
+            bodies = [f"r{round_no}-w{i}".encode() for i in range(8)]
+            barrier = threading.Barrier(len(bodies))
+            results: dict[bytes, object] = {}
+
+            def put(body: bytes) -> None:
+                barrier.wait()
+                try:
+                    results[body] = loc.put_bytes(p, body, if_match=etag)
+                except S.PreconditionFailed as e:
+                    results[body] = e
+
+            threads = [threading.Thread(target=put, args=(b,)) for b in bodies]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=30)
+            assert not any(t.is_alive() for t in threads)
+            won = [b for b, r in results.items() if isinstance(r, str)]
+            lost = [r for r in results.values() if isinstance(r, S.PreconditionFailed)]
+            assert len(won) == 1 and len(lost) == len(bodies) - 1, results
+            assert loc.read_bytes_meta(p) == (won[0], results[won[0]])
+            assert os.listdir(tmp_path) == ["obj.json"]
+    finally:
+        sys.setswitchinterval(interval)
 
 
 def test_for_path_resolution():
