@@ -7,15 +7,22 @@ grouped-constant attribute
 sales_mart_sql_transform_write.py:9-16). That idiom is preserved here
 verbatim because it is observable: if a "grouped-constant" attribute
 actually varies within a group, the reference emits one row per distinct
-attribute combination, which ``groupBy`` would not.
+attribute combination, each showing the whole group's total. A
+``groupBy`` over the keys alone would emit one row; one over the keys
+and the attributes keeps every combination but gives each its own
+total.
 
-Scale note: Window(partitionBy=keys) and groupBy(keys) hash-shuffle
-identically (one exchange on the keys); the window form additionally
-carries the non-key columns through the shuffle, and ``distinct()`` adds
-a second aggregate exchange over all columns. At 100 TB prefer
-:func:`grouped_sum` when attributes are guaranteed constant per group —
-both forms are implemented and the test suite proves them equivalent on
-clean dims. AQE handles skewed keys (skewJoin + partition coalescing).
+Scale note: both forms hash-shuffle on the group keys, but not the
+same rows. The window form sends every input row, with all its carried
+columns, through the exchange and then sorts each partition by the
+keys before summing; ``distinct()`` adds an aggregate over all columns
+on top. :func:`grouped_sum` runs a map-side partial aggregate first, so
+its one exchange carries partial sums at the output grain, and it never
+sorts. The paper pipeline's marts (``pipeline.derive_*``) use
+:func:`grouped_sum`; the window form stays for the registry's
+reference-pinned plans. The test suite proves the two equivalent when
+the carried attributes are constant per group. AQE handles skewed keys
+(skewJoin + partition coalescing).
 """
 
 from __future__ import annotations
@@ -56,10 +63,14 @@ def grouped_sum(
     total_alias: str,
     round_money: bool = True,
 ) -> DataFrame:
-    """The ``groupBy().agg(sum)`` twin of :func:`window_sum_distinct`.
+    """The ``groupBy().agg(sum)`` form of :func:`window_sum_distinct`,
+    with the same :func:`money` rounding chain.
 
     Identical results when every non-key column is dropped (proved in
-    tests); cheaper at scale (single exchange, map-side partial agg).
+    tests); cheaper at scale: a map-side partial aggregate below one
+    exchange, and no sort. ``pipeline.derive_customer_mart`` and
+    ``pipeline.derive_sales_mart`` build the paper's marts with it,
+    carrying their attributes as group columns.
     """
     total = F.sum(measure)
     total = money(total) if round_money else total

@@ -6,9 +6,9 @@ script) as one orchestration function over the library layers:
 
 discover → crash-detect (ledger 'A' probe) → validate headers →
 quarantine rejects → ledger mark-active → conform+union accepted files →
-star-join dims → cache → derive customer + sales marts → fan-out sinks
-(parquet, partitioned parquet, mart append) → archive processed files →
-ledger mark-done.
+star-join dims → derive customer + sales marts as grouped sums → cache
+the two marts → fan-out sinks (parquet, partitioned parquet, mart
+append) → archive processed files → ledger mark-done.
 
 Steps that do not depend on each other run at the same time: several
 jobs submitted from separate driver threads share one SparkContext
@@ -36,8 +36,19 @@ error or processed prefix whose scheme has no registered backend
 raises ``ValueError`` before any file is read, moved or marked.
 
 Deliberate fixes over the reference, all flagged in SURVEY.md §4/§7.4:
-- the joined frame is cached once; the reference recomputes the
-  conform+union+join subtree for every one of its ≥8 actions;
+- each mart is cached once and feeds its 2-3 sinks; the reference
+  recomputes the conform+union+join subtree for every one of its ≥8
+  actions. The joined fact is not cached: each mart reads it once,
+  through a map-side partial aggregate (eager aggregation, Yan &
+  Larson, VLDB 1995), so its exchange carries partial sums at the
+  mart's grain, not fact rows, and nothing is sorted but the rank;
+- a mart's total is the SUM over its full grain, attributes included.
+  Where a dim key is duplicated (two customer rows for one id with
+  different phones, say), each attribute row totals the fact rows that
+  joined it — the customer's actual spend — where the reference's
+  window SUM over (id, month) repeats the fan-out total on every row.
+  With unique dim keys, as ``table_scripts.sql`` declares them, the
+  two are identical;
 - sink failures raise (reference swallows JDBC errors);
 - outputs are run-scoped (``{out}/{run_id}/…``) so a retried run
   overwrites itself — idempotent where the reference double-appends.
@@ -60,7 +71,7 @@ from pyspark.sql import functions as F
 
 from .functions.scalars import full_name, month_key
 from .ledger import Ledger
-from .operators.marts import rank_incentive, window_sum_distinct
+from .operators.marts import grouped_sum, rank_incentive
 from .operators.star_join import Dim, star_join
 from .schema import MANDATORY_COLUMNS, SALES_SCHEMA, conform, union_conformed
 from .session import spark_threads
@@ -88,9 +99,10 @@ class PipelineResult:
 
 def derive_customer_mart(enriched: DataFrame) -> DataFrame:
     """Customer monthly mart (reference
-    customer_mart_sql_tranform_write.py:9-23): window SUM over
-    (customer_id, month) + distinct, carrying grouped-constant customer
-    attributes and the NULL-propagating full_name concat.
+    customer_mart_sql_tranform_write.py:9-23): the SUM per
+    (customer_id, month), carrying the customer attributes and the
+    NULL-propagating full_name concat as grouping columns. One grouped
+    sum: a partial aggregate below one hash exchange, no sort.
     """
     df = enriched.select(
         "customer_id",
@@ -100,20 +112,20 @@ def derive_customer_mart(enriched: DataFrame) -> DataFrame:
         month_key("sales_date").alias("sales_date_month"),
         F.col("total_cost").cast("decimal(18,4)").alias("_cost"),
     )
-    return window_sum_distinct(
+    return grouped_sum(
         df,
-        ["customer_id", "sales_date_month"],
+        ["customer_id", "sales_date_month", "full_name", "address", "phone_number"],
         F.col("_cost"),
         "total_sales",
-        keep_cols=["full_name", "address", "phone_number"],
     )
 
 
 def derive_sales_mart(enriched: DataFrame) -> DataFrame:
     """Sales-team monthly mart with top-seller incentive (reference
-    sales_mart_sql_transform_write.py:8-33): window SUM + distinct, then
-    rank() over (store_id, month) by total desc — ties all take rank 1
-    and each earns the 1% incentive.
+    sales_mart_sql_transform_write.py:8-33): the SUM per (store,
+    seller, month) as one grouped sum, then rank() over (store_id,
+    month) by total desc — ties all take rank 1 and each earns the 1%
+    incentive. The rank is the plan's one window.
     """
     df = enriched.select(
         "store_id",
@@ -124,12 +136,11 @@ def derive_sales_mart(enriched: DataFrame) -> DataFrame:
         month_key("sales_date").alias("sales_month"),
         F.col("total_cost").cast("decimal(18,4)").alias("_cost"),
     )
-    step1 = window_sum_distinct(
+    step1 = grouped_sum(
         df,
-        ["store_id", "sales_person_id", "sales_month"],
+        ["store_id", "sales_person_id", "sales_month", "full_name"],
         F.col("_cost"),
         "total_sales",
-        keep_cols=["full_name"],
     )
     return rank_incentive(step1, ["store_id", "sales_month"], "total_sales")
 
@@ -268,18 +279,19 @@ def run_pipeline(
 
             marked = submit(mark_active_after_probe)
 
-        enriched = customer_mart = sales_mart = None
+        customer_mart = sales_mart = None
         try:
             # 5-8. conform + union, star join, marts: side-effect free,
-            # so they run while the ledger works. The joined frame is
-            # cached once (fixes recomputation, SURVEY.md §3.1); the
-            # marts are cached too — each feeds 2-3 sinks, and the
-            # window+distinct (+rank) must not recompute per write.
+            # so they run while the ledger works. The marts are cached
+            # (fixes recomputation, SURVEY.md §3.1): each feeds 2-3
+            # sinks, and the scan, join and sum (+rank) must not
+            # recompute per write. The joined fact is read once per mart
+            # and is not cached.
             if report.accepted:
                 fact = _conformed_fact(spark, report.accepted, report.columns)
                 enriched = enrich_with_dims(
                     fact, dims["customer"], dims["store"], dims["sales_team"]
-                ).cache()
+                )
                 customer_mart = derive_customer_mart(enriched).cache()
                 sales_mart = derive_sales_mart(enriched).cache()
 
@@ -351,7 +363,7 @@ def run_pipeline(
         finally:
             # sink failures raise by design — the caches must not
             # outlive the run when they do
-            for df in (sales_mart, customer_mart, enriched):
+            for df in (sales_mart, customer_mart):
                 if df is not None:
                     df.unpersist()
     return result

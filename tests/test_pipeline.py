@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import csv
+import datetime
 import io
 import os
 import threading
@@ -827,6 +828,148 @@ def test_pipeline_header_only_file_counts_zero(spark, dims, workdir, monkeypatch
 
 def _no_count(self):
     raise AssertionError("run_pipeline must not run a count() action")
+
+
+def test_streaming_counts_come_from_the_writes_and_match_batch(
+    spark, dims, workdir, monkeypatch
+):
+    """The streaming path runs no count() action either: its row counts
+    ride the two table writes. Both of its mart tables hold the batch
+    pipeline's rows for the same drop, row for row."""
+    from retail_sales_data_pipeline_spark.streaming import stream_retail_pipeline
+
+    _write_csv(f"{workdir['source']}/a.csv", HAPPY_HEADER, _happy_rows())
+    stream_out = f"{workdir['out']}_stream"
+    monkeypatch.setattr(type(dims["customer"]), "count", _no_count)
+    counts = stream_retail_pipeline(
+        spark, workdir["source"], dims, stream_out, f"{stream_out}/_ckpt"
+    )
+    run_pipeline(
+        spark, workdir["source"], workdir["error"], workdir["processed"],
+        workdir["out"], dims, run_id="rS",
+    )
+    monkeypatch.undo()
+    assert counts == {"customer_mart_rows": 10, "sales_mart_rows": 4, "batches": 1}
+    for table, n in (("customers_data_mart", 10), ("sales_team_data_mart", 4)):
+        streamed, batch = (
+            sorted(map(tuple, spark.read.parquet(f"{d}/tables/{table}").drop("run").collect()))
+            for d in (stream_out, workdir["out"])
+        )
+        assert streamed == batch and len(batch) == n, table
+
+
+def _fact(spark, rows):
+    """A conformed fact frame from (customer_id, store_id,
+    sales_person_id, sales_date, total_cost) tuples."""
+    from retail_sales_data_pipeline_spark.schema import SALES_SCHEMA
+
+    return spark.createDataFrame(
+        [(c, s, "sugar 50", datetime.date.fromisoformat(d), sp, t, 1, t, None)
+         for c, s, sp, d, t in rows],
+        SALES_SCHEMA,
+    )
+
+
+def test_duplicated_customer_key_totals_each_attribute_row(spark, dims):
+    """Customer 1 appears twice in the dim, with two phones. Its two
+    fact rows (10 and 5) in one month give one mart row per phone, each
+    totalling the customer's actual spend, 15. The reference's window
+    SUM over (customer_id, month) gave the fan-out total, 30, on both."""
+    import retail_sales_data_pipeline_spark.pipeline as pl
+
+    customer = dims["customer"].unionByName(
+        dims["customer"].where("customer_id = 1").withColumn(
+            "phone_number", F.lit("other-phone")
+        )
+    )
+    fact = _fact(spark, [(1, 121, 1, "2023-03-10", 10.0), (1, 121, 1, "2023-03-20", 5.0)])
+    enriched = pl.enrich_with_dims(fact, customer, dims["store"], dims["sales_team"])
+    rows = {
+        (r.customer_id, r.sales_date_month, r.phone_number): r.total_sales
+        for r in pl.derive_customer_mart(enriched).collect()
+    }
+    assert rows == {
+        (1, "2023-03", "9800000001"): 15.0,
+        (1, "2023-03", "other-phone"): 15.0,
+    }
+
+
+def test_duplicated_sales_team_key_totals_each_attribute_row(spark, dims):
+    """Seller 1 appears twice in the sales-team dim, with two first
+    names. Its fact rows of 10 and 5 in one month give one mart row per
+    name, each totalling 15 (not the window form's 30); the two tie, so
+    both take rank 1 and the incentive."""
+    import retail_sales_data_pipeline_spark.pipeline as pl
+
+    sales_team = dims["sales_team"].unionByName(
+        dims["sales_team"].where("id = 1").withColumn("first_name", F.lit("other"))
+    )
+    fact = _fact(spark, [(1, 121, 1, "2023-03-10", 10.0), (2, 121, 1, "2023-03-20", 5.0)])
+    enriched = pl.enrich_with_dims(fact, dims["customer"], dims["store"], sales_team)
+    rows = {
+        r.full_name: (r.total_sales, r.rnk, r.incentive)
+        for r in pl.derive_sales_mart(enriched).collect()
+    }
+    assert rows == {"sp_f1 sp_l1": (15.0, 1, 0.15), "other sp_l1": (15.0, 1, 0.15)}
+
+
+def _final_plan(df) -> str:
+    """The executed (post-AQE) physical plan of a frame that has run."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_marts_sum_before_the_exchange_and_only_the_rank_sorts(spark, dims, workdir):
+    """The customer mart is one grouped sum: no Window, no Sort, and a
+    partial HashAggregate below its one hash Exchange. The sales mart's
+    one Window is the rank."""
+    import retail_sales_data_pipeline_spark.pipeline as pl
+
+    path = f"{workdir['source']}/a.csv"
+    _write_csv(path, HAPPY_HEADER, _happy_rows())
+    fact = pl._conformed_fact(spark, [path], {path: HAPPY_HEADER})
+    enriched = pl.enrich_with_dims(fact, dims["customer"], dims["store"], dims["sales_team"])
+    customer_mart, sales_mart = pl.derive_customer_mart(enriched), pl.derive_sales_mart(enriched)
+    customer_mart.collect(), sales_mart.collect()
+
+    lines = _final_plan(customer_mart).splitlines()
+    assert not [ln for ln in lines if "Window" in ln or "Sort" in ln]
+    (exchange,) = [i for i, ln in enumerate(lines) if "Exchange hashpartitioning" in ln]
+    (partial,) = [i for i, ln in enumerate(lines) if "partial_sum(" in ln]
+    assert partial > exchange and "HashAggregate" in lines[partial]
+    (window,) = [ln for ln in _final_plan(sales_mart).splitlines() if "Window [" in ln]
+    assert "rank(" in window
+
+
+def test_pipeline_persists_only_the_two_marts(spark, dims, workdir, monkeypatch):
+    """run_pipeline caches the two marts (each feeds 2-3 sinks) and
+    nothing over the joined fact."""
+    cls = type(dims["customer"])
+    persisted = {}
+
+    def recording(name):
+        original = getattr(cls, name)
+
+        def record(self, *args, **kwargs):
+            persisted[id(self)] = self.columns
+            return original(self, *args, **kwargs)
+
+        monkeypatch.setattr(cls, name, record)
+
+    recording("cache")
+    recording("persist")
+    _write_csv(f"{workdir['source']}/a.csv", HAPPY_HEADER, _happy_rows())
+    run_pipeline(
+        spark, workdir["source"], workdir["error"], workdir["processed"],
+        workdir["out"], dims, run_id="rK",
+    )
+    monkeypatch.undo()
+    assert sorted(persisted.values()) == [
+        ["customer_id", "sales_date_month", "full_name", "address", "phone_number",
+         "total_sales"],
+        ["store_id", "sales_person_id", "sales_month", "full_name", "total_sales",
+         "rnk", "incentive"],
+    ]
 
 
 def test_pipeline_refuses_non_pinned_thread_mode(spark, dims, workdir, monkeypatch):
