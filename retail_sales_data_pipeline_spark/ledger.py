@@ -25,8 +25,15 @@ works the same way.
 
 SURVEY.md §7.4 notes the reference's protocol is not transactional with
 the data writes (mart append can land while the status flip fails ⇒
-duplicate appends on rerun). The observable protocol is preserved;
-idempotent run-scoped sinks (sinks.run_scoped_path) are the mitigation.
+duplicate appends on rerun). The observable protocol is preserved, and
+so is that hole. The run-scoped sinks (sinks.run_scoped_path,
+sinks.append_table_run_scoped) overwrite only their own ``run=<id>``,
+so they remove a duplicate only when the retry reuses the crashed
+run's id. ``run_pipeline`` never tells a retry that id: a retry under
+a new id, or two concurrent runs over one landing prefix, append the
+same files twice (20 mart rows where one run gives 10) and end with
+every file ``I``. Run-id claims in the ledger (ROADMAP direction 1)
+are the planned fix.
 """
 
 from __future__ import annotations

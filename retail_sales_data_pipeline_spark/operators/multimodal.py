@@ -5,22 +5,18 @@ A 100 TB multimodal training pipeline stores media as binary columns
 (or object-store pointers) beside typed metadata, and runs decode /
 feature-extraction / resize / frame-sampling as vectorized Python over
 Arrow batches. The Spark-side plumbing here — schemas, batch iteration,
-partition sizing, output contracts — is real and tested, and so is the
-decode for self-describing formats:
+partition sizing, output contracts — is real and tested. The codec is
+one callable per payload, chosen by :func:`decode_media`:
 
-- :func:`decode_media` with ``fake=False`` REALLY decodes binary
-  PPM/PGM images, 8-bit PNG (zlib inflate + all five scanline
-  filters), baseline huffman JPEG (marker parse, entropy decode,
-  dequant + IDCT, chroma upsampling, YCbCr→RGB — :func:`_jpeg_decode`),
-  GIF87a/89a incl. animated frame counting (variable-width LZW —
-  :func:`_gif_decode`), RIFF/WAVE PCM audio, and PPM-stream video with
-  stdlib+numpy parsing (``tests/test_multimodal.py`` drives actual
-  P6/PNG/JPEG/GIF/WAV bytes through the Arrow path). Formats that
-  require codec libraries absent from this container (progressive
-  JPEG/MP4/OGG) raise ``ValueError``
-  naming the library. ``fake=True`` (default) substitutes a
-  *deterministic* md5-derived decode so the synthesized text-byte
-  fixtures stay oracle-checkable.
+- ``fake=True`` (default) substitutes a *deterministic* md5-derived
+  decode, so the synthesized text-byte fixtures stay oracle-checkable.
+- ``fake=False`` runs the built-in stdlib decode of the formats that
+  need no codec library: binary PPM/PGM images, RIFF/WAVE PCM audio
+  and PPM-stream video. Every other format raises ``ValueError``;
+  PNG/JPEG/GIF (matched by signature) and non-WAVE audio name the
+  library that decodes them.
+- ``decoder=`` takes any such library's decode, cloudpickled into the
+  task, without changing the plan, the schema or the error policy.
 
 Scale notes: ``mapInPandas`` streams Arrow batches (no per-row
 pickling); ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds
@@ -179,7 +175,8 @@ def fetch_media(
 def _fake_decode(payload: bytes, media_type: str) -> dict:
     """Deterministic fake decode: dimensions and an 8-dim feature vector
     derived from the payload's md5 — stable across runs and engines.
-    REPLACE with real codecs (PIL / torchaudio / pyav) in production.
+    Production passes a real codec (Pillow / torchaudio / pyav) through
+    ``decode_media(decoder=...)``.
     """
     digest = hashlib.md5(payload).digest()
     width = 16 + digest[0] % 640
@@ -189,15 +186,14 @@ def _fake_decode(payload: bytes, media_type: str) -> dict:
     return {"width": width, "height": height, "n_frames": n_frames, "feature": feature}
 
 
-# Declared-dimension cap: a crafted ~200-byte header claiming
-# 65535x65535 would otherwise drive multi-GB allocations (JPEG plane
-# zeros, GIF palette expansion) BEFORE any pixel data is validated —
-# an OOM kill is not catchable, so on_error="null" can't contain it.
-# 2^24 px = a 4096x4096 frame, far above any feature-extraction need.
-# Sized jointly with the float32 decode planes (ADVICE r5): at the cap
-# the JPEG path's transient footprint is ~64 MB/plane + ~192 MB RGB
-# stack, safe even with several rows decoding concurrently per
-# executor under mapInPandas.
+# Declared-dimension cap. A netpbm header is outside input: a crafted
+# 20-byte payload can claim 65535x65535, and the image path reports the
+# declared dims without reading the raster. Passed on, they size the
+# buffers of whatever consumes the decoded row (a resampler planned by
+# resize_plan, a training loader), where an OOM kill is not catchable.
+# Rejecting them here makes them a named ValueError that
+# on_error="null" contains. 2^24 px = a 4096x4096 frame, far above any
+# feature-extraction need.
 _MAX_DECODE_PIXELS = 1 << 24
 
 
@@ -209,15 +205,15 @@ def _check_pixels(w: int, h: int, fmt: str) -> None:
         )
 
 
-def _ppm_header(payload: bytes) -> tuple[str, int, int, int, int]:
-    """Parse a binary PPM/PGM (P6/P5) header: returns (magic, width,
-    height, maxval, data_offset). Whitespace/comment handling per the
-    netpbm spec."""
-    magic = payload[:2].decode("ascii", errors="replace")
+def _ppm_header(payload: bytes, start: int = 0) -> tuple[str, int, int, int, int]:
+    """Parse a binary PPM/PGM (P6/P5) header at ``start``: returns
+    (magic, width, height, maxval, data_offset). Whitespace/comment
+    handling per the netpbm spec."""
+    magic = payload[start : start + 2].decode("ascii", errors="replace")
     if magic not in ("P6", "P5"):
         raise ValueError(f"not a binary PPM/PGM payload (magic={magic!r})")
     fields: list[int] = []
-    i = 2
+    i = start + 2
     while len(fields) < 3:
         while i < len(payload) and payload[i : i + 1].isspace():
             i += 1
@@ -247,789 +243,27 @@ def _sample_feature(data: bytes, norm: float, k: int = 8) -> list[float]:
     return [round(data[min(i * step, len(data) - 1)] / norm, 6) for i in range(k)]
 
 
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_decode(payload: bytes) -> tuple[int, int, bytes]:
-    """Decode an 8-bit non-interlaced PNG with stdlib zlib: returns
-    ``(width, height, raster)`` where raster is the de-filtered pixel
-    bytes (channels interleaved). Implements the five scanline filters
-    of the PNG spec (RFC 2083 §6); palette images return their index
-    bytes (enough for the sampled-feature path — full palette lookup
-    belongs to a real imaging library)."""
-    import struct
-    import zlib
-
-    if payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG payload")
-    w = h = None
-    bit_depth = color_type = interlace = 0
-    idat = bytearray()
-    i = 8
-    while i + 8 <= len(payload):
-        (length,) = struct.unpack(">I", payload[i : i + 4])
-        ctype = payload[i + 4 : i + 8]
-        body = payload[i + 8 : i + 8 + length]
-        if ctype == b"IHDR":
-            w, h, bit_depth, color_type, _c, _f, interlace = struct.unpack(
-                ">IIBBBBB", body
-            )
-        elif ctype == b"IDAT":
-            idat += body
-        elif ctype == b"IEND":
-            break
-        i += 12 + length  # length + type + body + crc32
-    if w is None:
-        raise ValueError("PNG payload missing IHDR")
-    _check_pixels(w, h, "PNG")
-    if bit_depth != 8 or interlace != 0:
-        raise ValueError(
-            f"only 8-bit non-interlaced PNG supported here (depth="
-            f"{bit_depth}, interlace={interlace}); use PIL for the rest"
-        )
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
-    stride, bpp = w * channels, channels
-    expected = h * (stride + 1)
-    # bounded inflate: a small-dims decompression bomb must not
-    # materialize gigabytes before the raster-size check below
-    raw = zlib.decompressobj().decompress(bytes(idat), expected)
-    if len(raw) < expected:
-        raise ValueError("truncated PNG raster")
-    out = bytearray()
-    prev = bytearray(stride)
-    pos = 0
-    for _row in range(h):
-        filt = raw[pos]
-        line = bytearray(raw[pos + 1 : pos + 1 + stride])
-        pos += 1 + stride
-        if filt == 1:  # Sub
-            for x in range(bpp, stride):
-                line[x] = (line[x] + line[x - bpp]) & 0xFF
-        elif filt == 2:  # Up
-            for x in range(stride):
-                line[x] = (line[x] + prev[x]) & 0xFF
-        elif filt == 3:  # Average
-            for x in range(stride):
-                a = line[x - bpp] if x >= bpp else 0
-                line[x] = (line[x] + ((a + prev[x]) >> 1)) & 0xFF
-        elif filt == 4:  # Paeth
-            for x in range(stride):
-                a = line[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                line[x] = (line[x] + pred) & 0xFF
-        elif filt != 0:
-            raise ValueError(f"invalid PNG filter type {filt}")
-        out += line
-        prev = line
-    return w, h, bytes(out)
-
-
-_JPEG_SIG = b"\xff\xd8"
-# zigzag scan order: _JPEG_ZIGZAG[k] = natural (row-major) index of the
-# k-th coefficient in a JPEG-encoded block (ITU T.81 Figure 5)
-_JPEG_ZIGZAG = [
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
-
-
-class _JpegBits:
-    """MSB-first bit reader over a JPEG entropy-coded segment: un-stuffs
-    0xFF00, stops at markers, and supports restart-marker resync."""
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data, self.pos = data, pos
-        self.acc, self.n = 0, 0
-
-    def bit(self) -> int:
-        if self.n == 0:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated JPEG entropy data")
-            b = self.data[self.pos]
-            self.pos += 1
-            if b == 0xFF:
-                nxt = self.data[self.pos : self.pos + 1]
-                if nxt != b"\x00":
-                    raise ValueError(
-                        "hit marker inside entropy data (truncated scan?)"
-                    )
-                self.pos += 1  # stuffed byte
-            self.acc, self.n = b, 8
-        self.n -= 1
-        return (self.acc >> self.n) & 1
-
-    def receive(self, s: int) -> int:
-        v = 0
-        for _ in range(s):
-            v = (v << 1) | self.bit()
-        return v
-
-    def restart(self) -> None:
-        """Byte-align and consume an RSTn marker (between intervals)."""
-        self.n = 0
-        if (
-            self.pos + 2 <= len(self.data)
-            and self.data[self.pos] == 0xFF
-            and 0xD0 <= self.data[self.pos + 1] <= 0xD7
-        ):
-            self.pos += 2
-        else:
-            raise ValueError("missing JPEG restart marker")
-
-
-def _jpeg_huff(counts: bytes, values: bytes) -> dict[tuple[int, int], int]:
-    """Canonical huffman decode table: (code_length, code) -> symbol
-    (T.81 Annex C code-generation procedure)."""
-    table: dict[tuple[int, int], int] = {}
-    code, k = 0, 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            table[(length, code)] = values[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-def _jpeg_decode_huff(bits: _JpegBits, table: dict) -> int:
-    code, length = 0, 0
-    while length < 16:
-        code = (code << 1) | bits.bit()
-        length += 1
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid JPEG huffman code")
-
-
-def _jpeg_extend(v: int, s: int) -> int:
-    """DC/AC difference magnitude decoding (T.81 F.2.2.1 EXTEND)."""
-    return v if s == 0 or v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
-def _jpeg_decode(payload: bytes) -> tuple[int, int, bytes]:
-    """Corruption boundary: a truncated/corrupt payload must fail with
-    a format-naming ValueError — not a bare IndexError/KeyError/
-    ZeroDivisionError from deep in the bit reader. (Whether that error
-    fails the row or the task is decode_media's on_error policy.)"""
-    import struct as _struct
-
-    try:
-        return _jpeg_decode_impl(payload)
-    except (IndexError, KeyError, ZeroDivisionError, _struct.error) as e:
-        raise ValueError(
-            f"corrupt or truncated JPEG payload ({type(e).__name__})"
-        ) from e
-
-
-def _jpeg_decode_impl(payload: bytes) -> tuple[int, int, bytes]:
-    """Decode a baseline (SOF0/SOF1) huffman JPEG: marker parse, DQT /
-    DHT / DRI, MCU-interleaved entropy decode (DC prediction, AC
-    run-length, restart intervals), dequantize, inverse zigzag, 2D
-    IDCT (numpy separable), nearest-neighbor chroma upsampling, and
-    JFIF YCbCr→RGB. Returns ``(width, height, raster)`` — interleaved
-    RGB bytes for 3-component images, luma bytes for grayscale.
-
-    Retires the round-4 verdict's last fake-decode caveat: the most
-    common real format now decodes from real bytes. Restrictions, each
-    raising a named ``ValueError``: single interleaved scan only
-    (non-interleaved multi-scan baseline is legal but rare), no
-    progressive (SOF2) or arithmetic coding — huge to hand-roll and
-    rare in training corpora; use a real imaging library for those.
-    """
-    import struct
-
-    import numpy as np
-
-    if payload[:2] != _JPEG_SIG:
-        raise ValueError("not a JPEG payload")
-    qt: dict[int, list[int]] = {}
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
-    w = h = None
-    comps: list[tuple[int, int, int, int]] = []  # (id, H, V, Tq)
-    restart = 0
-    scan: list[tuple[int, int, int]] = []  # (comp_index, Td, Ta)
-    pos = 2
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        while payload[pos + 1] == 0xFF:  # fill bytes before a marker
-            pos += 1                     # are legal (T.81 B.1.1.2)
-        marker = payload[pos + 1]
-        (seglen,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        body = payload[pos + 4 : pos + 2 + seglen]
-        pos += 2 + seglen
-        if marker == 0xDB:  # DQT
-            i = 0
-            while i < len(body):
-                pq, tq = body[i] >> 4, body[i] & 0xF
-                i += 1
-                if pq:  # 16-bit table
-                    qt[tq] = [
-                        struct.unpack(">H", body[i + 2 * k : i + 2 * k + 2])[0]
-                        for k in range(64)
-                    ]
-                    i += 128
-                else:
-                    qt[tq] = list(body[i : i + 64])
-                    i += 64
-        elif marker in (0xC0, 0xC1):  # SOF0/SOF1: baseline huffman
-            if body[0] != 8:
-                # SOF1 legitimately permits 12-bit samples; decoding
-                # them through the 8-bit level-shift/clip would return
-                # structurally-valid garbage with no error
-                raise ValueError(
-                    f"{body[0]}-bit JPEG sample precision unsupported "
-                    "here (8-bit baseline only); use PIL"
-                )
-            h, w = struct.unpack(">HH", body[1:5])
-            _check_pixels(w, h, "JPEG")
-            if body[5] not in (1, 3):
-                # 4-component = Adobe CMYK/YCCK: indexing the first
-                # three planes and applying the YCbCr formula would
-                # return color garbage with no error — reject loudly
-                raise ValueError(
-                    f"{body[5]}-component JPEG (CMYK/YCCK) unsupported "
-                    "here; use PIL"
-                )
-            comps = [
-                (body[6 + 3 * c], body[7 + 3 * c] >> 4,
-                 body[7 + 3 * c] & 0xF, body[8 + 3 * c])
-                for c in range(body[5])
-            ]
-        elif marker in (0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                        0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                "only baseline huffman JPEG (SOF0/SOF1) supported here; "
-                "use PIL for progressive/arithmetic variants"
-            )
-        elif marker == 0xC4:  # DHT
-            i = 0
-            while i < len(body):
-                tc, th = body[i] >> 4, body[i] & 0xF
-                counts = body[i + 1 : i + 17]
-                n = sum(counts)
-                values = body[i + 17 : i + 17 + n]
-                if len(counts) < 16 or len(values) < n:
-                    raise ValueError("truncated JPEG DHT segment")
-                (huff_ac if tc else huff_dc)[th] = _jpeg_huff(counts, values)
-                i += 17 + n
-        elif marker == 0xDD:  # DRI
-            (restart,) = struct.unpack(">H", body[:2])
-        elif marker == 0xDA:  # SOS — entropy data follows the header
-            ns = body[0]
-            if comps and ns < len(comps):
-                raise ValueError(
-                    "non-interleaved multi-scan baseline JPEG (separate "
-                    "per-component scans) not supported here — single "
-                    "interleaved scan only; use PIL for the rest"
-                )
-            by_id = {cid: idx for idx, (cid, *_rest) in enumerate(comps)}
-            scan = [
-                (by_id[body[1 + 2 * c]], body[2 + 2 * c] >> 4,
-                 body[2 + 2 * c] & 0xF)
-                for c in range(ns)
-            ]
-            break
-        # APPn / COM / others: skipped
-    if w is None or not scan:
-        raise ValueError("JPEG payload missing SOF/SOS")
-
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    # float32 throughout the decode path (ADVICE r5): precision is
-    # ample for 8-bit output (round-trip tolerances are whole units;
-    # float32 absolute error here is ~1e-3) and it halves the plane /
-    # RGB-stack transient footprint under concurrent mapInPandas rows.
-    planes = [
-        np.zeros((mcuy * 8 * c[2], mcux * 8 * c[1]), dtype=np.float32)
-        for c in comps
-    ]
-    # separable IDCT basis: block = C.T @ coef @ C (T.81 A.3.3)
-    grid = np.arange(8)
-    cmat = (
-        np.cos((2 * grid[None, :] + 1) * grid[:, None] * np.pi / 16) * 0.5
-    ).astype(np.float32)
-    cmat[0, :] *= np.float32(1 / np.sqrt(2))
-
-    bits = _JpegBits(payload, pos)
-    pred = [0] * len(comps)
-    n_mcus = mcux * mcuy
-    for m in range(n_mcus):
-        if restart and m and m % restart == 0:
-            bits.restart()
-            pred = [0] * len(comps)
-        my, mx = divmod(m, mcux)
-        for ci, td, ta in scan:
-            _cid, ch, cv, tq = comps[ci]
-            for by in range(cv):
-                for bx in range(ch):
-                    coef = np.zeros(64, dtype=np.float32)
-                    s = _jpeg_decode_huff(bits, huff_dc[td])
-                    pred[ci] += _jpeg_extend(bits.receive(s), s)
-                    coef[0] = pred[ci] * qt[tq][0]
-                    k = 1
-                    while k < 64:
-                        rs = _jpeg_decode_huff(bits, huff_ac[ta])
-                        r, sz = rs >> 4, rs & 0xF
-                        if sz == 0:
-                            if r != 15:
-                                break  # EOB
-                            k += 16
-                            continue
-                        k += r
-                        if k > 63:
-                            raise ValueError("JPEG AC index overflow")
-                        coef[_JPEG_ZIGZAG[k]] = (
-                            _jpeg_extend(bits.receive(sz), sz) * qt[tq][k]
-                        )
-                        k += 1
-                    block = cmat.T @ coef.reshape(8, 8) @ cmat + 128
-                    y0 = (my * cv + by) * 8
-                    x0 = (mx * ch + bx) * 8
-                    planes[ci][y0 : y0 + 8, x0 : x0 + 8] = block
-
-    full = []
-    for (_cid, ch, cv, _tq), plane in zip(comps, planes):
-        if vmax % cv or hmax % ch:
-            # T.81 allows non-divisor factor mixes (e.g. 3:2); integer
-            # upsampling can't express them — raise the contract's
-            # NAMED error instead of a shape mismatch deep in np.stack
-            # (which on_error='null' would misreport as corrupt data)
-            raise ValueError(
-                "JPEG: unsupported sampling-factor combination "
-                f"(component {ch}x{cv} vs max {hmax}x{vmax}); only "
-                "integer-ratio subsampling is implemented"
-            )
-        up = np.repeat(np.repeat(plane, vmax // cv, 0), hmax // ch, 1)
-        full.append(up[:h, :w])
-    if len(full) == 1:
-        raster = np.clip(np.round(full[0]), 0, 255).astype(np.uint8)
-        return w, h, raster.tobytes()
-    y, cb, cr = full[0], full[1] - 128, full[2] - 128
-    rgb = np.stack(
-        [
-            y + 1.402 * cr,
-            y - 0.344136 * cb - 0.714136 * cr,
-            y + 1.772 * cb,
-        ],
-        axis=-1,
-    )
-    return w, h, np.clip(np.round(rgb), 0, 255).astype(np.uint8).tobytes()
-
-
-def jpeg_encode_baseline(
-    w, h, rgb=None, gray=None, subsample=1, dri=0, qtable=None, q16=False
-):
-    """Minimal baseline-JPEG encoder (stdlib + numpy): the documented
-    forward twin of :func:`_jpeg_decode`, used to synthesize REAL
-    JPEG fixture bytes (tests, tools/media_headroom.py). Orthonormal
-    FDCT, all-ones quant tables by default (dequant exact — round-trip
-    error is just coefficient rounding; pass ``qtable`` — 64 zigzag-
-    order ints — for lossy quantization, ``q16=True`` to emit it as a
-    16-bit Pq=1 DQT), fixed-length-8 canonical huffman
-    tables over the full DC/AC symbol alphabet, one MCU-interleaved
-    scan with optional restart intervals, 0xFF byte stuffing. ``rgb``
-    is h*w*3 bytes (``subsample=2`` applies 2x2 chroma subsampling);
-    ``gray`` is h*w luma bytes. Not a general encoder: no rate
-    control, no standard tables — a fixture synthesizer."""
-    import struct
-
-    import numpy as np
-
-    grid = np.arange(8)
-    cmat = np.cos((2 * grid[None, :] + 1) * grid[:, None] * np.pi / 16) * 0.5
-    cmat[0, :] *= 1 / np.sqrt(2)
-    qt = list(qtable) if qtable is not None else [1] * 64
-
-    if gray is not None:
-        px = np.frombuffer(gray, np.uint8).reshape(h, w).astype(np.float64)
-        planes = [px]
-        samp = [(1, 1)]
-    else:
-        px = np.frombuffer(rgb, np.uint8).reshape(h, w, 3).astype(np.float64)
-        r, g, b = px[..., 0], px[..., 1], px[..., 2]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = -0.168736 * r - 0.331264 * g + 0.5 * b + 128
-        cr = 0.5 * r - 0.418688 * g - 0.081312 * b + 128
-        if subsample == 2:
-            def down(p):
-                # pad odd dims by edge-replication, then 2x2 average —
-                # chroma dims become ceil(side/2) per the spec, and a
-                # 1-px side stays decodable (the old trim-to-even made
-                # an EMPTY chroma plane for side==1 and crashed)
-                if p.shape[0] % 2:
-                    p = np.vstack([p, p[-1:, :]])
-                if p.shape[1] % 2:
-                    p = np.hstack([p, p[:, -1:]])
-                return (p[0::2, 0::2] + p[1::2, 0::2]
-                        + p[0::2, 1::2] + p[1::2, 1::2]) / 4
-            planes = [y, down(cb), down(cr)]
-            samp = [(2, 2), (1, 1), (1, 1)]
-        else:
-            planes = [y, cb, cr]
-            samp = [(1, 1), (1, 1), (1, 1)]
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    padded = []
-    for (sh, sv), p in zip(samp, planes):
-        ph, pw = mcuy * 8 * sv, mcux * 8 * sh
-        pp = np.zeros((ph, pw))
-        pp[: p.shape[0], : p.shape[1]] = p
-        pp[p.shape[0]:, : p.shape[1]] = p[-1:, :]  # edge-replicate pad
-        pp[:, p.shape[1]:] = pp[:, p.shape[1] - 1 : p.shape[1]]
-        padded.append(pp)
-
-    dc_vals = bytes(range(12))
-    ac_vals = bytes(sorted({0x00, 0xF0} | {
-        (r << 4) | s for r in range(16) for s in range(1, 11)
-    }))
-
-    def canonical(values):
-        return {v: (8, i) for i, v in enumerate(values)}  # all length 8
-
-    enc_dc, enc_ac = canonical(dc_vals), canonical(ac_vals)
-
-    out = bytearray()
-    acc = [0, 0]  # bit accumulator, count
-
-    def put(code, nbits):
-        acc[0] = (acc[0] << nbits) | code
-        acc[1] += nbits
-        while acc[1] >= 8:
-            acc[1] -= 8
-            byte = (acc[0] >> acc[1]) & 0xFF
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)  # stuffing
-        acc[0] &= (1 << acc[1]) - 1
-
-    def put_val(v):
-        s = v if v >= 0 else -v
-        size = s.bit_length()
-        if v < 0:
-            v += (1 << size) - 1
-        return size, v
-
-    def flush():
-        if acc[1]:
-            put(((1 << (8 - acc[1])) - 1), 8 - acc[1])  # pad with 1s
-
-    pred = [0] * len(planes)
-    n_mcus = mcux * mcuy
-    for m in range(n_mcus):
-        if dri and m and m % dri == 0:
-            flush()
-            out.extend(bytes([0xFF, 0xD0 + ((m // dri - 1) % 8)]))
-            pred = [0] * len(planes)
-        my, mx = divmod(m, mcux)
-        for ci, ((sh, sv), plane) in enumerate(zip(samp, padded)):
-            for by in range(sv):
-                for bx in range(sh):
-                    y0, x0 = (my * sv + by) * 8, (mx * sh + bx) * 8
-                    blk = plane[y0 : y0 + 8, x0 : x0 + 8] - 128
-                    coef = cmat @ blk @ cmat.T
-                    zz = [
-                        int(round(coef.flat[_JPEG_ZIGZAG[k]] / qt[k]))
-                        for k in range(64)
-                    ]
-                    size, bitsv = put_val(zz[0] - pred[ci])
-                    pred[ci] = zz[0]
-                    put(*reversed(enc_dc[size]))
-                    put(bitsv, size)
-                    run = 0
-                    for k in range(1, 64):
-                        if zz[k] == 0:
-                            run += 1
-                            continue
-                        while run > 15:
-                            put(*reversed(enc_ac[0xF0]))
-                            run -= 16
-                        size, bitsv = put_val(zz[k])
-                        put(*reversed(enc_ac[(run << 4) | size]))
-                        put(bitsv, size)
-                        run = 0
-                    if run:
-                        put(*reversed(enc_ac[0x00]))
-    flush()
-    entropy = bytes(out)
-
-    def seg(marker, body):
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    def dht(tc, values):
-        counts = bytearray(16)
-        counts[7] = len(values)  # all codes length 8
-        return bytes([tc << 4]) + bytes(counts) + values
-
-    sof_comps = b"".join(
-        bytes([ci + 1, (sh << 4) | sv, 0]) for ci, (sh, sv) in enumerate(samp)
-    )
-    sos_comps = b"".join(bytes([ci + 1, 0]) for ci in range(len(samp)))
-    payload = bytes([0xFF, 0xD8])
-    if q16:  # Pq=1: 16-bit big-endian table entries
-        dqt_body = bytes([0x10]) + b"".join(struct.pack(">H", q) for q in qt)
-    else:
-        dqt_body = bytes([0]) + bytes(qt)
-    payload += seg(0xDB, dqt_body)
-    payload += seg(
-        0xC0, bytes([8]) + struct.pack(">HH", h, w)
-        + bytes([len(samp)]) + sof_comps
-    )
-    payload += seg(0xC4, dht(0, dc_vals)) + seg(0xC4, dht(1, ac_vals))
-    if dri:
-        payload += seg(0xDD, struct.pack(">H", dri))
-    payload += seg(0xDA, bytes([len(samp)]) + sos_comps + bytes([0, 63, 0]))
-    payload += entropy + bytes([0xFF, 0xD9])
-    return payload
-
-
-_GIF_SIGS = (b"GIF87a", b"GIF89a")
-
-
-def _gif_lzw_decode(min_code: int, data: bytes, n_pixels: int) -> bytearray:
-    """GIF-variant LZW (variable-width codes, LSB-first bit packing,
-    CLEAR/END control codes, max 12-bit codes — GIF89a spec appendix F).
-    Returns exactly ``n_pixels`` palette indices."""
-    clear, end = 1 << min_code, (1 << min_code) + 1
-    out = bytearray()
-
-    def fresh():
-        return {i: bytes([i]) for i in range(clear)}
-
-    table = fresh()
-    width, next_code, prev = min_code + 1, end + 1, None
-    acc = nbits = 0
-    for byte in data:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= width:
-            code = acc & ((1 << width) - 1)
-            acc >>= width
-            nbits -= width
-            if code == clear:
-                table, width, next_code, prev = fresh(), min_code + 1, end + 1, None
-                continue
-            if code == end:
-                if len(out) != n_pixels:
-                    raise ValueError(
-                        f"GIF LZW ended at {len(out)} of {n_pixels} pixels"
-                    )
-                return out
-            if prev is None:
-                entry = table[code]
-            elif code in table:
-                entry = table[code]
-                table[next_code] = table[prev] + entry[:1]
-                next_code += 1
-            elif code == next_code:  # the KwKwK case
-                entry = table[prev] + table[prev][:1]
-                table[next_code] = entry
-                next_code += 1
-            else:
-                raise ValueError(f"corrupt GIF LZW stream (code {code})")
-            out += entry
-            prev = code
-            if next_code == (1 << width) and width < 12:
-                width += 1
-            if len(out) >= n_pixels:
-                # some encoders omit the explicit END code
-                return out[:n_pixels]
-    raise ValueError("truncated GIF LZW stream")
-
-
-def _gif_decode(payload: bytes) -> tuple[int, int, bytes, int]:
-    """Corruption boundary — same contract as :func:`_jpeg_decode`."""
-    import struct as _struct
-
-    try:
-        return _gif_decode_impl(payload)
-    except (IndexError, KeyError, ZeroDivisionError, _struct.error) as e:
-        raise ValueError(
-            f"corrupt or truncated GIF payload ({type(e).__name__})"
-        ) from e
-
-
-def _gif_decode_impl(payload: bytes) -> tuple[int, int, bytes, int]:
-    """Decode a (possibly animated) GIF, stdlib-only: returns
-    ``(width, height, first_frame_rgb, n_frames)``. Interlaced frames
-    are de-interlaced (four-pass row scatter, GIF89a appendix E);
-    later frames are counted, not composited."""
-    import struct
-
-    if payload[:6] not in _GIF_SIGS:
-        raise ValueError("not a GIF payload")
-    w, h, packed = struct.unpack_from("<HHB", payload, 6)
-    i = 13
-    gct = b""
-    if packed & 0x80:
-        n = 3 * (2 << (packed & 0x07))
-        gct = payload[i : i + n]
-        i += n
-    n_frames, first_rgb = 0, b""
-    while i < len(payload):
-        b0 = payload[i]
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension: label + sub-blocks
-            i += 2
-            while payload[i] != 0:
-                i += 1 + payload[i]
-            i += 1
-            continue
-        if b0 != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{b0:02x}")
-        fx, fy, fw, fh, fpacked = struct.unpack_from("<HHHHB", payload, i + 1)
-        _check_pixels(fw, fh, "GIF")
-        i += 10
-        lct = gct
-        if fpacked & 0x80:
-            n = 3 * (2 << (fpacked & 0x07))
-            lct = payload[i : i + n]
-            i += n
-        interlaced = bool(fpacked & 0x40)
-        min_code = payload[i]
-        i += 1
-        chunks = []
-        while payload[i] != 0:
-            size = payload[i]
-            chunks.append(payload[i + 1 : i + 1 + size])
-            i += 1 + size
-        i += 1
-        n_frames += 1
-        if n_frames == 1:
-            if not lct:
-                raise ValueError("GIF frame has no color table")
-            import numpy as np
-
-            idx = np.frombuffer(
-                bytes(_gif_lzw_decode(min_code, b"".join(chunks), fw * fh)),
-                np.uint8,
-            ).reshape(fh, fw)
-            if interlaced:
-                # rows arrive in the four interlace passes (GIF89a
-                # appendix E): scatter them back to display order
-                order = (
-                    list(range(0, fh, 8))
-                    + list(range(4, fh, 8))
-                    + list(range(2, fh, 4))
-                    + list(range(1, fh, 2))
-                )
-                display = np.empty_like(idx)
-                display[order] = idx
-                idx = display
-            pal = np.frombuffer(lct, np.uint8).reshape(-1, 3)
-            first_rgb = pal[idx.reshape(-1)].tobytes()
-            w, h = fw, fh  # feature raster = first frame's own dims
-    if n_frames == 0:
-        raise ValueError("GIF payload contains no image data")
-    return w, h, first_rgb, n_frames
-
-
-def gif_encode(
-    w: int, h: int, indices: bytes, palette: list[tuple[int, int, int]],
-    n_frames: int = 1, interlaced: bool = False,
-) -> bytes:
-    """Minimal GIF89a encoder — the fixture-synthesis twin of
-    :func:`_gif_decode` (same role as :func:`jpeg_encode_baseline`).
-    Emits root codes only, with a CLEAR whenever the table would force
-    a width change — the classic "uncompressed GIF" stream, valid LZW
-    at a fixed ``min_code+1`` bit width. ``indices`` is one h*w frame
-    repeated ``n_frames`` times (enough to exercise frame counting)."""
-    import struct
-
-    if not 2 <= len(palette) <= 256:
-        raise ValueError("palette must hold 2..256 colors")
-    depth = max(2, (len(palette) - 1).bit_length())  # GIF min code size >= 2
-    clear, end = 1 << depth, (1 << depth) + 1
-    width = depth + 1
-
-    def lzw(idx: bytes) -> bytes:
-        bits, acc, nbits = bytearray(), 0, 0
-
-        def put(code):
-            nonlocal acc, nbits
-            acc |= code << nbits
-            nbits += width
-            while nbits >= 8:
-                bits.append(acc & 0xFF)
-                acc >>= 8
-                nbits -= 8
-
-        put(clear)
-        budget = (1 << width) - end - 2  # codes until width would grow
-        for k, v in enumerate(idx):
-            if k and k % max(1, budget) == 0:
-                put(clear)
-            put(v)
-        put(end)
-        if nbits:
-            bits.append(acc & 0xFF)
-        return bytes(bits)
-
-    pal = bytearray()
-    for r, g, b in palette:
-        pal += bytes([r, g, b])
-    pal += b"\x00" * (3 * (1 << depth) - len(pal))
-
-    if interlaced:
-        # stream rows in the four-pass interlace order; the decoder's
-        # scatter is the inverse permutation
-        order = (
-            list(range(0, h, 8))
-            + list(range(4, h, 8))
-            + list(range(2, h, 4))
-            + list(range(1, h, 2))
-        )
-        indices = b"".join(indices[r * w : (r + 1) * w] for r in order)
-
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (depth - 1), 0, 0)
-    out += pal
-    for _ in range(n_frames):
-        out += b"\x2c" + struct.pack(
-            "<HHHHB", 0, 0, w, h, 0x40 if interlaced else 0
-        )
-        out += bytes([depth])
-        stream = lzw(indices)
-        for off in range(0, len(stream), 255):
-            chunk = stream[off : off + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
-    out += b"\x3b"
-    return bytes(out)
+# Formats recognised by their file signature only, so that a payload
+# in one of them fails with a pointer to the seam rather than with the
+# PPM parser's "bad magic" error.
+_LIBRARY_SIGS = (
+    (b"\x89PNG\r\n\x1a\n", "PNG"),
+    (b"\xff\xd8", "JPEG"),
+    (b"GIF87a", "GIF"),
+    (b"GIF89a", "GIF"),
+)
 
 
 def _real_decode(payload: bytes, media_type: str) -> dict:
-    """Corruption boundary for the WHOLE real-decode dispatch: every
-    codec path (PNG's zlib inflate, PPM/WAV struct parses, arithmetic
-    on header-derived values) must surface malformed payloads as a
-    format-naming ValueError — never a bare zlib.error / struct.error
-    / IndexError / ZeroDivisionError that decode_media's
+    """Corruption boundary for the whole real-decode dispatch: a
+    malformed payload surfaces as a ValueError, never as a bare
+    struct.error / IndexError / ZeroDivisionError that decode_media's
     ``on_error="null"`` row isolation can't recognize."""
     import struct as _struct
-    import zlib as _zlib
 
     try:
         return _real_decode_impl(payload, media_type)
-    except (
-        IndexError,
-        KeyError,
-        ZeroDivisionError,
-        _struct.error,
-        _zlib.error,
-    ) as e:
+    except (IndexError, ZeroDivisionError, _struct.error) as e:
         raise ValueError(
             f"corrupt or truncated {media_type} payload "
             f"({type(e).__name__})"
@@ -1037,53 +271,30 @@ def _real_decode(payload: bytes, media_type: str) -> dict:
 
 
 def _real_decode_impl(payload: bytes, media_type: str) -> dict:
-    """Real decode path for self-describing formats, pure stdlib:
+    """Built-in real decode, pure stdlib:
 
     - ``image``: binary PPM/PGM (P6/P5) — header dims, raster-sampled
-      feature vector — 8-bit non-interlaced PNG (zlib inflate +
-      scanline de-filtering, :func:`_png_decode`) — baseline huffman
-      JPEG (:func:`_jpeg_decode`) — or GIF with animated frame
-      counting (:func:`_gif_decode`);
+      feature vector;
     - ``audio``: RIFF/WAVE PCM — ``width``=sample rate, ``height``=
       channels, ``n_frames``=samples per channel, feature sampled from
       the PCM data chunk;
-    - ``video``: a PPM-stream container (concatenated P6 frames, the
-      MJPEG idea without the JPEG) — per-frame dims from the first
-      header, ``n_frames`` by walking the stream.
+    - ``video``: a PPM-stream container (concatenated P6/P5 frames) —
+      dims and feature from the first frame, ``n_frames`` by walking
+      the stream one frame header at a time.
 
-    Formats that need real codec libraries (progressive JPEG/MP4/OGG)
-    are out of scope in this container — those payloads raise
-    ``ValueError`` with the library to install; the deterministic
-    ``fake=True`` path remains the oracle route for synthesized
-    fixtures.
+    Every other format raises ``ValueError``. PNG, JPEG and GIF are
+    matched by signature and name Pillow; pass its decode through
+    ``decode_media(decoder=...)``.
     """
     import struct
 
+    for sig, fmt in _LIBRARY_SIGS:
+        if payload.startswith(sig):
+            raise ValueError(
+                f"{fmt} payload: no built-in {fmt} codec; pass a Pillow "
+                "decode as decode_media(decoder=...)"
+            )
     if media_type == "image":
-        if payload[:8] == _PNG_SIG:
-            w, h, raster = _png_decode(payload)
-            return {
-                "width": w,
-                "height": h,
-                "n_frames": 1,
-                "feature": _sample_feature(raster, 255.0),
-            }
-        if payload[:2] == _JPEG_SIG:
-            w, h, raster = _jpeg_decode(payload)
-            return {
-                "width": w,
-                "height": h,
-                "n_frames": 1,
-                "feature": _sample_feature(raster, 255.0),
-            }
-        if payload[:6] in _GIF_SIGS:
-            w, h, raster, n_frames = _gif_decode(payload)
-            return {
-                "width": w,
-                "height": h,
-                "n_frames": n_frames,
-                "feature": _sample_feature(raster, 255.0),
-            }
         magic, w, h, maxval, off = _ppm_header(payload)
         if maxval > 255:
             # netpbm maxval > 255 means TWO bytes per sample — the
@@ -1126,27 +337,35 @@ def _real_decode_impl(payload: bytes, media_type: str) -> dict:
             "feature": _sample_feature(data, 255.0),
         }
     if media_type == "video":
-        magic, w, h, maxval, off = _ppm_header(payload)
-        if maxval > 255:
-            # 2-byte samples would halve frame_len and silently
-            # miscount frames — same named contract as the image path
-            raise ValueError(
-                f"netpbm stream: 16-bit maxval {maxval} unsupported "
-                "(1-byte samples only)"
-            )
-        frame_len = off + w * h * (3 if magic == "P6" else 1)
-        n_frames, pos = 0, 0
-        while pos + 2 <= len(payload) and payload[pos : pos + 2] in (b"P6", b"P5"):
-            n_frames += 1
-            pos += frame_len
+        # walk the stream frame by frame: each frame has its own header,
+        # whose length (comments, P6 vs P5) may differ from the first's;
+        # the first header is parsed unconditionally so a bad magic
+        # raises the named error
+        frames, pos = [], 0
+        while pos == 0 or payload[pos : pos + 2] in (b"P6", b"P5"):
+            magic, w, h, maxval, off = _ppm_header(payload, pos)
+            if maxval > 255:
+                # 2-byte samples would halve the frame length and
+                # miscount frames — same named contract as the image path
+                raise ValueError(
+                    f"netpbm stream: 16-bit maxval {maxval} unsupported "
+                    "(1-byte samples only)"
+                )
+            pos = off + w * h * (3 if magic == "P6" else 1)
+            if pos > len(payload):
+                raise ValueError(
+                    f"truncated PPM-stream frame {len(frames)}: "
+                    f"{len(payload) - off} of {pos - off} raster bytes"
+                )
+            frames.append((w, h, maxval, off, pos))
+        w, h, maxval, off, end = frames[0]
         return {
             "width": w,
             "height": h,
-            "n_frames": n_frames,
-            "feature": _sample_feature(payload[off:frame_len], float(maxval)),
+            "n_frames": len(frames),
+            "feature": _sample_feature(payload[off:end], float(maxval)),
         }
     raise ValueError(f"unknown media_type {media_type!r}")
-
 
 def decode_media(
     media: DataFrame,
@@ -1158,36 +377,30 @@ def decode_media(
     """Decode/feature-extract media payloads via ``mapInPandas``.
 
     Output follows ``FEATURE_SCHEMA``. The Arrow batch loop is the real
-    production shape; only the per-payload codec call is stubbed.
+    production shape; the per-payload codec call is pluggable.
     Pass ``pre_partitioned=True`` when the input already has a
     size-aware layout (e.g. straight out of :func:`fetch_media`) so the
     payload bytes don't cross a second exchange.
+
+    The codec: ``fake=True`` (default) is the deterministic md5 stand-in.
+    ``fake=False`` is the built-in stdlib decode of binary PPM/PGM
+    images, RIFF/WAVE audio and PPM-stream video; any other format
+    (PNG, JPEG, GIF, MP4, ...) raises ValueError.
+    ``decoder`` overrides both: a callable ``(payload: bytes,
+    media_type: str) -> {"width", "height", "n_frames", "feature"}``,
+    e.g. a Pillow decode, cloudpickled into the task closure exactly
+    like ``fetch_media``'s ``storage`` backend. It leaves the
+    partitioning, Arrow batching, schema and error policy unchanged.
 
     ``on_error``: ``"raise"`` (default) propagates a malformed
     payload's ValueError and fails the task — right for curated inputs
     where a bad byte stream means a broken upstream. ``"null"`` is the
     web-corpus posture: the row survives with NULL decode fields (the
-    same shape a dead pointer produces), so one corrupt JPEG among
-    100k payloads can't kill the job; count the NULLs downstream to
-    monitor decode health. Codec bugs still raise either way — only
-    ValueError (the codecs' documented malformed-payload signal) is
-    mapped to NULL.
-
-    ``decoder`` (round 13) is the CODEC SEAM — the scale boundary of
-    this module made pluggable: a callable ``(payload: bytes,
-    media_type: str) -> {"width", "height", "n_frames", "feature"}``
-    that replaces the built-in pure-Python codecs WITHOUT touching
-    the operator or its plan shape. The built-in JPEG path's huffman
-    entropy decode is sequential Python per payload (numpy IDCT
-    aside) — honest for fixtures, the bottleneck on a real image
-    corpus — so production drops a native codec (libjpeg-turbo via
-    PIL, cloudpickled into the task closure exactly like
-    ``fetch_media``'s ``storage`` backend) through this parameter and
-    keeps the partitioning, Arrow batching, schema, and error policy
-    unchanged. A custom decoder signals a malformed payload by
-    raising ValueError, which honors ``on_error`` like the built-ins;
-    throughput at realistic image sizes is measured in
-    tools/media_headroom.py (--decoder-seam) and docs/SCALE.md.
+    same shape a dead pointer produces), so one corrupt payload among
+    100k can't kill the job; count the NULLs downstream to monitor
+    decode health. Codec bugs still raise either way — only ValueError
+    (the documented malformed-payload signal, built-in or ``decoder``)
+    is mapped to NULL.
     """
     decode = decoder if decoder is not None else (
         _fake_decode if fake else _real_decode

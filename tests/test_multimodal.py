@@ -90,92 +90,6 @@ def test_real_decode_ppm_wav_video(spark):
     assert (out[3].width, out[3].height, out[3].n_frames) == (2, 2, 2)
 
 
-def _png(w, h, raster_rows, color_type=2, filters=None):
-    """Minimal real PNG encoder (stdlib only): 8-bit, non-interlaced.
-    ``raster_rows`` is a list of h rows of raw pixel bytes (w×channels
-    each); ``filters`` optionally assigns a PNG filter type per row —
-    the encoder applies the spec's forward transform so the decoder's
-    de-filtering is genuinely exercised."""
-    import struct
-    import zlib
-
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
-    bpp = channels
-    filters = filters or [0] * h
-    prev = bytes(w * channels)
-    scan = bytearray()
-    for row, f in zip(raster_rows, filters):
-        line = bytearray(row)
-        if f == 1:  # Sub: raw[x] - raw[x-bpp]
-            for x in range(len(line) - 1, bpp - 1, -1):
-                line[x] = (line[x] - row[x - bpp]) & 0xFF
-        elif f == 2:  # Up
-            for x in range(len(line)):
-                line[x] = (line[x] - prev[x]) & 0xFF
-        elif f == 4:  # Paeth
-            for x in range(len(line) - 1, -1, -1):
-                a = row[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                line[x] = (line[x] - pred) & 0xFF
-        scan += bytes([f]) + line
-        prev = row
-
-    def chunk(ctype, body):
-        return (
-            struct.pack(">I", len(body)) + ctype + body
-            + struct.pack(">I", zlib.crc32(ctype + body))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(scan)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_real_decode_png(spark):
-    """A real PNG byte stream (zlib-compressed IDAT, CRC'd chunks, all
-    of filters None/Sub/Up/Paeth across rows) decoded through
-    decode_media(fake=False) — round 3's largest decode caveat retired
-    with real bytes, not a fake (round-3 verdict item)."""
-    from retail_sales_data_pipeline_spark.operators.multimodal import _png_decode
-
-    w, h = 4, 4
-    rows = [bytes((x * 17 + y * 5 + c) & 0xFF for x in range(w) for c in range(3))
-            for y in range(h)]
-    png = _png(w, h, rows, color_type=2, filters=[0, 1, 2, 4])
-    # unit: de-filtered raster must equal the original rows exactly
-    gw, gh, raster = _png_decode(png)
-    assert (gw, gh) == (w, h) and raster == b"".join(rows)
-
-    # end to end through the Arrow mapInPandas path, beside a grayscale
-    gray = _png(3, 2, [bytes([0, 128, 255]), bytes([10, 20, 30])],
-                color_type=0, filters=[0, 2])
-    media = spark.createDataFrame(
-        [(1, "image", png, "t"), (2, "image", gray, "t")], MEDIA_SCHEMA
-    )
-    out = {r.media_id: r for r in decode_media(media, fake=False).collect()}
-    assert (out[1].width, out[1].height, out[1].n_frames) == (4, 4, 1)
-    assert (out[2].width, out[2].height) == (3, 2)
-    assert len(out[1].feature) == 8 and all(0.0 <= f <= 1.0 for f in out[1].feature)
-    # feature values come from the DE-FILTERED raster, normalized /255
-    flat = b"".join(rows)
-    step = max(1, len(flat) // 8)
-    expect = [round(flat[min(i * step, len(flat) - 1)] / 255.0, 6) for i in range(8)]
-    assert list(out[1].feature) == pytest.approx(expect)
-
-    # truncated raster must fail loudly, not return garbage
-    bad = _png(8, 8, [bytes(24)] * 2)  # claims 8x8, carries 2 rows
-    with pytest.raises(ValueError, match="truncated"):
-        _png_decode(bad)
-
-
 def test_frame_sample(spark, media):
     decoded = decode_media(media, fake=True)
     frames = frame_sample(decoded, every_n=30)
@@ -309,353 +223,15 @@ def test_fetch_media_io_errors_fail_the_task(spark, tmp_path):
         fetch_media(spark.createDataFrame(rows), fake=False).collect()
 
 
-from retail_sales_data_pipeline_spark.operators.multimodal import (  # noqa: E402
-    jpeg_encode_baseline as _jpeg,
-)
-
-
-def test_real_decode_jpeg(spark):
-    """Real baseline-JPEG bytes (FDCT + huffman + stuffing + restart
-    markers, encoded by the forward twin above) decoded through
-    _jpeg_decode and decode_media(fake=False) — the round-4 verdict's
-    last fake-decode caveat retired for the most common real format."""
-    import numpy as np
-
-    from retail_sales_data_pipeline_spark.operators.multimodal import _jpeg_decode
-
-    # grayscale gradient, 2 MCUs wide: all-ones quant makes the only
-    # loss the integer rounding of DCT coefficients
-    w, h = 16, 8
-    gray = bytes((x * 13 + y * 7) % 256 for y in range(h) for x in range(w))
-    gw, gh, raster = _jpeg_decode(_jpeg(w, h, gray=gray))
-    assert (gw, gh) == (w, h)
-    err = np.abs(
-        np.frombuffer(raster, np.uint8).astype(int)
-        - np.frombuffer(gray, np.uint8).astype(int)
-    )
-    assert err.max() <= 2, f"gray round-trip max err {err.max()}"
-
-    # restart intervals: DRI=1 forces an RST marker between every MCU
-    gw, gh, raster_r = _jpeg_decode(_jpeg(w, h, gray=gray, dri=1))
-    assert raster_r == raster  # restart path decodes identically
-
-    # color, 2x2 chroma subsampling; 2x2-constant color blocks make the
-    # subsample+nearest-upsample path lossless so only DCT rounding and
-    # colorspace rounding remain
-    cw, ch = 16, 16
-    rgb = bytearray()
-    for y in range(ch):
-        for x in range(cw):
-            bx, by = x // 2, y // 2
-            rgb += bytes([(bx * 40 + by * 10) % 256, (bx * 20) % 256, 200])
-    jc = _jpeg(cw, ch, rgb=bytes(rgb), subsample=2)
-    gw, gh, rc = _jpeg_decode(jc)
-    assert (gw, gh) == (cw, ch)
-    errc = np.abs(
-        np.frombuffer(rc, np.uint8).astype(int).reshape(ch, cw, 3)
-        - np.frombuffer(bytes(rgb), np.uint8).astype(int).reshape(ch, cw, 3)
-    )
-    assert errc.max() <= 4, f"color round-trip max err {errc.max()}"
-
-    # end to end through the Arrow mapInPandas path
-    media = spark.createDataFrame([(1, "image", jc, "t")], MEDIA_SCHEMA)
-    out = decode_media(media, fake=False).collect()[0]
-    assert (out.width, out.height, out.n_frames) == (cw, ch, 1)
-    assert len(out.feature) == 8 and all(0.0 <= f <= 1.0 for f in out.feature)
-
-    # progressive (SOF2) must raise with guidance, not mis-decode
-    prog = jc.replace(bytes([0xFF, 0xC0]), bytes([0xFF, 0xC2]), 1)
-    with pytest.raises(ValueError, match="baseline"):
-        _jpeg_decode(prog)
-    # truncated entropy data fails loudly
-    with pytest.raises(ValueError, match="truncated|marker"):
-        _jpeg_decode(jc[: len(jc) // 2])
-
-
-def test_jpeg_roundtrip_property():
-    """Property: any 8-bit grayscale image (1..3 blocks per side, odd
-    sizes forcing edge padding) survives the encode->decode round trip
-    within DCT integer-rounding tolerance. Hypothesis hunts the corner
-    cases a hand-picked gradient misses (flat blocks, extreme values,
-    non-multiple-of-8 dims)."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-    from hypothesis.extra.numpy import arrays
-
-    from retail_sales_data_pipeline_spark.operators.multimodal import _jpeg_decode
-
-    @settings(max_examples=25, deadline=None)
-    @given(
-        w=st.integers(min_value=1, max_value=20),
-        h=st.integers(min_value=1, max_value=20),
-        data=st.data(),
-    )
-    def prop(w, h, data):
-        px = data.draw(
-            arrays(np.uint8, (h, w), elements=st.integers(0, 255))
-        )
-        gw, gh, raster = _jpeg_decode(_jpeg(w, h, gray=px.tobytes()))
-        assert (gw, gh) == (w, h)
-        got = np.frombuffer(raster, np.uint8).reshape(h, w).astype(int)
-        err = np.abs(got - px.astype(int)).max()
-        # all-ones quant: error is DCT coefficient rounding only; the
-        # worst case over a block is bounded by sum of 64 half-unit
-        # coefficient errors through the orthonormal IDCT (~4 in
-        # practice for adversarial noise images)
-        assert err <= 6, f"{w}x{h} round-trip max err {err}"
-
-    prop()
-
-
-def test_jpeg_nonuniform_and_16bit_quant_tables():
-    """Pin the dequantization branches the all-ones tests can't see:
-    a NON-uniform zigzag-order quant table (wrong zigzag<->natural
-    indexing would explode the error) and the 16-bit Pq=1 DQT parse."""
-    import numpy as np
-
-    from retail_sales_data_pipeline_spark.operators.multimodal import _jpeg_decode
-
-    w, h = 16, 16
-    gray = bytes((x * 13 + y * 7) % 256 for y in range(h) for x in range(w))
-    # zigzag-position-dependent table: DC fine, AC coarser with k
-    qt = [1] + [1 + (k % 4) for k in range(1, 64)]
-    for q16 in (False, True):
-        payload = _jpeg(w, h, gray=gray, qtable=qt, q16=q16)
-        gw, gh, raster = _jpeg_decode(payload)
-        assert (gw, gh) == (w, h)
-        err = np.abs(
-            np.frombuffer(raster, np.uint8).astype(int)
-            - np.frombuffer(gray, np.uint8).astype(int)
-        )
-        # quantization steps <= 4: worst-case reconstruction error is a
-        # few units; a zigzag indexing mismatch between encoder and
-        # decoder would produce errors in the tens to hundreds
-        assert err.max() <= 8, f"q16={q16} max err {err.max()}"
-
-
-def test_real_decode_gif(spark):
-    """GIF87a/89a LZW decode (stdlib): exact round-trip through the
-    palette (LZW is lossless), animated frame counting, interlace
-    rejection, and the Arrow decode path end-to-end."""
-    import numpy as np
-
-    from retail_sales_data_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        _gif_decode,
-        decode_media,
-        gif_encode,
-    )
-
-    w, h = 13, 9
-    palette = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (17, 34, 51)]
-    indices = bytes((x + y) % len(palette) for y in range(h) for x in range(w))
-    payload = gif_encode(w, h, indices, palette)
-
-    gw, gh, rgb, n_frames = _gif_decode(payload)
-    assert (gw, gh, n_frames) == (w, h, 1)
-    want = b"".join(bytes(palette[v]) for v in indices)
-    assert rgb == want  # lossless: byte-exact through LZW + palette
-
-    # a wide image exercises multi-chunk sub-block framing and the
-    # periodic CLEAR codes of the fixed-width encoder
-    w2, h2 = 200, 31
-    idx2 = bytes((x * 7 + y * 3) % len(palette) for y in range(h2) for x in range(w2))
-    gw, gh, rgb2, _ = _gif_decode(gif_encode(w2, h2, idx2, palette))
-    assert (gw, gh) == (w2, h2)
-    assert rgb2 == b"".join(bytes(palette[v]) for v in idx2)
-
-    # animated: frames counted, first frame decoded
-    _, _, rgb3, n3 = _gif_decode(gif_encode(w, h, indices, palette, n_frames=3))
-    assert n3 == 3 and rgb3 == want
-
-    # interlaced: encoder streams rows in four-pass order, decoder
-    # scatters them back — display raster must equal the plain one
-    # (h=9 exercises all four passes: rows 0,8 | 4 | 2,6 | 1,3,5,7)
-    _, _, rgb_i, _ = _gif_decode(
-        gif_encode(w, h, indices, palette, interlaced=True)
-    )
-    assert rgb_i == want
-
-    # 256-color palette exercises 8-bit depth (min code size 8)
-    big_pal = [(i, 255 - i, i ^ 0x5A) for i in range(256)]
-    idx4 = bytes((x * 11 + y * 5) % 256 for y in range(h) for x in range(w))
-    _, _, rgb4, _ = _gif_decode(gif_encode(w, h, idx4, big_pal))
-    assert rgb4 == b"".join(bytes(big_pal[v]) for v in idx4)
-
-    # through the Arrow mapInPandas path
-    df = spark.createDataFrame(
-        [(1, "image", bytearray(payload), "synth://gif")], MEDIA_SCHEMA
-    )
-    row = decode_media(df, fake=False).collect()[0]
-    assert (row.width, row.height, row.n_frames) == (w, h, 1)
-    assert row.n_bytes == len(payload)
-    got = np.array(row.feature)
-    assert got.shape == (8,) and np.all((got >= 0) & (got <= 1))
-
-
-def test_gif_roundtrip_property():
-    """Property: ANY palette image (1..24 px sides, 2..256 colors,
-    arbitrary index raster, interlaced or not) survives encode->decode
-    byte-exactly — LZW is lossless, so equality is exact, making this a
-    sharper oracle than the JPEG tolerance check. Hypothesis hunts the
-    sub-block/bit-packing corners (1-px rows, code widths 3..9,
-    chunk-boundary splits)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from retail_sales_data_pipeline_spark.operators.multimodal import (
-        _gif_decode,
-        gif_encode,
-    )
-
-    @settings(max_examples=30, deadline=None)
-    @given(
-        w=st.integers(min_value=1, max_value=24),
-        h=st.integers(min_value=1, max_value=24),
-        n_colors=st.integers(min_value=2, max_value=256),
-        interlaced=st.booleans(),
-        data=st.data(),
-    )
-    def prop(w, h, n_colors, interlaced, data):
-        palette = [
-            ((37 * i) % 256, (91 * i) % 256, (151 * i) % 256)
-            for i in range(n_colors)
-        ]
-        indices = bytes(
-            data.draw(
-                st.lists(
-                    st.integers(min_value=0, max_value=n_colors - 1),
-                    min_size=w * h,
-                    max_size=w * h,
-                )
-            )
-        )
-        payload = gif_encode(w, h, indices, palette, interlaced=interlaced)
-        gw, gh, rgb, n_frames = _gif_decode(payload)
-        assert (gw, gh, n_frames) == (w, h, 1)
-        assert rgb == b"".join(bytes(palette[v]) for v in indices)
-
-    prop()
-
-
-def test_codec_corruption_boundaries():
-    """The documented contract: malformed payloads raise ValueError
-    naming the format — never a bare IndexError/KeyError from deep in
-    the bit readers (which would kill a Spark task with no context)."""
-    import pytest as _pytest
-
-    from retail_sales_data_pipeline_spark.operators.multimodal import (
-        _gif_decode,
-        _jpeg_decode,
-        gif_encode,
-    )
-
-    palette = [(255, 0, 0), (0, 255, 0)]
-    gif = gif_encode(6, 4, bytes([0, 1] * 12), palette)
-    jpg = _jpeg(8, 8, gray=bytes(range(64)))
-
-    # truncations at every prefix length must yield ValueError (a cut
-    # that removes ONLY the trailing EOI/trailer marker leaves a
-    # complete scan and legitimately decodes — skip the last 2 bytes)
-    for payload, decode in ((jpg, _jpeg_decode), (gif, _gif_decode)):
-        for cut in range(2, len(payload) - 2, 7):
-            with _pytest.raises(ValueError):
-                decode(payload[:cut])
-
-    # JPEG ending in a dangling 0xFF fill byte (the marker-align loop
-    # used to read past the end)
-    with _pytest.raises(ValueError):
-        _jpeg_decode(jpg[: len(jpg) // 2] + b"\xff")
-
-    # GIF frame index beyond the palette (numpy fancy-index territory)
-    bad_idx = bytearray(gif_encode(2, 2, bytes([0, 1, 1, 0]), palette))
-    with _pytest.raises(ValueError):
-        # corrupt the LZW stream mid-data
-        _gif_decode(bytes(bad_idx[:-6]) + b"\xff\xff\xff" + bytes(bad_idx[-3:]))
-
-
-def test_jpeg_rejects_cmyk_component_count():
-    """4-component (Adobe CMYK/YCCK) SOF0 must be rejected loudly, not
-    silently decoded through the 3-component YCbCr formula."""
-    import struct
-
-    import pytest as _pytest
-
-    from retail_sales_data_pipeline_spark.operators.multimodal import (
-        _jpeg_decode,
-    )
-
-    payload = bytearray(_jpeg(8, 8, gray=bytes(range(64))))
-    # find SOF0, rewrite Nf=1 -> 4 with four component specs
-    i = payload.index(bytes([0xFF, 0xC0]))
-    (seglen,) = struct.unpack(">H", payload[i + 2 : i + 4])
-    h, w = struct.unpack(">HH", payload[i + 5 : i + 9])
-    comps = b"".join(bytes([cid, 0x11, 0]) for cid in (1, 2, 3, 4))
-    new_body = bytes([8]) + struct.pack(">HH", h, w) + bytes([4]) + comps
-    payload[i + 2 : i + 2 + seglen] = (
-        struct.pack(">H", len(new_body) + 2) + new_body
-    )
-    with _pytest.raises(ValueError, match="CMYK"):
-        _jpeg_decode(bytes(payload))
-
-
-def test_jpeg_subsampled_one_pixel_sides():
-    """subsample=2 with a 1-px dimension must encode/decode, not crash
-    on an empty chroma plane (the old trim-to-even bug)."""
-    import numpy as np
-
-    from retail_sales_data_pipeline_spark.operators.multimodal import (
-        _jpeg_decode,
-    )
-
-    for w, h in ((4, 1), (1, 4), (1, 1), (5, 3)):
-        rgb = bytes((x * 31 + y * 17 + c * 11) % 256
-                    for y in range(h) for x in range(w) for c in range(3))
-        gw, gh, raster = _jpeg_decode(_jpeg(w, h, rgb=rgb, subsample=2))
-        assert (gw, gh) == (w, h)
-        err = np.abs(
-            np.frombuffer(raster, np.uint8).astype(int)
-            - np.frombuffer(rgb, np.uint8).astype(int)
-        )
-        # chroma is quartered; luma dominates — loose but crash-proof
-        assert err.mean() < 40
-
-
-def test_jpeg_zero_sampling_factor_raises_valueerror():
-    """A corrupt SOF with a zero H/V sampling factor must hit the
-    corruption boundary (ZeroDivisionError class), not escape as a bare
-    arithmetic error."""
-    import pytest as _pytest
-
-    from retail_sales_data_pipeline_spark.operators.multimodal import (
-        _jpeg_decode,
-    )
-
-    payload = bytearray(_jpeg(8, 8, gray=bytes(range(64))))
-    i = payload.index(bytes([0xFF, 0xC0]))
-    payload[i + 2 + 5 + 3] = 0x00  # component 1's H/V byte -> 0/0
-    with _pytest.raises(ValueError, match="JPEG"):
-        _jpeg_decode(bytes(payload))
-
-
 def test_decode_media_on_error_null_isolates_bad_rows(spark):
     """on_error='null': one corrupt payload among good ones survives as
     a NULL-decode row instead of failing the task; on_error='raise'
     (default) still propagates."""
-    import pytest as _pytest
-
-    from retail_sales_data_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-        gif_encode,
-    )
-
-    good = gif_encode(4, 4, bytes(16), [(0, 0, 0), (255, 255, 255)])
+    good = _p6(4, 4, bytes(range(48)))
     df = spark.createDataFrame(
         [
             (1, "image", bytearray(good), "s"),
-            (2, "image", bytearray(b"GIF89a\x00trunc"), "s"),
+            (2, "image", bytearray(good[:12]), "s"),  # cut inside the header
             (3, "image", None, "s"),
         ],
         MEDIA_SCHEMA,
@@ -666,108 +242,106 @@ def test_decode_media_on_error_null_isolates_bad_rows(spark):
     assert rows[2].n_bytes == 12  # payload length still reported
     assert rows[3].n_bytes is None  # dead pointer keeps its shape
 
-    with _pytest.raises(Exception):  # Py4J wraps the task's ValueError
+    with pytest.raises(Exception, match="truncated PPM header"):
         decode_media(df, fake=False).collect()
 
-    with _pytest.raises(ValueError, match="on_error"):
+    with pytest.raises(ValueError, match="on_error"):
         decode_media(df, on_error="bogus")
-
-
-def test_codec_dimension_and_precision_guards():
-    """Adversarial headers must be rejected BEFORE any big allocation:
-    implausible declared dimensions (a 200-byte payload claiming
-    65535x65535 would drive a multi-GB plane/palette allocation — an
-    OOM kill is not catchable, so on_error='null' could not contain
-    it), 12-bit sample precision (would silently decode to garbage
-    through the 8-bit level-shift), and a PNG whose inflate output is
-    bounded to the declared raster size."""
-    import struct
-    import zlib
-
-    import pytest as _pytest
-
-    from retail_sales_data_pipeline_spark.operators.multimodal import (
-        _gif_decode,
-        _jpeg_decode,
-        _png_decode,
-        gif_encode,
-    )
-
-    # JPEG: rewrite SOF dims to 65535x65535
-    jpg = bytearray(_jpeg(8, 8, gray=bytes(range(64))))
-    i = jpg.index(bytes([0xFF, 0xC0]))
-    jpg[i + 5 : i + 9] = struct.pack(">HH", 65535, 65535)
-    with _pytest.raises(ValueError, match="implausible"):
-        _jpeg_decode(bytes(jpg))
-
-    # JPEG: 12-bit precision flag
-    jpg = bytearray(_jpeg(8, 8, gray=bytes(range(64))))
-    i = jpg.index(bytes([0xFF, 0xC0]))
-    jpg[i + 4] = 12
-    with _pytest.raises(ValueError, match="precision"):
-        _jpeg_decode(bytes(jpg))
-
-    # GIF: frame descriptor claiming 65535x65535
-    gif = bytearray(gif_encode(4, 4, bytes(16), [(0, 0, 0), (1, 1, 1)]))
-    i = gif.index(0x2C, 13)
-    gif[i + 5 : i + 9] = struct.pack("<HH", 65535, 65535)
-    with _pytest.raises(ValueError, match="implausible"):
-        _gif_decode(bytes(gif))
-
-    # PNG: IHDR claiming 1e9 pixels
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body)))
-    big = (b"\x89PNG\r\n\x1a\n"
-           + chunk(b"IHDR", struct.pack(">IIBBBBB", 100000, 100000, 8, 0, 0, 0, 0))
-           + chunk(b"IDAT", zlib.compress(b"\x00"))
-           + chunk(b"IEND", b""))
-    with _pytest.raises(ValueError, match="implausible"):
-        _png_decode(big)
-
-    # PNG: decompression bomb with small declared dims — inflate is
-    # bounded to the declared raster, so the oversized stream just
-    # fails the truncation check instead of materializing gigabytes
-    bomb = (b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(b"\x00" * (50 * 1024 * 1024)))
-            + chunk(b"IEND", b""))
-    gw, gh, raster = _png_decode(bomb)  # first 2x2 of the zeros decode fine
-    assert (gw, gh) == (2, 2) and len(raster) == 4
 
 
 def test_real_decode_boundary_covers_all_formats(spark):
     """on_error='null' must isolate malformed payloads of EVERY format
-    the dispatch reaches — corrupt PNG IDAT (zlib.error), truncated WAV
-    fmt chunk (struct.error), and a P5 header with maxval 0
-    (ZeroDivisionError in feature scaling) all become NULL-decode rows
-    now that the corruption boundary wraps the whole dispatch."""
+    the dispatch reaches — a truncated WAV fmt chunk (struct.error) and
+    a P5 header with maxval 0 (ZeroDivisionError in feature scaling)
+    become NULL-decode rows because the corruption boundary wraps the
+    whole dispatch, and PNG/JPEG/GIF payloads, which have no built-in
+    codec, are refused by signature with a pointer to the seam."""
     import struct
-    import zlib
 
-    from retail_sales_data_pipeline_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        decode_media,
-    )
+    from retail_sales_data_pipeline_spark.operators.multimodal import _real_decode
 
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body)))
-    bad_png = (b"\x89PNG\r\n\x1a\n"
-               + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 0))
-               + chunk(b"IDAT", b"\x01\x02\x03not-zlib")
-               + chunk(b"IEND", b""))
+    png = b"\x89PNG\r\n\x1a\n" + bytes(17)
+    jpeg = b"\xff\xd8\xff\xe0" + bytes(16)
+    gif = b"GIF89a" + bytes(7)
     bad_wav = b"RIFF" + struct.pack("<I", 20) + b"WAVE" + b"fmt " + struct.pack("<I", 16) + b"\x01"
     bad_ppm = b"P5\n4 4\n0\n" + bytes(16)  # maxval 0 -> div by zero
 
+    for payload in (png, jpeg, gif):
+        for media_type in ("image", "video"):
+            with pytest.raises(ValueError, match=r"Pillow.*decoder="):
+                _real_decode(payload, media_type)
+
     df = spark.createDataFrame(
-        [(1, "image", bytearray(bad_png), "s"),
-         (2, "audio", bytearray(bad_wav), "s"),
-         (3, "image", bytearray(bad_ppm), "s")],
+        [(1, "image", bytearray(png), "s"),
+         (2, "image", bytearray(jpeg), "s"),
+         (3, "image", bytearray(gif), "s"),
+         (4, "audio", bytearray(bad_wav), "s"),
+         (5, "image", bytearray(bad_ppm), "s")],
         MEDIA_SCHEMA,
     )
     rows = {r.media_id: r for r in decode_media(df, fake=False, on_error="null").collect()}
-    assert all(rows[i].width is None and rows[i].feature is None for i in (1, 2, 3))
+    assert sorted(rows) == [1, 2, 3, 4, 5]
+    assert all(r.width is None and r.feature is None for r in rows.values())
+    with pytest.raises(Exception, match="Pillow"):
+        decode_media(df.where("media_id = 2"), fake=False).collect()
+
+
+def test_real_decode_video_walks_each_frame_header(spark):
+    """A PPM stream is walked one frame at a time with each frame's own
+    header: frames whose headers differ in length (a comment on the
+    first, P6 then P5) are all counted, and a truncated trailing frame
+    is a malformed payload, not an extra frame."""
+    from retail_sales_data_pipeline_spark.operators.multimodal import _real_decode
+
+    plain = b"P6\n2 2\n255\n" + bytes(12)
+    mixed = b"P6\n# first\n2 2\n255\n" + bytes(12) + plain + plain
+    p6_p5 = plain + b"P5\n2 2\n255\n" + bytes(4) + plain
+    bare_tail = plain + b"P6"
+    cut_raster = plain + plain + plain[:-7]
+    for payload in (bare_tail, cut_raster):
+        with pytest.raises(ValueError, match="truncated"):
+            _real_decode(payload, "video")
+
+    df = spark.createDataFrame(
+        [(1, "video", bytearray(mixed), "s"),
+         (2, "video", bytearray(p6_p5), "s"),
+         (3, "video", bytearray(bare_tail), "s"),
+         (4, "video", bytearray(cut_raster), "s")],
+        MEDIA_SCHEMA,
+    )
+    rows = {r.media_id: r for r in decode_media(df, fake=False, on_error="null").collect()}
+    assert (rows[1].width, rows[1].height, rows[1].n_frames) == (2, 2, 3)
+    assert rows[2].n_frames == 3
+    for i in (3, 4):
+        assert rows[i].n_frames is None and rows[i].feature is None
+        assert rows[i].n_bytes == len(bare_tail if i == 3 else cut_raster)
+    with pytest.raises(Exception, match="truncated"):
+        decode_media(df.where("media_id = 4"), fake=False).collect()
+
+
+@pytest.mark.parametrize(
+    "header, message",
+    [(b"65535 65535\n255\n", "implausible"), (b"2 2\n65535\n", "16-bit")],
+)
+def test_real_decode_netpbm_guards(spark, header, message):
+    """A netpbm header is outside input: declared dimensions past the
+    pixel cap and 16-bit maxvals (2-byte samples the 1-byte raster walk
+    would misread) raise a named ValueError on the image and the video
+    path, for P6 and P5 alike, and become NULL rows under
+    on_error='null'."""
+    payloads = [m + b"\n" + header + bytes(24) for m in (b"P6", b"P5")]
+    df = spark.createDataFrame(
+        [(i, t, bytearray(p), "s")
+         for i, (t, p) in enumerate(
+             (t, p) for t in ("image", "video") for p in payloads)],
+        MEDIA_SCHEMA,
+    )
+    rows = decode_media(df, fake=False, on_error="null").collect()
+    assert len(rows) == 4
+    assert all(r.width is None and r.n_frames is None and r.n_bytes for r in rows)
+    for i in range(4):
+        with pytest.raises(Exception, match=message):
+            decode_media(df.where(f"media_id = {i}"), fake=False).collect()
 
 
 def test_decoder_seam_swaps_codec_without_touching_operator(spark, media):
