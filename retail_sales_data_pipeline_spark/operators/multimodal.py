@@ -205,10 +205,13 @@ def _check_pixels(w: int, h: int, fmt: str) -> None:
         )
 
 
-def _ppm_header(payload: bytes, start: int = 0) -> tuple[str, int, int, int, int]:
-    """Parse a binary PPM/PGM (P6/P5) header at ``start``: returns
-    (magic, width, height, maxval, data_offset). Whitespace/comment
-    handling per the netpbm spec."""
+def _ppm_header(payload: bytes, start: int = 0) -> tuple[int, int, int, int, int]:
+    """Parse a binary PPM/PGM (P6/P5) frame at ``start``: returns
+    (width, height, maxval, raster_offset, raster_end). Whitespace/
+    comment handling per the netpbm spec. Raises a named ValueError
+    for implausible dims, a maxval outside netpbm's 1..65535, a 16-bit
+    maxval (2-byte samples the 1-byte raster walk would misread) and a
+    raster shorter than the header declares."""
     magic = payload[start : start + 2].decode("ascii", errors="replace")
     if magic not in ("P6", "P5"):
         raise ValueError(f"not a binary PPM/PGM payload (magic={magic!r})")
@@ -231,7 +234,20 @@ def _ppm_header(payload: bytes, start: int = 0) -> tuple[str, int, int, int, int
     i += 1  # single whitespace after maxval, then raster
     w, h, maxval = fields
     _check_pixels(w, h, magic)
-    return magic, w, h, maxval, i
+    if not 0 < maxval < 65536:
+        raise ValueError(f"{magic}: maxval {maxval} outside 1..65535")
+    if maxval > 255:
+        raise ValueError(
+            f"{magic}: 16-bit maxval {maxval} unsupported (1-byte "
+            "samples only); rescale or use a full imaging library"
+        )
+    end = i + w * h * (3 if magic == "P6" else 1)
+    if end > len(payload):
+        raise ValueError(
+            f"truncated {magic} raster at byte {start}: "
+            f"{len(payload) - i} of {end - i} bytes"
+        )
+    return w, h, maxval, i, end
 
 
 def _sample_feature(data: bytes, norm: float, k: int = 8) -> list[float]:
@@ -257,13 +273,13 @@ _LIBRARY_SIGS = (
 def _real_decode(payload: bytes, media_type: str) -> dict:
     """Corruption boundary for the whole real-decode dispatch: a
     malformed payload surfaces as a ValueError, never as a bare
-    struct.error / IndexError / ZeroDivisionError that decode_media's
+    struct.error / IndexError that decode_media's
     ``on_error="null"`` row isolation can't recognize."""
     import struct as _struct
 
     try:
         return _real_decode_impl(payload, media_type)
-    except (IndexError, ZeroDivisionError, _struct.error) as e:
+    except (IndexError, _struct.error) as e:
         raise ValueError(
             f"corrupt or truncated {media_type} payload "
             f"({type(e).__name__})"
@@ -295,15 +311,7 @@ def _real_decode_impl(payload: bytes, media_type: str) -> dict:
                 "decode as decode_media(decoder=...)"
             )
     if media_type == "image":
-        magic, w, h, maxval, off = _ppm_header(payload)
-        if maxval > 255:
-            # netpbm maxval > 255 means TWO bytes per sample — the
-            # 1-byte raster walk below would read half-samples; raise
-            # the named error instead of emitting near-zero features
-            raise ValueError(
-                f"netpbm: 16-bit maxval {maxval} unsupported (1-byte "
-                "samples only); rescale or use a full imaging library"
-            )
+        w, h, maxval, off, _ = _ppm_header(payload)
         return {
             "width": w,
             "height": h,
@@ -343,21 +351,8 @@ def _real_decode_impl(payload: bytes, media_type: str) -> dict:
         # raises the named error
         frames, pos = [], 0
         while pos == 0 or payload[pos : pos + 2] in (b"P6", b"P5"):
-            magic, w, h, maxval, off = _ppm_header(payload, pos)
-            if maxval > 255:
-                # 2-byte samples would halve the frame length and
-                # miscount frames — same named contract as the image path
-                raise ValueError(
-                    f"netpbm stream: 16-bit maxval {maxval} unsupported "
-                    "(1-byte samples only)"
-                )
-            pos = off + w * h * (3 if magic == "P6" else 1)
-            if pos > len(payload):
-                raise ValueError(
-                    f"truncated PPM-stream frame {len(frames)}: "
-                    f"{len(payload) - off} of {pos - off} raster bytes"
-                )
-            frames.append((w, h, maxval, off, pos))
+            frames.append(_ppm_header(payload, pos))
+            pos = frames[-1][-1]
         w, h, maxval, off, end = frames[0]
         return {
             "width": w,

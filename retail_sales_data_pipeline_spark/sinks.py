@@ -313,8 +313,8 @@ _SHARD_SIZE = 4_000
 _SHARD_CACHE: dict[tuple[str, str], list[dict]] = {}
 _SHARD_CACHE_MAX = 512
 
-# unified-schema cache for mixed-schema tables, keyed by
-# (table path, schema_epoch) — see insert_into's gate
+# merged-footer schemas of pre-r11 mixed-schema tables, keyed by
+# (table path, schema_epoch) — see _table_schema
 _MIXED_SCHEMA_CACHE: dict = {}
 
 
@@ -706,9 +706,8 @@ def _live_state(
         # the DML resolve prune safely: reads supply the schema
         # explicitly (no footer merge, no schema loss), entry/shard
         # `cols` make absent columns a pruning fact, and every
-        # schema-bearing consumer of the resolve (the insert gate,
-        # _table_columns, _unified_schema_json's base) reads the root
-        # record instead of needing all physical schemas in hand.
+        # schema-bearing consumer of the resolve (_table_schema) reads
+        # the root record instead of needing all physical schemas.
         shard_admits = None
     if shard_admits is None:
         entries = _version_files(man, path)
@@ -722,9 +721,9 @@ def _live_state(
         for h in man.get("history", []):
             referenced |= _version_top_names(h, path)
         if carry_out and not entries:
-            # keep at least one shard loaded: schema-bearing consumers
-            # (the insert gate, _table_columns) read entries[0], and a
-            # perfectly-carried resolve would leave them blind
+            # keep at least one shard loaded: _table_schema reads the
+            # footer of entries[0] on a uniform table, and a
+            # perfectly-carried resolve would leave it blind
             entries.extend(_load_shard(path, carry_out[-1]["name"]))
             carry_out.pop()
     loose = [f for f in top if f not in sup and f not in referenced]
@@ -897,44 +896,74 @@ def _recorded_schema(version: dict):
         return None  # unparseable record: behave as if absent
 
 
+def _table_schema(
+    spark: SparkSession,
+    man: dict | None,
+    paths: list[str],
+    table: str | None = None,
+):
+    """THE table-schema rule: the StructType every reader and writer of
+    the manifest file set ``paths`` uses:
+
+    - a mixed-schema table (``mixed_schema``: it took an evolving
+      merge) with a recorded unified schema (round 11) uses that
+      record — zero I/O;
+    - a mixed table from before round 11 merges the footers of
+      ``paths`` when ``table`` names the table, ``paths`` being its
+      whole live set. The merge is cached per (table,
+      ``schema_epoch``): the unified schema only widens on evolving
+      commits, so a micro-batch ingest loop pays the merge job once
+      per epoch. Without ``table`` (a subset read) it returns None:
+      :func:`_read_files` merges the subset's footers as it reads;
+    - no file and no record: None;
+    - any other table reads ONE footer on the driver (pyarrow): Spark's
+      schema inference over an explicit path list runs a one-task-per-
+      file JOB (measured: 5.5 s across 2000 files before any data is
+      read), which would tax every manifest read path linearly in file
+      count. A type pyarrow can't convert falls back to Spark's
+      inference over that one file."""
+    if man is not None and man.get("mixed_schema"):
+        schema = _recorded_schema(man)
+        if schema is not None or not table:
+            return schema
+        key = (table, man.get("schema_epoch", 0))
+        schema = _MIXED_SCHEMA_CACHE.get(key)
+        if schema is None and paths:
+            schema = spark.read.option("mergeSchema", "true").parquet(
+                *[_io(p).spark_path(p) for p in paths]
+            ).schema
+            if len(_MIXED_SCHEMA_CACHE) >= 64:
+                _MIXED_SCHEMA_CACHE.pop(next(iter(_MIXED_SCHEMA_CACHE)), None)
+            _MIXED_SCHEMA_CACHE[key] = schema
+        return schema
+    if not paths:
+        return None
+    try:
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        return from_arrow_schema(
+            _io(paths[0]).open_parquet(paths[0]).schema_arrow
+        )
+    except TypeError:  # a type pyarrow can't hand to Spark
+        return spark.read.parquet(_io(paths[0]).spark_path(paths[0])).schema
+
+
 def _read_files(
     spark: SparkSession, man: dict | None, paths: list[str]
 ) -> DataFrame:
-    """Parquet read of an explicit manifest file list. Tables that have
-    taken a schema-evolving commit (``mixed_schema`` in the manifest)
-    read under the manifest's recorded unified schema when one exists
-    (round 11: explicit ``reader.schema`` — absent columns backfill
-    NULL with zero footer I/O, and the schema survives even when data
-    skipping pruned every file physically carrying an evolved column),
-    falling back to parquet schema merging for pre-r11 mixed tables.
-    Either way files carried BY REFERENCE with the pre-evolution
-    physical schema reconcile against the new one (missing columns ->
-    NULL) — the reason evolution costs zero rewrites.
-
-    Uniform tables get the schema from ONE footer (driver-side
-    pyarrow): Spark's schema inference over an explicit path list runs
-    a one-task-per-file JOB (measured: 5.5 s across 2000 files before
-    any data is read), which would tax every manifest read path
-    linearly in file count."""
-    reader = spark.read
+    """Parquet read of an explicit manifest file list under
+    :func:`_table_schema`, merging footers where it gives none (a
+    subset of a pre-r11 mixed table). An explicit schema makes files
+    carried BY REFERENCE with the pre-evolution physical schema
+    reconcile against the evolved one (missing columns -> NULL, zero
+    footer I/O) — the reason evolution costs zero rewrites — and keeps
+    the schema even when data skipping pruned every file physically
+    carrying an evolved column."""
+    schema = _table_schema(spark, man, paths)
     spark_paths = [_io(p).spark_path(p) for p in paths]
-    if man is not None and man.get("mixed_schema"):
-        recorded = _recorded_schema(man)
-        if recorded is not None:
-            return reader.schema(recorded).parquet(*spark_paths)
-        return reader.option("mergeSchema", "true").parquet(*spark_paths)
-    if paths:
-        try:
-            from pyspark.sql.pandas.types import from_arrow_schema
-
-            reader = reader.schema(
-                from_arrow_schema(
-                    _io(paths[0]).open_parquet(paths[0]).schema_arrow
-                )
-            )
-        except Exception:
-            pass  # unconvertible type etc.: fall back to inference
-    return reader.parquet(*spark_paths)
+    if schema is None:
+        return spark.read.option("mergeSchema", "true").parquet(*spark_paths)
+    return spark.read.schema(schema).parquet(*spark_paths)
 
 
 def version_as_of(path: str, timestamp: float) -> int:
@@ -994,7 +1023,7 @@ def read_table(
     if version is None:
         man, entries, loose, _ = _live_state(path)
         if man is None:
-            return _read_files(spark, None, [path])
+            return spark.read.parquet(spark_path(path))
         rels = [e["name"] for e in entries] + list(loose)
         return _read_version(spark, man, path, rels, man.get("dv"))
     man = _load_manifest(path)
@@ -2400,9 +2429,9 @@ def _enforce_checks(
         # new file — NULL-extend to the carried schema so the CHECK
         # evaluates to its documented NULL-passes semantics instead of
         # an unresolved-column error
-        carried = _table_columns(
+        carried = _read_files(
             spark, man, [os.path.join(path, keep[0]["name"])]
-        )
+        ).columns
         for c in carried:
             if c not in check_df.columns:
                 check_df = check_df.withColumn(c, F.lit(None))
@@ -3108,15 +3137,13 @@ def staged_rewrite(
     layout_fn,
     suffix: str,
     retain_versions: int = 0,
-    expected_rows=None,
 ) -> int:
     """Full-table rewrite protocol for the layout-maintenance passes
     (`compact_parquet`, `operators/layout.zorder_compact`): read the
     live file set (one frozen directory snapshot — appends racing the
     rewrite stay visible loose files), write ``layout_fn(df)`` to a new
-    generation, validate the staged row count (against the MANIFEST
-    metadata count, no source scan; or against ``expected_rows`` for a
-    caller that mutates rows), and commit atomically via
+    generation, validate the staged row count against the MANIFEST
+    metadata count (no source scan), and commit atomically via
     :func:`_commit_generation`. Layout passes rewrite everything by
     design — that is their job; the file-granular paths are
     :func:`delete_where` / :func:`merge_into`.
@@ -3135,9 +3162,7 @@ def staged_rewrite(
         if rels
         else spark.read.parquet(spark_path(path))
     )
-    if expected_rows is not None:
-        n_want = expected_rows
-    elif rels:
+    if rels:
         n_want = _meta_row_count(path, entries, loose, _dv_map(man))
     else:
         # no manifest and no top-level part files (e.g. a hive-
@@ -3582,27 +3607,18 @@ def set_bloom_columns(
     if not 0 < fpp < 1:
         raise ValueError(f"fpp must be in (0, 1), got {fpp}")
     entries = _version_files(man, path)
-    probe_src = [os.path.join(path, e["name"]) for e in entries[:1]]
-    schema_cols: dict[str, str] = {}
-    if man.get("mixed_schema"):
-        rec = _recorded_schema(man)
-        fields = rec.fields if rec is not None else []
-        for f in fields:
-            schema_cols[f.name] = f.dataType.simpleString()
-    elif probe_src:
-        sch = _io(probe_src[0]).open_parquet(probe_src[0]).schema_arrow
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        for f in from_arrow_schema(sch).fields:
-            schema_cols[f.name] = f.dataType.simpleString()
+    schema = _table_schema(
+        spark, man, [os.path.join(path, e["name"]) for e in entries], path
+    )
     ok_types = ("tinyint", "smallint", "int", "bigint", "string")
-    for c in cols:
-        if schema_cols and c not in schema_cols:
+    for c in cols if schema is not None else []:
+        if c not in schema.names:
             raise ValueError(f"bloom column {c!r} not in table schema")
-        if schema_cols and schema_cols[c] not in ok_types:
+        if schema[c].dataType.simpleString() not in ok_types:
             raise ValueError(
-                f"bloom column {c!r} has type {schema_cols[c]!r}; only "
-                "integer and string columns index soundly"
+                f"bloom column {c!r} has type "
+                f"{schema[c].dataType.simpleString()!r}; only integer "
+                "and string columns index soundly"
             )
     policy = {"cols": sorted(cols), "fpp": float(fpp)}
     n = _write_bloom_sidecars(
@@ -3713,50 +3729,22 @@ def drop_check_constraint(spark: SparkSession, path: str, name: str) -> None:
     )
 
 
-def _table_columns(
-    spark: SparkSession, man: dict | None, paths: list[str]
-) -> list[str]:
-    """Column names of a manifest file set WITHOUT building a Spark
-    relation (which lists every path up front — linear in file count):
-    one pyarrow footer suffices for uniform tables. Mixed-schema tables
-    with a recorded unified schema (round 11) read it straight from the
-    root manifest — zero I/O; only pre-r11 mixed tables still need the
-    merged relation."""
-    if man is not None and man.get("mixed_schema"):
-        recorded = _recorded_schema(man)
-        if recorded is not None:
-            return recorded.names
-    if man is not None and man.get("mixed_schema") or not paths:
-        return _read_files(spark, man, paths).columns
-    return list(_io(paths[0]).open_parquet(paths[0]).schema_arrow.names)
-
-
-def _unified_schema_json(
-    spark: SparkSession, man: dict | None, src: list[str], upd_schema
-) -> str | None:
+def _unified_schema_json(base, upd_schema) -> str | None:
     """JSON StructType of a table's POST-EVOLUTION unified logical
-    schema: the existing schema (recorded in the root when present;
-    else merged footers for a pre-r11 mixed table — a one-time upgrade
-    cost; else one footer for a uniform table) extended with the update
-    batch's new columns, every field forced nullable (old rows are NULL
-    in new columns and vice versa). Returns None when a common column's
-    type differs between table and batch — recording a schema that
-    contradicts the files would be worse than degrading, so reads fall
-    back to footer merging and surface the conflict there."""
+    schema: the existing schema ``base`` (:func:`_table_schema`)
+    extended with the update batch's new columns, every field forced
+    nullable (old rows are NULL in new columns and vice versa). Returns
+    None when a common column's type differs between table and batch —
+    recording a schema that contradicts the files would be worse than
+    degrading, so reads fall back to footer merging and surface the
+    conflict there."""
     import json as _json
 
     from pyspark.sql.types import StructField, StructType
 
-    base = _recorded_schema(man) if man is not None else None
-    if base is None and src:
-        if man is not None and man.get("mixed_schema"):
-            base = _read_files(spark, man, src).schema
-        else:
-            base = _read_files(spark, man, [src[0]]).schema
     fields: list[StructField] = []
     seen: dict[str, object] = {}
-    base_fields = list(base.fields) if base is not None else []
-    for f in base_fields + list(upd_schema.fields):
+    for f in list(base or []) + list(upd_schema.fields):
         if f.name in seen:
             if seen[f.name] != f.dataType:
                 return None
@@ -3764,6 +3752,23 @@ def _unified_schema_json(
         seen[f.name] = f.dataType
         fields.append(StructField(f.name, f.dataType, True))
     return _json.dumps(StructType(fields).jsonValue())
+
+
+def _store_assign(value, dtype, name: str):
+    """``value`` (a Column) as stored into the table column ``name`` of
+    type ``dtype``: SQL store assignment, the cast an UPDATE or MERGE
+    into a typed table applies. ANSI whatever ``spark.sql.ansi.enabled`` says:
+    a non-NULL value the type cannot hold ('x' into bigint, an
+    overflow) raises where the row is evaluated — the staging write or
+    the identification scan, so before the commit point."""
+    from pyspark.sql import functions as F
+
+    cast = value.try_cast(dtype)
+    bad = F.raise_error(F.concat(
+        F.lit("value '"), value.try_cast("string"),
+        F.lit(f"' does not fit column {name} {dtype.simpleString()}"),
+    ))
+    return F.when(value.isNotNull() & cast.isNull(), bad).otherwise(cast)
 
 
 def _rel_file(uri: str, table_path: str) -> str:
@@ -4183,6 +4188,12 @@ def update_where(
     proportional to the updated rows, not the touched files, the same
     contract as the DV delete/merge (same hybrid threshold; touched
     LOOSE appends always rewrite). Returns the number of rows updated.
+
+    Types: each assignment is cast to its column's type
+    (:func:`_table_schema`) by SQL store assignment, ANSI, as SQL
+    UPDATE does: ``{"v": "42"}`` on a string column stores ``'42'``,
+    and a value the column type cannot hold (``'x'`` into bigint)
+    raises before the commit point.
     """
     from pyspark.sql import functions as F
 
@@ -4195,14 +4206,14 @@ def update_where(
     cand = snap.entries + [e for _, e in loose_entries]
     if not cand:
         return 0
-    cols = _table_columns(
-        spark, snap.man, [os.path.join(path, e["name"]) for e in cand]
+    schema = _table_schema(
+        spark, snap.man, [os.path.join(path, e["name"]) for e in cand], path
     )
-    missing = [c for c in assignments if c not in cols]
+    missing = [c for c in assignments if c not in schema.names]
     if missing:
         raise ValueError(
             f"UPDATE assigns to unknown columns {missing}; table has "
-            f"{sorted(cols)}"
+            f"{sorted(schema.names)}"
         )
     per_file, n_upd = _matched_files(
         spark, snap.man, path, cand, predicate, bloom_probes=_bloom_probes
@@ -4210,15 +4221,20 @@ def update_where(
     if not per_file:
         return 0
     pred = F.coalesce(F.expr(predicate), F.lit(False))
+    # each value is stored in its column's type, as SQL UPDATE does
+    new = {
+        c: _store_assign(F.expr(e), schema[c].dataType, c)
+        for c, e in assignments.items()
+    }
 
     def post(df, cond=None):
         # all assignments evaluate against the PRE-update row: build
         # every new value in ONE projection so `SET a = b, b = a`
         # swaps correctly (``cond`` limits them to the matched rows)
         return df.select(*[
-            (F.expr(assignments[c]) if cond is None
-             else F.when(cond, F.expr(assignments[c])).otherwise(F.col(c)))
-            .alias(c) if c in assignments else F.col(c)
+            (new[c] if cond is None
+             else F.when(cond, new[c]).otherwise(F.col(c)))
+            .alias(c) if c in new else F.col(c)
             for c in df.columns
         ])
 
@@ -4298,6 +4314,12 @@ def insert_into(
     give: atomicity, a version, a change feed, CHECK enforcement, and
     writer fencing. Bytes written are the batch only.
 
+    Types: the batch must carry exactly the table's column names and
+    types (:func:`_table_schema`), else ``insert schema mismatch`` is
+    raised before any write — no cast, so a mistyped append fails
+    loudly, as the DDL types of a SQL table would make it. Schema
+    evolution goes through ``merge_into(evolve_schema=True)``.
+
     ``txn=(app_id, version)`` is the STREAMING IDEMPOTENCY marker
     (Delta's txn action): the manifest carries ``{app_id:
     last_applied_version}``, updated atomically with the data, and an
@@ -4315,7 +4337,7 @@ def insert_into(
     # every carry-eligible index shard rides through verbatim, so a
     # micro-batch insert into a sharded 1M-file table resolves by
     # reading the root plus the undersized tail, not the whole index
-    # (the resolve keeps one shard loaded as the schema-gate witness)
+    # (the resolve keeps one shard loaded as the schema witness)
     snap = _resolve(path, lambda s: False)
     man, entries = snap.man, snap.entries
     if man is None:
@@ -4327,40 +4349,15 @@ def insert_into(
         last = man.get("txn", {}).get(txn[0])
         if last is not None and txn[1] <= last:
             return 0  # replayed batch: already applied, exactly-once
-    if entries:
-        # NAME AND TYPE check: a same-named differently-typed batch
-        # would commit into a uniform table without the mixed_schema
-        # mark and brick every later footer-schema'd read. On a
-        # mixed_schema table (post-evolving-merge) the gate must be the
-        # UNIFIED schema — reads merge footers, so a batch carrying the
-        # evolved shape is valid even though entries[0] may predate the
-        # evolution. The all-files merge probe is a per-epoch cost, not
-        # a per-batch one: the unified schema only widens on evolving
-        # commits (manifest "schema_epoch"), so it caches per process —
-        # a micro-batch ingest loop into a 100k-file mixed table pays
-        # the footer-merge job once, then one dict lookup per batch.
-        if man.get("mixed_schema"):
-            recorded = _recorded_schema(man)
-            key = (path, man.get("schema_epoch", 0))
-            tbl_schema = (
-                recorded
-                if recorded is not None
-                else _MIXED_SCHEMA_CACHE.get(key)
-            )
-            if tbl_schema is None:
-                tbl_schema = _read_files(
-                    spark, man,
-                    [os.path.join(path, e["name"]) for e in entries],
-                ).schema
-                if len(_MIXED_SCHEMA_CACHE) >= 64:
-                    _MIXED_SCHEMA_CACHE.pop(
-                        next(iter(_MIXED_SCHEMA_CACHE)), None
-                    )
-                _MIXED_SCHEMA_CACHE[key] = tbl_schema
-        else:
-            tbl_schema = _read_files(
-                spark, man, [os.path.join(path, entries[0]["name"])]
-            ).schema
+    # NAME AND TYPE check: a same-named differently-typed batch would
+    # commit files every later read of the table's schema fails on
+    tbl_schema = _table_schema(
+        spark, man,
+        [os.path.join(path, e["name"]) for e in entries]
+        + [os.path.join(path, f) for f in snap.loose],
+        path,
+    )
+    if tbl_schema is not None:
         want = {f.name: f.dataType for f in tbl_schema}
         got = {f.name: f.dataType for f in df.schema}
         if want != got:
@@ -4771,13 +4768,33 @@ def merge_into(
     the single update row — reported via ``matched_rows`` vs
     ``updated`` and a warning, the documented replacement semantics.
 
+    Types: a merge that does not evolve the schema casts the batch to
+    the table's column types (:func:`_table_schema`) by SQL store
+    assignment, ANSI: a batch
+    ``v bigint`` into a ``v string`` table stores ``7`` as ``'7'``,
+    and a value the column type cannot hold (``'x'`` into bigint, an
+    overflow) raises before the commit point. The rewrite, the DV-
+    marked upsert and the CDC insert feed all stage the cast batch, so
+    a merge never changes a column's type. Key columns are the
+    exception: the batch's key values prune files before the table
+    schema is known, so a key must have the table's type (an integer
+    key may have any integer type). Uniqueness is checked on the
+    batch's own key values.
+
     ``evolve_schema=True`` is the Delta ``autoMerge`` analogue: the
     update batch may ADD columns (carried files keep their old physical
     schema and cost zero rewrite — reads reconcile via parquet schema
     merging, old rows surface NULL) or OMIT columns (inserted rows get
-    NULL). The manifest marks the table ``mixed_schema`` so every read
-    path merges footers; the next full rewrite unifies the physical
+    NULL). The manifest marks the table ``mixed_schema`` and records
+    the unified schema; the next full rewrite unifies the physical
     schema and clears the mark. Key columns must exist in both schemas.
+    An evolving merge does not cast: a common column whose type
+    conflicts with the table's drops the recorded schema and commits
+    files of the batch's type. For a conflict such as string vs bigint
+    the footers then fail to merge (``CANNOT_MERGE_SCHEMAS``), so
+    :func:`read_table` and :func:`insert_into` cannot read the table,
+    and deep :func:`verify_table` still reports ok — cast such a
+    column before merging.
 
     ``deletion_vectors=True`` is the merge-on-read MERGE: matched
     target rows are deletion-vector-marked (their positions go to a
@@ -4795,6 +4812,7 @@ def merge_into(
     from functools import reduce
 
     from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegralType
 
     # source-side key sanity BEFORE any job or table I/O (the table-
     # side half of the check runs after the resolve below)
@@ -4866,11 +4884,10 @@ def merge_into(
         src = [os.path.join(path, e["name"]) for e in snap.entries] + [
             os.path.join(path, f) for f in snap.loose
         ]
-        old_cols = (
-            _table_columns(spark, man, src)
-            if src
-            else spark.read.parquet(spark_path(path)).columns
-        )
+        tbl_schema = _table_schema(spark, man, src, path)
+        if tbl_schema is None:  # no live file: infer over the directory
+            tbl_schema = spark.read.parquet(spark_path(path)).schema
+        old_cols = tbl_schema.names
         if not evolve_schema and set(updates.columns) != set(old_cols):
             raise ValueError(
                 f"merge schema mismatch: table has {sorted(old_cols)}, "
@@ -4883,17 +4900,35 @@ def merge_into(
                 f"merge keys {missing_keys} must exist on both sides"
             )
         evolving = evolve_schema and set(updates.columns) != set(old_cols)
+        # store assignment: every frame staged from the batch (the
+        # rewrite, the DV keys, the CDC inserts) holds the table's
+        # column types, so the commit can't change a column's type
+        types = {f.name: f.dataType for f in tbl_schema}
+        cast = {} if evolving else {
+            f.name: _store_assign(F.col(f.name), types[f.name], f.name)
+            for f in updates.schema if f.dataType != types[f.name]
+        }
+        # the key facts above prune files in the batch's key types:
+        # sound only for a cast that keeps every key value
+        if any(
+            not isinstance(t, IntegralType)
+            for k in keys if k in cast
+            for t in (types[k], updates.schema[k].dataType)
+        ):
+            raise ValueError(
+                f"merge keys {keys} must have the table's types (an "
+                "integer key may have any integer type)"
+            )
         if n_upd == 0:
             # empty patch: a no-op — but only AFTER the schema/key
             # validation above, so a malformed caller still fails loud
             return {"updated": 0, "inserted": 0, "matched_rows": 0}
-        # after the no-op return: on a pre-r11 mixed table this costs
-        # the all-footers schema-merge relation, wasted on empty input
         uni_schema = (
-            _unified_schema_json(spark, man, src, updates.schema)
+            _unified_schema_json(tbl_schema, updates.schema)
             if evolving
             else None
         )
+        batch = updates.withColumns(cast) if cast else updates
         loose_entries = [(f, _file_entry(path, f)) for f in snap.loose]
         cand = snap.entries + [e for _, e in loose_entries]
         clash = {"_file", "_pos"} & set(updates.columns)
@@ -4937,7 +4972,7 @@ def merge_into(
         per_file: dict[str, int] = {}
         matched_rows = matched_keys = 0
         if scan:
-            ukeys = updates.where(nn).select(*keys)
+            ukeys = batch.where(nn).select(*keys)
             if broadcast_updates:
                 # metadata-sized patch: the identification semi-join
                 # broadcasts it; a bulk patch shuffles instead of
@@ -4964,7 +4999,7 @@ def merge_into(
                 "update row",
                 stacklevel=2,
             )
-        ukeys_b = updates.select(*keys)
+        ukeys_b = batch.select(*keys)
         if broadcast_updates:
             ukeys_b = F.broadcast(ukeys_b)
         with _plan_rewrite(
@@ -4974,8 +5009,8 @@ def merge_into(
         ) as p:
             # a pure insert / pure DV-mark rewrites NOTHING: the batch
             # is the new generation
-            new_df = updates if p.rows is None else _merge_frames(
-                p.rows, updates, keys, broadcast_updates,
+            new_df = batch if p.rows is None else _merge_frames(
+                p.rows, batch, keys, broadcast_updates,
                 allow_missing=evolve_schema,
             )
             expected = p.n_keep + n_upd
@@ -4991,7 +5026,7 @@ def merge_into(
                 ),
                 expected=expected,
                 cdc={
-                    "insert": updates.coalesce(
+                    "insert": batch.coalesce(
                         _rewrite_partitions(n_upd, 0)
                     ),
                     "delete": None if p.pre is None else p.pre.coalesce(

@@ -560,7 +560,6 @@ def test_delete_where_semantics_and_atomicity(spark, tmp_path):
     with _pytest.raises(RuntimeError, match="row-count mismatch"):
         S.staged_rewrite(
             spark, path, lambda d: d.limit(1), "._compact",
-            expected_rows=999,
         )
     assert {r.doc_id for r in S.read_table(spark, path).collect()} == {1, 3}
 

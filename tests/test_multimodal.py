@@ -252,8 +252,7 @@ def test_decode_media_on_error_null_isolates_bad_rows(spark):
 def test_real_decode_boundary_covers_all_formats(spark):
     """on_error='null' must isolate malformed payloads of EVERY format
     the dispatch reaches — a truncated WAV fmt chunk (struct.error) and
-    a P5 header with maxval 0 (ZeroDivisionError in feature scaling)
-    become NULL-decode rows because the corruption boundary wraps the
+    a P5 header with maxval 0 (outside netpbm's 1..65535) become NULL-decode rows because the corruption boundary wraps the
     whole dispatch, and PNG/JPEG/GIF payloads, which have no built-in
     codec, are refused by signature with a pointer to the seam."""
     import struct
@@ -264,7 +263,7 @@ def test_real_decode_boundary_covers_all_formats(spark):
     jpeg = b"\xff\xd8\xff\xe0" + bytes(16)
     gif = b"GIF89a" + bytes(7)
     bad_wav = b"RIFF" + struct.pack("<I", 20) + b"WAVE" + b"fmt " + struct.pack("<I", 16) + b"\x01"
-    bad_ppm = b"P5\n4 4\n0\n" + bytes(16)  # maxval 0 -> div by zero
+    bad_ppm = b"P5\n4 4\n0\n" + bytes(16)  # maxval 0: outside 1..65535
 
     for payload in (png, jpeg, gif):
         for media_type in ("image", "video"):
@@ -321,13 +320,16 @@ def test_real_decode_video_walks_each_frame_header(spark):
 
 @pytest.mark.parametrize(
     "header, message",
-    [(b"65535 65535\n255\n", "implausible"), (b"2 2\n65535\n", "16-bit")],
+    [(b"65535 65535\n255\n", "implausible"), (b"2 2\n65535\n", "16-bit"),
+     (b"2 2\n-1\n", "maxval -1 outside"), (b"2 2\n0\n", "maxval 0 outside"),
+     (b"5 5\n255\n", "truncated")],
 )
 def test_real_decode_netpbm_guards(spark, header, message):
     """A netpbm header is outside input: declared dimensions past the
-    pixel cap and 16-bit maxvals (2-byte samples the 1-byte raster walk
-    would misread) raise a named ValueError on the image and the video
-    path, for P6 and P5 alike, and become NULL rows under
+    pixel cap, 16-bit maxvals (2-byte samples the 1-byte raster walk
+    would misread), maxvals outside 1..65535 and a raster shorter than
+    the header declares raise a named ValueError on the image and the
+    video path, for P6 and P5 alike, and become NULL rows under
     on_error='null'."""
     payloads = [m + b"\n" + header + bytes(24) for m in (b"P6", b"P5")]
     df = spark.createDataFrame(
