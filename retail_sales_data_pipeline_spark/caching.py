@@ -61,6 +61,15 @@ def fill_cache(df: DataFrame) -> DataFrame:
     return df
 
 
+def cached_bytes(df: DataFrame) -> int:
+    """In-memory size of the filled cache of a persisted ``df``, in
+    bytes: the statistics the cache recorded while :func:`fill_cache`
+    built it (the size Spark's planner then uses for the relation).
+    Reading them starts no job."""
+    return df._jdf.queryExecution().withCachedData().cacheBuilder() \
+        .sizeInBytesStats().value()
+
+
 def persist_mark() -> int:
     """Snapshot the tracker depth. A composite job that persists on its
     own behalf (``corpus_pipeline.curate_corpus`` / ``export_shards``)

@@ -7,8 +7,9 @@ script) as one orchestration function over the library layers:
 discover → crash-detect (ledger 'A' probe) → validate headers →
 quarantine rejects → ledger mark-active → conform+union accepted files →
 star-join dims → derive customer + sales marts as grouped sums → cache
-the two marts → fan-out sinks (parquet, partitioned parquet, mart
-append) → archive processed files → ledger mark-done.
+and fill the two marts → fan-out sinks (parquet, partitioned parquet,
+mart append), each writing its mart at the cache's measured size →
+archive processed files → ledger mark-done.
 
 Steps that do not depend on each other run at the same time: several
 jobs submitted from separate driver threads share one SparkContext
@@ -16,17 +17,23 @@ jobs submitted from separate driver threads share one SparkContext
 through ``session.spark_threads``:
 
 - the crash probe starts as soon as discovery returns, beside
-  validation and planning (conform, union, the wide files'
-  schema-inference reads, the star join, the mart definitions);
+  validation and planning (conform, union, the star join, the mart
+  definitions), which starts no job: every accepted file is read with
+  an explicit schema built from its probed header;
 - mark-active runs in the background as soon as validation has produced
   the accepted set (it waits for the probe first);
-- the five sink writes start together and share the executors; the
-  mart row counts ride the two K1 writes as ``Observation``s.
+- the two mart caches are filled, one job each, as soon as the marts
+  are defined, beside the probe, quarantine and mark-active;
+- the five sink writes start together once the 'A' events are durable
+  and both caches are full, and share the executors; the mart row
+  counts ride the two K1 writes as ``Observation``s.
 
 Orderings kept despite the overlap: probe → quarantine and 'A' events
 (a failing probe moves no file and marks nothing) → any output byte →
-archive → 'I' events. A failing sink raises only after every write has
-returned, so no job of the run outlives it, and the files stay 'A'.
+archive → 'I' events. A fill writes no output byte, so it may run
+anywhere before the sinks. A failing fill or sink raises only after
+every job the run submitted has returned, so no job of the run
+outlives it, no cache outlives it, and the files stay 'A'.
 
 Paths: the five prefixes (source, error, processed, output, ledger)
 may be plain paths or URIs of any scheme with a registered backend.
@@ -36,12 +43,23 @@ error or processed prefix whose scheme has no registered backend
 raises ``ValueError`` before any file is read, moved or marked.
 
 Deliberate fixes over the reference, all flagged in SURVEY.md §4/§7.4:
-- each mart is cached once and feeds its 2-3 sinks; the reference
-  recomputes the conform+union+join subtree for every one of its ≥8
-  actions. The joined fact is not cached: each mart reads it once,
-  through a map-side partial aggregate (eager aggregation, Yan &
-  Larson, VLDB 1995), so its exchange carries partial sums at the
-  mart's grain, not fact rows, and nothing is sorted but the rank;
+- each mart is cached, filled once by one job, and feeds its 2-3
+  sinks; the reference recomputes the conform+union+join subtree for
+  every one of its ≥8 actions. The joined fact is not cached: each
+  mart reads it once, through a map-side partial aggregate (eager
+  aggregation, Yan & Larson, VLDB 1995), so its exchange carries
+  partial sums at the mart's grain, not fact rows, and nothing is
+  sorted but the rank;
+- output file counts follow the mart's size: every sink of a mart
+  writes ``ceil(cached bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``
+  files (at least one), never more than the mart's partitions. A small
+  day is one file per sink (per partition directory for K2), where one
+  file per shuffle partition was written before;
+- wide files (extra columns) are read with an explicit schema, not
+  inferred (the reference infers every file, main.py:239-242): extra
+  fields reach ``additional_column`` verbatim (``007`` stays ``007``),
+  and a malformed canonical value is NULL under its canonical type,
+  where inference widened that column's type for the whole batch;
 - a mart's total is the SUM over its full grain, attributes included.
   Where a dim key is duplicated (two customer rows for one id with
   different phones, say), each attribute row totals the fact rows that
@@ -54,21 +72,26 @@ Deliberate fixes over the reference, all flagged in SURVEY.md §4/§7.4:
   overwrites itself — idempotent where the reference double-appends.
 
 Scale: the only driver-side per-file work is header probing and ledger
-bookkeeping (metadata-sized). All accepted files are read in ONE
-``spark.read.csv(paths)`` with the explicit canonical schema — a single
-distributed scan, not the reference's per-file read-then-union loop
-(main.py:239-258), which at 100 TB would serialize scheduling on the
-driver. Semantics are identical because conform+union is a projection.
+bookkeeping (metadata-sized). All accepted files with one header are
+read in ONE ``spark.read.csv(paths)`` with an explicit schema (the
+canonical files are one such group) — a single distributed scan, not
+the reference's per-file read-then-union loop (main.py:239-258), which
+at 100 TB would serialize scheduling on the driver. Semantics are
+identical because conform+union is a projection.
 """
 
 from __future__ import annotations
 
+import math
 import time
+from concurrent.futures import wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from .caching import cached_bytes, fill_cache
 from .functions.scalars import full_name, month_key
 from .ledger import Ledger
 from .operators.marts import grouped_sum, rank_incentive
@@ -190,38 +213,48 @@ def _conformed_fact(
     spark: SparkSession, accepted: list[str], columns: dict[str, list[str]]
 ) -> DataFrame:
     """Conform + union the accepted files (reference main.py:223-258).
-    Files whose header IS the canonical 8 columns are read in one
-    distributed pass with the explicit schema; files with extra columns
-    are read per-file (their schemas differ) and conformed via the
-    concat_ws fold. The routing reuses the headers probed during
-    validation (``columns``): one driver-side metadata read per file
-    end-to-end, not two.
+    Files are read with an explicit schema built from the header probed
+    during validation (``columns``): one driver-side metadata read per
+    file end-to-end, and no schema-inference job. Canonical columns take
+    their ``SALES_SCHEMA`` types and extra columns are strings, so a
+    malformed canonical value reads as NULL and an extra field keeps its
+    text (``007`` stays ``007``). Files with the same header are read in
+    one distributed pass; the canonical 8-column files are one group.
     """
-    canonical_8 = [f.name for f in SALES_SCHEMA.fields if f.name != "additional_column"]
-    exact, wide = [], []
-    for p in accepted:
-        (exact if columns[p] == canonical_8 else wide).append(spark_path(p))
-    frames = []
-    if exact:
-        base_schema = type(SALES_SCHEMA)(
-            [f for f in SALES_SCHEMA.fields if f.name != "additional_column"]
-        )
-        frames.append(conform(read_csv_full(spark, exact, schema=base_schema), canonical_8))
-    types_8 = {
+    types = {
         f.name: f.dataType
         for f in SALES_SCHEMA.fields
         if f.name != "additional_column"
     }
-    for p in wide:
-        df = read_csv_full(spark, p, infer=True)
+    by_header: dict[tuple[str, ...], list[str]] = {}
+    for p in accepted:
+        by_header.setdefault(tuple(columns[p]), []).append(spark_path(p))
+    frames = []
+    for header, group in by_header.items():
+        schema = T.StructType(
+            [T.StructField(c, types.get(c, T.StringType()), True) for c in header]
+        )
+        df = read_csv_full(spark, group, schema=schema)
         # a caller-narrowed `mandatory` admits files missing canonical
         # columns: NULL-extend them (typed) so conform's projection —
         # and the whole batch with it — can't blow up on one such file
-        for c in canonical_8:
-            if c not in df.columns:
-                df = df.withColumn(c, F.lit(None).cast(types_8[c]))
-        frames.append(conform(df, canonical_8))
+        df = df.withColumns(
+            {c: F.lit(None).cast(t) for c, t in types.items() if c not in header}
+        )
+        frames.append(conform(df, list(types)))
     return union_conformed(frames)
+
+
+def _write_partitions(spark: SparkSession, mart: DataFrame) -> int:
+    """Files each sink writes of a filled mart cache: its measured size
+    over the session's AQE target partition size
+    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``, read as Spark
+    reads it, so ``64m`` is a size), and at least one."""
+    sql_conf = spark.sparkContext._jvm.org.apache.spark.sql.internal.SQLConf
+    advisory = spark._jsparkSession.sessionState().conf().getConf(
+        sql_conf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    )
+    return max(1, math.ceil(cached_bytes(mart) / advisory))
 
 
 def run_pipeline(
@@ -280,13 +313,16 @@ def run_pipeline(
             marked = submit(mark_active_after_probe)
 
         customer_mart = sales_mart = None
+        fills = []
         try:
             # 5-8. conform + union, star join, marts: side-effect free,
             # so they run while the ledger works. The marts are cached
             # (fixes recomputation, SURVEY.md §3.1): each feeds 2-3
             # sinks, and the scan, join and sum (+rank) must not
             # recompute per write. The joined fact is read once per mart
-            # and is not cached.
+            # and is not cached. Each cache is filled now, by one job,
+            # beside the probe, quarantine and mark-active: a fill
+            # writes no output byte.
             if report.accepted:
                 fact = _conformed_fact(spark, report.accepted, report.columns)
                 enriched = enrich_with_dims(
@@ -294,6 +330,7 @@ def run_pipeline(
                 )
                 customer_mart = derive_customer_mart(enriched).cache()
                 sales_mart = derive_sales_mart(enriched).cache()
+                fills = [submit(fill_cache, m) for m in (customer_mart, sales_mart)]
 
             # 3b. quarantine (reference main.py:159-176), only once the
             # probe has returned: a failing probe moves no file
@@ -309,8 +346,15 @@ def run_pipeline(
             # retried run OVERWRITES its own run=<id> partition instead
             # of double-appending. The mart row counts ride the K1
             # writes as Observations, so no extra count() job runs.
+            # Each sink writes its mart at the filled cache's size.
             if marked is not None:
                 marked.result()
+            for fill in fills:
+                fill.result()
+            customer_out, sales_out = (
+                m.coalesce(_write_partitions(spark, m))
+                for m in (customer_mart, sales_mart)
+            )
             out = run_scoped_path(output_dir, run_id)
             result.outputs = {
                 "customer_mart": f"{out}/customer_data_mart",
@@ -326,29 +370,29 @@ def run_pipeline(
             with spark_threads(spark) as sink:
                 sink(
                     write_parquet,
-                    customer_mart.observe(customer_rows, n),
+                    customer_out.observe(customer_rows, n),
                     result.outputs["customer_mart"],
                 )
                 sink(
                     write_parquet,
-                    sales_mart.observe(sales_rows, n),
+                    sales_out.observe(sales_rows, n),
                     result.outputs["sales_mart"],
                 )
                 sink(
                     write_partitioned_parquet,
-                    sales_mart,
+                    sales_out,
                     result.outputs["sales_mart_partitioned"],
                     ["sales_month", "store_id"],
                 )
                 sink(
                     append_table_run_scoped,
-                    customer_mart,
+                    customer_out,
                     result.outputs["customer_mart_table"],
                     run_id,
                 )
                 sink(
                     append_table_run_scoped,
-                    sales_mart,
+                    sales_out,
                     result.outputs["sales_mart_table"],
                     run_id,
                 )
@@ -361,8 +405,10 @@ def run_pipeline(
             if ledger is not None:
                 ledger.mark_done(spark, accepted_named, seq=1)
         finally:
-            # sink failures raise by design — the caches must not
-            # outlive the run when they do
+            # sink and fill failures raise by design — the caches must
+            # not outlive the run when they do, and a fill still running
+            # must return before its cache is dropped
+            wait(fills)
             for df in (sales_mart, customer_mart):
                 if df is not None:
                     df.unpersist()

@@ -59,7 +59,9 @@ sidecar files — adjacent-version ``table_changes`` and the multi-hop
 from __future__ import annotations
 
 import dataclasses
+import math
 import os
+import time
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -127,6 +129,13 @@ _LOCK_WAIT_SECONDS = _storage._LOCK_WAIT_SECONDS
 ConcurrentWriteError = _table_io.ConcurrentWriteError
 
 
+def _commit_time() -> float:
+    """A version's ``committed_at``: unix seconds cut to the millisecond,
+    never rounded up, so an instant read after a commit returns is never
+    before that commit's time (TIMESTAMP AS OF would skip it)."""
+    return math.floor(time.time() * 1000) / 1000
+
+
 def _io(path: str):
     """The table's control-plane IO over the path's :mod:`.storage`
     backend. See :mod:`.table_io`."""
@@ -185,7 +194,6 @@ def _json_scalar(v, widen: bool = False):
     the widened range — widening only ever ADMITS more files, keeping
     pruning sound for sloppy literals."""
     import datetime
-    import math
 
     if isinstance(v, bool | int):
         return v
@@ -2687,7 +2695,7 @@ def _commit_generation(
                     - sum((c.dv.n or {}).values())
                 ),
                 "op": c.op,
-                "committed_at": round(_time.time(), 3),
+                "committed_at": _commit_time(),
                 "history": kept,
             }
             if ext_rec is not None:
@@ -3353,7 +3361,6 @@ def convert_to_manifest(spark: SparkSession, path: str) -> int:
     generation directories naturally. No-op (returns the current
     gen_no) if the table already has a manifest. ``spark`` is unused —
     kept for call-shape symmetry with the other table ops."""
-    import time as _time
 
     man = _load_manifest(path)
     if man is not None:
@@ -3368,7 +3375,7 @@ def convert_to_manifest(spark: SparkSession, path: str) -> int:
         "gen_no": 1,
         "rows": sum(e["rows"] for e in entries),
         "op": "convert",
-        "committed_at": round(_time.time(), 3),
+        "committed_at": _commit_time(),
         "superseded": [],
         "history": [],
     }
@@ -3399,7 +3406,6 @@ def _roll_metadata_commit(
     so retention is free, and dropping it would punch holes in version
     addressability and the CDC feed chain — and an EMPTY feed (no rows
     changed)."""
-    import time as _time
 
     new_man = {
         k: man[k]
@@ -3412,7 +3418,7 @@ def _roll_metadata_commit(
     new_man.update(
         gen_no=man["gen_no"] + 1,
         op=op,
-        committed_at=round(_time.time(), 3),
+        committed_at=_commit_time(),
         history=list(man.get("history", []))
         + [_prev_version_snapshot(man, path)],
         cdc={"insert": [], "delete": []},
@@ -3729,28 +3735,22 @@ def drop_check_constraint(spark: SparkSession, path: str, name: str) -> None:
     )
 
 
-def _unified_schema_json(base, upd_schema) -> str | None:
+def _unified_schema_json(base, upd_schema) -> str:
     """JSON StructType of a table's POST-EVOLUTION unified logical
     schema: the existing schema ``base`` (:func:`_table_schema`)
     extended with the update batch's new columns, every field forced
-    nullable (old rows are NULL in new columns and vice versa). Returns
-    None when a common column's type differs between table and batch —
-    recording a schema that contradicts the files would be worse than
-    degrading, so reads fall back to footer merging and surface the
-    conflict there."""
+    nullable (old rows are NULL in new columns and vice versa). A common
+    column keeps the table's type: the merge stores the batch's values
+    at it (store assignment)."""
     import json as _json
 
     from pyspark.sql.types import StructField, StructType
 
-    fields: list[StructField] = []
-    seen: dict[str, object] = {}
-    for f in list(base or []) + list(upd_schema.fields):
-        if f.name in seen:
-            if seen[f.name] != f.dataType:
-                return None
-            continue
-        seen[f.name] = f.dataType
-        fields.append(StructField(f.name, f.dataType, True))
+    names = set(base.names)
+    fields = [StructField(f.name, f.dataType, True) for f in base] + [
+        StructField(f.name, f.dataType, True)
+        for f in upd_schema.fields if f.name not in names
+    ]
     return _json.dumps(StructType(fields).jsonValue())
 
 
@@ -4497,7 +4497,6 @@ def rollback(
     if retain_versions is not None:
         cut = max(0, len(history) - retain_versions)
         dropped, history = history[:cut], history[cut:]
-    import time as _time
 
     manifest = {
         "format": 2,
@@ -4505,7 +4504,7 @@ def rollback(
         "gen_no": man["gen_no"] + 1,
         "rows": target["rows"],
         "op": f"restore({version})",
-        "committed_at": round(_time.time(), 3),
+        "committed_at": _commit_time(),
         "superseded": sorted(set(stale) | set(loose)),
         "history": history,
         # no "cdc" key: the row-level diff of a restore is not tracked,
@@ -4788,13 +4787,9 @@ def merge_into(
     NULL). The manifest marks the table ``mixed_schema`` and records
     the unified schema; the next full rewrite unifies the physical
     schema and clears the mark. Key columns must exist in both schemas.
-    An evolving merge does not cast: a common column whose type
-    conflicts with the table's drops the recorded schema and commits
-    files of the batch's type. For a conflict such as string vs bigint
-    the footers then fail to merge (``CANNOT_MERGE_SCHEMAS``), so
-    :func:`read_table` and :func:`insert_into` cannot read the table,
-    and deep :func:`verify_table` still reports ok — cast such a
-    column before merging.
+    Common columns are stored at the table's types as above, so an
+    evolving merge changes no column's type either; an added column
+    keeps the batch's type.
 
     ``deletion_vectors=True`` is the merge-on-read MERGE: matched
     target rows are deletion-vector-marked (their positions go to a
@@ -4902,11 +4897,13 @@ def merge_into(
         evolving = evolve_schema and set(updates.columns) != set(old_cols)
         # store assignment: every frame staged from the batch (the
         # rewrite, the DV keys, the CDC inserts) holds the table's
-        # column types, so the commit can't change a column's type
+        # column types, so the commit can't change a column's type; a
+        # column the batch adds keeps its own type
         types = {f.name: f.dataType for f in tbl_schema}
-        cast = {} if evolving else {
+        cast = {
             f.name: _store_assign(F.col(f.name), types[f.name], f.name)
-            for f in updates.schema if f.dataType != types[f.name]
+            for f in updates.schema
+            if f.name in types and f.dataType != types[f.name]
         }
         # the key facts above prune files in the batch's key types:
         # sound only for a cast that keeps every key value

@@ -1966,6 +1966,20 @@ def test_register_table_sql_view(spark, tmp_path):
     ).first().v == "a"
 
 
+def test_commit_time_never_rounds_up(monkeypatch):
+    """A version's ``committed_at`` is cut to the millisecond, never
+    rounded up: an instant read right after the commit (here 0.9 ms
+    into the same millisecond) is not before it, so TIMESTAMP AS OF at
+    that instant finds the version."""
+    import types
+
+    import retail_sales_data_pipeline_spark.sinks as S
+
+    monkeypatch.setattr(S, "time", types.SimpleNamespace(time=lambda: 1792445201.3369))
+    assert S._commit_time() <= 1792445201.3369
+    assert S._commit_time() == 1792445201.336
+
+
 def test_timestamp_as_of_and_vacuum_dry_run(spark, tmp_path):
     """TIMESTAMP AS OF resolves the latest retained version committed
     at or before the instant; vacuum's dry_run reports without

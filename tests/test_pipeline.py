@@ -1109,3 +1109,150 @@ def test_unregistered_scheme_raises(spark, dims, workdir):
             spark, "gs://bucket/land", workdir["error"], workdir["processed"],
             workdir["out"], dims, run_id="rG",
         )
+
+
+def _parquet_files(root) -> dict[str, int]:
+    """Data files per directory under ``root``, by path relative to it."""
+    counts: dict[str, int] = {}
+    for d, _, names in os.walk(root):
+        n = sum(name.endswith(".parquet") for name in names)
+        if n:
+            counts[os.path.relpath(d, root)] = n
+    return counts
+
+
+def test_small_drop_writes_one_file_per_sink(spark, dims, workdir):
+    """A mart far below the advisory partition size is written as one
+    file by each of its sinks: K1 and K3 write one parquet file each,
+    and K2 one per partition directory (not one per shuffle
+    partition)."""
+    _drop_with_reject(workdir)
+    res = run_pipeline(
+        spark, workdir["source"], workdir["error"], workdir["processed"],
+        workdir["out"], dims, run_id="r1",
+    )
+    for key in ("customer_mart", "sales_mart", "customer_mart_table", "sales_mart_table"):
+        assert sum(_parquet_files(res.outputs[key]).values()) == 1, key
+    parts = _parquet_files(res.outputs["sales_mart_partitioned"])
+    assert len(parts) == 4  # 2 months x 2 stores
+    assert set(parts.values()) == {1}
+
+
+def _big_customer_drop(spark, workdir, n_customers):
+    """A customer dim of ``n_customers`` and one file with two rows for
+    each (one per month), so the customer mart has 2 * n_customers rows."""
+    customer = spark.createDataFrame(
+        [(i, f"first{i}", f"last{i}", f"address line {i}", "560001", f"98{i:08d}")
+         for i in range(1, n_customers + 1)],
+        "customer_id int, first_name string, last_name string, address string, "
+        "pincode string, phone_number string",
+    )
+    rows = [
+        [c, 121, "sugar 50", f"2023-0{m}-10", 1, 50.0, 1, 50.0]
+        for c in range(1, n_customers + 1) for m in (3, 4)
+    ]
+    _write_csv(f"{workdir['source']}/a.csv", HAPPY_HEADER, rows)
+    return customer
+
+
+def test_mart_files_follow_its_size(spark, dims, workdir):
+    """The customer mart (tens of KB cached) is one file per sink at an
+    advisory partition size of ``64m`` (Spark's byte-string form of the
+    default), and several in a session whose advisory size is a few
+    KB."""
+    from pyspark.sql import SparkSession
+
+    clone = SparkSession(spark.sparkContext, spark._jsparkSession.cloneSession())
+    dims = {**dims, "customer": _big_customer_drop(spark, workdir, 500)}
+    files = {}
+    for advisory in ("64m", "4k"):
+        clone.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
+        res = run_pipeline(
+            clone, workdir["source"], workdir["error"], workdir["processed"],
+            workdir["out"], dims, run_id=f"r{advisory}",
+        )
+        assert res.customer_mart_rows == 1000
+        assert spark.read.parquet(res.outputs["customer_mart"]).count() == 1000
+        files[advisory] = [
+            sum(_parquet_files(path).values())
+            for path in (
+                res.outputs["customer_mart"],
+                f"{res.outputs['customer_mart_table']}/run=r{advisory}",
+            )
+        ]
+        for name in os.listdir(workdir["processed"]):  # land the drop again
+            os.replace(f"{workdir['processed']}/{name}", f"{workdir['source']}/{name}")
+    assert files["64m"] == [1, 1]
+    assert min(files["4k"]) > 1, files
+
+
+def test_wide_file_reads_with_an_explicit_schema(spark, dims, workdir):
+    """A wide file is read with the schema its probed header gives, not
+    an inferred one: its extra field keeps its text (``007``, not
+    ``7``), and a malformed ``total_cost`` is NULL while the column
+    stays double for the whole batch."""
+    import retail_sales_data_pipeline_spark.pipeline as pl
+
+    exact = f"{workdir['source']}/a.csv"
+    wide = f"{workdir['source']}/wide.csv"
+    _write_csv(exact, HAPPY_HEADER, _happy_rows())
+    row = [1, 121, "sugar 50", "2023-03-10", 1, 50.0, 1, "abc", "007"]
+    _write_csv(wide, HAPPY_HEADER + ["code"], [row])
+    fact = pl._conformed_fact(
+        spark, [exact, wide], {exact: HAPPY_HEADER, wide: HAPPY_HEADER + ["code"]}
+    )
+    assert dict(fact.dtypes)["total_cost"] == "double"
+    (got,) = fact.where("additional_column IS NOT NULL").collect()
+    assert (got.additional_column, got.total_cost, got.price) == ("007", None, 50.0)
+
+    res = run_pipeline(
+        spark, workdir["source"], workdir["error"], workdir["processed"],
+        workdir["out"], dims, run_id="rW",
+    )
+    assert len(res.accepted) == 2 and res.customer_mart_rows == 10
+
+
+def test_fill_failure_raises_before_any_output(spark, dims, workdir, monkeypatch):
+    """A cache fill that raises fails the run before any sink starts: no
+    byte lands under the run's output or the two tables, the accepted
+    file stays 'A', the reject is quarantined, and no cached relation
+    outlives the run."""
+    import retail_sales_data_pipeline_spark.pipeline as pl
+
+    def failing_fill(df):
+        raise RuntimeError("fill failed")
+
+    monkeypatch.setattr(pl, "fill_cache", failing_fill)
+    spark.catalog.clearCache()
+    _drop_with_reject(workdir)
+    ledger = Ledger(workdir["ledger"])
+    with pytest.raises(RuntimeError, match="fill failed"):
+        run_pipeline(
+            spark, workdir["source"], workdir["error"], workdir["processed"],
+            workdir["out"], dims, ledger=ledger, run_id="rX",
+        )
+    for sub in ("rX", "tables"):
+        assert not os.path.exists(os.path.join(workdir["out"], sub)), sub
+    assert os.listdir(workdir["error"]) == ["bad.csv"]
+    assert os.listdir(workdir["source"]) == ["good.csv"]
+    assert ledger.active_files(spark) == ["good.csv"]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_pipeline_job_count(spark, dims, workdir):
+    """A small run with a ledger (one good, one wide, one rejected file)
+    runs 20 Spark jobs, among them one fill per mart and one job per
+    sink. Inferring the wide file's schema would add two jobs, and sinks
+    that each fill a lazily cached mart would add five."""
+    _drop_with_reject(workdir)
+    _write_csv(f"{workdir['source']}/wide.csv", HAPPY_HEADER + ["payment_mode"],
+               [r + ["UPI"] for r in _happy_rows()])
+    ledger = Ledger(workdir["ledger"])
+    ledger.mark_done(spark, {"old.csv": "/src/old.csv"}, seq=1)
+    with _spark_jobs(spark, "pipeline-jobs") as jobs:
+        run_pipeline(
+            spark, workdir["source"], workdir["error"], workdir["processed"],
+            workdir["out"], dims, ledger=ledger, run_id="rJ",
+        )
+        _drain_listener_bus(spark)
+    assert len(jobs) == 20

@@ -1321,11 +1321,12 @@ def test_corrupt_table_schema_degrades_not_prunes(
 def test_conflicting_second_evolution_drops_stale_schema(
     spark, tmp_path, monkeypatch
 ):
-    """Review finding (r11): an evolving merge whose unified schema
-    can't be computed (type-conflicting common column) must DROP the
-    recorded table_schema, not carry the stale one — carrying it made
-    the newly evolved column silently invisible to every explicit-
-    schema read."""
+    """Review finding (r11): a second evolving merge must not carry the
+    recorded table_schema of the first — carrying it made the newly
+    evolved column silently invisible to every explicit-schema read.
+    A common column that comes back narrower (``rev int`` against the
+    table's ``rev long``) is stored at the table's type, so the fresh
+    unified schema is recorded, and pruning stays sound."""
     path = str(tmp_path / "conflict")
     spark.range(10).selectExpr(
         "id", "cast(id as double) v"
@@ -1337,7 +1338,7 @@ def test_conflicting_second_evolution_drops_stale_schema(
     S.merge_into(spark, path, p1, keys=["id"], evolve_schema=True)
     assert S._recorded_schema(S._load_manifest(path)) is not None
 
-    # second evolution: rev comes back as INT (conflict) plus `note`
+    # second evolution: rev comes back as INT plus `note`
     p2 = spark.createDataFrame(
         [(2, 2.0, 3, "x")],
         "id long, v double, rev int, note string",
@@ -1345,14 +1346,17 @@ def test_conflicting_second_evolution_drops_stale_schema(
     S.merge_into(spark, path, p2, keys=["id"], evolve_schema=True)
     man = S._load_manifest(path)
     assert man["mixed_schema"]
-    assert man.get("table_schema") is None  # stale record dropped
+    recorded = S._recorded_schema(man)
+    assert [(f.name, f.dataType.simpleString()) for f in recorded] == [
+        ("id", "bigint"), ("v", "double"), ("rev", "bigint"),
+        ("note", "string"),
+    ]
     got = S.read_table(spark, path)
-    assert "note" in got.columns  # footer-merge fallback sees it
+    assert dict(got.dtypes)["rev"] == "bigint"
     assert got.where("note = 'x'").count() == 1
-    # and the conservative full resolve is back (no unsound pruning)
     from retail_sales_data_pipeline_spark.data_skipping import _prunable
 
-    assert not _prunable(man)
+    assert _prunable(man)
 
 
 def test_fsck_catches_invisible_columns(spark, tmp_path, monkeypatch):

@@ -93,14 +93,46 @@ def test_update_casts_assignment_to_column_type(spark, tmp_path, dv):
     assert S.verify_table(path, deep=True)["ok"]
 
 
+@pytest.mark.parametrize("key", [9, 2], ids=["insert", "matched"])
+def test_evolving_merge_stores_common_columns_at_table_types(
+    spark, tmp_path, key
+):
+    """An evolving merge casts the batch's common columns by store
+    assignment too: a ``v bigint`` batch that adds ``note`` lands in the
+    ``v string`` table with ``v`` as strings, the unified schema is
+    recorded, and the table stays readable, insertable and verifiable.
+    With a matched key the union of the rewrite keeps the table's
+    strings instead of casting them to bigint."""
+    path = str(tmp_path / "t")
+    _table(spark, path, "string")
+    patch = spark.createDataFrame(
+        [(key, 7, "hi")], "id long, v bigint, note string"
+    )
+    res = S.merge_into(spark, path, patch, keys=["id"], evolve_schema=True)
+    assert res["inserted"] + res["updated"] == 1
+    recorded = json.loads(S._load_manifest(path)["table_schema"])
+    assert [(f["name"], f["type"]) for f in recorded["fields"]] == [
+        ("id", "long"), ("v", "string"), ("note", "string")
+    ]
+    tbl = S.read_table(spark, path)
+    assert dict(tbl.dtypes) == {"id": "bigint", "v": "string", "note": "string"}
+    assert {r.id: (r.v, r.note) for r in tbl.collect()}[key] == ("7", "hi")
+    same = spark.createDataFrame([(30, "x", None)], "id long, v string, note string")
+    assert S.insert_into(spark, path, same) == 1
+    assert S.read_table(spark, path).count() == (8 if key == 9 else 7)
+    assert S.verify_table(path, deep=True)["ok"]
+
+
 @pytest.mark.parametrize(
     "op, message",
     [("merge", "does not fit column"), ("update", "does not fit column"),
+     ("merge_evolve", "does not fit column"),
      ("merge_key", "merge keys .* must have the table's types")],
 )
 def test_uncastable_value_raises_before_commit(spark, tmp_path, op, message):
     """A value the table's column type cannot hold (``'x'`` into
-    bigint) raises before the commit point: the manifest is untouched
+    bigint) raises before the commit point, in a merge that adds a
+    column as in any other: the manifest is untouched
     and no staging generation is left behind. A merge key of another
     type raises too: the batch's key values prune the table's files,
     so only an integer key may differ, and only in width."""
@@ -118,6 +150,14 @@ def test_uncastable_value_raises_before_commit(spark, tmp_path, op, message):
                 spark, path,
                 spark.createDataFrame([(2, "x")], "id long, v string"),
                 keys=["id"],
+            )
+        elif op == "merge_evolve":
+            S.merge_into(
+                spark, path,
+                spark.createDataFrame(
+                    [(9, "x", "new")], "id long, v string, note string"
+                ),
+                keys=["id"], evolve_schema=True,
             )
         else:
             S.merge_into(
