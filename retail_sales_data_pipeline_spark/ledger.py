@@ -16,19 +16,24 @@ appends are cheap and conflict-free from many writers, and the snapshot
 is one window query over a tiny metadata table — at 100 TB of fact data
 the ledger still holds one row per *file*, i.e. millions at most.
 
-The ledger is addressed like every other path of the job: its parquet
-is read and written at ``storage.spark_path(path)``, and its existence
-and ``reconcile``'s processed prefix are checked through
-``storage.for_path``, so a ledger under ``s3://`` (mapped to
-``s3a://``), ``file://``, a plain path or any other registered scheme
-works the same way.
+The ledger is addressed like every other path of the job. An append
+runs no Spark job: the driver serializes its few rows with
+``pyarrow.parquet`` and puts them as one new ``part-<uuid>`` object
+through ``storage.for_path(path)``, the way a Delta log entry is one
+small object put by the driver. The put is all-or-nothing (an S3 PUT,
+a rename on a local disk), so a reader never sees part of an event
+file. The events are read with Spark at ``storage.spark_path(path)``,
+and the ledger's existence and ``reconcile``'s processed prefix are
+checked through ``storage.for_path``, so a ledger under ``s3://``
+(mapped to ``s3a://``), ``file://``, a plain path or any other
+registered scheme works the same way.
 
 SURVEY.md §7.4 notes the reference's protocol is not transactional with
 the data writes (mart append can land while the status flip fails ⇒
 duplicate appends on rerun). The observable protocol is preserved, and
-so is that hole. The run-scoped sinks (sinks.run_scoped_path,
-sinks.append_table_run_scoped) overwrite only their own ``run=<id>``,
-so they remove a duplicate only when the retry reuses the crashed
+so is that hole. The run-scoped sinks (``sinks.run_scoped_path`` and
+the mart tables' ``run=<id>`` partitions) overwrite only their own
+run, so they remove a duplicate only when the retry reuses the crashed
 run's id. ``run_pipeline`` never tells a retry that id: a retry under
 a new id, or two concurrent runs over one landing prefix, append the
 same files twice (20 mart rows where one run gives 10) and end with
@@ -38,7 +43,10 @@ are the planned fix.
 
 from __future__ import annotations
 
+import io
+import os
 import time
+import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
 
@@ -72,13 +80,13 @@ class Ledger:
         """Naive UTC wall clock; :meth:`_append` says how it is stored."""
         return datetime.now(tz=timezone.utc).replace(tzinfo=None)
 
-    def _append(
-        self, spark: SparkSession, files: dict[str, str], status: str, seq: int
-    ) -> None:
-        """Append one event per file as a local Arrow relation: the rows
-        reach the JVM as a ``LocalTableScan``, so the write is the only
-        Spark job (a Python-row ``createDataFrame`` adds a Python-worker
-        task).
+    def _append(self, files: dict[str, str], status: str, seq: int) -> None:
+        """Append one event per file as one new parquet object, written
+        on the driver with ``pyarrow.parquet``: no Spark job. Its
+        physical schema is the one Spark writes for ``LEDGER_SCHEMA``
+        (required columns but ``file_location``, ``event_time`` as
+        INT96), so events from either writer read as one table in Spark
+        and in DuckDB.
 
         Stored-instant convention, kept for compatibility with ledgers
         already written: ``event_time`` holds the naive UTC wall clock
@@ -90,22 +98,36 @@ class Ledger:
         across the writer change.
         """
         import pyarrow as pa
+        import pyarrow.parquet as pq
 
         now = self._now()
         micros = int(time.mktime(now.timetuple())) * 1_000_000 + now.microsecond
         n = len(files)
-        table = pa.table(
-            {
-                "file_name": pa.array(list(files), pa.string()),
-                "file_location": pa.array(list(files.values()), pa.string()),
-                "status": pa.array([status] * n, pa.string()),
-                "event_time": pa.array([micros] * n, pa.timestamp("us", tz="UTC")),
-                "seq": pa.array([seq] * n, pa.int64()),
-            }
+        cols = {
+            "file_name": pa.array(list(files), pa.string()),
+            "file_location": pa.array(list(files.values()), pa.string()),
+            "status": pa.array([status] * n, pa.string()),
+            "event_time": pa.array([micros] * n, pa.timestamp("us", tz="UTC")),
+            "seq": pa.array([seq] * n, pa.int64()),
+        }
+        # nullability from LEDGER_SCHEMA: a non-nullable column is a
+        # `required` parquet column, as Spark writes it
+        table = pa.Table.from_arrays(
+            [cols[f.name] for f in LEDGER_SCHEMA.fields],
+            schema=pa.schema(
+                [pa.field(f.name, cols[f.name].type, f.nullable) for f in LEDGER_SCHEMA.fields]
+            ),
         )
-        spark.createDataFrame(table, LEDGER_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(spark_path(self.path))
+        buf = io.BytesIO()
+        pq.write_table(
+            table,
+            buf,
+            compression="snappy",
+            use_deprecated_int96_timestamps=True,
+            store_schema=False,
+        )
+        obj = os.path.join(self.path, f"part-{uuid.uuid4()}.snappy.parquet")
+        for_path(self.path).put_bytes(obj, buf.getvalue())
 
     def _events(self, spark: SparkSession) -> DataFrame | None:
         # a missing ledger is "not created yet", checked through the
@@ -119,13 +141,13 @@ class Ledger:
 
     def mark_active(self, spark: SparkSession, files: dict[str, str], seq: int = 0) -> None:
         """K6: record accepted files as in-flight (reference main.py:184-213)."""
-        self._append(spark, files, STATUS_ACTIVE, seq)
+        self._append(files, STATUS_ACTIVE, seq)
 
     def mark_done(self, spark: SparkSession, files: dict[str, str], seq: int = 1) -> None:
         """K7: flip files to inactive on success (reference main.py:417-447).
         ``seq`` breaks ties when both events share a timestamp tick.
         """
-        self._append(spark, files, STATUS_INACTIVE, seq)
+        self._append(files, STATUS_INACTIVE, seq)
 
     def snapshot(self, spark: SparkSession) -> DataFrame:
         """Latest event per file (the reference's mutable-row view of
@@ -165,8 +187,6 @@ class Ledger:
         metadata only; safe to run any time (idempotent). Presence is
         checked through the prefix's :mod:`.storage` backend, the one
         ``validate.archive_files`` moved the files with."""
-        import os
-
         done = {}
         for name in self.active_files(spark):
             dst = os.path.join(processed_dir, name)

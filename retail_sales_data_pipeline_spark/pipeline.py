@@ -7,9 +7,10 @@ script) as one orchestration function over the library layers:
 discover → crash-detect (ledger 'A' probe) → validate headers →
 quarantine rejects → ledger mark-active → conform+union accepted files →
 star-join dims → derive customer + sales marts as grouped sums → cache
-and fill the two marts → fan-out sinks (parquet, partitioned parquet,
-mart append), each writing its mart at the cache's measured size →
-archive processed files → ledger mark-done.
+and fill the two marts → fan-out sinks: three Spark writes (parquet,
+partitioned parquet), each writing its mart at the cache's measured
+size, and two publishes that copy each mart's parquet files into its
+mart table → archive processed files → ledger mark-done.
 
 Steps that do not depend on each other run at the same time: several
 jobs submitted from separate driver threads share one SparkContext
@@ -24,16 +25,21 @@ through ``session.spark_threads``:
   the accepted set (it waits for the probe first);
 - the two mart caches are filled, one job each, as soon as the marts
   are defined, beside the probe, quarantine and mark-active;
-- the five sink writes start together once the 'A' events are durable
-  and both caches are full, and share the executors; the mart row
-  counts ride the two K1 writes as ``Observation``s.
+- the three Spark writes (K1 per mart, K2 for the sales mart) start
+  together once the 'A' events are durable and both caches are full,
+  and share the executors; the mart row counts ride the two K1 writes
+  as ``Observation``s. Each K1 write's thread then publishes its mart's
+  K3 table partition by copying the files K1 wrote
+  (``sinks.publish_run_scoped``): two publishes, no third write of
+  the same rows.
 
 Orderings kept despite the overlap: probe → quarantine and 'A' events
 (a failing probe moves no file and marks nothing) → any output byte →
-archive → 'I' events. A fill writes no output byte, so it may run
-anywhere before the sinks. A failing fill or sink raises only after
-every job the run submitted has returned, so no job of the run
-outlives it, no cache outlives it, and the files stay 'A'.
+archive → 'I' events, and each publish follows its own K1 write. A
+fill writes no output byte, so it may run anywhere before the sinks. A
+failing fill or sink raises only after every job the run submitted has
+returned, so no job of the run outlives it, no cache outlives it, and
+the files stay 'A'.
 
 Paths: the five prefixes (source, error, processed, output, ledger)
 may be plain paths or URIs of any scheme with a registered backend.
@@ -99,7 +105,8 @@ from .operators.star_join import Dim, star_join
 from .schema import MANDATORY_COLUMNS, SALES_SCHEMA, conform, union_conformed
 from .session import spark_threads
 from .sinks import (
-    append_table_run_scoped,
+    append_table_run_scoped,  # noqa: F401 - perfbench's span list wraps it here
+    publish_run_scoped,
     run_scoped_path,
     write_parquet,
     write_partitioned_parquet,
@@ -341,12 +348,13 @@ def run_pipeline(
                 return result
 
             # 9. fan-out sinks (reference main.py:313-380, K1/K2/K3):
-            # all five at once, and only once the 'A' events are
-            # durable. The table sinks are run-scoped appends: a
-            # retried run OVERWRITES its own run=<id> partition instead
-            # of double-appending. The mart row counts ride the K1
-            # writes as Observations, so no extra count() job runs.
-            # Each sink writes its mart at the filled cache's size.
+            # the three Spark writes at once, and only once the 'A'
+            # events are durable. Each K1 write's thread then publishes
+            # the files it wrote as its mart table's run=<id> partition
+            # (K3), so a retried run OVERWRITES its own partition
+            # instead of double-appending. The mart row counts ride the
+            # K1 writes as Observations, so no extra count() job runs.
+            # Each write writes its mart at the filled cache's size.
             if marked is not None:
                 marked.result()
             for fill in fills:
@@ -365,18 +373,29 @@ def run_pipeline(
             }
             customer_rows, sales_rows = Observation(), Observation()
             n = F.count(F.lit(1)).alias("n")
-            # sink failures raise (the first, in K order) once all five
-            # have returned
+
+            def write_and_publish(mart, rows, key, table_key):
+                write_parquet(mart.observe(rows, n), result.outputs[key])
+                publish_run_scoped(
+                    result.outputs[key], result.outputs[table_key], run_id
+                )
+
+            # sink failures raise (the first, in submission order) once
+            # every write and publish has returned
             with spark_threads(spark) as sink:
                 sink(
-                    write_parquet,
-                    customer_out.observe(customer_rows, n),
-                    result.outputs["customer_mart"],
+                    write_and_publish,
+                    customer_out,
+                    customer_rows,
+                    "customer_mart",
+                    "customer_mart_table",
                 )
                 sink(
-                    write_parquet,
-                    sales_out.observe(sales_rows, n),
-                    result.outputs["sales_mart"],
+                    write_and_publish,
+                    sales_out,
+                    sales_rows,
+                    "sales_mart",
+                    "sales_mart_table",
                 )
                 sink(
                     write_partitioned_parquet,
@@ -384,23 +403,12 @@ def run_pipeline(
                     result.outputs["sales_mart_partitioned"],
                     ["sales_month", "store_id"],
                 )
-                sink(
-                    append_table_run_scoped,
-                    customer_out,
-                    result.outputs["customer_mart_table"],
-                    run_id,
-                )
-                sink(
-                    append_table_run_scoped,
-                    sales_out,
-                    result.outputs["sales_mart_table"],
-                    run_id,
-                )
             # only now: Observation.get blocks forever if its write failed
             result.customer_mart_rows = customer_rows.get["n"]
             result.sales_mart_rows = sales_rows.get["n"]
 
             # 10. finalize (reference main.py:394-447), after every write
+            # and publish
             archive_files(report.accepted, processed_dir)
             if ledger is not None:
                 ledger.mark_done(spark, accepted_named, seq=1)

@@ -119,6 +119,27 @@ def append_table_run_scoped(df: DataFrame, path: str, run_id) -> None:
     )
 
 
+def publish_run_scoped(src_dir: str, path: str, run_id) -> None:
+    """K3 from a finished parquet write: replace the table's
+    ``run=<id>`` partition (the layout :func:`append_table_run_scoped`
+    writes) with copies of ``src_dir``'s data files, so a batch already
+    written once is not written again by a second Spark job. The
+    reference does the same with its local parquet, uploaded file by
+    file (upload_to_s3.py:10-24). Names starting with ``_`` or ``.``
+    (``_SUCCESS``, checksums, staging files) are not data and are not
+    copied. Every step goes through ``storage.for_path``: on an object
+    store each copy is server-side, so no byte passes through the
+    driver, and each file appears whole."""
+    dst = os.path.join(path, f"run={run_id}")
+    store = _storage.for_path(dst)
+    if store.exists(dst):
+        store.delete(dst)
+    for f in _storage.for_path(src_dir).list_files(src_dir):
+        name = f.rsplit("/", 1)[-1]
+        if not name.startswith(("_", ".")):
+            store.copy(f, f"{dst}/{name}")
+
+
 _MANIFEST = "_manifest.json"
 # the POSIX commit lock's timing, re-exported from the local backend's
 # conditional put (tests pin the TTL)

@@ -458,17 +458,13 @@ def read_csv_full(
     spark: SparkSession,
     path: str,
     schema=None,
-    infer: bool = False,
 ) -> DataFrame:
     """Full CSV scan (S2).
 
     The reference always infers (main.py:239-242) which costs an extra
-    pass per file; callers here should pass an explicit ``schema`` and
-    keep ``infer`` for parity tests only.
+    pass per file; callers here pass an explicit ``schema``.
     """
     reader = spark.read.option("header", "true")
     if schema is not None:
         reader = reader.schema(schema)
-    elif infer:
-        reader = reader.option("inferSchema", "true")
     return reader.csv(path)

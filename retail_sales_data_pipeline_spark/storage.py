@@ -73,9 +73,26 @@ class PreconditionFailed(Exception):
 
 @runtime_checkable
 class Storage(Protocol):
-    """Minimal object-store surface the engine's control plane needs."""
+    """Minimal object-store surface the engine's control plane needs.
+
+    ``put_bytes`` and ``copy`` must each be all-or-nothing (an S3 PUT or
+    server-side copy; a hidden temp file renamed into place on a local
+    disk): the ledger's appends are puts, the mart tables' ``run=<id>``
+    partitions are published by copy, and the manifest commits
+    (:mod:`.table_io`) use the conditional puts."""
 
     def read_bytes(self, path: str) -> bytes: ...
+
+    def put_bytes(
+        self,
+        path: str,
+        data: bytes,
+        *,
+        if_match: str | None = None,
+        if_none_match: bool = False,
+    ) -> str: ...
+
+    def copy(self, src: str, dst: str) -> None: ...
 
     def list(self, dir_path: str) -> list[str]: ...
 
@@ -102,6 +119,31 @@ def _etag(data: bytes) -> str:
 def _write(path: str, data: bytes) -> None:
     with open(path, "wb") as f:
         f.write(data)
+
+
+def _hidden_tmp(p: str) -> str:
+    """A per-writer staging name beside ``p`` that starts with ``.``:
+    Spark's and Hadoop's file listings skip such names, so a staged
+    file is never read as part of a table or ledger directory."""
+    d, name = os.path.split(p)
+    return os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+
+
+def _replace_into(p: str, fill) -> None:
+    """Put a whole file at ``p`` in one step: ``fill(tmp)`` writes the
+    bytes under a hidden staging name, then ``os.replace`` renames it
+    over ``p`` (atomic on POSIX), so a reader sees the old file or the
+    complete new one, never part of one. A failed fill leaves no file."""
+    tmp = _hidden_tmp(p)
+    try:
+        fill(tmp)
+        os.replace(tmp, p)
+    except BaseException:
+        try:
+            os.remove(tmp)
+        except OSError:
+            pass
+        raise
 
 
 class LocalStorage:
@@ -152,13 +194,13 @@ class LocalStorage:
         conditional-write contract: ``if_none_match`` succeeds only if
         no file exists at ``path``, ``if_match`` only if the current
         file's ETag still equals it; a rejected precondition raises
-        :class:`PreconditionFailed`. An unconditional put is a plain
-        write (control-plane sidecars whose visibility another commit
-        gates); a conditional one is :meth:`_fenced_replace`."""
+        :class:`PreconditionFailed`. Either put is atomic, like an S3
+        PUT: an unconditional one is :func:`_replace_into`, a
+        conditional one is :meth:`_fenced_replace`."""
         p = self._strip(path)
         os.makedirs(os.path.dirname(p) or ".", exist_ok=True)
         if if_match is None and not if_none_match:
-            _write(p, data)
+            _replace_into(p, lambda tmp: _write(tmp, data))
         else:
             self._fenced_replace(p, data, if_match, if_none_match)
         return _etag(data)
@@ -284,7 +326,11 @@ class LocalStorage:
         os.makedirs(self._strip(dir_path), exist_ok=True)
 
     def copy(self, src: str, dst: str) -> None:
-        shutil.copy2(self._strip(src), self._strip(dst))
+        """Copy one file, creating ``dst``'s directory; atomic like
+        :meth:`put_bytes` (and like an S3 server-side copy)."""
+        d = self._strip(dst)
+        os.makedirs(os.path.dirname(d) or ".", exist_ok=True)
+        _replace_into(d, lambda tmp: shutil.copy2(self._strip(src), tmp))
 
     def move(self, src: str, dst: str) -> None:
         shutil.move(self._strip(src), self._strip(dst))

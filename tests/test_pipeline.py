@@ -329,12 +329,12 @@ def test_single_header_probe_per_file(spark, dims, workdir, monkeypatch):
     )
     real_full = pl.read_csv_full
 
-    def guarded_full(spark_, path, schema=None, infer=False):
-        assert schema is not None or infer, (
+    def guarded_full(spark_, path, schema=None):
+        assert schema is not None, (
             f"header re-probe via read_csv_full({path!r}) — reuse "
             "ValidationReport.columns instead"
         )
-        return real_full(spark_, path, schema=schema, infer=infer)
+        return real_full(spark_, path, schema=schema)
 
     monkeypatch.setattr(pl, "read_csv_full", guarded_full)
 
@@ -534,7 +534,8 @@ def _spark_jobs(spark, group):
 def test_validate_and_ledger_job_counts(spark, tmp_path):
     """The per-file driver path runs no Spark job per file: validating a
     drop (accepted, wide, missing-column, zero-byte) runs none at all,
-    and one ledger append is exactly its write job."""
+    and neither does a ledger append, which the driver puts as one
+    parquet object."""
     from retail_sales_data_pipeline_spark.validate import validate_files
 
     src = tmp_path / "src"
@@ -556,7 +557,8 @@ def test_validate_and_ledger_job_counts(spark, tmp_path):
     ledger = Ledger(str(tmp_path / "ledger"))
     with _spark_jobs(spark, "mark_active") as jobs:
         ledger.mark_active(spark, {"a.csv": paths[0], "b.csv": paths[1]}, seq=0)
-    assert len(jobs) == 1
+    assert jobs == []
+    assert sorted(ledger.active_files(spark)) == ["a.csv", "b.csv"]
 
 
 def test_ledger_at_uri_path_detects_crash(spark, tmp_path):
@@ -643,6 +645,91 @@ def test_ledger_event_time_matches_row_list_writer(spark, tmp_path, monkeypatch)
         time.tzset()
 
 
+def _spark_ledger_append(spark, path, events):
+    """Append ledger events as one Spark write job, the way every ledger
+    event was written before appends became driver puts."""
+    from retail_sales_data_pipeline_spark.ledger import LEDGER_SCHEMA
+
+    spark.createDataFrame(events, LEDGER_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(path)
+
+
+def test_ledger_reads_spark_and_driver_written_events_as_one(
+    spark, tmp_path, monkeypatch
+):
+    """A ledger whose first events Spark wrote and whose later events
+    the driver put (running no Spark job) reads like a ledger whose
+    events Spark wrote throughout: the same snapshot and active files in
+    Spark, the same latest status per file through DuckDB, and the
+    driver's files carry the physical parquet schema Spark writes
+    (required columns but file_location, event_time as INT96). A
+    same-instant tie between the writers is broken by seq."""
+    from datetime import datetime, timedelta
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    t0 = datetime(2026, 1, 15, 12, 0, 0, 123456)
+    t1 = t0 + timedelta(minutes=1)
+    first = [
+        ("a.csv", "/src/a.csv", "A", t0, 0),
+        ("b.csv", "/src/b.csv", "A", t0, 0),
+        ("c.csv", None, "A", t0, 0),
+    ]
+    later = [  # (now, method, files, seq)
+        (t1, "mark_done", {"a.csv": "/src/a.csv"}, 1),
+        (t1, "mark_active", {"d.csv": "/src/d.csv", "e.csv": "/src/e.csv"}, 0),
+        (t0, "mark_done", {"c.csv": "/src/c.csv"}, 1),  # tie with c's 'A'
+        (t1 + timedelta(seconds=1), "mark_done", {"e.csv": "/src/e.csv"}, 1),
+    ]
+    spark_only, mixed = str(tmp_path / "spark_only"), str(tmp_path / "mixed")
+    status = {"mark_active": "A", "mark_done": "I"}
+    _spark_ledger_append(spark, spark_only, first)
+    for now, method, files, seq in later:
+        _spark_ledger_append(
+            spark, spark_only,
+            [(f, loc, status[method], now, seq) for f, loc in files.items()],
+        )
+    _spark_ledger_append(spark, mixed, first)
+    spark_files = set(os.listdir(mixed))
+    ledger = Ledger(mixed)
+    with _spark_jobs(spark, "driver-appends") as jobs:
+        for now, method, files, seq in later:
+            monkeypatch.setattr(Ledger, "_now", lambda self, now=now: now)
+            getattr(ledger, method)(spark, files, seq=seq)
+    assert jobs == []
+
+    def snap(path):
+        return sorted(map(tuple, Ledger(path).snapshot(spark).collect()))
+
+    assert snap(mixed) == snap(spark_only)
+    assert [r[2] for r in snap(mixed)] == ["I", "A", "I", "A", "I"]
+    assert sorted(ledger.active_files(spark)) == sorted(
+        Ledger(spark_only).active_files(spark)
+    ) == ["b.csv", "d.csv"]
+
+    def latest(path):
+        return duckdb.sql(
+            f"""SELECT file_name, status FROM (SELECT file_name, status,
+            row_number() OVER (PARTITION BY file_name ORDER BY event_time DESC,
+            seq DESC) AS rn FROM read_parquet('{path}/*.parquet'))
+            WHERE rn = 1 ORDER BY file_name"""
+        ).fetchall()
+
+    assert latest(mixed) == latest(spark_only) == [
+        ("a.csv", "I"), ("b.csv", "A"), ("c.csv", "I"), ("d.csv", "A"), ("e.csv", "I"),
+    ]
+    (spark_file,) = [f for f in spark_files if f.endswith(".parquet")]
+    driver_files = sorted(set(os.listdir(mixed)) - spark_files)
+    assert len(driver_files) == len(later)
+    want = pq.ParquetFile(os.path.join(mixed, spark_file)).schema
+    for f in driver_files:
+        assert f.startswith("part-") and f.endswith(".snappy.parquet"), f
+        got = pq.ParquetFile(os.path.join(mixed, f)).schema
+        assert [str(c) for c in got] == [str(c) for c in want], f
+
+
 class _CallLog:
     """Thread-safe record of wrapped calls' starts and ends, in order."""
 
@@ -650,14 +737,18 @@ class _CallLog:
         self._lock = threading.Lock()
         self.events: list[tuple[str, str]] = []
 
-    def wrap(self, name, fn, delay=0.0):
+    def wrap(self, name, fn, delay=0.0, key=None):
+        """``fn`` logged under ``name``, or under ``name key(*args)``
+        when ``key`` tells the calls apart."""
+
         def wrapper(*args, **kwargs):
-            self._add("start", name)
+            call = name if key is None else f"{name} {key(*args)}"
+            self._add("start", call)
             try:
                 time.sleep(delay)  # widens any race the ordering forbids
                 return fn(*args, **kwargs)
             finally:
-                self._add("end", name)
+                self._add("end", call)
 
         return wrapper
 
@@ -667,6 +758,13 @@ class _CallLog:
 
     def at(self, event, name) -> list[int]:
         return [i for i, e in enumerate(self.events) if e == (event, name)]
+
+    def of(self, event, name) -> list[int]:
+        """:meth:`at` over every call logged under ``name``, keyed or not."""
+        return [
+            i for i, (e, n) in enumerate(self.events)
+            if e == event and n.split(" ", 1)[0] == name
+        ]
 
 
 def _drop_with_reject(workdir):
@@ -680,13 +778,17 @@ def _drain_listener_bus(spark):
 
 
 def test_pipeline_overlap_keeps_side_effect_order(spark, dims, workdir, monkeypatch):
-    """The ledger runs beside planning and the five sinks run together,
-    but the side effects keep their order: the probe returns before
-    mark-active starts and before any quarantine; the 'A' events are
-    written before any sink starts; archive and mark-done start only
-    after every write has returned. Each wrapped step is slowed so an
-    unwaited step would start early."""
+    """The ledger runs beside planning and the three sink writes run
+    together, but the side effects keep their order: the probe returns
+    before mark-active starts and before any quarantine; the 'A' events
+    are written before any write or publish starts; each K3 publish
+    starts after its own K1 write has returned; archive and mark-done
+    start only after every write and publish has returned. Each wrapped
+    step is slowed so an unwaited step would start early."""
     import retail_sales_data_pipeline_spark.pipeline as pl
+
+    def by_dir(*args):
+        return os.path.basename(args[1])
 
     log = _CallLog()
     monkeypatch.setattr(Ledger, "active_files", log.wrap("probe", Ledger.active_files, 0.3))
@@ -694,12 +796,15 @@ def test_pipeline_overlap_keeps_side_effect_order(spark, dims, workdir, monkeypa
     monkeypatch.setattr(Ledger, "mark_done", log.wrap("mark_done", Ledger.mark_done))
     monkeypatch.setattr(pl, "quarantine_files", log.wrap("quarantine", pl.quarantine_files))
     monkeypatch.setattr(pl, "archive_files", log.wrap("archive", pl.archive_files))
-    monkeypatch.setattr(pl, "write_parquet", log.wrap("sink", pl.write_parquet))
+    monkeypatch.setattr(pl, "write_parquet", log.wrap("write", pl.write_parquet, 0.3, by_dir))
     monkeypatch.setattr(
-        pl, "write_partitioned_parquet", log.wrap("sink", pl.write_partitioned_parquet)
+        pl, "write_partitioned_parquet",
+        log.wrap("write", pl.write_partitioned_parquet, key=by_dir),
     )
     monkeypatch.setattr(
-        pl, "append_table_run_scoped", log.wrap("sink", pl.append_table_run_scoped, 0.3)
+        pl, "publish_run_scoped",
+        log.wrap("publish", pl.publish_run_scoped, 0.3,
+                 key=lambda src, *_: os.path.basename(src)),
     )
 
     _drop_with_reject(workdir)
@@ -715,27 +820,33 @@ def test_pipeline_overlap_keeps_side_effect_order(spark, dims, workdir, monkeypa
     (mark_end,) = log.at("end", "mark_active")
     (quarantine_start,) = log.at("start", "quarantine")
     assert probe_end < mark_start and probe_end < quarantine_start
-    sink_starts, sink_ends = log.at("start", "sink"), log.at("end", "sink")
-    assert len(sink_starts) == len(sink_ends) == 5
-    assert mark_end < min(sink_starts)
-    assert max(sink_ends) < log.at("start", "archive")[0]
-    assert max(sink_ends) < log.at("start", "mark_done")[0]
+    starts = log.of("start", "write") + log.of("start", "publish")
+    ends = log.of("end", "write") + log.of("end", "publish")
+    assert len(log.of("start", "write")) == len(log.of("end", "write")) == 3
+    assert len(log.of("start", "publish")) == len(log.of("end", "publish")) == 2
+    for k1 in ("customer_data_mart", "sales_team_data_mart"):
+        (write_end,) = log.at("end", f"write {k1}")
+        (publish_start,) = log.at("start", f"publish {k1}")
+        assert write_end < publish_start, k1
+    assert mark_end < min(starts)
+    assert max(ends) < log.at("start", "archive")[0]
+    assert max(ends) < log.at("start", "mark_done")[0]
 
 
 def test_pipeline_sink_failure_waits_and_leaves_files_active(
     spark, dims, workdir, monkeypatch
 ):
-    """One failing sink: run_pipeline raises its error only after the
-    other writes have returned. No job of the caller's group is left
-    running, no worker thread survives, the caches are released, and
-    the accepted file is neither archived nor flipped to 'I' — the next
-    run's probe reports it."""
+    """One failing sink (a K3 publish): run_pipeline raises its error
+    only after the other writes have returned. No job of the caller's
+    group is left running, no worker thread survives, the caches are
+    released, and the accepted file is neither archived nor flipped to
+    'I' — the next run's probe reports it."""
     import retail_sales_data_pipeline_spark.pipeline as pl
 
-    def failing_append(df, path, run_id):
+    def failing_publish(src_dir, path, run_id):
         raise RuntimeError("table sink down")
 
-    monkeypatch.setattr(pl, "append_table_run_scoped", failing_append)
+    monkeypatch.setattr(pl, "publish_run_scoped", failing_publish)
     _drop_with_reject(workdir)
     ledger = Ledger(workdir["ledger"])
     sc = spark.sparkContext
@@ -748,7 +859,7 @@ def test_pipeline_sink_failure_waits_and_leaves_files_active(
             )
         _drain_listener_bus(spark)
     tracker = sc.statusTracker()
-    assert jobs  # the ledger and the K1/K2 writes ran in the caller's group
+    assert jobs  # the probe, the fills and the K1/K2 writes ran in the caller's group
     assert [j for j in jobs if tracker.getJobInfo(j).status == "RUNNING"] == []
     assert [t for t in threading.enumerate() if t.name.startswith("run_pipeline-rF")] == []
     assert len(sc._jsc.getPersistentRDDs()) == cached_before
@@ -768,8 +879,9 @@ def test_pipeline_sink_failure_waits_and_leaves_files_active(
 def test_pipeline_jobs_carry_caller_job_group(spark, dims, workdir):
     """Every job of the run, including those its worker threads submit,
     runs in the caller's job group: the set of ungrouped jobs does not
-    grow, and the caller's group holds the five sink writes and the two
-    ledger appends."""
+    grow, and the caller's group holds at least the seven jobs the worker
+    threads submit: the ledger probe's two, the two cache fills and the
+    three Spark writes (K1 per mart, K2)."""
     tracker = spark.sparkContext.statusTracker()
     _drain_listener_bus(spark)
     ungrouped = set(tracker.getJobIdsForGroup())
@@ -1241,9 +1353,11 @@ def test_fill_failure_raises_before_any_output(spark, dims, workdir, monkeypatch
 
 def test_pipeline_job_count(spark, dims, workdir):
     """A small run with a ledger (one good, one wide, one rejected file)
-    runs 20 Spark jobs, among them one fill per mart and one job per
-    sink. Inferring the wide file's schema would add two jobs, and sinks
-    that each fill a lazily cached mart would add five."""
+    runs 16 Spark jobs, among them one fill per mart and one job per
+    Spark write (K1 twice, K2). The K3 tables are copies of K1's files
+    and the ledger appends are driver puts, so neither runs a job: a
+    Spark write per K3 table and per append would add four, and
+    inferring the wide file's schema two."""
     _drop_with_reject(workdir)
     _write_csv(f"{workdir['source']}/wide.csv", HAPPY_HEADER + ["payment_mode"],
                [r + ["UPI"] for r in _happy_rows()])
@@ -1255,4 +1369,4 @@ def test_pipeline_job_count(spark, dims, workdir):
             workdir["out"], dims, ledger=ledger, run_id="rJ",
         )
         _drain_listener_bus(spark)
-    assert len(jobs) == 20
+    assert len(jobs) == 16

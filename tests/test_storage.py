@@ -65,6 +65,65 @@ def test_local_conditional_put_race_has_one_winner(tmp_path):
         sys.setswitchinterval(interval)
 
 
+def test_local_put_and_copy_never_show_a_partial_file(tmp_path, monkeypatch):
+    """A thread listing a directory while an unconditional put or a copy
+    into it is paused halfway through its bytes sees no partial file
+    under a name a reader opens: the bytes are staged under a name that
+    starts with ``.``, then renamed in whole, as Spark's committer puts
+    table and ledger files in place."""
+    import shutil
+
+    loc = S.LocalStorage()
+    body = b"x" * 100_000
+    src = tmp_path / "src.parquet"
+    src.write_bytes(body)
+    out = tmp_path / "out"
+    out.mkdir()
+    paused, resume = threading.Event(), threading.Event()
+
+    def halfway_write(path, data):
+        with open(path, "wb") as f:
+            f.write(data[: len(data) // 2])
+            f.flush()
+            paused.set()
+            assert resume.wait(30)
+            f.write(data[len(data) // 2:])
+
+    def halfway_copyfile(s, d, **_):
+        with open(s, "rb") as f:
+            halfway_write(d, f.read())
+        return d
+
+    monkeypatch.setattr(S, "_write", halfway_write)
+    monkeypatch.setattr(shutil, "copyfile", halfway_copyfile)
+    seen: list[dict[str, int]] = []
+
+    def lister():
+        assert paused.wait(30)
+        seen.append({
+            n: os.path.getsize(out / n)
+            for n in os.listdir(out) if not n.startswith((".", "_"))
+        })
+        resume.set()
+
+    for op in (
+        lambda: loc.put_bytes(str(out / "put.parquet"), body),
+        lambda: loc.copy(str(src), str(out / "copy.parquet")),
+    ):
+        paused.clear()
+        resume.clear()
+        t = threading.Thread(target=lister)
+        t.start()
+        op()
+        t.join(timeout=30)
+        assert not t.is_alive()
+    assert len(seen) == 2
+    assert all(size == len(body) for listing in seen for size in listing.values()), seen
+    assert sorted(os.listdir(out)) == ["copy.parquet", "put.parquet"]
+    assert (out / "put.parquet").read_bytes() == body
+    assert (out / "copy.parquet").read_bytes() == body
+
+
 def test_for_path_resolution():
     assert S.for_path("/plain/path") is S.LOCAL
     assert S.for_path("file:///x/y") is S.LOCAL
