@@ -20,7 +20,6 @@ import time
 
 from retail_sales_data_pipeline_spark.caching import release_persisted
 from retail_sales_data_pipeline_spark.plans import all_queries
-from retail_sales_data_pipeline_spark.plans.registry import retired_twins
 from retail_sales_data_pipeline_spark.session import get_spark
 
 HEADLINE = [
@@ -242,18 +241,8 @@ def main() -> None:
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     spark = get_spark(app_name="bench")
 
-    queries = dict(all_queries())
-    # retired oracle-twin variants left the driver registry in r6;
-    # bench_ann_cosine_arrow stays TIMED (the name filter below picks
-    # it up) — dropping it would shrink the suite total and read as a
-    # phantom perf win round-over-round. The other retired twins were
-    # never in HEADLINE and are merely resolvable here, not timed. (The
-    # banded-LSH twin was deleted outright: its query is
-    # ann_lsh_banded_topk, which HEADLINE times.)
-    queries.update({k: fn for k, (fn, _twin) in retired_twins().items()})
+    queries = all_queries()
     names = [n for n in HEADLINE if n in queries]
-    # include any extension headliners registered later
-    names += [n for n in sorted(queries) if n.startswith("bench_")]
     _warmup(spark, queries, names)
 
     attempts = [_run_suite(spark, queries, names, sf_dir)]

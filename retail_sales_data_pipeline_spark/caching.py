@@ -133,8 +133,8 @@ def release_persisted(since: int = 0, blocking: bool = False) -> int:
             n += 1
         except Exception as e:  # noqa: BLE001 — must not fail the runner
             # A stopped session has nothing to drop (expected at exit);
-            # anything else is surfaced, not swallowed, because the
-            # dedup_headroom persist-lifecycle audit records this count.
+            # anything else is surfaced, not swallowed: the returned
+            # count is how a runner audits its persist lifecycle.
             print(
                 f"release_persisted: unpersist failed "
                 f"({type(e).__name__}: {e})",

@@ -370,8 +370,8 @@ def minhash_lsh_pairs(
     # self-join; cand feeds the id semi-join AND the intersection join
     # in jaccard_verify; within one job the references are planned
     # before any cache partition lands, so lazy persist only halves the
-    # waste).  Measured at 20k synthetic docs (tools/dedup_headroom.py):
-    # 21.4 s unpersisted → 12.4 s lazy persists → 6.2 s eager.  Sizes
+    # waste).  Measured at 20k synthetic docs (docs/SCALE.md, "Dedup
+    # slope vs corpus size"): 21.4 s unpersisted → 12.4 s lazy persists → 6.2 s eager.  Sizes
     # are scale-safe: sh is |corpus|·doc_len hashed longs, sig is
     # |docs| rows of k longs, cand is |candidate| pairs — all
     # MEMORY_AND_DISK, so at 100 TB they spill rather than OOM (Spark
@@ -388,70 +388,92 @@ def minhash_lsh_pairs(
 def connected_components(
     nodes: DataFrame,
     pairs: DataFrame,
-    max_iter: int = 20,
+    max_iter: int = 30,
 ) -> DataFrame:
-    """Distributed connected components by iterative min-label
-    propagation: cluster duplicates-of-duplicates into groups so each
+    """Connected components via alternating large-star/small-star
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC 2014): cluster duplicates-of-duplicates into groups so each
     document maps to one canonical id (the production tail of every
     near-dup pipeline).
 
     ``nodes``: (id); ``pairs``: (id_a, id_b) undirected. Output:
     ``(id, cluster_id)`` with cluster_id = min id reachable.
 
-    Each iteration: every node takes the min of its own label and its
-    neighbors' labels — one join + one aggregation per iteration,
-    converging in graph-diameter steps (near-dup clusters are
-    shallow). ``localCheckpoint`` truncates lineage each round so plans
-    don't grow unboundedly; the driver only ever sees a changed-count.
-    This is the (b)-style iterative algorithm Spark's DataFrame API
-    can't express in one query — and exactly what GraphX/GraphFrames
-    do under the hood.
+    Converges in O(log n) rounds, not graph-diameter rounds: a 120-hop
+    duplicate chain closes in a handful of alternations where min-label
+    propagation would need 120. Per round each op is one groupBy
+    (neighborhood min) + one join — bounded, uniformly-keyed shuffles;
+    ``localCheckpoint`` truncates lineage; only a changed-count reaches
+    the driver.
+
+    - large-star: every node connects its strictly-larger neighbors to
+      the minimum of its closed neighborhood;
+    - small-star: every node connects its smaller-or-equal neighbors
+      (and itself) to that minimum.
     """
     edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+        .where(F.col("u") != F.col("v"))
         .distinct()
+        .localCheckpoint()
     )
-    labels = nodes.select("id", F.col("id").alias("cluster_id")).localCheckpoint()
-    changed = -1  # bound for the for-else warning when max_iter <= 0
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("cluster_id").alias("_nbr_min"))
+
+    def _sym(e: DataFrame) -> DataFrame:
+        return e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+    def _star(e: DataFrame, large: bool) -> DataFrame:
+        sym = _sym(e)
+        m = (
+            sym.groupBy("u")
+            .agg(F.min("v").alias("_mn"))
+            .select("u", F.least("u", "_mn").alias("m"))
         )
-        updated = (
-            labels.join(neighbor_min, "id", "left")
+        joined = sym.join(m, "u")
+        cond = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
+        out = joined.where(cond).select(F.col("v").alias("u"), F.col("m").alias("v"))
+        if not large:
+            out = out.unionByName(m.select("u", F.col("m").alias("v")))
+        # canonical undirected form (min, max), self-loops dropped
+        return (
+            out.where(F.col("u") != F.col("v"))
             .select(
-                "id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("_nbr_min"), F.col("cluster_id"))
-                ).alias("cluster_id"),
+                F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
             )
-            .localCheckpoint()
+            .distinct()
         )
+
+    converged = False
+    for _ in range(max_iter):
+        nxt = _star(_star(edges, large=True), large=False).localCheckpoint()
         changed = (
-            updated.alias("u")
-            .join(labels.alias("l"), "id")
-            .where(F.col("u.cluster_id") != F.col("l.cluster_id"))
-            .count()
+            nxt.exceptAll(edges).count() + edges.exceptAll(nxt).count()
         )
-        labels = updated
+        edges = nxt
         if changed == 0:
+            converged = True
             break
-    else:
+    if not converged:
         import warnings
 
         warnings.warn(
-            f"connected_components: {changed} labels still changing after "
-            f"max_iter={max_iter} rounds — returned cluster_ids are not the "
-            "full transitive closure (duplicate chains longer than max_iter "
-            "hops). Raise max_iter; convergence needs at most graph-diameter "
-            "rounds.",
+            f"connected_components: edge set still changing after "
+            f"max_iter={max_iter} alternations — labels may be partial. "
+            "O(log n) convergence means this indicates a pathological "
+            "input; raise max_iter.",
             RuntimeWarning,
             stacklevel=2,
         )
-    return labels
+    # after convergence the edge set is a star per component: each
+    # node's closed-neighborhood min IS the component min
+    mins = (
+        _sym(edges)
+        .groupBy("u")
+        .agg(F.min("v").alias("_mn"))
+        .select("u", F.least("u", "_mn").alias("cluster_id"))
+    )
+    return nodes.join(mins, nodes.id == mins.u, "left").select(
+        "id", F.coalesce("cluster_id", F.col("id")).alias("cluster_id")
+    )
 
 
 def blocked_levenshtein_pairs(
@@ -524,95 +546,6 @@ def blocked_levenshtein_pairs(
             F.levenshtein(F.col("a._k"), F.col("b._k")).alias("dist"),
         )
         .where(F.col("dist") <= max_dist)
-    )
-
-
-def connected_components_star(
-    nodes: DataFrame,
-    pairs: DataFrame,
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) — same output contract as :func:`connected_components`
-    (``(id, cluster_id)``, cluster_id = min reachable id) but converges
-    in **O(log n) rounds instead of graph-diameter rounds**: a
-    100-hop duplicate chain closes in ~7 alternations where min-label
-    propagation needs 100. Use this when components may be deep
-    (transitive near-dup chains in web corpora); the propagation
-    variant stays as the simpler oracle twin for shallow graphs.
-
-    Per round: each op is one groupBy (neighborhood min) + one join —
-    bounded, uniformly-keyed shuffles; ``localCheckpoint`` truncates
-    lineage; only a changed-count reaches the driver.
-
-    - large-star: every node connects its strictly-larger neighbors to
-      the minimum of its closed neighborhood;
-    - small-star: every node connects its smaller-or-equal neighbors
-      (and itself) to that minimum.
-    """
-    edges = (
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _sym(e: DataFrame) -> DataFrame:
-        return e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-    def _star(e: DataFrame, large: bool) -> DataFrame:
-        sym = _sym(e)
-        m = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .select("u", F.least("u", "_mn").alias("m"))
-        )
-        joined = sym.join(m, "u")
-        cond = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
-        out = joined.where(cond).select(F.col("v").alias("u"), F.col("m").alias("v"))
-        if not large:
-            out = out.unionByName(m.select("u", F.col("m").alias("v")))
-        # canonical undirected form (min, max), self-loops dropped
-        return (
-            out.where(F.col("u") != F.col("v"))
-            .select(
-                F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-            )
-            .distinct()
-        )
-
-    converged = False
-    for _ in range(max_iter):
-        nxt = _star(_star(edges, large=True), large=False).localCheckpoint()
-        changed = (
-            nxt.exceptAll(edges).count() + edges.exceptAll(nxt).count()
-        )
-        edges = nxt
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        import warnings
-
-        warnings.warn(
-            f"connected_components_star: edge set still changing after "
-            f"max_iter={max_iter} alternations — labels may be partial. "
-            "O(log n) convergence means this indicates a pathological "
-            "input; raise max_iter.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    # after convergence the edge set is a star per component: each
-    # node's closed-neighborhood min IS the component min
-    mins = (
-        _sym(edges)
-        .groupBy("u")
-        .agg(F.min("v").alias("_mn"))
-        .select("u", F.least("u", "_mn").alias("cluster_id"))
-    )
-    return nodes.join(mins, nodes.id == mins.u, "left").select(
-        "id", F.coalesce("cluster_id", F.col("id")).alias("cluster_id")
     )
 
 

@@ -1,11 +1,10 @@
-"""Event-stream operators (batch form): time rollups, gap sessionization,
-JSON property extraction.
+"""Event-stream operators (batch form): gap sessionization and daily
+rollups.
 
 The reference has no streaming surface (SURVEY.md §2.10) — these are the
-extension operators a telemetry/training pipeline needs, expressed so
-the *same* logic runs batch (here) and under Structured Streaming
-(streaming.py wraps the rollup; sessionization gets a stateful
-streaming twin).
+extension operators a telemetry/training pipeline needs; the streaming
+forms (the hourly rollup, the stateful sessionizer) live in
+``streaming/jobs.py``.
 
 Scale notes: rollups shuffle once on (bucket, type) with map-side
 partial aggregation; sessionization shuffles once on user_id — the
@@ -26,21 +25,6 @@ from pyspark.sql import functions as F
 from ..functions.scalars import epoch_sec
 
 SESSION_GAP_SEC = 1800  # 30 min
-
-
-def hourly_rollup(events: DataFrame) -> DataFrame:
-    """Per (hour, event_type): event count and value sum (2 dp)."""
-    return (
-        events.groupBy(
-            F.date_trunc("hour", "ts").alias("hour"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(18,4)")), 2)
-            .cast("double")
-            .alias("total_value"),
-        )
-    )
 
 
 def sessionize(events: DataFrame, gap_sec: int = SESSION_GAP_SEC) -> DataFrame:
@@ -103,14 +87,14 @@ def sessionize_scalable(
        the FIRST session of bucket k+1 can be within ``gap_sec``
        (an empty intervening bucket implies a gap > bucket_sec), so
        boundary pairs form chains — closed with
-       :func:`..dedup.connected_components_star` in O(log n) rounds
+       :func:`..dedup.connected_components` in O(log n) rounds
        (a user continuously active for a month is a ~120-link chain);
     3. re-aggregate merged clusters and re-rank ``session_seq`` per
        user by session start.
 
     Cost: two bounded shuffles + the stitch (which touches only
     boundary sessions, ≪ corpus). MEASURED (20M-row hot-share sweep,
-    tools/sessionize_crossover.py, full table in docs/SCALE.md): plain
+    table in docs/SCALE.md, "Sessionize crossover"): plain
     degrades linearly in the hottest user's rows (~290k rows/s in the
     one straggler task) while this variant's cost tracks session count
     — the curves cross at ~7-8M hot-user rows on local[32]/128 GB, and
@@ -125,7 +109,7 @@ def sessionize_scalable(
             "the stitch relies on an empty bucket implying a closed gap"
         )
 
-    from .dedup import connected_components_star
+    from .dedup import connected_components
 
     sec = epoch_sec("ts")
     ev = events.withColumn("_sec", sec).withColumn(
@@ -183,7 +167,7 @@ def sessionize_scalable(
         )
         .select(F.col("a._sid").alias("id_a"), F.col("b._sid").alias("id_b"))
     )
-    labels = connected_components_star(
+    labels = connected_components(
         local.select(F.col("_sid").alias("id")), edges
     )
     merged = (
@@ -211,8 +195,8 @@ def sessionize_scalable(
     )
 
 
-# Measured on local[32]/128 GB at 20M rows (tools/sessionize_crossover.py,
-# table in docs/SCALE.md): plain sessionize beats the two-level variant
+# Measured on local[32]/128 GB at 20M rows (docs/SCALE.md, "Sessionize
+# crossover"): plain sessionize beats the two-level variant
 # until the hottest user's row count reaches the low millions, where the
 # single-task window sort overtakes the stitch's fixed overhead. On a
 # real cluster the binding constraint arrives EARLIER — a task's
@@ -246,24 +230,6 @@ def sessionize_auto(
     if max_user_rows > hot_user_threshold_rows:
         return sessionize_scalable(events, gap_sec=gap_sec)
     return sessionize(events, gap_sec=gap_sec)
-
-
-def json_prop_stats(events: DataFrame, prop: str = "k") -> DataFrame:
-    """Extract an integer property from the JSON ``props`` column and
-    aggregate per event_type. ``get_json_object`` is JVM-side (Jackson),
-    no UDF.
-    """
-    v = F.get_json_object("props", f"$.{prop}").cast("long")
-    return (
-        events.select("event_type", v.alias("_v"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.count("_v").alias("n_with_prop"),
-            F.sum("_v").alias("sum_prop"),
-            F.round(F.avg("_v"), 6).alias("avg_prop"),
-        )
-    )
 
 
 def daily_stats(events: DataFrame) -> DataFrame:

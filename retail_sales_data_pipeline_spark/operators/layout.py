@@ -73,8 +73,8 @@ def zorder_layout(
     Column order matters at the margin: the LAST column in ``cols``
     owns the higher bit of each interleaved pair, so curve-range
     bounding boxes are tighter along it (measured 16 vs 25 of 64 files
-    read at 1M rows — tools/layout_headroom.py); put the most-filtered
-    column last. Pass ``cols=None`` with ``advice`` (an
+    read at 1M rows — docs/SCALE.md, "Layout maintenance"); put the
+    most-filtered column last. Pass ``cols=None`` with ``advice`` (an
     :func:`..profile.advise` result) to take the advised layout
     columns — numeric, null-free, ordered most-selective-last — from
     the measured profile instead of hand-picking."""
@@ -177,9 +177,8 @@ def partition_boxes(laid: DataFrame, cols: list[str]) -> list[dict]:
     """Per-partition bounding boxes of ``cols`` — the measurement
     behind every pruning claim (a stats-pruning reader must read
     exactly the files whose box intersects the predicate range).
-    Shared by the pytest pruning property and tools/layout_headroom.py
-    so the CI-enforced invariant and the published numbers can't
-    drift apart."""
+    The pytest pruning property measures with it, as did the
+    docs/SCALE.md "Layout maintenance" table."""
     from pyspark.sql.functions import spark_partition_id
 
     aggs = []

@@ -99,8 +99,9 @@ def profile_table(
     to force-melt everything.
 
     ``top_values=0`` skips the melt pass entirely — measured at 10M
-    rows x 4 cols it is ~7x the stats agg (tools/profile_headroom.py),
-    so skip it when only counts/cardinalities/ranges are needed.
+    rows x 4 cols it is ~7x the stats agg (docs/SCALE.md, "Diagnostics
+    before scale-up"), so skip it when only counts/cardinalities/ranges
+    are needed.
     """
     cols = df.columns
     if not cols:
@@ -162,8 +163,7 @@ def parquet_row_count(path: str) -> int:
     """Exact row count of a parquet dataset from FOOTER METADATA only —
     no Spark job, no data scan, driver-side (pyarrow reads each file's
     footer). This is the cheap corpus-size source for decisions that
-    need an order of magnitude, not a relation: ANN banding selection
-    (``similarity.recommended_banding``), broadcast eligibility,
+    need an order of magnitude, not a relation: broadcast eligibility,
     compaction targets. At object-store scale footers are a few KB per
     file — still metadata-sized. For a FILTERED relation, combine with
     a known selectivity or fall back to ``df.count()``.
@@ -206,8 +206,8 @@ def advise(
       null-free columns (the layout pass rejects nulls loudly) with
       more than one value, ordered by ascending ``approx_distinct`` so
       the most range-selective column lands LAST — the position whose
-      curve bounding boxes are tightest (measured,
-      tools/layout_headroom.py).
+      curve bounding boxes are tightest (measured, docs/SCALE.md,
+      "Layout maintenance").
     * ``bloom`` (round 12) — candidate columns for
       ``sinks.set_bloom_columns``: identifier-shaped columns (int or
       string type class — the only ones the index hashes soundly —

@@ -76,7 +76,7 @@ def salted_skew_join(
     side) to size ``buckets`` from measured skew instead of the
     default: the advised per-column salt factor for the join key wins
     when present (profile → advise → lever, end-to-end; see
-    tests/test_profile.py and tools/advise_demo.py).
+    tests/test_profile.py).
 
     Pass ``salt_cols`` (high-cardinality columns of the large side) for
     a deterministic ``pmod(hash(salt_cols), buckets)`` salt; without

@@ -30,8 +30,8 @@ tiebreak, so both engines produce identical rows.
 
 The cosine tails are built-in expression algebra (zip_with / aggregate
 / transform) — JVM-side, dot products folded element-wise in index
-order. The bucket stage and :func:`cosine_topk_arrow` are numpy
-matmuls over Arrow batches (``mapInPandas``).
+order. The bucket stage is a numpy matmul over Arrow batches
+(``mapInPandas``).
 """
 
 from __future__ import annotations
@@ -81,7 +81,7 @@ def _topk_by_cosine(
     (rounded cosine DESC, neighbor_id ASC — the cross-engine
     determinism tie-break every oracle twin mirrors), keep ``rk <= k``.
     ONE implementation so a tie-break or rounding change can never
-    drift between the brute-force, LSH, IVF, arrow and quantized paths
+    drift between the brute-force, LSH, IVF and quantized paths
     (they share one oracle contract)."""
     from pyspark.sql import Window
 
@@ -163,9 +163,9 @@ def lsh_bucket_keys(
     MinHash banding uses — more planes per band sharpen precision, more
     bands recover recall.
 
-    Sign agreement with the oracle's index-ordered SQL sum rests on the
-    float64 argument the arrow cosine path also pins: md5-derived
-    weights put no projection within float noise of zero.
+    Sign agreement with the oracle's index-ordered SQL sum rests on
+    float64 arithmetic: md5-derived weights put no projection within
+    float noise of zero.
 
     NULL vectors are skipped: they get no bucket rows, so they are
     never a candidate (nor a query with candidates). The oracle SQL
@@ -255,153 +255,6 @@ def lsh_ann_topk(
         )
     )
     return _topk_by_cosine(pairs, k)
-
-
-def _unit_rows(vectors: list) -> np.ndarray:
-    """Vectors as unit-norm matrix rows. A zero-norm row becomes NaN,
-    and ``np.lexsort`` on ``-cos`` puts NaN last, so it never displaces
-    a real candidate; surviving NaNs become NULL (ranked last by the
-    global window), the expression twin's null-divide behavior instead
-    of NaN-ranks-first."""
-    m = np.atleast_2d(np.array(vectors, dtype=np.float64))  # [] -> 1x0
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return m / np.linalg.norm(m, axis=1, keepdims=True)
-
-
-def cosine_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Vectorized exact top-k: numpy matmul over Arrow batches.
-
-    The query matrix is collected to the driver (query sets are small by
-    definition) and closed over by a ``mapInPandas`` stage that computes
-    a batch×queries cosine matrix per Arrow batch and emits only each
-    batch's per-query top-k; a final window selects the global top-k.
-    Same output contract as :func:`cosine_topk`, ~BLAS throughput
-    instead of expression-tree evaluation — the bench path for corpus-
-    scale scans. Per-batch top-k keeps the Python→JVM traffic at
-    |batches|·|queries|·k rows regardless of corpus size.
-    """
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        # empty query set: the expression twin returns an empty frame;
-        # np.linalg.norm on a 0-d matrix would AxisError at plan build
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rk long"
-        )
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    # a NULL vector (query or corpus) gets NaN cosines, filtered to
-    # NULL below: the expression twin's NULL, ranked last
-    qv = np.array([r[1] is not None for r in q_rows])
-    qn = _unit_rows([r[1] for r in q_rows if r[1] is not None])
-
-    def batches(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cv = pdf[vec_col].notna().to_numpy()
-            cos = np.full((len(ids), len(qids)), np.nan)
-            if cv.any() and qv.any():
-                # round BEFORE the per-batch top-k so batch selection
-                # uses the same (rounded desc, id asc) order as the
-                # final global window — otherwise >k batch candidates
-                # rounding to the same value could discard the globally
-                # tie-winning (smaller-id) neighbor before the window
-                # sees it
-                cn = _unit_rows(pdf[vec_col][cv].tolist())
-                cos[np.ix_(cv, qv)] = np.round(cn @ qn.T, 6)
-            top = min(k, cos.shape[0])
-            # per-query top-k within the batch bounds the emitted rows;
-            # lexsort per query column applies the id tiebreak
-            order = np.empty((top, cos.shape[1]), dtype=np.int64)
-            for j in range(cos.shape[1]):
-                order[:, j] = np.lexsort((ids, -cos[:, j]))[:top]
-            cosv = np.take_along_axis(cos, order, axis=0).T.ravel()
-            # NaN would cross Arrow as NaN and rank FIRST in the global
-            # window (Spark sorts NaN above all doubles); mask to NULL
-            cos_col = pd.array(cosv, dtype="Float64")
-            cos_col[np.isnan(cosv)] = pd.NA
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qids, top),
-                    "neighbor_id": ids[order].T.ravel(),
-                    "cosine": cos_col,
-                }
-            )
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        batches, schema="query_id long, neighbor_id long, cosine double"
-    )
-    rounded = partial.select(
-        "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine")
-    )
-    return _topk_by_cosine(rounded, k)
-
-
-def recommended_banding(n_corpus: int) -> tuple[int, int]:
-    """Measured-default ``(n_bands, planes_per_band)`` for the banded
-    ANN path, encoding the docs/SCALE.md sweep rule as code instead of
-    prose (round-4 verdict item 3).
-
-    The 1M-vector sweep measured: 4 bands × 4 planes 22.4 s @ recall
-    0.99 (rerank-dominated — ~n/16 candidates per query per band),
-    8×8 expression-form 19.1 s @ 1.00, 8×8 with the Arrow bucket stage
-    6.2 s @ 1.00. Rule: *sharpen planes_per_band P with log n* so the
-    expected per-(query, band) candidate count ``n / 2^P`` stays near a
-    constant (~4k — the measured point where the rerank stops
-    dominating), and grow tables L with P to hold recall ≈
-    1-(1-s^P)^L at ~1.0:
-
-        P = clamp(ceil(log2(n / 4096)), 4, 16);  L = P
-
-    Fixture scale (2k) → 4×4 (the oracle-pinned config); 1M → 8×8 (the
-    measured winner); 100M → 15×15; ≥ 256M caps at 16×16 (65k buckets
-    per table — at that point shard the corpus, not the index).
-    """
-    import math
-
-    if n_corpus <= 4096:
-        return 4, 4
-    p = max(4, min(16, math.ceil(math.log2(n_corpus / 4096))))
-    return p, p
-
-
-def ann_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_corpus: int | None = None,
-    dim: int | None = None,
-) -> DataFrame:
-    """Production ANN entry point: :func:`lsh_ann_topk` with the banding
-    :func:`recommended_banding` picks for the corpus size.
-
-    ``n_corpus``/``dim`` are taken from the data when not given: one
-    columnar count (cheap — no row materialization) and one ``first()``
-    non-NULL vector for the width. Pass them explicitly in a hot loop
-    or when the corpus is an expensive subquery.
-    """
-    if n_corpus is None:
-        n_corpus = corpus.count()
-    if n_corpus == 0:
-        raise ValueError("ann_topk: empty corpus — nothing to index")
-    if dim is None:
-        head = corpus.select(vec_col).where(F.col(vec_col).isNotNull()).first()
-        if head is None:
-            raise ValueError("ann_topk: empty corpus — nothing to index")
-        dim = len(head[0])
-    bands, per_band = recommended_banding(n_corpus)
-    return lsh_ann_topk(
-        corpus, queries, plane_weights(bands * per_band, dim), k, per_band,
-        id_col, vec_col,
-    )
 
 
 def cosine_neardup_pairs(

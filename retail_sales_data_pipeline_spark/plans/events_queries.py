@@ -1,6 +1,6 @@
 """Event-analytics queries over the ``events`` table with DuckDB oracle
-twins, plus the streaming rollup (whose availableNow drain equals the
-batch rollup, making even the streaming path oracle-checkable).
+twins, plus the streaming rollups (whose availableNow drains are
+oracle-checkable like any batch query).
 """
 
 from __future__ import annotations
@@ -18,10 +18,6 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
 
-def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return E.hourly_rollup(_events(spark, sf_dir))
-
-
 _HOURLY_SQL = """
 SELECT date_trunc('hour', ts) AS hour, event_type,
   count(*) AS n_events,
@@ -32,13 +28,6 @@ FROM events GROUP BY 1, 2
 
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return E.sessionize(_events(spark, sf_dir))
-
-
-# Q: events_sessionize_scalable — the two-level (bucket-local + star-CC
-# boundary stitch) sessionizer for celebrity-user skew; shares the
-# plain sessionize oracle, so the driver pins the algorithms agree.
-def events_sessionize_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return E.sessionize_scalable(_events(spark, sf_dir))
 
 
 _SESSIONIZE_SQL = f"""
@@ -63,10 +52,6 @@ SELECT user_id, session_seq,
   CAST(round(sum(CAST(value AS DECIMAL(18,4))), 2) AS DOUBLE) AS total_value
 FROM numbered GROUP BY user_id, session_seq
 """
-
-
-def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return E.json_prop_stats(_events(spark, sf_dir), prop="k")
 
 
 _JSON_SQL = """
@@ -553,25 +538,6 @@ SELECT event_type, day, n_events,
 FROM daily
 """
 
-
-# Retired from the driver registry (round 6, registry-slack buyback):
-# the two-level scalable sessionizer computes the SAME sessions as
-# events_sessionize (they shared _SESSIONIZE_SQL verbatim) — result
-# equivalence pinned by tests/test_twin_equivalence.py; it remains the
-# skew-insurance variant with its measured crossover
-# (tools/sessionize_crossover.py).
-TWIN_QUERIES = {
-    "events_sessionize_scalable": (events_sessionize_scalable, "events_sessionize"),
-    # round 8: the JSON-string extraction path shares _JSON_SQL verbatim
-    # with the VARIANT path — retired to fund the corpus_scan_pruned
-    # slot; equality stays pinned by test_twin_equivalence
-    "events_json_props": (events_json_props, "events_json_variant"),
-    # round 10: the batch hourly rollup shares _HOURLY_SQL verbatim
-    # with the structured-streaming path (the harder execution path
-    # keeps the driver slot) — retired to fund corpus_commit_lineage;
-    # equality stays pinned by test_twin_equivalence
-    "events_hourly_rollup": (events_hourly_rollup, "streaming_hourly_rollup"),
-}
 
 QUERIES = {
     "events_sessionize": events_sessionize,

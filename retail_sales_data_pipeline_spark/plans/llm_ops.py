@@ -380,17 +380,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.connected_components(nodes, pairs)
 
 
-# Q: dedup_clusters_star — the same clustering through the O(log n)
-# large-star/small-star algorithm; the recursive-CTE oracle is
-# implementation-independent, so both variants share it and the driver
-# pins that the two algorithms agree on real near-dup graphs.
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = _neardup_corpus(_docs(spark, sf_dir))
-    pairs = D.minhash_lsh_pairs(corpus, num_hashes=8, rows_per_band=2, threshold=0.5)
-    nodes = corpus.select(F.col("doc_id").alias("id"))
-    return D.connected_components_star(nodes, pairs)
-
-
 # CTE prefix shared by the cluster-labeling query and the keep-canonical
 # apply step (everything through the transitive closure `reach`).
 _CLUSTERS_CTES = f"""{_SQL_NEARDUP_CORPUS},
@@ -1904,16 +1893,6 @@ SELECT r.source, r.n_docs, r.total_tokens, r.weight, r.target_share, r.rate,
 FROM rates r LEFT JOIN kept k ON r.source = k.source
 """
 
-
-# Retired from the driver registry (round 6, registry-slack buyback):
-# the star-contraction connected-components pass clusters identically to
-# dedup_clusters' alternating-round pass (they shared
-# _DEDUP_CLUSTERS_SQL verbatim) — result equivalence pinned by
-# tests/test_twin_equivalence.py, cartesian-guard pin kept in
-# tests/test_plans.py; it remains the O(log n)-rounds scale variant.
-TWIN_QUERIES = {
-    "dedup_clusters_star": (dedup_clusters_star, "dedup_clusters"),
-}
 
 # ---------------------------------------------------------------------------
 # Q: sketch_heavy_sources — driver-oracle row for the Misra-Gries

@@ -53,39 +53,22 @@ _MODULES = [
 # tests/test_registry_freshness.py enforces this mechanically.
 #
 # CAPACITY: round 5 hit the hard ceiling (100 registered / 50-slot
-# window = zero slack). Round 6 bought back headroom by retiring four
-# oracle-twin duplicates into ``retired_twins()`` (their semantics stay
-# pinned by tests/test_twin_equivalence.py); round 7 spent one slot on
-# ``dv_takedown_counts`` (deletion-vector DML round trip); round 8
-# retired ``events_json_props`` (verbatim-oracle twin of the VARIANT
-# path) and spent the slot on ``corpus_scan_pruned`` (null-count +
-# range data skipping through scan_table); round 9 spent the last free
-# slot on ``corpus_ingest_exactly_once`` (the insert_into txn-watermark
-# replay protocol) and bought it back by retiring ``ann_auto_topk``
-# (verbatim _LSH_BANDED_SQL oracle twin of ``ann_lsh_banded_topk``;
-# the auto-selection logic stays pinned by tests/test_similarity.py
-# and the twin-equivalence test); round 10 spent that slot on
-# ``corpus_merge_evolve`` (merge_into(evolve_schema=True) — the
-# mixed-schema NULL-backfill read under the hard signal) and retired
-# ``events_hourly_rollup`` (verbatim _HOURLY_SQL twin of
-# ``streaming_hourly_rollup`` — the harder streaming execution path
-# keeps the slot). That retire frees a window slot only from ROUND 11
-# (it removed an r9-green, not an r8-stale: the freshness invariant
-# counts stale queries, so a round at the ceiling absorbs exactly ONE
-# never-checked query). Round 11 spent that slot on
-# ``corpus_commit_lineage`` (DESCRIBE HISTORY under the oracle,
-# oracle-pinned since r10 by tests/test_commit_lineage.py) — back at
-# the 100/50 ceiling. Round 12 STRENGTHENED ``dv_takedown_counts``
-# in place (the ceiling move): its retraction legs now run
-# set_bloom_columns + BOTH delete_keys regimes (literal lang key;
-# keys-FRAME scattered purge — literal at sf0.01's 500 docs, bulk
-# band + key-batch bloom probe at sf0.1's 5000) under the unchanged
-# oracle algebra. The one-LSH-kernel change deleted the retired
-# banded-LSH Arrow twin outright: every LSH query now runs the same
-# Arrow bucket stage, so that twin's query was ``ann_lsh_banded_topk``
-# verbatim. Registered count stays 100; six retired twins remain.
+# window = zero slack). Rounds 6-10 bought slots back by retiring six
+# queries that shared an oracle SQL verbatim with a registered query,
+# and spent each freed slot on new lakehouse surface
+# (``dv_takedown_counts``, ``corpus_scan_pruned``,
+# ``corpus_ingest_exactly_once``, ``corpus_merge_evolve``,
+# ``corpus_commit_lineage``). No retired twins remain: each was
+# deleted with the operator code only it reached, and each operator
+# now has one implementation, the one its registered query runs.
+# Registered count stays 100.
 # When adding a query, re-run ``python tools/rotate_registry.py`` and
 # keep the registered count <= 2x the window minus the slack you want.
+# Round 15 rotates onto 49 of the 50 queries not green in r14 plus
+# the force-seated ``dedup_clusters`` (``dedup_semantic_keep``, the
+# other reserved query, is among the 49; ``multimodal_text_retrieval``
+# waits one round) — exactly the tools/rotate_registry.py output
+# against the r14 history.
 # Round 14 rotates onto 47 r12-stale queries plus the force-seated
 # 3-query freshness reserve (exactly the tools/rotate_registry.py
 # output against the r13 history; r13 ∪ r14 covers the full registry;
@@ -103,67 +86,64 @@ _MODULES = [
 # keyed UPDATE relabel leg via update_keys) is itself r11-stale, so the
 # natural rotation already seats it.
 ROUND_FRESH_RESERVE = (
-    # r14 (optimization round): queries whose IMPLEMENTATION changed
-    # this round — arrow bucket stage / input-sized drain state
-    # partitions — so the driver's own CORRECTNESS_r14.json carries
-    # their oracle evidence, not only the judge's re-drive. Each
-    # displaces one least-stale r12-green query by one round.
-    "dedup_embedding_cosine",  # r14: arrow matmul bucket stage
-    "streaming_hourly_rollup",  # r14: input-sized drain state partitions
-    "streaming_dedup_rollup",  # r14: input-sized drain state partitions
+    # queries whose IMPLEMENTATION changed this round, so the driver's
+    # own CORRECTNESS file carries their oracle evidence: both now run
+    # the one large-star/small-star connected-components pass
+    "dedup_clusters",
+    "dedup_semantic_keep",
 )
 
 DRIVER_PRIORITY = [
-    "monthly_grouped_sum",  # green r12
-    "month_key_forms",  # green r12
-    "product_enrich",  # green r12
-    "sales_rollup",  # green r12
-    "sales_cube",  # green r12
-    "customers_churned",  # green r12
-    "suppliers_with_returns",  # green r12
-    "customer_upsert",  # green r12
-    "scd2_customer_segments",  # green r12
-    "key_skew_profile",  # green r12
-    "maintenance_compaction_plan",  # green r12
-    "dq_violations",  # green r12
-    "mart_reconcile",  # green r12
-    "top_customers_per_month",  # green r12
-    "sales_pivot_by_flag",  # green r12
-    "customer_running_total",  # green r12
-    "monthly_price_quantiles",  # green r12
-    "revenue_anomalies",  # green r12
-    "order_value_quartiles",  # green r12
-    "text_token_stats",  # green r12
-    "profile_documents_stats",  # green r12
-    "corpus_scan_pruned",  # green r12
-    "text_quality",  # green r12
-    "text_lang_id",  # green r12
-    "text_fingerprint",  # green r12
-    "dedup_ngram_jaccard",  # green r12
-    "dedup_clusters",  # green r12
-    "dedup_rate_by_lang",  # green r12
-    "corpus_filter_pipeline",  # green r12
-    "corpus_sample",  # green r12
-    "corpus_stratified_sample",  # green r12
-    "corpus_tfidf_terms",  # green r12
-    "corpus_length_histogram",  # green r12
-    "text_redact_pii",  # green r12
-    "corpus_pack_sequences",  # green r12
-    "corpus_decontaminate",  # green r12
-    "text_repetition",  # green r12
-    "corpus_source_mix",  # green r12
-    "corpus_boilerplate_ngrams",  # green r12
-    "corpus_ngram_novelty",  # green r12
-    "dedup_keep_canonical",  # green r12
-    "text_langid_confusion",  # green r12
-    "corpus_unigram_logprob",  # green r12
-    "corpus_quality_sample",  # green r12
-    "corpus_mix_rebalance",  # green r12
-    "dedup_fuzzy_keys",  # green r12
-    "corpus_merge_evolve",  # green r12
-    "streaming_hourly_rollup",  # green r13
-    "streaming_dedup_rollup",  # green r13
-    "dedup_embedding_cosine",  # green r13
+    "streaming_sessionize_complete",  # green r12
+    "ann_lsh_banded_topk",  # green r12
+    "decontaminate_semantic",  # green r12
+    "customer_monthly_mart",  # green r13
+    "sales_team_mart",  # green r13
+    "star_join_enrich",  # green r13
+    "conform_union",  # green r13
+    "ledger_filter",  # green r13
+    "distinct_dedup",  # green r13
+    "sketch_heavy_sources",  # green r13
+    "dedup_exact",  # green r13
+    "dedup_minhash_lsh",  # green r13
+    "dedup_simhash",  # green r13
+    "corpus_report",  # green r13
+    "corpus_approx_distinct",  # green r13
+    "dedup_incremental",  # green r13
+    "corpus_curation_funnel",  # green r13
+    "streaming_quality_filter",  # green r13
+    "corpus_split_assign",  # green r13
+    "corpus_shuffle_shard",  # green r13
+    "dv_takedown_counts",  # green r13
+    "corpus_ingest_exactly_once",  # green r13
+    "corpus_commit_lineage",  # green r13
+    "events_sessionize",  # green r13
+    "events_json_variant",  # green r13
+    "events_daily_stats",  # green r13
+    "events_asof_attribution",  # green r13
+    "events_range_pairs",  # green r13
+    "events_funnel",  # green r13
+    "events_cohort_retention",  # green r13
+    "streaming_sessionize",  # green r13
+    "events_approx_quantiles",  # green r13
+    "events_rolling_7day",  # green r13
+    "ann_cosine_topk",  # green r13
+    "ann_lsh_topk",  # green r13
+    "ann_ivf_topk",  # green r13
+    "ann_recall_at_5",  # green r13
+    "kmeans_embeddings",  # green r13
+    "ann_quantized_topk",  # green r13
+    "dedup_semantic_cells",  # green r13
+    "kmeans_fixed_assign",  # green r13
+    "dedup_semantic_keep",  # green r13
+    "cluster_balanced_sample",  # green r13
+    "ann_label_agreement",  # green r13
+    "multimodal_decode",  # green r13
+    "multimodal_frame_sample",  # green r13
+    "multimodal_resize",  # green r13
+    "multimodal_pointer_decode",  # green r13
+    "multimodal_embed_texts",  # green r13
+    "dedup_clusters",  # green r14
 ]
 
 def _collect(attr: str) -> dict:
@@ -190,12 +170,3 @@ def all_queries() -> dict[str, QueryFn]:
 def all_oracle_sql() -> dict[str, str]:
     return _prioritize(_collect("ORACLE_SQL"))
 
-
-def retired_twins() -> dict[str, tuple[QueryFn, str]]:
-    """Queries retired from the driver registry because they share an
-    oracle verbatim with a registered twin (round-6 slack buyback):
-    ``{retired_name: (query_fn, registered_twin_name)}``. Still
-    first-class operators — tests/test_twin_equivalence.py pins each
-    one's results equal to its registered twin, and plan pins keep
-    covering them."""
-    return _collect("TWIN_QUERIES")

@@ -181,51 +181,6 @@ SELECT query_id, neighbor_id, cosine, rk FROM ranked WHERE rk <= 5
 
 
 # ---------------------------------------------------------------------------
-# Q: ann_auto_topk — the production entry point: S.ann_topk auto-selects
-# banding from |corpus| via S.recommended_banding (the r4-verdict rule
-# "sharpen P with log n", encoded as code) and runs S.lsh_ann_topk
-# with it. At fixture scale (≤ 2k vectors) the rule lands on 4×4, so the
-# oracle is the SAME _LSH_BANDED_SQL — the hash match verifies the
-# whole auto path (size estimate → banding pick → matmul buckets →
-# rerank) end-to-end; at 1M vectors the same call selects the
-# measured-winning 8×8 (tools/ann_headroom.py --assert-auto pins
-# recall ≥ 0.95 there).
-#
-# r6 (r5 verdict wrong #2): the corpus size now comes from parquet
-# FOOTER metadata (profile.parquet_row_count — driver-side, no Spark
-# job) instead of a per-call full-scan count(); at 100 TB the count
-# was a whole extra pass before the real work. The 10 held-out query
-# vectors are subtracted exactly (vec_id < 10 is the query split).
-# tests/test_similarity.py pins that building this query launches no
-# job; the banding rule only needs order of magnitude, so a
-# metadata-exact table count minus the fixed query split is strictly
-# better than an estimate.
-# ---------------------------------------------------------------------------
-def ann_auto_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.profile import parquet_row_count
-
-    emb = _emb(spark, sf_dir)
-    n = parquet_row_count(f"{sf_dir}/embeddings.parquet") - 10
-    if S.recommended_banding(n) != (ANN_BANDS, ANN_PLANES_PER_BAND):
-        # the STATIC oracle twin pins the 4x4 regime; at a fixture size
-        # where the rule picks sharper banding the hash comparison would
-        # silently diverge and misreport a healthy auto-select as a bug —
-        # fail loudly instead (regenerate the oracle SQL for that scale)
-        raise ValueError(
-            f"ann_auto_topk oracle pins {ANN_BANDS}x{ANN_PLANES_PER_BAND} "
-            f"banding but recommended_banding({n}) = "
-            f"{S.recommended_banding(n)} — fixture outgrew the oracle"
-        )
-    return S.ann_topk(
-        corpus=emb.where(F.col("vec_id") >= 10),
-        queries=emb.where(F.col("vec_id") < 10),
-        k=5,
-        n_corpus=n,
-        dim=DIM,
-    )
-
-
-# ---------------------------------------------------------------------------
 # Q: dedup_embedding_cosine — near-dup pairs over a planted-variant
 # corpus, via LSH co-bucket candidates (the corpus-scale path: no
 # cross join anywhere in the plan — tools/plan_audit.py asserts it).
@@ -350,19 +305,6 @@ WITH q AS (
 )
 SELECT query_id, neighbor_id, cosine, rk FROM ranked WHERE rk <= 5
 """
-
-
-# ---------------------------------------------------------------------------
-# Q: bench_ann_cosine_arrow — Arrow/numpy twin of ann_cosine_topk
-# (same oracle; the bench_ prefix auto-enrolls it in bench.py)
-# ---------------------------------------------------------------------------
-def bench_ann_cosine_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _emb(spark, sf_dir)
-    return S.cosine_topk_arrow(
-        corpus=emb.where(F.col("vec_id") >= 10),
-        queries=emb.where(F.col("vec_id") < 10),
-        k=5,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -847,25 +789,6 @@ SELECT vec_id, eval_id, cosine FROM ranked
 WHERE rk = 1 AND cosine >= {DECONTAM_COS}
 """
 
-
-# Retired from the driver registry (round 6, registry-slack buyback):
-# each twin computes the SAME answer as its registered twin (they
-# shared one oracle SQL verbatim), so a registry slot each was
-# redundant hard signal. Their result equivalence to the registered
-# twin is pinned by tests/test_twin_equivalence.py and their plan
-# shapes stay pinned in tests/test_plans.py. bench_ann_cosine_arrow is
-# the Arrow matmul variant of the brute-force scan (the exact-recall
-# baseline in tools/ann_headroom.py); the LSH family has one kernel
-# and no twin.
-TWIN_QUERIES = {
-    "bench_ann_cosine_arrow": (bench_ann_cosine_arrow, "ann_cosine_topk"),
-    # retired round 9 (slack for the r10 rotation): at the oracle's
-    # corpus size the auto-selector always picks the banded config, so
-    # its oracle was _LSH_BANDED_SQL verbatim; the selection LOGIC
-    # stays pinned by tests/test_similarity.py (zero-action build +
-    # measured-rule dispatch) and the twin test keeps the output equal
-    "ann_auto_topk": (ann_auto_topk, "ann_lsh_banded_topk"),
-}
 
 QUERIES = {
     "ann_cosine_topk": ann_cosine_topk,

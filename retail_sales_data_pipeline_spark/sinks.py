@@ -5151,7 +5151,7 @@ def vacuum_staging(
     """Remove crash-orphaned rewrite leftovers (the VACUUM step of the
     maintenance family: compaction fixes file count, z-order fixes
     pruning, vacuum fixes the dead bytes a crashed rewrite leaves
-    behind). Three kinds of leftovers, all TTL-gated (mtime-based,
+    behind). Four kinds of leftovers, all TTL-gated (mtime-based,
     default 24h — fresh leftovers may belong to an in-flight rewrite):
 
     * **manifest tables**: generation directories sharing NO file with
@@ -5167,6 +5167,11 @@ def vacuum_staging(
       not (the old swap crashed between its two renames), those dirs
       are the SOLE remaining copy of the data, not orphans: skip and
       warn, never delete.
+    * **hidden staging files** (``storage.is_hidden_tmp``): a local
+      ``put_bytes`` or ``copy`` killed between its fill and its rename,
+      in ``base_dir``, each table and live generation directory, and
+      each non-manifest child (the ledger, a run-scoped mart) and its
+      ``run=<id>`` partitions.
 
     Pass ``now`` explicitly in tests. Returns the removed paths;
     ``dry_run=True`` returns what WOULD be removed without deleting
@@ -5183,12 +5188,25 @@ def vacuum_staging(
     def expired(p: str) -> bool:
         return clock - io.getmtime(p) >= ttl_seconds
 
+    def sweep_hidden_tmp(d: str) -> None:
+        for name in io.list_basenames(d, "."):
+            p = os.path.join(d, name)
+            if _storage.is_hidden_tmp(name) and io.isfile(p) and expired(p):
+                if not dry_run:
+                    io.remove_file(p)
+                removed.append(p)
+
+    sweep_hidden_tmp(base_dir)
     for name in io.listdir(base_dir):
         p = os.path.join(base_dir, name)
         if not io.isdir(p):
             continue
+        sweep_hidden_tmp(p)
         man = _load_manifest(p)
-        if man is not None:
+        if man is None:
+            for part in io.list_basenames(p, "run="):
+                sweep_hidden_tmp(os.path.join(p, part))
+        else:
             live = _live_names([man] + list(man.get("history", [])), p)
             live_dirs = {n.split("/", 1)[0] for n in live if "/" in n}
             superseded = set(man.get("superseded", []))
@@ -5209,6 +5227,7 @@ def vacuum_staging(
                         removed.append(cp)
                     elif child in live_dirs:
                         # live dir: collect its per-file deads only
+                        sweep_hidden_tmp(cp)
                         for base in sorted(
                             io.list_basenames(cp, "part-")
                             + io.list_basenames(cp, "adopted-")

@@ -48,6 +48,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import shutil
 import time
 import uuid
@@ -127,6 +128,16 @@ def _hidden_tmp(p: str) -> str:
     file is never read as part of a table or ledger directory."""
     d, name = os.path.split(p)
     return os.path.join(d, f".{name}.{uuid.uuid4().hex}.tmp")
+
+
+_HIDDEN_TMP = re.compile(r"\..+\.[0-9a-f]{32}\.tmp")
+
+
+def is_hidden_tmp(name: str) -> bool:
+    """Whether a basename is one of :func:`_hidden_tmp`'s staging names.
+    A writer killed between its fill and its rename leaves one behind;
+    ``sinks.vacuum_staging`` removes them by this rule."""
+    return _HIDDEN_TMP.fullmatch(name) is not None
 
 
 def _replace_into(p: str, fill) -> None:

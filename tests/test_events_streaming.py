@@ -51,8 +51,17 @@ def test_sessionize_gap_boundary(spark):
     assert {r.session_seq: r.n_events for r in out} == {1: 2, 2: 1}
 
 
-def test_hourly_rollup(spark, ev):
-    out = {(r.hour, r.event_type): r for r in E.hourly_rollup(ev).collect()}
+def test_hourly_rollup(spark, ev, tmp_path):
+    """The streaming hourly rollup drained over a hand-built drop:
+    per-(hour, event_type) counts and value sums."""
+    from retail_sales_data_pipeline_spark.streaming import stream_hourly_rollup
+
+    ev.toPandas().to_parquet(tmp_path / "events.parquet", coerce_timestamps="us")
+    out = {
+        (r.hour, r.event_type): r
+        for r in stream_hourly_rollup(spark, str(tmp_path)).collect()
+    }
+    assert len(out) == 4
     assert out[(datetime(2024, 1, 1, 10), "click")].n_events == 1
     assert out[(datetime(2024, 1, 1, 10), "view")].total_value == 2.0
     assert out[(datetime(2024, 1, 1, 11), "click")].n_events == 1
@@ -123,14 +132,12 @@ def test_permissive_rejects_header_formatting_variants(spark, tmp_path):
 
 
 def test_streaming_rollup_equals_batch(spark):
-    from retail_sales_data_pipeline_spark.sources.tables import load_table
-    from retail_sales_data_pipeline_spark.streaming import stream_hourly_rollup
+    """The availableNow drain of the hourly rollup equals the batch
+    oracle SQL over the same files (at sf0.01; the parity suite covers
+    sf0.001)."""
+    from .oracle import assert_query_matches_oracle
 
-    batch = E.hourly_rollup(load_table(spark, SF, "events"))
-    stream = stream_hourly_rollup(spark, SF)
-    b = {tuple(r) for r in batch.collect()}
-    s = {tuple(r) for r in stream.collect()}
-    assert b == s and len(b) > 0
+    assert_query_matches_oracle(spark, "/root/testdata/sf0.01", "streaming_hourly_rollup")
 
 
 def test_streaming_rollup_drains_in_one_microbatch(spark):

@@ -316,6 +316,66 @@ def test_vacuum_staging_removes_only_expired_orphans(spark, tmp_path):
     assert left == ["notes._oldish", "other._zorder", "tbl", "tbl._compact"]
 
 
+def test_vacuum_staging_removes_expired_hidden_staging_files(spark, tmp_path):
+    """A local put or copy killed between its fill and its rename
+    leaves a hidden ``.<name>.<hex>.tmp`` file. Vacuum removes expired
+    ones wherever a writer stages them: the base dir, a manifest table
+    and its live generation, the ledger and a run-scoped mart partition.
+    Fresh ones, data files and other dotfiles stay."""
+    import os
+    import time
+
+    from retail_sales_data_pipeline_spark import sinks as S
+    from retail_sales_data_pipeline_spark import storage
+
+    base = tmp_path
+    tbl = base / "tbl"
+    spark.range(5).write.parquet(str(tbl))
+    S.convert_to_manifest(spark, str(tbl))
+    S.insert_into(spark, str(tbl), spark.range(5, 8))
+    (gen,) = [p for p in tbl.iterdir() if p.name.startswith("gen-")]
+    ledger, part = base / "ledger", base / "customers_data_mart" / "run=r1"
+    ledger.mkdir()
+    part.mkdir(parents=True)
+    now = time.time() + 100_000  # every file written above is expired
+    fresh = now - 60
+
+    def staged(d, name, mtime=None):
+        p = storage._hidden_tmp(str(d / name))
+        open(p, "wb").close()
+        if mtime:
+            os.utime(p, (mtime, mtime))
+        return p
+
+    expired = sorted([
+        staged(base, "x.parquet"),
+        staged(tbl, "_manifest.json"),
+        staged(gen, "part-0.parquet"),
+        staged(ledger, "events-1.parquet"),
+        staged(part, "part-0.parquet"),
+    ])
+    kept = [
+        staged(ledger, "events-2.parquet", mtime=fresh),
+        staged(part, "part-1.parquet", mtime=fresh),
+    ]
+    for d in (ledger, part):
+        for name in ("part-0.parquet", ".part-0.parquet.crc", ".x.tmp",
+                     ".events-1.parquet.tmp", "_SUCCESS"):
+            (d / name).write_bytes(b"x")
+            kept.append(str(d / name))
+    assert not storage.is_hidden_tmp(".events-1.parquet.ABC.tmp")
+
+    would = S.vacuum_staging(str(base), ttl_seconds=24 * 3600, now=now,
+                             dry_run=True)
+    assert sorted(would) == expired
+    assert all(os.path.exists(p) for p in expired)
+    removed = S.vacuum_staging(str(base), ttl_seconds=24 * 3600, now=now)
+    assert sorted(removed) == expired
+    assert not any(os.path.exists(p) for p in expired)
+    assert all(os.path.exists(p) for p in kept)
+    assert S.read_table(spark, str(tbl)).count() == 8
+
+
 def _write_tbl(spark, path, n=4000, parts=20):
     df = spark.range(n).selectExpr(
         "id", "cast(id % 97 as double) as a", "cast(id % 89 as double) as b"

@@ -68,7 +68,7 @@ def test_driver_window_matches_rotation_policy():
     from tests.test_registry_freshness import ROTATION_BASIS_ROUND
 
     # the freshness reserve is part of the policy: rotate_registry
-    # force-seats ROUND_FRESH_RESERVE (r14: the three queries whose
+    # force-seats ROUND_FRESH_RESERVE (the queries whose
     # implementation changed this round), so the expectation must too
     expected = rotate.compute_window(
         max_round=ROTATION_BASIS_ROUND,

@@ -11,19 +11,7 @@ import io
 
 import pytest
 
-from retail_sales_data_pipeline_spark.plans.registry import (
-    all_queries,
-    retired_twins,
-)
-
-
-def _query(name):
-    """Resolve a query fn from the registry OR the retired-twin set —
-    plan pins outlive a query's registry slot (round-6 buyback)."""
-    q = all_queries()
-    if name in q:
-        return q[name]
-    return retired_twins()[name][0]
+from retail_sales_data_pipeline_spark.plans.registry import all_queries
 
 
 def _plan(df) -> str:
@@ -37,7 +25,7 @@ NO_CARTESIAN = [
     "dedup_embedding_cosine",
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
-    "dedup_clusters_star",
+    "dedup_clusters",
     "dedup_fuzzy_keys",
     "ann_lsh_topk",
     "ann_lsh_banded_topk",
@@ -50,13 +38,13 @@ NO_CARTESIAN = [
 
 @pytest.mark.parametrize("name", NO_CARTESIAN)
 def test_no_cartesian_product(spark, sf_dir, name):
-    p = _plan(_query(name)(spark, sf_dir))
+    p = _plan(all_queries()[name](spark, sf_dir))
     assert "CartesianProduct" not in p, f"{name}: cartesian product in plan"
     assert "BroadcastNestedLoopJoin" not in p, f"{name}: BNLJ in plan"
 
 
 def test_star_join_is_all_broadcast_no_fact_shuffle(spark, sf_dir):
-    p = _plan(_query("star_join_enrich")(spark, sf_dir))
+    p = _plan(all_queries()["star_join_enrich"](spark, sf_dir))
     assert "SortMergeJoin" not in p
     # formatted mode renders exchange args on their own line — the old
     # literal "Exchange hashpartitioning" check was vacuously true
@@ -116,7 +104,7 @@ def test_bench_query_plan_shape_pinned(spark, sf_dir, name):
     # extra broadcast conversions) and the printed shape depends on test
     # ORDER. Pin the cold-cache plan — the one a fresh driver compiles.
     spark.catalog.clearCache()
-    p = _plan(_query(name)(spark, sf_dir))
+    p = _plan(all_queries()[name](spark, sf_dir))
     got = (
         p.count("Exchange"),
         p.count("BroadcastExchange"),
@@ -131,7 +119,7 @@ def test_bench_query_plan_shape_pinned(spark, sf_dir, name):
 
 
 def test_ledger_filter_pushdown_reaches_scan(spark, sf_dir):
-    p = _plan(_query("ledger_filter")(spark, sf_dir))
+    p = _plan(all_queries()["ledger_filter"](spark, sf_dir))
     assert "PushedFilters: [" in p
     assert "EqualTo(o_orderstatus" in p
     assert "In(o_orderpriority" in p
@@ -140,7 +128,7 @@ def test_ledger_filter_pushdown_reaches_scan(spark, sf_dir):
 def test_column_pruning_reaches_scan(spark, sf_dir):
     """monthly_grouped_sum touches 3 of lineitem's 11 columns; the scan
     schema must show only those (pruning pushed to parquet)."""
-    p = _plan(_query("monthly_grouped_sum")(spark, sf_dir))
+    p = _plan(all_queries()["monthly_grouped_sum"](spark, sf_dir))
     assert "ReadSchema: struct<l_extendedprice:double,l_discount:double" in p
     assert "l_orderkey" not in p.split("ReadSchema")[1][:200]
 
@@ -150,7 +138,7 @@ def test_shuffle_shard_one_exchange_no_global_window(spark, sf_dir):
     physical work writing N shard files costs) — never the classic
     global-row_number collapse to a single partition, and the scan must
     read only doc_id."""
-    p = _plan(_query("corpus_shuffle_shard")(spark, sf_dir))
+    p = _plan(all_queries()["corpus_shuffle_shard"](spark, sf_dir))
     # formatted mode prints each node in the tree AND a detail section
     assert p.count("Exchange") == 2, p
     assert "SinglePartition" not in p
@@ -162,7 +150,7 @@ def test_sketch_summary_rows_only_shuffle(spark, sf_dir):
     the ONLY shuffle merges the ≤capacity-per-partition Misra-Gries
     summary rows (with a partial sum below it), and the parquet scan
     reads only the sketched column."""
-    p = _plan(_query("sketch_heavy_sources")(spark, sf_dir))
+    p = _plan(all_queries()["sketch_heavy_sources"](spark, sf_dir))
     assert p.count("Exchange") == 2, p  # one node: tree + detail section
     assert "ReadSchema: struct<source:string>" in p
     # exchange sits ABOVE the Arrow summary stage: its input is the
@@ -174,5 +162,5 @@ def test_sketch_summary_rows_only_shuffle(spark, sf_dir):
 def test_split_assign_is_projection_plus_one_agg(spark, sf_dir):
     """The split assignment itself must not shuffle — only the summary
     aggregation exchanges (2 = partial/final pair)."""
-    p = _plan(_query("corpus_split_assign")(spark, sf_dir))
+    p = _plan(all_queries()["corpus_split_assign"](spark, sf_dir))
     assert p.count("Exchange") <= 2

@@ -44,7 +44,7 @@ WINDOW = rotate_registry.WINDOW
 # the test meaningful after the driver writes the NEXT round's
 # CORRECTNESS file — without the cap, every query verified by that very
 # window would count stale the moment its new row lands.
-ROTATION_BASIS_ROUND = 13
+ROTATION_BASIS_ROUND = 14
 
 
 def _last_green() -> tuple[int, dict[str, int]]:

@@ -95,31 +95,26 @@ def test_plane_weights_match_oracle_planes():
     assert len(set(small.ravel())) == 6  # md5 spread: no accidental repeats
 
 
-def test_arrow_topk_equals_expression(spark, vecs):
-    queries = vecs.where(F.col("vec_id") == 0)
-    corpus = vecs.where(F.col("vec_id") > 0)
-    expr = sorted(map(tuple, S.cosine_topk(corpus, queries, k=3).collect()))
-    arrow = sorted(map(tuple, S.cosine_topk_arrow(corpus, queries, k=3).collect()))
-    assert expr == arrow
-
-
-def test_arrow_topk_null_embedding_matches_expression(spark):
+def test_cosine_topk_null_embedding_ranks_last(spark):
     """A NULL corpus vector is a NULL-cosine candidate ranked last, and
-    a NULL query vector gets NULL cosines: the Arrow path returns the
-    expression twin's rows instead of failing on a ragged batch."""
+    a NULL query vector gets NULL cosines for every neighbor."""
     rows = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (9, None)],
         "vec_id long, embedding array<double>",
     )
     null_query = spark.createDataFrame([(7, None)], rows.schema)
-    for corpus, queries, k in [
-        (rows.where(F.col("vec_id") > 0), rows.where(F.col("vec_id") == 0), 5),
-        (rows, rows.where(F.col("vec_id") == 0).unionByName(null_query), 3),
-    ]:
-        expr = sorted(map(tuple, S.cosine_topk(corpus, queries, k=k).collect()))
-        arrow = sorted(map(tuple, S.cosine_topk_arrow(corpus, queries, k=k).collect()))
-        assert arrow == expr
-    assert expr[:3] == [(0, 0, 1.0, 1), (0, 1, 0.993884, 2), (0, 9, None, 3)]
+    corpus_only = S.cosine_topk(
+        rows.where(F.col("vec_id") > 0), rows.where(F.col("vec_id") == 0), k=5
+    )
+    assert sorted(map(tuple, corpus_only.collect())) == [
+        (0, 1, 0.993884, 1), (0, 9, None, 2),
+    ]
+    queries = rows.where(F.col("vec_id") == 0).unionByName(null_query)
+    both = S.cosine_topk(rows, queries, k=3)
+    assert sorted(map(tuple, both.collect())) == [
+        (0, 0, 1.0, 1), (0, 1, 0.993884, 2), (0, 9, None, 3),
+        (7, 0, None, 1), (7, 1, None, 2), (7, 9, None, 3),
+    ]
 
 
 def test_neardup_pairs(spark, vecs):
@@ -328,63 +323,28 @@ def test_null_embedding_is_never_a_candidate(spark, vecs):
     banded = S.lsh_ann_topk(
         corpus, queries, S.plane_weights(4, 4), k=5, planes_per_band=2
     ).collect()
-    auto = S.ann_topk(corpus, queries, k=5).collect()
     pairs = S.cosine_neardup_pairs_lsh(
         corpus.unionByName(queries), S.plane_weights(4, 4), threshold=0.5,
         planes_per_band=2,
     ).collect()
     assert (0, 4) in {(r.query_id, r.neighbor_id) for r in banded}
-    assert 9 not in {r.neighbor_id for r in banded + auto}
+    assert 9 not in {r.neighbor_id for r in banded}
     assert (0, 4) in {(r.id_a, r.id_b) for r in pairs}
     assert all(9 not in (r.id_a, r.id_b) for r in pairs)
 
 
-def test_recommended_banding_rule():
-    """The banding rule encodes the docs/SCALE.md sweep: fixture scale
-    lands on the oracle-pinned 4x4, 1M on the measured-winning 8x8,
-    clamped to [4, 16] at the extremes."""
-    assert S.recommended_banding(500) == (4, 4)
-    assert S.recommended_banding(2_000) == (4, 4)
-    assert S.recommended_banding(65_536) == (4, 4)
-    assert S.recommended_banding(1_000_000) == (8, 8)
-    assert S.recommended_banding(100_000_000) == (15, 15)
-    assert S.recommended_banding(10**12) == (16, 16)
-
-
-def test_ann_topk_auto_matches_explicit_banded(spark, sf_dir):
-    """ann_topk (auto) at fixture scale must equal the explicit 4x4
-    Arrow-banded call — the auto path adds selection, not semantics."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    corpus = emb.where(F.col("vec_id") >= 10)
-    queries = emb.where(F.col("vec_id") < 10)
-    auto = sorted(map(tuple, S.ann_topk(corpus, queries, k=5).collect()))
-    explicit = sorted(
-        map(
-            tuple,
-            S.lsh_ann_topk(
-                corpus, queries, S.plane_weights(16, 64),
-                planes_per_band=4, k=5,
-            ).collect(),
-        )
-    )
-    assert auto == explicit
-
-
 @pytest.mark.parametrize(
     "name",
-    ["ann_lsh_topk", "ann_lsh_banded_topk", "ann_auto_topk", "dedup_embedding_cosine"],
+    ["ann_lsh_topk", "ann_lsh_banded_topk", "dedup_embedding_cosine"],
 )
 def test_query_build_launches_no_jobs(spark, sf_dir, name):
     """Constructing an LSH query launches ZERO Spark jobs: the plane
-    weights are computed on the driver and ann_auto_topk's corpus size
-    comes from parquet footer metadata. Jobs are counted under a job
+    weights are computed on the driver. Jobs are counted under a job
     group through the status tracker, so every action path counts."""
-    from retail_sales_data_pipeline_spark.plans.vector_ops import QUERIES, TWIN_QUERIES
+    from retail_sales_data_pipeline_spark.plans.vector_ops import QUERIES
     from retail_sales_data_pipeline_spark.sources.tables import dataset_schema
 
-    fn = QUERIES[name] if name in QUERIES else TWIN_QUERIES[name][0]
+    fn = QUERIES[name]
     # the table's schema is inferred (one job) on its first read in a
     # process and cached after; warm it so test order cannot matter
     dataset_schema(spark, f"{sf_dir}/embeddings.parquet")
@@ -396,8 +356,7 @@ def test_query_build_launches_no_jobs(spark, sf_dir, name):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    n = df.count()
-    assert n == 50 if name == "ann_auto_topk" else n > 0  # 10 queries x top-5
+    assert df.count() > 0
 
 
 def test_parquet_row_count_matches_spark(spark, sf_dir):

@@ -392,16 +392,11 @@ def test_split_assign_is_leakage_safe(spark, sf_dir):
     assert a == b
 
 
-def test_connected_components_star_matches_propagation_and_closes_chains(spark):
-    """Large-star/small-star CC equals min-label propagation on shallow
-    graphs AND fully closes a 120-hop chain that exceeds propagation's
-    default max_iter (the O(log n) vs O(diameter) separation)."""
+def test_connected_components_closes_long_chains(spark):
+    """Large-star/small-star CC labels a shallow graph with each
+    component's min id, and fully closes a 120-hop chain at its default
+    max_iter (O(log n) rounds, not graph-diameter rounds)."""
     import warnings
-
-    from retail_sales_data_pipeline_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
 
     # shallow graph: two triangles + a bridge + singletons
     nodes = spark.createDataFrame([(i,) for i in range(12)], "id long")
@@ -409,28 +404,19 @@ def test_connected_components_star_matches_propagation_and_closes_chains(spark):
         [(0, 1), (1, 2), (2, 0), (5, 6), (6, 7), (7, 5), (2, 5)],
         "id_a long, id_b long",
     )
-    prop = sorted(map(tuple, connected_components(nodes, pairs).collect()))
-    star = sorted(map(tuple, connected_components_star(nodes, pairs).collect()))
-    assert prop == star
+    got = {r.id: r.cluster_id for r in D.connected_components(nodes, pairs).collect()}
+    assert got == {i: 0 if i in (0, 1, 2, 5, 6, 7) else i for i in range(12)}
 
-    # 120-hop chain: propagation(max_iter=20) warns and returns partial
-    # labels; star converges quietly and labels everything 0
     chain_nodes = spark.createDataFrame([(i,) for i in range(121)], "id long")
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(120)], "id_a long, id_b long"
     )
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        partial = connected_components(chain_nodes, chain, max_iter=20).collect()
-        assert any("max_iter" in str(w.message) for w in caught)
-    assert any(r.cluster_id != 0 for r in partial)  # provably partial
-
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        full = connected_components_star(chain_nodes, chain).collect()
+        full = D.connected_components(chain_nodes, chain).collect()
         # no convergence warning (unrelated ResourceWarnings may appear)
         assert not [w for w in caught if w.category is RuntimeWarning]
-    assert all(r.cluster_id == 0 for r in full)
+    assert len(full) == 121 and all(r.cluster_id == 0 for r in full)
 
 
 def test_blocked_levenshtein_finds_typos_not_ngrams(spark):

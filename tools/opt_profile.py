@@ -6,9 +6,9 @@ Usage:
     SPARK_GRAFT_CPUS=32 python tools/opt_profile.py [--tag before] [--plandir r14] \
         [--runs 3] [--sf /root/testdata/sf0.1] [--plans-only] [query ...]
 
-Defaults to the bench HEADLINE list plus the bench_* twins (the exact
-set bench.py times). Timing methodology matches bench.py: noop sink,
-per-query job description labels, release_persisted between runs.
+Defaults to the bench HEADLINE list (the exact set bench.py times).
+Timing methodology matches bench.py: noop sink, per-query job
+description labels, release_persisted between runs.
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from bench import HEADLINE  # noqa: E402
 from retail_sales_data_pipeline_spark.caching import release_persisted  # noqa: E402
 from retail_sales_data_pipeline_spark.plans import all_queries  # noqa: E402
-from retail_sales_data_pipeline_spark.plans.registry import retired_twins  # noqa: E402
 from retail_sales_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -40,12 +39,8 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark(app_name="opt_profile")
-    queries = dict(all_queries())
-    queries.update({k: fn for k, (fn, _t) in retired_twins().items()})
-    names = args.names or (
-        [n for n in HEADLINE if n in queries]
-        + [n for n in sorted(queries) if n.startswith("bench_")]
-    )
+    queries = all_queries()
+    names = args.names or [n for n in HEADLINE if n in queries]
 
     plandir = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "plans", args.plandir)

@@ -20,10 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from retail_sales_data_pipeline_spark.plans.registry import (
-    all_queries,
-    retired_twins,
-)
+from retail_sales_data_pipeline_spark.plans.registry import all_queries
 from retail_sales_data_pipeline_spark.session import get_spark
 
 AUDITED = [
@@ -38,7 +35,6 @@ AUDITED = [
     "dedup_minhash_lsh",
     "ann_lsh_topk",
     "ann_lsh_banded_topk",
-    "ann_auto_topk",
     "events_sessionize",
     "sales_cube",
     "customers_churned",
@@ -73,13 +69,13 @@ AUDITED = [
 ]
 
 # Queries whose plans must not contain any form of cartesian product.
-# ann_cosine_topk / bench_ann_cosine_arrow intentionally broadcast-cross
-# a bounded query set; these must be candidate-generated instead.
+# ann_cosine_topk intentionally broadcast-crosses a bounded query set;
+# these must be candidate-generated instead.
 NO_CARTESIAN = [
     "dedup_embedding_cosine",
     "dedup_minhash_lsh",
     "dedup_ngram_jaccard",
-    "dedup_clusters_star",
+    "dedup_clusters",
     "ann_lsh_topk",
     "ann_lsh_banded_topk",
     "ann_ivf_topk",
@@ -136,9 +132,7 @@ def plan_of(df) -> str:
 def main() -> None:
     spark = get_spark(app_name="plan_audit", master="local[4]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
-    qs = dict(all_queries())
-    # retired oracle-twin variants keep their plan audit coverage
-    qs.update({k: fn for k, (fn, _twin) in retired_twins().items()})
+    qs = all_queries()
     out = [
         "# Physical-plan audit",
         "",
